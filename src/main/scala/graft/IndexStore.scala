@@ -108,6 +108,14 @@ object IndexStore {
   def configuredDir(s: SparkSession): Option[String] =
     s.conf.getOption(DirConf).map(_.trim).filter(_.nonEmpty)
 
+  /** The configured root, or `IllegalStateException` naming `user` — an
+    * operation with nowhere durable to read or land is a caller bug, not
+    * a silent no-op.
+    */
+  private[graft] def requireRoot(s: SparkSession, user: String): String =
+    configuredDir(s).getOrElse(throw new IllegalStateException(
+      s"$user requires a configured index store (set $DirConf)"))
+
   /** Corpus-identity tag: content-free (pure path hash) by design — the
     * store is an optimization tier keyed by the corpus LOCATION; content
     * drift under the same path is caught by the sidecar's corpus count at
@@ -126,13 +134,38 @@ object IndexStore {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** The committed store entry `name` for `corpusDir` under the configured
+    * root; None when no root is configured or nothing is committed there.
+    */
+  def committedPath(s: SparkSession, corpusDir: String, name: String): Option[String] =
+    configuredDir(s).map(storePath(_, corpusDir, name)).filter(committed(s, _))
+
+  /** The committed store entry `name` for `corpusDir`, which `user` needs:
+    * `IllegalStateException` when no root is configured,
+    * `IllegalArgumentException` when the entry was never bootstrapped.
+    */
+  def requireCommitted(s: SparkSession, corpusDir: String, name: String,
+      user: String): String = {
+    val path = storePath(requireRoot(s, user), corpusDir, name)
+    require(committed(s, path), s"bootstrap the $name store at $path before $user")
+    path
+  }
+
+  /** A read of a store whose last append landed its data files but not
+    * yet its sidecar — a transient server-side state (the append's own
+    * sidecar write, a replay or a rebuild heals it), distinct from the
+    * caller errors an un-bootstrapped store raises.
+    */
+  final class TornStoreException(msg: String) extends IllegalStateException(msg)
+
   /** Read a committed store entry under SNAPSHOT-ISOLATION discipline:
     * when the sidecar records a row count, the parquet must match it — a
     * mismatch means a maintenance append's data files landed but its
     * sidecar (with the batch marker) did not, so the batch is NOT
     * committed and serving its rows would be a torn read of an
-    * uncommitted write. Refuses loudly instead; the maintainer's replay
-    * (or a rebuild) heals the store. Staged-swap siblings (`.refitting` /
+    * uncommitted write. Refuses loudly instead ([[TornStoreException]]);
+    * the append's own sidecar write, the maintainer's replay or a rebuild
+    * heals the store. Staged-swap siblings (`.refitting` /
     * `.purging` / `.compacting`) never affect this read — they are
     * separate directories until their atomic rename. Cost: one
     * footer-count pass over the entry's files.
@@ -142,7 +175,7 @@ object IndexStore {
     readMeta(s, path).flatMap(_.get(StoreRowsKey)).map(_.toLong).foreach { recorded =>
       val actual = actualStoreRows(s, path)
       if (actual != recorded)
-        throw new IllegalStateException(
+        throw new TornStoreException(
           s"index store at $path is torn: $actual rows vs $recorded recorded — " +
             "a maintenance write landed data without its sidecar; replay the " +
             "maintainer (or rebuild) before serving")
@@ -197,10 +230,7 @@ object IndexStore {
     * under the configured root, if any.
     */
   def storedMeta(s: SparkSession, corpusDir: String, name: String): Option[Map[String, String]] =
-    configuredDir(s).flatMap { root =>
-      val path = storePath(root, corpusDir, name)
-      if (committed(s, path)) readMeta(s, path) else None
-    }
+    committedPath(s, corpusDir, name).flatMap(readMeta(s, _))
 
   // ------------------------------------------------------------- serving --
 
@@ -290,9 +320,7 @@ object IndexStore {
     */
   def append(s: SparkSession, corpusDir: String, name: String, rows: DataFrame,
       incrementCount: Long = -1L, extraMeta: Map[String, String] = Map.empty): Unit = {
-    val root = configuredDir(s).getOrElse(throw new IllegalStateException(
-      s"IndexStore.append: no index store configured — set $DirConf"))
-    val path = storePath(root, corpusDir, name)
+    val path = storePath(requireRoot(s, "IndexStore.append"), corpusDir, name)
     // Torn-append tripwire BEFORE writing: if a previous append committed
     // parquet but crashed before its sidecar write, the actual rows
     // disagree with the record — appending again would double that
@@ -356,9 +384,7 @@ object IndexStore {
   def compact(s: SparkSession, corpusDir: String, name: String,
       targetRowsPerFile: Long = 4L << 20, clusterBy: Option[String] = None): Unit = {
     require(targetRowsPerFile > 0, s"bad targetRowsPerFile $targetRowsPerFile")
-    val root = configuredDir(s).getOrElse(throw new IllegalStateException(
-      s"IndexStore.compact: no index store configured — set $DirConf"))
-    val path = storePath(root, corpusDir, name)
+    val path = storePath(requireRoot(s, "IndexStore.compact"), corpusDir, name)
     if (!committed(s, path)) throw new IllegalStateException(
       s"IndexStore.compact: no committed store at $path")
     val meta = readMeta(s, path)
@@ -424,9 +450,7 @@ object IndexStore {
       keyCol: String, keys: Seq[Long], countDecrement: Long = -1L,
       extraMeta: Map[String, String] = Map.empty): Long = {
     require(keys.nonEmpty, "purgeKeys: empty key list")
-    val root = configuredDir(s).getOrElse(throw new IllegalStateException(
-      s"IndexStore.purgeKeys: no index store configured — set $DirConf"))
-    val path = storePath(root, corpusDir, name)
+    val path = storePath(requireRoot(s, "IndexStore.purgeKeys"), corpusDir, name)
     if (!committed(s, path)) throw new IllegalStateException(
       s"IndexStore.purgeKeys: no committed store at $path")
     val meta = readMeta(s, path)

@@ -3,8 +3,8 @@ package graft
 import java.io.OutputStream
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{ExecutorService, Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,9 +32,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement
   *    analog of ClickHouse's `max_execution_time` setting (and the
   *    reference's own client-side timeouts, clickhouse_db.py:20). A query
   *    that outruns it has its Spark jobs cancelled and answers 504.
-  *  - Analysis/parse/parameter errors → HTTP 400 with the message;
-  *    anything else → 500. Responses carry `X-Graft-Rows` and
-  *    `X-Graft-Truncated`.
+  *  - Analysis/parse/parameter errors → HTTP 400 with the message; a
+  *    maintained store read mid-append (`/ann`, `/search`: a
+  *    [[IndexStore.TornStoreException]]) → 503, the server-side race a
+  *    retry outlives; anything else → 500. Responses carry
+  *    `X-Graft-Rows` and `X-Graft-Truncated`.
   *
   * The gateway is READ-ONLY: the submitted text is parsed first and
   * anything that is not a pure query (SET / DDL / CACHE / INSERT — any
@@ -94,10 +96,17 @@ object SqlGateway {
           org.apache.spark.sql.functions.col("lang"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
+  /** Name prefix of the gateway's request-handler threads. */
+  private[graft] val PoolThreadPrefix = "graft-gateway-request-"
+
   final class Gateway private[SqlGateway] (server: HttpServer,
-      deadlines: ScheduledExecutorService) {
+      pool: ExecutorService, deadlines: ScheduledExecutorService) {
     def port: Int = server.getAddress.getPort
-    def stop(): Unit = { server.stop(0); deadlines.shutdownNow() }
+    /** Stop serving and release every gateway thread — the request pool
+      * is non-daemon, so a JVM that started a gateway exits after `main`
+      * only once it is shut down here.
+      */
+    def stop(): Unit = { server.stop(0); pool.shutdownNow(); deadlines.shutdownNow() }
   }
 
   /** Start the gateway on `host:port` (port 0 = ephemeral; host defaults to
@@ -114,7 +123,10 @@ object SqlGateway {
     // just ANSI SQL.
     graft.plans.GraftExtensions.register(spark)
     val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    val seq = new AtomicInteger(0)
+    val pool = Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, PoolThreadPrefix + seq.incrementAndGet()))
+    server.setExecutor(pool)
     val deadlines = Executors.newSingleThreadScheduledExecutor { r =>
       val t = new Thread(r, "graft-gateway-deadline"); t.setDaemon(true); t
     }
@@ -124,7 +136,7 @@ object SqlGateway {
     server.createContext("/search", (ex: HttpExchange) => handleSearch(spark, deadlines, corpusDir, ex))
     server.createContext("/", (ex: HttpExchange) => handleQuery(spark, deadlines, ex))
     server.start()
-    new Gateway(server, deadlines)
+    new Gateway(server, pool, deadlines)
   }
 
   /** 400 for a request-parameter problem — distinct from Spark's own
@@ -340,12 +352,10 @@ object SqlGateway {
           Seq((-1L, vec.toSeq)).toDF("vec_id", "embedding")
         } else params.get("doc_id").flatMap(_.toLongOption) match {
           case Some(id) =>
-            val root = IndexStore.configuredDir(spark).getOrElse(throw new BadRequest(
-              s"no index store configured on the gateway session (${IndexStore.DirConf})"))
-            val path = IndexStore.storePath(root, corpusDir,
-              streaming.IndexMaintenance.IvfAssignStoreName + family)
-            if (!IndexStore.committed(spark, path))
-              throw new BadRequest(s"no maintained index store for family '$family' — bootstrap it first")
+            val path = IndexStore.committedPath(spark, corpusDir,
+              streaming.IndexMaintenance.IvfAssignStoreName + family).getOrElse(throw new BadRequest(
+              s"no maintained index store for family '$family' — bootstrap it first " +
+                s"(under ${IndexStore.DirConf})"))
             IndexStore.verifiedRead(spark, path).filter(col("vec_id") === id)
               .select(col("vec_id"), col("embedding"))
           case None => throw new BadRequest("provide doc_id=<id> or an inline JSON vector body")
@@ -405,7 +415,10 @@ object SqlGateway {
         graft.Materialize.reclaimDeadBroadcasts()
       }
     } catch {
-      // an un-bootstrapped store or a bad request is the caller's 400
+      // a store read mid-append is the server's transient 503; an
+      // un-bootstrapped store or a bad request is the caller's 400
+      case e: IndexStore.TornStoreException =>
+        respond(ex, 503, "text/plain", clip(e.getMessage) + "\n")
       case e @ (_: org.apache.spark.sql.AnalysisException |
                 _: IllegalArgumentException | _: IllegalStateException) =>
         respond(ex, 400, "text/plain", clip(e.getMessage) + "\n")
@@ -511,12 +524,9 @@ object SqlGateway {
           else {
             // vector leg: the stored embedding of doc_id probes the
             // maintained IVF store (the /ann doc_id path's frame)
-            val root = IndexStore.configuredDir(spark).getOrElse(throw new BadRequest(
-              s"no index store configured on the gateway session (${IndexStore.DirConf})"))
-            val path = IndexStore.storePath(root, corpusDir,
-              streaming.IndexMaintenance.IvfAssignStoreName)
-            if (!IndexStore.committed(spark, path))
-              throw new BadRequest("no maintained index store — bootstrap it first")
+            val path = IndexStore.committedPath(spark, corpusDir,
+              streaming.IndexMaintenance.IvfAssignStoreName).getOrElse(throw new BadRequest(
+              s"no maintained index store — bootstrap it first (under ${IndexStore.DirConf})"))
             val qFrame = IndexStore.verifiedRead(spark, path)
               .filter(col("vec_id") === docIdOpt.get)
               .select(col("vec_id"), col("embedding"))
@@ -543,6 +553,8 @@ object SqlGateway {
         graft.Materialize.reclaimDeadBroadcasts()
       }
     } catch {
+      case e: IndexStore.TornStoreException =>
+        respond(ex, 503, "text/plain", clip(e.getMessage) + "\n")
       case e @ (_: org.apache.spark.sql.AnalysisException |
                 _: IllegalArgumentException | _: IllegalStateException) =>
         respond(ex, 400, "text/plain", clip(e.getMessage) + "\n")

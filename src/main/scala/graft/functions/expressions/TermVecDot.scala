@@ -159,10 +159,15 @@ case class TermVecDot(first: Expression, second: Expression,
 object TermVecDot {
   /** Exact unsigned-128 (hi, lo) → DECIMAL(38,0). Weights are
     * non-negative, so the accumulated value is in [0, 2¹²⁸); anything
-    * past 38 digits fails changePrecision loudly — the same envelope the
-    * old DECIMAL(38,0) sum aggregate had.
+    * past 38 digits fails loudly — the same envelope the old
+    * DECIMAL(38,0) sum aggregate had. A set top bit (`hi < 0`) means a
+    * value ≥ 2¹²⁷ > 10³⁸, which a signed `hi` would wrap negative and
+    * slip past changePrecision, so it is refused first.
     */
   def toDecimal(hi: Long, lo: Long): Decimal = {
+    if (hi < 0L)
+      throw new ArithmeticException(
+        "term_vec_dot: numerator ≥ 2^127 exceeds DECIMAL(38,0)")
     val bi =
       if (hi == 0L && lo >= 0L) java.math.BigInteger.valueOf(lo)
       else java.math.BigInteger.valueOf(hi).shiftLeft(64)

@@ -296,16 +296,10 @@ object Fuzzy {
   private[graft] def substringDedupFromStore(s: org.apache.spark.sql.SparkSession,
       corpusDir: String, docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val name = graft.streaming.IndexMaintenance.AnchorStoreName
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("substringDedupFromStore requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
-    val path = graft.IndexStore.storePath(root, corpusDir, name)
-    require(graft.IndexStore.committed(s, path),
-      s"bootstrap the anchor store at $path (bootstrapAnchorStore) before " +
-        "serving substring dedup from it")
-    val meta = graft.IndexStore.storedMeta(s, corpusDir, name)
-      .getOrElse(throw new IllegalStateException(
-        s"anchor store at $path has no metadata sidecar — re-bootstrap"))
+    val path = graft.IndexStore.requireCommitted(s, corpusDir, name,
+      "substringDedupFromStore")
+    val meta = graft.IndexStore.readMeta(s, path).getOrElse(throw
+      new IllegalStateException(s"anchor store at $path has no metadata sidecar — re-bootstrap"))
     require(meta.get("k").contains(SubstringK.toString),
       s"anchor store at $path was built with K=${meta.getOrElse("k", "?")}, " +
         s"this build profiles K=$SubstringK — incomparable grams, re-bootstrap")

@@ -167,8 +167,7 @@ object Similarity {
   private[graft] def refitPqModels(s: org.apache.spark.sql.SparkSession,
       dir: String, eqf: org.apache.spark.sql.DataFrame,
       tag: String = ""): Seq[Ivf.Model] = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("refitPqModels requires a configured index store"))
+    val root = graft.IndexStore.requireRoot(s, "refitPqModels")
     val models = (0 until PqM).map { m =>
       val mdl = Ivf.fit(pqSub(eqf, m), k = PqK, dim = PqSubDim)
       Ivf.save(s, graft.IndexStore.storePath(root, dir, pqModelStoreName(m, tag)), mdl)
@@ -557,17 +556,10 @@ object Similarity {
       queriesOpt: Option[org.apache.spark.sql.DataFrame] = None,
       family: String = "",
       candIdsOpt: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("ivfAnnFromStore requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
-    val assignPath = graft.IndexStore.storePath(root, dir,
-      graft.streaming.IndexMaintenance.IvfAssignStoreName + family)
-    val modelPath = graft.IndexStore.storePath(root, dir,
-      if (family.isEmpty) IvfModelStoreName else XmIvfModelStoreName)
-    require(graft.IndexStore.committed(s, assignPath) &&
-      graft.IndexStore.committed(s, modelPath),
-      s"bootstrap the IVF assignment store before serving ANN from it " +
-        s"($assignPath, $modelPath)")
+    val assignPath = graft.IndexStore.requireCommitted(s, dir,
+      graft.streaming.IndexMaintenance.IvfAssignStoreName + family, "ivfAnnFromStore")
+    val modelPath = graft.IndexStore.requireCommitted(s, dir,
+      if (family.isEmpty) IvfModelStoreName else XmIvfModelStoreName, "ivfAnnFromStore")
     val model = Ivf.load(s, modelPath).getOrElse(throw new IllegalStateException(
       s"torn IVF model store at $modelPath — re-bootstrap"))
     // snapshot isolation vs a concurrent maintainer: serve either the old
@@ -2556,13 +2548,9 @@ object Similarity {
   private def storeCellCandidates(s: org.apache.spark.sql.SparkSession,
       dir: String, family: String, queries: org.apache.spark.sql.DataFrame,
       cells: org.apache.spark.sql.DataFrame, probes: Int): org.apache.spark.sql.DataFrame = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("store-served ANN requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
-    val modelPath = graft.IndexStore.storePath(root, dir,
-      if (family.isEmpty) IvfModelStoreName else XmIvfModelStoreName)
-    require(graft.IndexStore.committed(s, modelPath),
-      s"bootstrap the IVF model store before cell-composed serving ($modelPath)")
+    val modelPath = graft.IndexStore.requireCommitted(s, dir,
+      if (family.isEmpty) IvfModelStoreName else XmIvfModelStoreName,
+      "cell-composed ANN serving")
     val model = Ivf.load(s, modelPath).getOrElse(throw new IllegalStateException(
       s"torn IVF model store at $modelPath — re-bootstrap"))
     Ivf.ranked(Ivf.quantize(queries.select(col("vec_id"), col("embedding")))
@@ -2587,13 +2575,8 @@ object Similarity {
       candIdsOpt: Option[org.apache.spark.sql.DataFrame]):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
        org.apache.spark.sql.DataFrame) = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("store-served ANN requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
-    val assignPath = graft.IndexStore.storePath(root, dir,
-      graft.streaming.IndexMaintenance.IvfAssignStoreName + family)
-    require(graft.IndexStore.committed(s, assignPath),
-      s"bootstrap the IVF assignment store before serving ANN from it ($assignPath)")
+    val assignPath = graft.IndexStore.requireCommitted(s, dir,
+      graft.streaming.IndexMaintenance.IvfAssignStoreName + family, "store-served ANN")
     val store = graft.IndexStore.verifiedRead(s, assignPath)
     val corpus0 = store.select(col("vec_id"), col("embedding"))
     val cells0 = store.select(col("vec_id"), col("cid").as("cell"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous maintenance of the durable dedup/ANN index stores from a
@@ -14,24 +14,44 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * poll loop appends each batch's rows; here the continuously-appended
   * artifact is the INDEX, the expensive thing to recompute.)
   *
-  * Delivery semantics: foreachBatch is at-least-once — a restart replays
-  * the last uncommitted micro-batch — so the applied batch id is recorded
-  * in the store's sidecar IN THE SAME metadata write that advances the
-  * corpus count and the store-rows record, and a batch id ≤ the recorded
-  * marker is skipped (exactly-once in the common path). The remaining
-  * window — a crash after the parquet append commits but before the
-  * sidecar write — is caught by [[graft.IndexStore]]'s store-rows
-  * tripwire: the replayed append sees actual parquet rows ≠ the sidecar's
-  * record and REFUSES (loudly) instead of landing the batch twice, and
-  * any tracked load of the torn store rebuilds it. Single maintainer per
-  * store entry, per [[graft.IndexStore.append]]'s single-writer contract.
+  * Every maintained store runs ONE exactly-once protocol (the
+  * foreachBatch + batch-id idempotence recipe), written once below and
+  * instantiated per family — each public `maintain*` is one [[attach]]
+  * of its batch function:
   *
-  * Bootstrap the store with a batch build (possibly over an empty frame)
-  * before attaching a maintainer — SRP appends refuse metadata-less
-  * stores by design (the increment must bucket under the BUILD's plane
-  * family). Maintainers invalidate their own session's cache tier; other
-  * long-lived sessions pick up the grown store at their next fresh load
-  * (cross-session freshness is the store's job, not the cache's).
+  *  - Bootstrap precondition: a batch build (possibly over an empty
+  *    frame) commits the store and its sidecar before a maintainer
+  *    attaches, and a batch against an un-bootstrapped store refuses
+  *    before writing anything ([[graft.IndexStore.requireCommitted]]:
+  *    `IllegalArgumentException`, or `IllegalStateException` when no
+  *    store root is configured). An append never creates the sidecar, so
+  *    an append-created store would carry no corpus count, parameters or
+  *    fit baseline, and serving would fail after the streamed documents
+  *    were gone. Two families keep their own precondition: the shingle
+  *    store is created by append, and SRP appends refuse a store with no
+  *    sidecar (the increment must bucket under the BUILD's plane family).
+  *  - Replay guard: foreachBatch is at-least-once — a restart replays the
+  *    last uncommitted micro-batch — so a batch id ≤ the stream's marker
+  *    in the store's sidecar is skipped ([[applyOnce]]); every batch
+  *    function answers false for a skipped batch.
+  *  - Marker in the same sidecar write: the applied batch id rides the
+  *    SAME [[graft.IndexStore.append]] sidecar write that advances the
+  *    corpus count, the store-rows record and any family ledger (content
+  *    digest, drift sums), so a reader never sees one without the others
+  *    and a replayed batch advances nothing.
+  *  - Torn-append tripwire: a crash after the parquet append commits but
+  *    before the sidecar write is caught by [[graft.IndexStore]]'s
+  *    store-rows record — the replayed append sees actual parquet rows ≠
+  *    the sidecar's record and REFUSES (loudly) instead of landing the
+  *    batch twice, a serving read answers
+  *    [[graft.IndexStore.TornStoreException]], and any tracked load of
+  *    the torn store rebuilds it.
+  *
+  * Single maintainer per store entry, per [[graft.IndexStore.append]]'s
+  * single-writer contract. Maintainers invalidate their own session's
+  * cache tier; other long-lived sessions pick up the grown store at their
+  * next fresh load (cross-session freshness is the store's job, not the
+  * cache's).
   *
   * Recovery: a maintainer that hits a torn store fails its streaming
   * query with the tripwire's instructions (the safe direction — it must
@@ -78,28 +98,28 @@ object IndexMaintenance {
       .map(prev => Map(graft.IndexStore.CorpusHashKey -> (prev ^ batchDigest).toString))
       .getOrElse(Map.empty)
 
-  private def lastApplied(s: SparkSession, corpusDir: String, name: String,
-      stream: String): Long =
-    graft.IndexStore.storedMeta(s, corpusDir, name)
-      .flatMap(_.get(markerKey(stream)).flatMap(_.toLongOption))
-      .getOrElse(-1L)
-
-  /** The replay guard, with every skip LOGGED: `batchId == marker` is the
-    * expected at-least-once shape (same-checkpoint operation only ever
-    * replays the last uncommitted batch) and logs at info; `batchId <
-    * marker` is only reachable when the maintainer restarted from a FRESH
-    * or rolled-back checkpoint against a store whose sidecar outlived it —
-    * its batches restart at 0 and every one is silently dropped until the
-    * id catches the marker — so it logs a loud warning naming the repair
-    * (a new stream name, or clearing the marker, if this is genuinely a
-    * new incarnation of the stream). The marker stays authoritative either
+  /** The replay guard: run `body` with the sidecar entry recording
+    * `batchId` as `stream`'s marker (the body lands it in its append's
+    * sidecar write) when the batch is new to `store`; false = skipped.
+    * Every skip is LOGGED: `batchId == marker` is the expected
+    * at-least-once shape (same-checkpoint operation only ever replays the
+    * last uncommitted batch) and logs at info; `batchId < marker` is only
+    * reachable when the maintainer restarted from a FRESH or rolled-back
+    * checkpoint against a store whose sidecar outlived it — its batches
+    * restart at 0 and every one is silently dropped until the id catches
+    * the marker — so it logs a loud warning naming the repair (a new
+    * stream name, or clearing the marker, if this is genuinely a new
+    * incarnation of the stream). The marker stays authoritative either
     * way: keying it on the run id instead would break the legitimate
     * restart replay (every restart has a fresh run id, and its first
     * batch is usually a replay that MUST be skipped).
     */
-  private def shouldApply(batchId: Long, marker: Long, stream: String,
-      corpusDir: String): Boolean =
-    batchId > marker || {
+  private def applyOnce(s: SparkSession, corpusDir: String, store: String,
+      stream: String, batchId: Long)(body: Map[String, String] => Unit): Boolean = {
+    val marker = graft.IndexStore.storedMeta(s, corpusDir, store)
+      .flatMap(_.get(markerKey(stream)).flatMap(_.toLongOption)).getOrElse(-1L)
+    if (batchId > marker) { body(Map(markerKey(stream) -> batchId.toString)); true }
+    else {
       if (batchId < marker)
         log.warn(s"IndexMaintenance: DROPPING batch $batchId of stream " +
           s"'$stream' for $corpusDir — the store's marker is already at " +
@@ -112,48 +132,46 @@ object IndexMaintenance {
           s"stream '$stream' for $corpusDir (marker $marker) — already applied.")
       false
     }
+  }
 
-  /** Apply one micro-batch of `(doc_id, text, …)` documents to the
-    * shingle store; false = this batch id was already applied (a
-    * foreachBatch replay) and nothing ran.
+  /** Attach `batchFn` to `frame` as the checkpointed foreachBatch query
+    * `stream`; batches run on the attach-time session (its conf and cache
+    * tier).
     */
-  private[graft] def applyDocsBatch(s: SparkSession, corpusDir: String,
-      stream: String, batchId: Long, docs: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir,
-      graft.operators.TextAnalysis.ShingleStoreName, stream), stream, corpusDir) && {
-      graft.operators.TextAnalysis.appendToShingleIndex(s, corpusDir, docs,
-        Map(markerKey(stream) -> batchId.toString))
-      true
-    }
-
-  /** Apply one micro-batch of `(vec_id, embedding)` rows to the SRP
-    * store; false = replay, skipped.
-    */
-  private[graft] def applyEmbeddingsBatch(s: SparkSession, corpusDir: String,
-      stream: String, batchId: Long, embeddings: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir,
-      graft.operators.Similarity.SrpStoreName, stream), stream, corpusDir) && {
-      graft.operators.Similarity.appendToSrpIndex(s, corpusDir, embeddings,
-        Map(markerKey(stream) -> batchId.toString))
-      true
-    }
-
-  /** Attach a shingle-index maintainer to a `(doc_id, text, …)` stream. */
-  def maintainShingleIndex(docs: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "shingle_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession // attach-time session: conf + cache tier
-    docs.writeStream
+  private def attach(frame: DataFrame, checkpoint: String, stream: String)(
+      batchFn: (SparkSession, Long, DataFrame) => Boolean): StreamingQuery = {
+    val owner = frame.sparkSession
+    frame.writeStream
       .queryName(stream)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyDocsBatch(owner, corpusDir, stream, batchId, batch)
+        batchFn(owner, batchId, batch)
         ()
       }
       .start()
   }
 
+  /** Apply one micro-batch of `(doc_id, text, …)` documents to the
+    * shingle store.
+    */
+  private[graft] def applyDocsBatch(s: SparkSession, corpusDir: String,
+      stream: String, batchId: Long, docs: DataFrame): Boolean =
+    applyOnce(s, corpusDir, graft.operators.TextAnalysis.ShingleStoreName,
+      stream, batchId)(graft.operators.TextAnalysis.appendToShingleIndex(s, corpusDir, docs, _))
+
+  /** Apply one micro-batch of `(vec_id, embedding)` rows to the SRP store. */
+  private[graft] def applyEmbeddingsBatch(s: SparkSession, corpusDir: String,
+      stream: String, batchId: Long, embeddings: DataFrame): Boolean =
+    applyOnce(s, corpusDir, graft.operators.Similarity.SrpStoreName,
+      stream, batchId)(graft.operators.Similarity.appendToSrpIndex(s, corpusDir, embeddings, _))
+
+  /** Attach a shingle-index maintainer to a `(doc_id, text, …)` stream. */
+  def maintainShingleIndex(docs: DataFrame, corpusDir: String,
+      checkpoint: String, stream: String = "shingle_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(applyDocsBatch(_, corpusDir, stream, _, _))
+
   /** One micro-batch of the streaming decontamination pipeline
-    * ([[maintainDecontaminatingIndex]]); false = replay, nothing ran.
+    * ([[maintainDecontaminatingIndex]]).
     *
     * Order of the two effects is the crash-safety argument:
     *  1. the batch's near-dup pairs (vs store∪batch, q74's new×all probe)
@@ -162,7 +180,7 @@ object IndexMaintenance {
     *     below hasn't happened yet on any path that replays) and
     *     overwrites byte-identical content;
     *  2. the batch appends to the durable shingle store behind the
-    *     exactly-once batch marker ([[applyDocsBatch]]).
+    *     batch marker.
     * A crash between 1 and 2 replays the batch: step 1 rewrites the same
     * pairs, step 2 applies once. A crash after 2 replays into the marker
     * skip. Either way every pair is emitted exactly once and the store
@@ -176,15 +194,9 @@ object IndexMaintenance {
       pairsDir: String, stream: String, batchId: Long, batch: DataFrame): Boolean = {
     import org.apache.spark.sql.functions.{col, min}
     val storeName = graft.operators.TextAnalysis.ShingleStoreName
-    shouldApply(batchId, lastApplied(s, corpusDir, storeName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainDecontaminatingIndex requires " +
-          s"a configured index store (${graft.IndexStore.DirConf})"))
-      val storePath = graft.IndexStore.storePath(root, corpusDir, storeName)
-      require(graft.IndexStore.committed(s, storePath),
-        s"bootstrap the shingle store at $storePath (batch build over the " +
-          "existing corpus) before attaching a decontaminating maintainer")
+    applyOnce(s, corpusDir, storeName, stream, batchId) { marker =>
+      val storePath = graft.IndexStore.requireCommitted(s, corpusDir, storeName,
+        "maintainDecontaminatingIndex")
       val minId = batch.agg(min(col("doc_id"))).head().get(0) // bounded: 1 row
       if (minId != null) {
         val stored = s.read.parquet(storePath).select("doc_id", "ss")
@@ -195,9 +207,7 @@ object IndexMaintenance {
             col("doc_id") >= minId.asInstanceOf[Long])
           .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
       }
-      graft.operators.TextAnalysis.appendToShingleIndex(s, corpusDir, batch,
-        Map(markerKey(stream) -> batchId.toString))
-      true
+      graft.operators.TextAnalysis.appendToShingleIndex(s, corpusDir, batch, marker)
     }
   }
 
@@ -215,17 +225,8 @@ object IndexMaintenance {
     */
   def maintainDecontaminatingIndex(docs: DataFrame, corpusDir: String,
       pairsDir: String, checkpoint: String,
-      stream: String = "neardup_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        decontaminateBatch(owner, corpusDir, pairsDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      stream: String = "neardup_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(decontaminateBatch(_, corpusDir, pairsDir, stream, _, _))
 
   /** The durable chunk-fingerprint store behind [[maintainChunkDedup]]. */
   private[graft] val ChunkStoreName = "chunk_fps"
@@ -262,23 +263,20 @@ object IndexMaintenance {
   private val Chunkers: Map[String, Chunker] =
     Seq(StrideChunker, CdcChunker).map(c => c.name -> c).toMap
 
-  /** The chunker a store was built with, from its sidecar (stride for
-    * pre-upgrade sidecars without the key). Unknown names fail loudly —
-    * guessing a chunker silently mis-dedups.
+  /** The chunker a store was built with, from its sidecar `meta` (stride
+    * for pre-upgrade sidecars without the key). Unknown names fail loudly
+    * — guessing a chunker silently mis-dedups.
     */
-  private def storedChunker(s: SparkSession, corpusDir: String): Chunker = {
-    val name = graft.IndexStore.storedMeta(s, corpusDir, ChunkStoreName)
-      .flatMap(_.get("chunker")).getOrElse(StrideChunker.name)
+  private def storedChunker(meta: Map[String, String], corpusDir: String): Chunker = {
+    val name = meta.getOrElse("chunker", StrideChunker.name)
     Chunkers.getOrElse(name, throw new IllegalStateException(
       s"chunk store for $corpusDir was built with unknown chunker '$name' — " +
         s"this build knows ${Chunkers.keys.mkString(", ")}"))
   }
 
   /** Bootstrap the chunk store from an existing corpus frame (possibly
-    * empty) — the batch build the streaming maintainer requires before
-    * attaching, mirroring the shingle/SRP bootstrap contract. The
-    * chunking strategy is recorded in the sidecar and every later
-    * maintenance batch resolves it from there.
+    * empty). The chunking strategy is recorded in the sidecar and every
+    * later maintenance batch resolves it from there.
     */
   private[graft] def bootstrapChunkStore(s: SparkSession, corpusDir: String,
       docs: DataFrame, chunker: Chunker = StrideChunker): Unit = {
@@ -301,9 +299,9 @@ object IndexMaintenance {
   }
 
   /** One micro-batch of the streaming chunk-dedup pipeline
-    * ([[maintainChunkDedup]]); false = replay, nothing ran. The batch is
-    * chunked under the STORE's recorded strategy ([[storedChunker]] —
-    * stride q96 or CDC q133), never a caller-chosen one.
+    * ([[maintainChunkDedup]]). The batch is chunked under the STORE's
+    * recorded strategy ([[storedChunker]] — stride q96 or CDC q133),
+    * never a caller-chosen one.
     *
     * Crash-safety order as in [[decontaminateBatch]]: (1) the batch's
     * duplicate chunks — batch occurrences whose fingerprint already
@@ -311,12 +309,11 @@ object IndexMaintenance {
     * (doc_id, chunk_id) order — land in `dupDir/batch_id=N` with
     * mode=overwrite (idempotent: a replay recomputes against the same
     * store state); (2) only the batch's NEW fingerprints (first
-    * occurrence each) append to the store behind the exactly-once batch
-    * marker, so the store stays one row per fingerprint. Over an
-    * append-only doc-id stream the union of batch outputs is exactly
-    * "every chunk occurrence except the globally first per fingerprint"
-    * — the removable multiset of the q123 batch report (spec-pinned
-    * parity).
+    * occurrence each) append to the store behind the batch marker, so the
+    * store stays one row per fingerprint. Over an append-only doc-id
+    * stream the union of batch outputs is exactly "every chunk occurrence
+    * except the globally first per fingerprint" — the removable multiset
+    * of the q123 batch report (spec-pinned parity).
     *
     * Cost per batch: O(batch) chunking/window work plus ONE scan of the
     * fp-unique store for the membership probe joins — O(distinct corpus
@@ -331,26 +328,20 @@ object IndexMaintenance {
       dupDir: String, stream: String, batchId: Long, batch: DataFrame): Boolean = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number}
-    shouldApply(batchId, lastApplied(s, corpusDir, ChunkStoreName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainChunkDedup requires a configured " +
-          s"index store (${graft.IndexStore.DirConf})"))
-      val path = graft.IndexStore.storePath(root, corpusDir, ChunkStoreName)
-      require(graft.IndexStore.committed(s, path),
-        s"bootstrap the chunk store at $path (bootstrapChunkStore over the " +
-          "existing corpus) before attaching a chunk-dedup maintainer")
+    applyOnce(s, corpusDir, ChunkStoreName, stream, batchId) { marker =>
+      val path = graft.IndexStore.requireCommitted(s, corpusDir, ChunkStoreName,
+        "maintainChunkDedup")
+      val meta = graft.IndexStore.readMeta(s, path).getOrElse(Map.empty)
       // the batch MUST chunk under the store's own strategy (sidecar-
       // recorded at bootstrap) — stride and CDC grids are incomparable
-      val chunks = storedChunker(s, corpusDir).rows(batch)
+      val chunks = storedChunker(meta, corpusDir).rows(batch)
         .select("chunk_fp", "doc_id", "chunk_id")
       // fp-uniqueness is ASSERTED by the sidecar's layout marker, not
       // assumed: stores bootstrapped by this build dedupe (and appends
       // are rn==1 only), but explicitly-supported pre-marker stores hold
       // every chunk occurrence — those keep a cheap distinct so future
       // non-semi-join consumers of this frame stay correct too.
-      val fpUnique = graft.IndexStore.storedMeta(s, corpusDir, ChunkStoreName)
-        .flatMap(_.get("layout")).contains(FpUniqueLayout)
+      val fpUnique = meta.get("layout").contains(FpUniqueLayout)
       val storedFpsRaw = s.read.parquet(path).select("chunk_fp")
       val storedFps = if (fpUnique) storedFpsRaw else storedFpsRaw.distinct()
       val vsStore = chunks.join(storedFps, Seq("chunk_fp"), "left_semi")
@@ -368,10 +359,8 @@ object IndexMaintenance {
       // store stays one row per fingerprint instead of accumulating
       // every occurrence ever streamed
       graft.IndexStore.append(s, corpusDir, ChunkStoreName,
-        newFps.filter(col("rn") === 1).drop("rn"),
-        extraMeta = Map(markerKey(stream) -> batchId.toString))
+        newFps.filter(col("rn") === 1).drop("rn"), extraMeta = marker)
       graft.Materialize.free(newFps) // per-batch scratch, not an index frame
-      true
     }
   }
 
@@ -385,109 +374,106 @@ object IndexMaintenance {
     */
   def maintainChunkDedup(docs: DataFrame, corpusDir: String,
       dupDir: String, checkpoint: String,
-      stream: String = "chunk_dedup"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        chunkDedupBatch(owner, corpusDir, dupDir, stream, batchId, batch)
-        ()
-      }
-      .start()
+      stream: String = "chunk_dedup"): StreamingQuery =
+    attach(docs, checkpoint, stream)(chunkDedupBatch(_, corpusDir, dupDir, stream, _, _))
+
+  // ------------------------------------------- additive document stores --
+
+  /** One store maintained from a `(doc_id, text, …)` stream by plain
+    * appends — tf, anchor, LM bigrams, DSIR profiles, BPE words. Bootstrap
+    * ([[bootstrapDocStore]]) and apply ([[applyDocStore]]) are written
+    * once; what differs per family is data here:
+    *
+    * @param user      the maintainer a refusal names
+    * @param rows      a document frame's store rows (bootstrap and append)
+    * @param params    sidecar geometry recorded at bootstrap
+    * @param digest    the sidecar carries the corpus content digest
+    *                  ([[graft.IndexStore.CorpusHashKey]]), stamped at
+    *                  bootstrap and XOR-advanced per batch
+    * @param clearsPurgeStale a bootstrap drops [[ModelStaleKey]] (the
+    *                  additive model stores a purge can trip)
+    * @param check     the geometry precondition every append re-checks
+    * @param incMeta   family ledger entries advanced in the marker's
+    *                  sidecar write, from (session, corpusDir, the batch's
+    *                  store rows, the current sidecar)
+    */
+  private final case class DocStore(name: String, user: String,
+      rows: DataFrame => DataFrame,
+      params: Map[String, String] = Map.empty,
+      digest: Boolean = true,
+      clearsPurgeStale: Boolean = true,
+      check: (SparkSession, String) => Unit = (_, _) => (),
+      incMeta: (SparkSession, String, DataFrame, Map[String, String]) => Map[String, String] =
+        (_, _, _, _) => Map.empty)
+
+  /** Bootstrap `st` from an existing corpus frame (possibly empty).
+    * corpusCount tracks DOCUMENT rows, not store rows: a doc can yield
+    * zero rows (NULL text, shorter than an anchor) and still counts. The
+    * digest stamp is sound whether servedFrom rebuilt (store = exactly
+    * these docs) or served fresh (the count tripwire just proved the
+    * store covers the corpus the digest was computed over).
+    */
+  private def bootstrapDocStore(s: SparkSession, corpusDir: String,
+      st: DocStore, docs: DataFrame): Unit = {
+    val (n, dig) = if (st.digest) countAndDigest(docs) else (docs.count(), 0L)
+    graft.IndexStore.servedFrom(s, corpusDir, st.name, st.params,
+      corpusCount = n)(st.rows(docs))
+    for {
+      path <- graft.IndexStore.committedPath(s, corpusDir, st.name)
+      meta <- graft.IndexStore.readMeta(s, path)
+      digested = if (st.digest) meta + (graft.IndexStore.CorpusHashKey -> dig.toString) else meta
+      stamped = if (st.clearsPurgeStale) digested - ModelStaleKey else digested
+      if stamped != meta
+    } graft.IndexStore.writeMeta(s, path, stamped)
   }
+
+  /** Apply one micro-batch of documents to `st`. No store probe: rows are
+    * doc-keyed or additive and the stream's doc ids are append-only, so
+    * per-batch cost is exactly the batch's own row work.
+    */
+  private def applyDocStore(s: SparkSession, corpusDir: String, st: DocStore,
+      stream: String, batchId: Long, docs: DataFrame): Boolean =
+    applyOnce(s, corpusDir, st.name, stream, batchId) { marker =>
+      val path = graft.IndexStore.requireCommitted(s, corpusDir, st.name, st.user)
+      st.check(s, corpusDir)
+      val meta = graft.IndexStore.readMeta(s, path)
+      val (n, dig) = if (st.digest) countAndDigest(docs) else (docs.count(), 0L)
+      val rows = st.rows(docs)
+      graft.IndexStore.append(s, corpusDir, st.name, rows, incrementCount = n,
+        extraMeta = marker ++ st.incMeta(s, corpusDir, rows, meta.getOrElse(Map.empty)) ++
+          (if (st.digest) advancedDigest(meta, dig) else Map.empty))
+    }
 
   /** The durable `(doc_id, term, tf)` store behind [[maintainTfIndex]] —
     * the retrieval-side counterpart of the shingle store: the BM25 leg
     * (q130) and the tf-derived text profiles serve off it instead of
-    * re-tokenizing the corpus.
+    * re-tokenizing the corpus. Its corpus count is BM25's N, so
+    * [[bm25FromStore]] serves the same N as the batch operator's count(*)
+    * over documents.
     */
   private[graft] val TfStoreName = "tf_index"
 
-  /** Bootstrap the tf store from an existing corpus frame (possibly
-    * empty) — required before attaching a maintainer, mirroring the
-    * shingle/SRP/chunk bootstrap contract.
-    */
+  private val TfStore = DocStore(TfStoreName, "maintainTfIndex",
+    graft.operators.CorpusOps.tfRows, clearsPurgeStale = false)
+
+  /** Bootstrap the tf store from an existing corpus frame (possibly empty). */
   private[graft] def bootstrapTfStore(s: SparkSession, corpusDir: String,
-      docs: DataFrame): Unit = {
-    // corpusCount tracks DOCUMENT rows (not tf rows): BM25's N. Recorded
-    // here and advanced by every append so [[bm25FromStore]] serves the
-    // same N as the batch operator's count(*) over documents — deriving N
-    // from distinct store doc_ids would undercount any doc whose text is
-    // NULL (it produces zero tf rows but still counts as a document).
-    val (n, dig) = countAndDigest(docs)
-    graft.IndexStore.servedFrom(s, corpusDir, TfStoreName, corpusCount = n)(
-      graft.operators.CorpusOps.tfRows(docs))
-    recordDigest(s, corpusDir, TfStoreName, dig)
-  }
+      docs: DataFrame): Unit = bootstrapDocStore(s, corpusDir, TfStore, docs)
 
-  /** Stamp the corpus content digest onto a just-bootstrapped store's
-    * sidecar. Sound whether servedFrom rebuilt (store = exactly these
-    * docs) or served fresh (the count tripwire just proved the store
-    * covers the same corpus the digest was computed over).
-    */
-  private def recordDigest(s: SparkSession, corpusDir: String, name: String,
-      digest: Long): Unit =
-    for (root <- graft.IndexStore.configuredDir(s)) {
-      val path = graft.IndexStore.storePath(root, corpusDir, name)
-      graft.IndexStore.readMeta(s, path).foreach { meta =>
-        graft.IndexStore.writeMeta(s, path,
-          meta + (graft.IndexStore.CorpusHashKey -> digest.toString))
-      }
-    }
-
-  /** Apply one micro-batch of `(doc_id, text, …)` documents to the tf
-    * store; false = replay, skipped. Unlike the chunk store, the append
-    * needs NO store probe at all: tf rows are keyed by (doc_id, term) and
-    * the stream's doc ids are append-only, so a batch's rows are disjoint
-    * from everything stored — per-batch cost is exactly O(batch)
-    * tokenize+aggregate work.
-    */
+  /** Apply one micro-batch of `(doc_id, text, …)` documents to the tf store. */
   private[graft] def applyTfBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, docs: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir, TfStoreName, stream),
-      stream, corpusDir) && {
-      // Same bootstrap precondition as chunkDedupBatch, enforced at INGEST
-      // time: without it, a maintainer attached to an un-bootstrapped
-      // store would create the store via append — but append only
-      // advances an EXISTING corpus count, so the sidecar never gains
-      // one, bm25FromStore throws at SERVE time, and the documents
-      // already streamed through are unrecoverable without a rebuild.
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainTfIndex requires a configured " +
-          s"index store (${graft.IndexStore.DirConf})"))
-      require(graft.IndexStore.committed(s,
-        graft.IndexStore.storePath(root, corpusDir, TfStoreName)),
-        s"bootstrap the tf store for $corpusDir (bootstrapTfStore over the " +
-          "existing corpus) before attaching a tf-index maintainer")
-      val (n, dig) = countAndDigest(docs)
-      graft.IndexStore.append(s, corpusDir, TfStoreName,
-        graft.operators.CorpusOps.tfRows(docs),
-        incrementCount = n, // advance BM25's N by the batch docs
-        extraMeta = Map(markerKey(stream) -> batchId.toString) ++
-          advancedDigest(graft.IndexStore.storedMeta(s, corpusDir, TfStoreName), dig))
-      true
-    }
+    applyDocStore(s, corpusDir, TfStore, stream, batchId, docs)
 
   /** Attach a tf-index maintainer to a `(doc_id, text, …)` stream: each
     * micro-batch's `(doc_id, term, tf)` rows land in the durable store at
-    * O(batch) cost, exactly once behind the batch marker, so BM25
-    * retrieval ([[bm25FromStore]]) always serves the corpus as of the
-    * last committed batch instead of re-tokenizing everything ingested
-    * today.
+    * O(batch) cost, so BM25 retrieval ([[bm25FromStore]]) always serves
+    * the corpus as of the last committed batch instead of re-tokenizing
+    * everything ingested today.
     */
   def maintainTfIndex(docs: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "tf_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyTfBatch(owner, corpusDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, stream: String = "tf_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(applyTfBatch(_, corpusDir, stream, _, _))
 
   /** BM25 top-k served off the durable tf store — the identical scoring
     * body as batch q130 ([[graft.operators.CorpusOps.bm25TopKOverTf]]):
@@ -515,13 +501,9 @@ object IndexMaintenance {
     */
   private[graft] def storedTfAndN(s: SparkSession, corpusDir: String):
       (DataFrame, DataFrame) = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("tf-store serving requires a configured index " +
-        s"store (${graft.IndexStore.DirConf})"))
-    val path = graft.IndexStore.storePath(root, corpusDir, TfStoreName)
-    require(graft.IndexStore.committed(s, path),
-      s"bootstrap the tf store at $path before serving retrieval from it")
-    val n = graft.IndexStore.storedMeta(s, corpusDir, TfStoreName)
+    val path = graft.IndexStore.requireCommitted(s, corpusDir, TfStoreName,
+      "tf-store serving")
+    val n = graft.IndexStore.readMeta(s, path)
       .flatMap(_.get(graft.IndexStore.CorpusCountKey)).flatMap(_.toLongOption)
       .getOrElse(throw new IllegalStateException(
         s"tf store at $path has no corpus count in its sidecar — " +
@@ -632,72 +614,42 @@ object IndexMaintenance {
   private def anchorParams: Map[String, String] =
     Map("k" -> graft.operators.Fuzzy.SubstringK.toString, "hash" -> "md5-60")
 
-  /** Bootstrap the anchor store from an existing corpus frame (possibly
-    * empty) — required before attaching [[maintainAnchorIndex]], same
-    * contract as the tf/chunk/SRP bootstraps. corpusCount tracks DOCUMENT
-    * rows (not anchor rows): the serve-side staleness check compares it
-    * against the corpus it is asked to profile, and short docs (< K
-    * chars) produce zero anchors but still count as documents.
-    */
-  private[graft] def bootstrapAnchorStore(s: SparkSession, corpusDir: String,
-      docs: DataFrame): Unit = {
-    val (n, dig) = countAndDigest(docs)
-    graft.IndexStore.servedFrom(s, corpusDir, AnchorStoreName, anchorParams,
-      corpusCount = n)(graft.operators.Fuzzy.anchorRows(docs))
-    recordDigest(s, corpusDir, AnchorStoreName, dig)
+  private def requireAnchorK(s: SparkSession, corpusDir: String): Unit = {
+    val storedK = graft.IndexStore.storedMeta(s, corpusDir, AnchorStoreName)
+      .flatMap(_.get("k"))
+    require(storedK.contains(graft.operators.Fuzzy.SubstringK.toString),
+      s"anchor store for $corpusDir was built with K=${storedK.getOrElse("?")}, " +
+        s"this build hashes K=${graft.operators.Fuzzy.SubstringK} — refuse to mix")
   }
 
+  private val AnchorStore = DocStore(AnchorStoreName, "maintainAnchorIndex",
+    graft.operators.Fuzzy.anchorRows(_), anchorParams, clearsPurgeStale = false,
+    check = requireAnchorK)
+
+  /** Bootstrap the anchor store from an existing corpus frame (possibly
+    * empty); the serve-side staleness check compares its corpus count
+    * against the corpus it is asked to profile.
+    */
+  private[graft] def bootstrapAnchorStore(s: SparkSession, corpusDir: String,
+      docs: DataFrame): Unit = bootstrapDocStore(s, corpusDir, AnchorStore, docs)
+
   /** Apply one micro-batch of `(doc_id, text, …)` documents to the anchor
-    * store; false = replay, skipped. Like the tf store, the append needs
-    * NO store probe: anchors are keyed by doc_id and the stream's doc ids
-    * are append-only, so a batch's rows are disjoint from everything
-    * stored — per-batch cost is exactly O(batch chars) explode+hash work.
+    * store — O(batch chars) explode+hash work.
     */
   private[graft] def applyAnchorBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, docs: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir, AnchorStoreName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainAnchorIndex requires a configured " +
-          s"index store (${graft.IndexStore.DirConf})"))
-      val path = graft.IndexStore.storePath(root, corpusDir, AnchorStoreName)
-      require(graft.IndexStore.committed(s, path),
-        s"bootstrap the anchor store at $path (bootstrapAnchorStore over the " +
-          "existing corpus) before attaching an anchor maintainer")
-      val storedK = graft.IndexStore.storedMeta(s, corpusDir, AnchorStoreName)
-        .flatMap(_.get("k"))
-      require(storedK.contains(graft.operators.Fuzzy.SubstringK.toString),
-        s"anchor store at $path was built with K=${storedK.getOrElse("?")}, " +
-          s"this build hashes K=${graft.operators.Fuzzy.SubstringK} — refuse to mix")
-      val (n, dig) = countAndDigest(docs)
-      graft.IndexStore.append(s, corpusDir, AnchorStoreName,
-        graft.operators.Fuzzy.anchorRows(docs),
-        incrementCount = n, // advance the DOCUMENT count the serve check reads
-        extraMeta = Map(markerKey(stream) -> batchId.toString) ++
-          advancedDigest(graft.IndexStore.storedMeta(s, corpusDir, AnchorStoreName), dig))
-      true
-    }
+    applyDocStore(s, corpusDir, AnchorStore, stream, batchId, docs)
 
   /** Attach an anchor-index maintainer to a `(doc_id, text, …)` stream:
     * each micro-batch's positional K-gram anchors land in the durable
-    * store at O(batch chars) cost, exactly once behind the batch marker,
-    * so substring-level dedup
+    * store at O(batch chars) cost, so substring-level dedup
     * ([[graft.operators.Fuzzy.substringDedupFromStore]]) profiles the
     * corpus as of the last committed batch without re-hashing every char
     * position ingested today.
     */
   def maintainAnchorIndex(docs: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "anchor_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyAnchorBatch(owner, corpusDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, stream: String = "anchor_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(applyAnchorBatch(_, corpusDir, stream, _, _))
 
   // ------------------------------------------------ DSIR profile store --
 
@@ -731,65 +683,35 @@ object IndexMaintenance {
         "with bootstrapDsirStore instead of mixing feature spaces")
   }
 
+  /** One row per touched hash bucket with raw/target token counts — an
+    * increment is ≤ [[graft.operators.CorpusOps.DsirBuckets]] rows no
+    * matter the batch size, and profiles are additive (serving sums per
+    * bucket).
+    */
+  private val DsirStore = DocStore(DsirStoreName, "maintainDsirProfiles",
+    graft.operators.CorpusOps.dsirProfileRows(_), dsirParams, digest = false,
+    check = requireDsirGeometry)
+
   /** Bootstrap the durable DSIR profile store from an existing
-    * `(doc_id, text, lang, …)` corpus (possibly empty): one row per
-    * touched hash bucket with raw/target token counts. Geometry (bucket
-    * count + target language) is pinned in the sidecar, so a geometry
-    * change rebuilds loudly instead of mixing feature spaces.
+    * `(doc_id, text, lang, …)` corpus (possibly empty).
     */
   private[graft] def bootstrapDsirStore(s: SparkSession, corpusDir: String,
-      docs: DataFrame): Unit = {
-    graft.IndexStore.servedFrom(s, corpusDir, DsirStoreName,
-      params = dsirParams, corpusCount = docs.count())(
-      graft.operators.CorpusOps.dsirProfileRows(docs))
-    clearPurgeStale(s, corpusDir, DsirStoreName)
-  }
+      docs: DataFrame): Unit = bootstrapDocStore(s, corpusDir, DsirStore, docs)
 
-  /** Apply one micro-batch to the DSIR profile store; false = replay,
-    * skipped. The append is a bucket-profile INCREMENT — ≤ [[graft
-    * .operators.CorpusOps.DsirBuckets]] rows per batch no matter the
-    * batch size, and no store probe at all (profiles are additive:
-    * serving sums per bucket). The tf-store bootstrap guard applies for
-    * the same reason: append never creates the sidecar.
-    */
+  /** Apply one micro-batch to the DSIR profile store. */
   private[graft] def applyDsirBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, docs: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir, DsirStoreName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainDsirProfiles requires a configured " +
-          s"index store (${graft.IndexStore.DirConf})"))
-      require(graft.IndexStore.committed(s,
-        graft.IndexStore.storePath(root, corpusDir, DsirStoreName)),
-        s"bootstrap the DSIR store for $corpusDir (bootstrapDsirStore over " +
-          "the existing corpus) before attaching a profile maintainer")
-      requireDsirGeometry(s, corpusDir)
-      graft.IndexStore.append(s, corpusDir, DsirStoreName,
-        graft.operators.CorpusOps.dsirProfileRows(docs),
-        incrementCount = docs.count(),
-        extraMeta = Map(markerKey(stream) -> batchId.toString))
-      true
-    }
+    applyDocStore(s, corpusDir, DsirStore, stream, batchId, docs)
 
   /** Attach a DSIR profile maintainer to a `(doc_id, text, lang, …)`
     * stream: the importance MODEL stays current as the corpus grows —
-    * each micro-batch lands one O(buckets)-sized profile increment,
-    * exactly once behind the batch marker, so selection
-    * ([[dsirSelectFromStore]]) always scores against the corpus as of
-    * the last committed batch without re-tokenizing history.
+    * each micro-batch lands one O(buckets)-sized profile increment, so
+    * selection ([[dsirSelectFromStore]]) always scores against the corpus
+    * as of the last committed batch without re-tokenizing history.
     */
   def maintainDsirProfiles(docs: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "dsir_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyDsirBatch(owner, corpusDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, stream: String = "dsir_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(applyDsirBatch(_, corpusDir, stream, _, _))
 
   /** The smoothed ratio-weight table off the grown profile store — the
     * identical integer arithmetic as batch q144's weights: the store's
@@ -798,12 +720,8 @@ object IndexMaintenance {
     * weight table over the same corpus.
     */
   def dsirWeightsFromStore(s: SparkSession, corpusDir: String): DataFrame = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("dsirWeightsFromStore requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
-    val path = graft.IndexStore.storePath(root, corpusDir, DsirStoreName)
-    require(graft.IndexStore.committed(s, path),
-      s"bootstrap the DSIR store at $path before serving weights from it")
+    val path = graft.IndexStore.requireCommitted(s, corpusDir, DsirStoreName,
+      "dsirWeightsFromStore")
     requireDsirGeometry(s, corpusDir)
     requireNotPurgeStale(s, corpusDir, DsirStoreName, "bootstrapDsirStore")
     import org.apache.spark.sql.functions._
@@ -832,70 +750,38 @@ object IndexMaintenance {
 
   private[graft] val LmStoreName = "lm_bigrams"
 
-  /** Bootstrap the durable bigram-count store from an existing corpus —
-    * `(a, b, c)` counts, ADDITIVE like the DSIR profiles (serving sums
-    * per bigram type), so maintenance needs no store probe. Unigram
+  /** `(a, b, c)` bigram counts, ADDITIVE like the DSIR profiles (serving
+    * sums per bigram type), so maintenance needs no store probe. Unigram
     * totals for the smoothing denominators ride the EXISTING tf store —
     * attach BOTH maintainers to the same stream.
     */
-  private[graft] def bootstrapLmStore(s: SparkSession, corpusDir: String,
-      docs: DataFrame): Unit = {
-    val (n, dig) = countAndDigest(docs)
-    graft.IndexStore.servedFrom(s, corpusDir, LmStoreName, corpusCount = n)(
-      graft.operators.CorpusOps.bigramBags(docs)
-        .groupBy(org.apache.spark.sql.functions.col("a"),
-          org.apache.spark.sql.functions.col("b"))
-        .agg(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("c"))
-          .cast(org.apache.spark.sql.types.LongType)
-          .as("c")))
-    recordDigest(s, corpusDir, LmStoreName, dig)
-    clearPurgeStale(s, corpusDir, LmStoreName)
+  private def lmRows(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    graft.operators.CorpusOps.bigramBags(docs)
+      .groupBy(col("a"), col("b"))
+      .agg(sum(col("c")).cast(org.apache.spark.sql.types.LongType).as("c"))
   }
 
-  /** Apply one micro-batch of documents to the bigram store; false =
-    * replay, skipped. O(batch) rows per append (the batch's bigram
-    * TYPES), no store probe.
+  private val LmStore = DocStore(LmStoreName, "maintainLmBigrams", lmRows(_))
+
+  /** Bootstrap the durable bigram-count store from an existing corpus. */
+  private[graft] def bootstrapLmStore(s: SparkSession, corpusDir: String,
+      docs: DataFrame): Unit = bootstrapDocStore(s, corpusDir, LmStore, docs)
+
+  /** Apply one micro-batch of documents to the bigram store — O(batch)
+    * rows per append (the batch's bigram TYPES).
     */
   private[graft] def applyLmBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, docs: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir, LmStoreName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainLmBigrams requires a configured " +
-          s"index store (${graft.IndexStore.DirConf})"))
-      require(graft.IndexStore.committed(s,
-        graft.IndexStore.storePath(root, corpusDir, LmStoreName)),
-        s"bootstrap the LM store for $corpusDir (bootstrapLmStore over the " +
-          "existing corpus) before attaching a bigram maintainer")
-      import org.apache.spark.sql.functions._
-      val (n, dig) = countAndDigest(docs)
-      graft.IndexStore.append(s, corpusDir, LmStoreName,
-        graft.operators.CorpusOps.bigramBags(docs)
-          .groupBy(col("a"), col("b"))
-          .agg(sum(col("c")).cast(org.apache.spark.sql.types.LongType).as("c")),
-        incrementCount = n,
-        extraMeta = Map(markerKey(stream) -> batchId.toString) ++
-          advancedDigest(graft.IndexStore.storedMeta(s, corpusDir, LmStoreName), dig))
-      true
-    }
+    applyDocStore(s, corpusDir, LmStore, stream, batchId, docs)
 
   /** Attach a bigram-count maintainer to a `(doc_id, text, …)` stream —
     * the quality-filter LM (q146) stays current as the corpus grows,
     * like the DSIR importance model.
     */
   def maintainLmBigrams(docs: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "lm_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyLmBatch(owner, corpusDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, stream: String = "lm_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(applyLmBatch(_, corpusDir, stream, _, _))
 
   /** The smoothed transition-probability model off the grown stores —
     * bigram counts summed from the LM store, unigram totals from the tf
@@ -903,15 +789,10 @@ object IndexMaintenance {
     * batch q146 model over the same corpus.
     */
   def lmModelFromStore(s: SparkSession, corpusDir: String): DataFrame = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("lmModelFromStore requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
-    val lmPath = graft.IndexStore.storePath(root, corpusDir, LmStoreName)
-    val tfPath = graft.IndexStore.storePath(root, corpusDir, TfStoreName)
-    require(graft.IndexStore.committed(s, lmPath) &&
-      graft.IndexStore.committed(s, tfPath),
-      "bootstrap BOTH the lm_bigrams and tf_index stores before serving " +
-        s"the LM model ($lmPath, $tfPath)")
+    val lmPath = graft.IndexStore.requireCommitted(s, corpusDir, LmStoreName,
+      "lmModelFromStore")
+    val tfPath = graft.IndexStore.requireCommitted(s, corpusDir, TfStoreName,
+      "lmModelFromStore")
     requireNotPurgeStale(s, corpusDir, LmStoreName, "bootstrapLmStore")
     // The model mixes two stores — bigram numerators from lm_bigrams,
     // unigram smoothing denominators from tf_index — which is only sound
@@ -919,8 +800,8 @@ object IndexMaintenance {
     // attached, or one lags a batch, the smoothed probabilities would be
     // computed from mismatched snapshots with no symptom; compare the
     // sidecars' corpus counts and refuse to serve on disagreement.
-    val lmMeta = graft.IndexStore.storedMeta(s, corpusDir, LmStoreName)
-    val tfMeta = graft.IndexStore.storedMeta(s, corpusDir, TfStoreName)
+    val lmMeta = graft.IndexStore.readMeta(s, lmPath)
+    val tfMeta = graft.IndexStore.readMeta(s, tfPath)
     val lmN = lmMeta.flatMap(_.get(graft.IndexStore.CorpusCountKey))
     val tfN = tfMeta.flatMap(_.get(graft.IndexStore.CorpusCountKey))
     if (lmN.isEmpty || tfN.isEmpty || lmN != tfN)
@@ -1009,6 +890,29 @@ object IndexMaintenance {
   private[graft] val BpeDriftMinIncPct = 5L
   private[graft] val BpeDriftPct = 10L
 
+  /** Decoded BPE compression sidecar — the single place the refit
+    * predicate is written, shared by [[maybeRefitBpe]] and the
+    * `bpe_drift` gateway view (the ledger the trigger can never disagree
+    * with).
+    */
+  private[graft] final case class BpeDriftSnapshot(fitSyms: BigInt,
+      fitChars: BigInt, incSyms: BigInt, incChars: BigInt,
+      lastTrigger: Option[String]) {
+    def compression: Boolean =
+      fitChars > 0 && incChars * 100 >= fitChars * BpeDriftMinIncPct &&
+        fitSyms > 0 && incSyms * fitChars * 100 > fitSyms * incChars * (100 + BpeDriftPct)
+  }
+
+  /** Decode the compression sidecar; None without a fit baseline. */
+  private[graft] def bpeDriftSnapshot(meta: Map[String, String]): Option[BpeDriftSnapshot] =
+    for {
+      fitSy <- meta.get(BpeFitSymsKey).map(BigInt(_))
+      fitCh <- meta.get(BpeFitCharsKey).map(BigInt(_))
+    } yield BpeDriftSnapshot(fitSy, fitCh,
+      meta.get(BpeIncSymsKey).map(BigInt(_)).getOrElse(BigInt(0)),
+      meta.get(BpeIncCharsKey).map(BigInt(_)).getOrElse(BigInt(0)),
+      meta.get(BpeLastRefitTriggerKey))
+
   private def bpeWordRows(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     graft.operators.CorpusOps.tfRows(docs)
@@ -1016,102 +920,92 @@ object IndexMaintenance {
       .agg(sum(col("tf")).cast(org.apache.spark.sql.types.LongType).as("freq"))
   }
 
+  /** The word store's family data: appends also need the committed model
+    * store, and each batch, encoded under the STORED merges (O(batch ·
+    * Rounds)), advances the compression increments in the marker's
+    * sidecar write.
+    */
+  private val BpeWordStore = DocStore(BpeWordStoreName, "maintainBpeModel",
+    bpeWordRows(_),
+    check = (s, corpusDir) => {
+      graft.IndexStore.requireCommitted(s, corpusDir, BpeModelStoreName, "maintainBpeModel")
+      ()
+    },
+    incMeta = (s, corpusDir, words, meta) => {
+      val merges = storedBpeMerges(s, corpusDir).getOrElse(throw
+        new IllegalStateException(s"torn BPE model store for $corpusDir — re-bootstrap"))
+      val (sy, ch) = graft.operators.Bpe.compressionStats(
+        graft.operators.Bpe.applyMerges(words, merges))
+      def adv(key: String, d: BigInt) =
+        key -> (meta.get(key).map(BigInt(_)).getOrElse(BigInt(0)) + d).toString
+      Map(adv(BpeIncSymsKey, sy), adv(BpeIncCharsKey, ch))
+    })
+
   /** The summed (purge-aware: net-zero terms vanish) word-frequency frame
     * off the durable store.
     */
   private def bpeStoreWords(s: SparkSession, corpusDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException(s"BPE store access requires ${graft.IndexStore.DirConf}"))
-    s.read.parquet(graft.IndexStore.storePath(root, corpusDir, BpeWordStoreName))
+    s.read.parquet(graft.IndexStore.requireCommitted(s, corpusDir,
+        BpeWordStoreName, "BPE store access"))
       .groupBy(col("term"))
       .agg(sum(col("freq")).cast(org.apache.spark.sql.types.LongType).as("freq"))
       .filter(col("freq") > 0)
   }
 
-  private def writeBpeMerges(s: SparkSession, corpusDir: String,
-      merges: Seq[(Long, String, String, Long)]): Unit = {
-    val root = graft.IndexStore.configuredDir(s).get
-    val path = graft.IndexStore.storePath(root, corpusDir, BpeModelStoreName)
+  /** The stored merge sequence (bounded: ≤ Rounds rows). */
+  private[graft] def storedBpeMerges(s: SparkSession,
+      corpusDir: String): Option[Seq[(Long, String, String, Long)]] =
+    graft.IndexStore.committedPath(s, corpusDir, BpeModelStoreName).map { path =>
+      s.read.parquet(path)
+        .orderBy(org.apache.spark.sql.functions.col("round"))
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
+
+  /** Learn the merge sequence over the word store's summed counts,
+    * overwrite the model entry, and return the fresh compression baseline
+    * (zeroed increments) for the word store's sidecar.
+    */
+  private def fitBpeMerges(s: SparkSession, corpusDir: String): Map[String, String] = {
+    val words = bpeStoreWords(s, corpusDir)
+    val merges = graft.operators.Bpe.learn(words)
+    val path = graft.IndexStore.storePath(
+      graft.IndexStore.requireRoot(s, "BPE model write"), corpusDir, BpeModelStoreName)
     import s.implicits._
     merges.toDF("round", "left_sym", "right_sym", "pair_count")
       .coalesce(1).write.mode("overwrite").parquet(path)
     graft.IndexStore.writeMeta(s, path, Map(
       graft.IndexStore.StoreRowsKey -> merges.length.toString,
       "rounds" -> graft.operators.Bpe.Rounds.toString))
+    val (sy, ch) = graft.operators.Bpe.compressionStats(
+      graft.operators.Bpe.applyMerges(words, merges))
+    Map(BpeFitSymsKey -> sy.toString, BpeFitCharsKey -> ch.toString,
+      BpeIncSymsKey -> "0", BpeIncCharsKey -> "0")
   }
-
-  /** The stored merge sequence (bounded: ≤ Rounds rows). */
-  private[graft] def storedBpeMerges(s: SparkSession,
-      corpusDir: String): Option[Seq[(Long, String, String, Long)]] =
-    graft.IndexStore.configuredDir(s).flatMap { root =>
-      val path = graft.IndexStore.storePath(root, corpusDir, BpeModelStoreName)
-      if (!graft.IndexStore.committed(s, path)) None
-      else Some(s.read.parquet(path)
-        .orderBy(org.apache.spark.sql.functions.col("round"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq)
-    }
 
   /** Bootstrap the durable BPE tier from an existing corpus: word counts
     * (additive store), the learned merge sequence, and the compression
-    * baseline — required before attaching [[maintainBpeModel]].
+    * baseline.
     */
   private[graft] def bootstrapBpeStore(s: SparkSession, corpusDir: String,
       docs: DataFrame): Unit = {
-    val (n, dig) = countAndDigest(docs)
-    graft.IndexStore.servedFrom(s, corpusDir, BpeWordStoreName,
-      corpusCount = n)(bpeWordRows(docs))
-    recordDigest(s, corpusDir, BpeWordStoreName, dig)
-    clearPurgeStale(s, corpusDir, BpeWordStoreName)
-    val words = bpeStoreWords(s, corpusDir)
-    val merges = graft.operators.Bpe.learn(words)
-    writeBpeMerges(s, corpusDir, merges)
-    val (sy, ch) = graft.operators.Bpe.compressionStats(
-      graft.operators.Bpe.applyMerges(words, merges))
-    val root = graft.IndexStore.configuredDir(s).get
-    val wordPath = graft.IndexStore.storePath(root, corpusDir, BpeWordStoreName)
+    bootstrapDocStore(s, corpusDir, BpeWordStore, docs)
+    val baseline = fitBpeMerges(s, corpusDir)
+    val wordPath = graft.IndexStore.requireCommitted(s, corpusDir,
+      BpeWordStoreName, "bootstrapBpeStore")
     graft.IndexStore.readMeta(s, wordPath).foreach { meta =>
-      graft.IndexStore.writeMeta(s, wordPath, meta ++ Map(
-        BpeFitSymsKey -> sy.toString, BpeFitCharsKey -> ch.toString,
-        BpeIncSymsKey -> "0", BpeIncCharsKey -> "0"))
+      graft.IndexStore.writeMeta(s, wordPath, meta ++ baseline)
     }
   }
 
   /** Apply one micro-batch of `(doc_id, text, …)` documents to the BPE
-    * tier; false = replay, skipped. O(batch) word counting plus an
-    * O(batch · Rounds) encode of the batch's words under the STORED
-    * merges — the compression increment rides the batch marker's sidecar
-    * write, so a replay advances nothing.
+    * tier, then refit the merges if the compression trigger fired.
     */
   private[graft] def applyBpeBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, docs: DataFrame): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir, BpeWordStoreName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainBpeModel requires a configured " +
-          s"index store (${graft.IndexStore.DirConf})"))
-      val wordPath = graft.IndexStore.storePath(root, corpusDir, BpeWordStoreName)
-      require(graft.IndexStore.committed(s, wordPath) &&
-        graft.IndexStore.committed(s,
-          graft.IndexStore.storePath(root, corpusDir, BpeModelStoreName)),
-        s"bootstrap the BPE stores for $corpusDir (bootstrapBpeStore) " +
-          "before attaching a maintainer")
-      val merges = storedBpeMerges(s, corpusDir).getOrElse(throw
-        new IllegalStateException(s"torn BPE model store for $corpusDir — re-bootstrap"))
-      val (n, dig) = countAndDigest(docs)
-      val w = bpeWordRows(docs)
-      val (sy, ch) = graft.operators.Bpe.compressionStats(
-        graft.operators.Bpe.applyMerges(w, merges))
-      val meta0 = graft.IndexStore.readMeta(s, wordPath).getOrElse(Map.empty)
-      def adv(key: String, d: BigInt) =
-        key -> (meta0.get(key).map(BigInt(_)).getOrElse(BigInt(0)) + d).toString
-      graft.IndexStore.append(s, corpusDir, BpeWordStoreName, w,
-        incrementCount = n,
-        extraMeta = Map(markerKey(stream) -> batchId.toString,
-          adv(BpeIncSymsKey, sy), adv(BpeIncCharsKey, ch)) ++
-          advancedDigest(graft.IndexStore.readMeta(s, wordPath), dig))
+    applyDocStore(s, corpusDir, BpeWordStore, stream, batchId, docs) && {
       maybeRefitBpe(s, corpusDir)
       true
     }
@@ -1125,55 +1019,32 @@ object IndexMaintenance {
     * deterministic, so the retry converges (the PQ-refit argument).
     */
   private def maybeRefitBpe(s: SparkSession, corpusDir: String): Unit = {
-    val root = graft.IndexStore.configuredDir(s).getOrElse(return)
-    val wordPath = graft.IndexStore.storePath(root, corpusDir, BpeWordStoreName)
+    val wordPath = graft.IndexStore.committedPath(s, corpusDir, BpeWordStoreName)
+      .getOrElse(return)
     val meta = graft.IndexStore.readMeta(s, wordPath).getOrElse(return)
-    val fitSy = meta.get(BpeFitSymsKey).map(BigInt(_)).getOrElse(return)
-    val fitCh = meta.get(BpeFitCharsKey).map(BigInt(_)).getOrElse(return)
-    val incSy = meta.get(BpeIncSymsKey).map(BigInt(_)).getOrElse(BigInt(0))
-    val incCh = meta.get(BpeIncCharsKey).map(BigInt(_)).getOrElse(BigInt(0))
-    val armed = fitCh > 0 && incCh * 100 >= fitCh * BpeDriftMinIncPct
-    val fired = armed && fitSy > 0 &&
-      incSy * fitCh * 100 > fitSy * incCh * (100 + BpeDriftPct)
-    if (!fired) {
-      if (incCh > 0)
-        log.info(s"BPE model for $corpusDir: appended compression " +
-          s"$incSy/$incCh vs fit $fitSy/$fitCh — below the refit trigger")
+    val snap = bpeDriftSnapshot(meta).getOrElse(return)
+    val stats = s"fit=${snap.fitSyms}/${snap.fitChars}, " +
+      s"appended=${snap.incSyms}/${snap.incChars}"
+    if (!snap.compression) {
+      if (snap.incChars > 0)
+        log.info(s"BPE model for $corpusDir: $stats — below the refit trigger")
       return
     }
-    log.warn(s"BPE refit for $corpusDir: trigger=compression " +
-      s"(fit=$fitSy/$fitCh, appended=$incSy/$incCh)")
-    val words = bpeStoreWords(s, corpusDir)
-    val merges = graft.operators.Bpe.learn(words)
-    writeBpeMerges(s, corpusDir, merges)
-    val (sy, ch) = graft.operators.Bpe.compressionStats(
-      graft.operators.Bpe.applyMerges(words, merges))
-    graft.IndexStore.writeMeta(s, wordPath, meta ++ Map(
-      BpeFitSymsKey -> sy.toString, BpeFitCharsKey -> ch.toString,
-      BpeIncSymsKey -> "0", BpeIncCharsKey -> "0",
-      BpeLastRefitTriggerKey -> "compression"))
+    log.warn(s"BPE refit for $corpusDir: trigger=compression ($stats)")
+    graft.IndexStore.writeMeta(s, wordPath, meta ++ fitBpeMerges(s, corpusDir) +
+      (BpeLastRefitTriggerKey -> "compression"))
   }
 
   /** Attach a BPE-model maintainer to a `(doc_id, text, …)` stream: word
-    * counts land exactly once behind the batch marker, the compression
-    * statistic advances in the same sidecar write, and a fired trigger
-    * re-learns the merge sequence — so the tokenizer artifact (q138) and
-    * the encoding report (q140) follow the corpus instead of silently
-    * staling as it grows (the PQ-codebook failure mode, closed for the
-    * tokenizer).
+    * counts land behind the batch marker, the compression statistic
+    * advances in the same sidecar write, and a fired trigger re-learns
+    * the merge sequence — so the tokenizer artifact (q138) and the
+    * encoding report (q140) follow the corpus instead of silently staling
+    * as it grows (the PQ-codebook failure mode, closed for the tokenizer).
     */
   def maintainBpeModel(docs: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "bpe_maintenance"): StreamingQuery = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBpeBatch(owner, corpusDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, stream: String = "bpe_maintenance"): StreamingQuery =
+    attach(docs, checkpoint, stream)(applyBpeBatch(_, corpusDir, stream, _, _))
 
   /** q138 served off the durable tier: the stored merge table as a frame
     * (round, left_sym, right_sym, pair_count).
@@ -1271,8 +1142,7 @@ object IndexMaintenance {
     * centroid — high dot, no drift signal — while the cell outgrows every
     * other). O(k) sidecar bytes; k is clamped at [[graft.operators
     * .Sizing.MaxCells]] (65536 → ≤ ~1 MB in one sidecar file, the same
-    * order as the centroid store itself). Advanced in the SAME sidecar
-    * write as the batch marker, so a replayed batch advances nothing;
+    * order as the centroid store itself). Advanced with the batch marker;
     * cleared on every refit (tracking restarts against the new cells).
     */
   private[graft] val IvfIncCellCountsKey = "ivfIncCellCounts"
@@ -1301,8 +1171,7 @@ object IndexMaintenance {
   // a deterministic hash probe sample ([[graft.operators.Similarity
   // .pqResidualStats]]) — the reconstruction loss ADC scoring pays —
   // with a fit baseline stamped at bootstrap/refit and per-batch
-  // increments advanced in the SAME sidecar write as the batch marker
-  // (replay-safe like every other key here).
+  // increments advanced with the batch marker.
 
   private[graft] val PqFitResSumKey = "pqFitResSum"
   private[graft] val PqFitResNKey = "pqFitResN"
@@ -1493,16 +1362,19 @@ object IndexMaintenance {
     */
   private[graft] val Families = Set("", "_xm")
 
+  /** `(assignment store, model store)` names of index family `family`. */
+  private def ivfStoreNames(family: String): (String, String) = {
+    require(Families(family), s"unknown index family '$family'")
+    (IvfAssignStoreName + family,
+      if (family.isEmpty) graft.operators.Similarity.IvfModelStoreName
+      else graft.operators.Similarity.XmIvfModelStoreName)
+  }
+
   private def ivfPaths(s: SparkSession, corpusDir: String,
       family: String = ""): (String, String) = {
-    require(Families(family), s"unknown index family '$family'")
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("the IVF assignment maintainer requires a " +
-        s"configured index store (${graft.IndexStore.DirConf})"))
-    val modelName =
-      if (family.isEmpty) graft.operators.Similarity.IvfModelStoreName
-      else graft.operators.Similarity.XmIvfModelStoreName
-    (graft.IndexStore.storePath(root, corpusDir, IvfAssignStoreName + family),
+    val (assignName, modelName) = ivfStoreNames(family)
+    val root = graft.IndexStore.requireRoot(s, "the IVF assignment maintainer")
+    (graft.IndexStore.storePath(root, corpusDir, assignName),
       graft.IndexStore.storePath(root, corpusDir, modelName))
   }
 
@@ -1556,8 +1428,7 @@ object IndexMaintenance {
 
   /** Apply one micro-batch of `(vec_id, embedding, …)` rows: assign
     * against the STORED model (O(batch · k)), append, advance the drift
-    * sums in the same sidecar write as the batch marker, then refit if
-    * either trigger fires:
+    * sums with the batch marker, then refit if either trigger fires:
     *
     *  - GROWTH: store rows ≥ [[graft.operators.Ivf.RefitGrowthFactor]] ×
     *    the fit baseline's rows (the existing wholesale policy, now
@@ -1567,21 +1438,16 @@ object IndexMaintenance {
     *    mean (cross-multiplied BigInt compare, exact; only armed while
     *    the baseline mean is positive — a corpus whose best-cell dots
     *    aren't positive has no meaningful "degradation" direction).
-    *
-    * false = replay, skipped (and the drift sums must not double-count:
-    * they advance in the marker's sidecar write, so a replayed batch
-    * advances nothing).
     */
   private[graft] def applyIvfBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, batch: DataFrame,
-      family: String = ""): Boolean =
-    shouldApply(batchId, lastApplied(s, corpusDir, IvfAssignStoreName + family, stream),
-      stream, corpusDir) && {
-      val (assignPath, modelPath) = ivfPaths(s, corpusDir, family)
-      require(graft.IndexStore.committed(s, assignPath) &&
-        graft.IndexStore.committed(s, modelPath),
-        s"bootstrap the IVF assignment store for $corpusDir " +
-          "(bootstrapIvfAssignments) before attaching a maintainer")
+      family: String = ""): Boolean = {
+    val (assignName, modelName) = ivfStoreNames(family)
+    applyOnce(s, corpusDir, assignName, stream, batchId) { marker =>
+      val assignPath = graft.IndexStore.requireCommitted(s, corpusDir, assignName,
+        "maintainIvfAssignments")
+      val modelPath = graft.IndexStore.requireCommitted(s, corpusDir, modelName,
+        "maintainIvfAssignments")
       val meta0 = graft.IndexStore.readMeta(s, assignPath).getOrElse(Map.empty)
       require(meta0.contains(IvfFitNKey),
         s"IVF assignment store at $assignPath has no fit baseline — " +
@@ -1602,8 +1468,7 @@ object IndexMaintenance {
         val incN = meta0.get(IvfIncNKey).map(_.toLong).getOrElse(0L) + bn
         val incSum = meta0.get(IvfIncIdotSumKey).map(BigInt(_)).getOrElse(BigInt(0)) + bsum
         // PQ residual advance — only when the store carries a baseline
-        // (pqResMod) AND the codebook family is committed; rides the same
-        // sidecar write as the batch marker, so a replay advances nothing.
+        // (pqResMod) AND the codebook family is committed
         val pqInc: Map[String, String] =
           meta0.get(PqResModKey).flatMap(_.toIntOption) match {
             case Some(mod) => storedPqModels(s, corpusDir, family) match {
@@ -1620,17 +1485,17 @@ object IndexMaintenance {
             }
             case None => Map.empty
           }
-        graft.IndexStore.append(s, corpusDir, IvfAssignStoreName + family,
+        graft.IndexStore.append(s, corpusDir, assignName,
           sortedByVecId(asg, bn),
           incrementCount = bn,
-          extraMeta = Map(markerKey(stream) -> batchId.toString,
+          extraMeta = marker ++ Map(
             IvfIncIdotSumKey -> incSum.toString, IvfIncNKey -> incN.toString,
             IvfIncCellCountsKey -> advancedCellCounts(meta0, asg)) ++ pqInc)
       } finally asg.unpersist()
       maybeRefitIvf(s, corpusDir, family)
       maybeRefitPq(s, corpusDir, family)
-      true
     }
+  }
 
   /** Evaluate both refit triggers against the sidecar and refit in place
     * when one fires: re-fit the centroids over the STORE's own vectors
@@ -1799,15 +1664,13 @@ object IndexMaintenance {
       ids: Seq[Long]): Map[String, Long] = {
     require(ids.nonEmpty, "purgeEmbeddingTier: empty id list")
     import org.apache.spark.sql.functions._
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("purgeEmbeddingTier requires a configured " +
-        s"index store (${graft.IndexStore.DirConf})"))
+    val root = graft.IndexStore.requireRoot(s, "purgeEmbeddingTier")
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
     def purgeIvfFamily(family: String, famIds: Seq[Long]): Unit = {
       val storeName = IvfAssignStoreName + family
-      val assignPath = graft.IndexStore.storePath(root, corpusDir, storeName)
-      if (!graft.IndexStore.committed(s, assignPath)) return
+      val assignPath = graft.IndexStore.committedPath(s, corpusDir, storeName)
+        .getOrElse(return)
       val meta = graft.IndexStore.readMeta(s, assignPath).getOrElse(Map.empty)
       val purgedAll = s.read.parquet(assignPath).filter(col("vec_id").isin(famIds: _*))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -1871,8 +1734,7 @@ object IndexMaintenance {
     purgeIvfFamily("_xm", ids.map(_ + graft.operators.Similarity.XmOffset))
 
     val srpName = graft.operators.Similarity.SrpStoreName
-    val srpPath = graft.IndexStore.storePath(root, corpusDir, srpName)
-    if (graft.IndexStore.committed(s, srpPath)) {
+    graft.IndexStore.committedPath(s, corpusDir, srpName).foreach { srpPath =>
       val present = s.read.parquet(srpPath).filter(col("vec_id").isin(ids: _*))
         .select(col("vec_id")).distinct().count()
       results += srpName -> graft.IndexStore.purgeKeys(s, corpusDir, srpName,
@@ -1881,8 +1743,7 @@ object IndexMaintenance {
     }
 
     val mfpName = graft.operators.MultimodalOps.MediaFpStoreName
-    val mfpPath = graft.IndexStore.storePath(root, corpusDir, mfpName)
-    if (graft.IndexStore.committed(s, mfpPath)) {
+    graft.IndexStore.committedPath(s, corpusDir, mfpName).foreach { mfpPath =>
       val present = s.read.parquet(mfpPath).filter(col("media_id").isin(ids: _*))
         .select(col("media_id")).distinct().count()
       results += mfpName -> graft.IndexStore.purgeKeys(s, corpusDir, mfpName,
@@ -1924,7 +1785,8 @@ object IndexMaintenance {
 
   /** Refuse to serve an additive model store whose counts a purge left
     * inexact ([[ModelStaleKey]]). The trip is one-way by design: only a
-    * re-bootstrap over the surviving corpus restores exactness.
+    * re-bootstrap over the surviving corpus ([[bootstrapDocStore]])
+    * restores exactness.
     */
   private def requireNotPurgeStale(s: SparkSession, corpusDir: String,
       name: String, rebootstrap: String): Unit =
@@ -1935,17 +1797,6 @@ object IndexMaintenance {
           "content was unavailable — the additive counts still carry the " +
           s"purged docs' mass. Re-bootstrap over the surviving corpus " +
           s"($rebootstrap) before serving")
-
-  /** Drop the purge-staleness trip after a re-bootstrap rebuilt `name`'s
-    * counts from the corpus it was just handed.
-    */
-  private def clearPurgeStale(s: SparkSession, corpusDir: String,
-      name: String): Unit =
-    for (root <- graft.IndexStore.configuredDir(s)) {
-      val p = graft.IndexStore.storePath(root, corpusDir, name)
-      graft.IndexStore.readMeta(s, p).filter(_.contains(ModelStaleKey))
-        .foreach(meta => graft.IndexStore.writeMeta(s, p, meta - ModelStaleKey))
-    }
 
   private def purgeReqDigest(corpusDir: String, ids: Seq[Long]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -1994,9 +1845,7 @@ object IndexMaintenance {
       docsOpt: Option[DataFrame] = None): Map[String, Long] = {
     require(ids.nonEmpty, "purgeAll: empty id list")
     import org.apache.spark.sql.functions._
-    val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-      new IllegalStateException("purgeAll requires a configured index " +
-        s"store (${graft.IndexStore.DirConf})"))
+    val root = graft.IndexStore.requireRoot(s, "purgeAll")
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val req = purgeReqDigest(corpusDir, ids)
     def path(name: String) = graft.IndexStore.storePath(root, corpusDir, name)
@@ -2128,10 +1977,7 @@ object IndexMaintenance {
     */
   def ivfAssignmentsView(s: SparkSession, corpusDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val stored = graft.IndexStore.configuredDir(s).map(root =>
-      graft.IndexStore.storePath(root, corpusDir, IvfAssignStoreName))
-      .filter(graft.IndexStore.committed(s, _))
-    stored match {
+    graft.IndexStore.committedPath(s, corpusDir, IvfAssignStoreName) match {
       case Some(path) =>
         s.read.parquet(path).select(col("vec_id"), col("cid"), col("idot"))
       case None =>
@@ -2155,10 +2001,7 @@ object IndexMaintenance {
     */
   def anchorIndexView(s: SparkSession, corpusDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val stored = graft.IndexStore.configuredDir(s).map(root =>
-      graft.IndexStore.storePath(root, corpusDir, AnchorStoreName))
-      .filter(graft.IndexStore.committed(s, _))
-    stored match {
+    graft.IndexStore.committedPath(s, corpusDir, AnchorStoreName) match {
       case Some(path) =>
         s.read.parquet(path).select(col("doc_id"), col("i"), col("s"))
       case None =>
@@ -2196,11 +2039,8 @@ object IndexMaintenance {
     // image-side (_xm) store's growth/drift/skew ledger is maintained by
     // the same triggers and must be just as queryable.
     val rows = for {
-      root <- graft.IndexStore.configuredDir(s).toSeq
       family <- IndexFamilies
-      path = graft.IndexStore.storePath(root, corpusDir, IvfAssignStoreName + family)
-      if graft.IndexStore.committed(s, path)
-      meta <- graft.IndexStore.readMeta(s, path).toSeq
+      meta <- graft.IndexStore.storedMeta(s, corpusDir, IvfAssignStoreName + family).toSeq
       sn <- driftSnapshot(meta).toSeq
     } yield org.apache.spark.sql.Row(family, sn.fitN, sn.incN, sn.rows, sn.k,
       new java.math.BigDecimal(sn.fitSum.bigInteger),
@@ -2210,10 +2050,7 @@ object IndexMaintenance {
       sn.hotCell.map(_._2).getOrElse(0L),
       sn.growth, sn.drift, sn.skew,
       sn.lastTrigger.orNull)
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      driftViewSchema)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), driftViewSchema)
   }
 
   private val pqDriftViewSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -2240,20 +2077,14 @@ object IndexMaintenance {
     // text-side one ("a ledger the trigger can never disagree with" has
     // to hold for every family the trigger runs on).
     val rows = for {
-      root <- graft.IndexStore.configuredDir(s).toSeq
       family <- IndexFamilies
-      path = graft.IndexStore.storePath(root, corpusDir, IvfAssignStoreName + family)
-      if graft.IndexStore.committed(s, path)
-      meta <- graft.IndexStore.readMeta(s, path).toSeq
+      meta <- graft.IndexStore.storedMeta(s, corpusDir, IvfAssignStoreName + family).toSeq
       sn <- pqDriftSnapshot(meta).toSeq
     } yield org.apache.spark.sql.Row(family, sn.fitN, sn.incN, sn.mod,
       new java.math.BigDecimal(sn.fitSum.bigInteger),
       new java.math.BigDecimal(sn.incSum.bigInteger),
       sn.residual, sn.lastTrigger.orNull)
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      pqDriftViewSchema)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), pqDriftViewSchema)
   }
 
   private val bpeDriftViewSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -2266,58 +2097,35 @@ object IndexMaintenance {
 
   /** The BPE compression ledger as a queryable 1-row frame — the
     * gateway's `bpe_drift` view ("how stale is the tokenizer / is a
-    * refit pending / did one fire"), decoded through the SAME arithmetic
-    * [[maybeRefitBpe]] triggers on. Schema-stable empty when no store is
-    * configured/bootstrapped.
+    * refit pending / did one fire"), decoded through the SAME
+    * [[bpeDriftSnapshot]] [[maybeRefitBpe]] triggers on. Schema-stable
+    * empty when no store is configured/bootstrapped.
     */
   def bpeDriftView(s: SparkSession, corpusDir: String): DataFrame = {
     val rows = for {
-      root <- graft.IndexStore.configuredDir(s).toSeq
-      path = graft.IndexStore.storePath(root, corpusDir, BpeWordStoreName)
-      if graft.IndexStore.committed(s, path)
-      meta <- graft.IndexStore.readMeta(s, path).toSeq
-      fitSy <- meta.get(BpeFitSymsKey).map(BigInt(_)).toSeq
-      fitCh <- meta.get(BpeFitCharsKey).map(BigInt(_)).toSeq
-    } yield {
-      val incSy = meta.get(BpeIncSymsKey).map(BigInt(_)).getOrElse(BigInt(0))
-      val incCh = meta.get(BpeIncCharsKey).map(BigInt(_)).getOrElse(BigInt(0))
-      val armed = fitCh > 0 && incCh * 100 >= fitCh * BpeDriftMinIncPct
-      val pending = armed && fitSy > 0 &&
-        incSy * fitCh * 100 > fitSy * incCh * (100 + BpeDriftPct)
-      org.apache.spark.sql.Row(
-        new java.math.BigDecimal(fitSy.bigInteger),
-        new java.math.BigDecimal(fitCh.bigInteger),
-        new java.math.BigDecimal(incSy.bigInteger),
-        new java.math.BigDecimal(incCh.bigInteger),
-        pending, meta.get(BpeLastRefitTriggerKey).orNull)
-    }
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      bpeDriftViewSchema)
+      meta <- graft.IndexStore.storedMeta(s, corpusDir, BpeWordStoreName).toSeq
+      sn <- bpeDriftSnapshot(meta).toSeq
+    } yield Row(
+      new java.math.BigDecimal(sn.fitSyms.bigInteger),
+      new java.math.BigDecimal(sn.fitChars.bigInteger),
+      new java.math.BigDecimal(sn.incSyms.bigInteger),
+      new java.math.BigDecimal(sn.incChars.bigInteger),
+      sn.compression, sn.lastTrigger.orNull)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), bpeDriftViewSchema)
   }
 
   /** Attach an IVF assignment maintainer to a `(vec_id, embedding, …)`
-    * stream: each micro-batch lands its cell assignments exactly once
-    * behind the batch marker, the drift statistic advances in the same
-    * sidecar write, and a fired trigger refits centroids + reassigns in
+    * stream: each micro-batch lands its cell assignments behind the batch
+    * marker, the drift statistic advances in the same sidecar write, and
+    * a fired trigger refits centroids + reassigns in
     * place — so [[graft.operators.Similarity.ivfAnnFromStore]] (and the
     * batch q53/q68 paths, which share the durable model entry) serve an
     * index that followed the corpus all day.
     */
   def maintainIvfAssignments(embeddings: DataFrame, corpusDir: String,
       checkpoint: String, stream: String = "ivf_maintenance",
-      family: String = ""): StreamingQuery = {
-    val owner = embeddings.sparkSession
-    embeddings.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyIvfBatch(owner, corpusDir, stream, batchId, batch, family)
-        ()
-      }
-      .start()
-  }
+      family: String = ""): StreamingQuery =
+    attach(embeddings, checkpoint, stream)(applyIvfBatch(_, corpusDir, stream, _, _, family))
 
   /** Bootstrap the durable media-fingerprint store from an existing image
     * frame (possibly empty) — decode + hash once per image, geometry and
@@ -2333,13 +2141,13 @@ object IndexMaintenance {
   }
 
   /** One micro-batch of the streaming media near-dup pipeline
-    * ([[maintainMediaFpIndex]]); false = replay, nothing ran.
+    * ([[maintainMediaFpIndex]]).
     *
     * Same two-effect crash argument as [[decontaminateBatch]]: (1) the
     * batch's near-dup pairs against store ∪ batch land idempotently in
     * `pairsDir/batch_id=N` (a replay recomputes against the same store
     * state and overwrites byte-identical content), then (2) the batch's
-    * fingerprints append behind the exactly-once batch marker. The
+    * fingerprints append behind the batch marker. The
     * DECODE runs once per batch — the checkpointed fingerprint frame
     * feeds both the probe and the append; the stored side is never
     * re-decoded (that is the point of the store).
@@ -2349,15 +2157,9 @@ object IndexMaintenance {
       batch: Dataset[graft.multimodal.Multimodal.ImageRow]): Boolean = {
     import org.apache.spark.sql.functions.{col, min}
     val ops = graft.operators.MultimodalOps
-    shouldApply(batchId, lastApplied(s, corpusDir, ops.MediaFpStoreName, stream),
-      stream, corpusDir) && {
-      val root = graft.IndexStore.configuredDir(s).getOrElse(throw
-        new IllegalStateException("maintainMediaFpIndex requires a " +
-          s"configured index store (${graft.IndexStore.DirConf})"))
-      val storePath = graft.IndexStore.storePath(root, corpusDir, ops.MediaFpStoreName)
-      require(graft.IndexStore.committed(s, storePath),
-        s"bootstrap the media-fp store at $storePath (batch build over the " +
-          "existing images) before attaching a media maintainer")
+    applyOnce(s, corpusDir, ops.MediaFpStoreName, stream, batchId) { marker =>
+      val storePath = graft.IndexStore.requireCommitted(s, corpusDir,
+        ops.MediaFpStoreName, "maintainMediaFpIndex")
       val batchFps = ops.imageFps(batch).localCheckpoint() // ONE decode per batch
       try {
         val minId = batchFps.agg(min(col("media_id"))).head().get(0) // bounded: 1 row
@@ -2368,10 +2170,9 @@ object IndexMaintenance {
             .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
         }
         graft.IndexStore.append(s, corpusDir, ops.MediaFpStoreName, batchFps,
-          batchFps.count(), Map(markerKey(stream) -> batchId.toString))
+          batchFps.count(), marker)
         ops.invalidateImageFpCache(s, corpusDir) // session tier refills from the grown store
       } finally graft.Materialize.free(batchFps)
-      true
     }
   }
 
@@ -2389,31 +2190,13 @@ object IndexMaintenance {
     */
   def maintainMediaFpIndex(images: DataFrame, corpusDir: String,
       pairsDir: String, checkpoint: String,
-      stream: String = "media_fp_maintenance"): StreamingQuery = {
-    val owner = images.sparkSession
-    import owner.implicits._
-    images.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        mediaFpBatch(owner, corpusDir, pairsDir, stream, batchId,
-          batch.as[graft.multimodal.Multimodal.ImageRow])
-        ()
-      }
-      .start()
-  }
+      stream: String = "media_fp_maintenance"): StreamingQuery =
+    attach(images, checkpoint, stream)((s, batchId, batch) =>
+      mediaFpBatch(s, corpusDir, pairsDir, stream, batchId,
+        batch.as(Encoders.product[graft.multimodal.Multimodal.ImageRow])))
 
   /** Attach an SRP-index maintainer to a `(vec_id, embedding)` stream. */
   def maintainSrpIndex(embeddings: DataFrame, corpusDir: String,
-      checkpoint: String, stream: String = "srp_maintenance"): StreamingQuery = {
-    val owner = embeddings.sparkSession
-    embeddings.writeStream
-      .queryName(stream)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyEmbeddingsBatch(owner, corpusDir, stream, batchId, batch)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, stream: String = "srp_maintenance"): StreamingQuery =
+    attach(embeddings, checkpoint, stream)(applyEmbeddingsBatch(_, corpusDir, stream, _, _))
 }

@@ -584,4 +584,45 @@ class SqlGatewaySpec extends SparkSpec {
       } finally gw.stop()
     } finally spark.conf.unset(IndexStore.DirConf)
   }
+
+  test("stop() shuts the request pool down: no request thread outlives the gateway") {
+    import scala.jdk.CollectionConverters._
+    def poolThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(SqlGateway.PoolThreadPrefix)).toSet
+    val before = poolThreads
+    val mine = withGateway { (_, port) =>
+      assert(get(port, "/ping").statusCode() == 200)
+      poolThreads -- before
+    }
+    assert(mine.nonEmpty, "the request must run on a named gateway pool thread")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (mine.exists(_.isAlive) && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(!mine.exists(_.isAlive),
+      s"pool threads alive after stop(): ${mine.filter(_.isAlive).map(_.getName)}")
+  }
+
+  test("/search answers 503 while the tf store is torn and 200 once it heals") {
+    val root = java.nio.file.Files.createTempDirectory("graft_gw_torn").toFile.getAbsolutePath
+    spark.conf.set(IndexStore.DirConf, root)
+    try {
+      streaming.IndexMaintenance.bootstrapTfStore(spark, dir, Tables.load(spark, dir, "documents"))
+      val gw = SqlGateway.start(spark, corpusDir = dir)
+      try {
+        val port = gw.port
+        assert(get(port, "/search?doc_id=3&k=5").statusCode() == 200)
+        // an append's data files landed without its sidecar: a server-side
+        // race the next sidecar write heals, not the caller's error
+        val store = new java.io.File(
+          IndexStore.storePath(root, dir, streaming.IndexMaintenance.TfStoreName))
+        val part = store.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val extra = new java.io.File(store, "part-torn-extra.parquet")
+        java.nio.file.Files.copy(part.toPath, extra.toPath)
+        val torn = get(port, "/search?doc_id=3&k=5")
+        assert(torn.statusCode() == 503 && torn.body().contains("torn"), torn.body())
+        extra.delete()
+        val healed = get(port, "/search?doc_id=3&k=5")
+        assert(healed.statusCode() == 200, healed.body())
+      } finally gw.stop()
+    } finally spark.conf.unset(IndexStore.DirConf)
+  }
 }

@@ -99,4 +99,14 @@ class TermVecDotSpec extends SparkSpec {
     fails(Seq("a", "b"), Seq(1L), Seq("a"), Seq(1L))
     fails(Seq("a"), Seq(-1L), Seq("a"), Seq(1L))
   }
+
+  test("toDecimal refuses a 128-bit sum with the top bit set instead of wrapping negative") {
+    import graft.functions.expressions.TermVecDot
+    // 2^127 (hi = Long.MinValue as a signed word): past DECIMAL(38,0)
+    intercept[ArithmeticException](TermVecDot.toDecimal(Long.MinValue, 0L))
+    intercept[ArithmeticException](TermVecDot.toDecimal(-1L, -1L)) // 2^128 − 1
+    // the largest unsigned lo word still converts exactly
+    assert(TermVecDot.toDecimal(0L, -1L).toJavaBigDecimal.toBigInteger ==
+      (BigInt(1) << 64).bigInteger.subtract(java.math.BigInteger.ONE))
+  }
 }
