@@ -308,7 +308,10 @@ object IndexStore {
     * existing store, advancing the sidecar's corpus count by
     * `incrementCount` (≥ 0) so the next load's staleness check expects
     * the grown corpus. Requires a configured store: an append with
-    * nowhere durable to land is a caller bug, not a silent no-op.
+    * nowhere durable to land is a caller bug, not a silent no-op. This
+    * session's caches that read the store drop their entries
+    * ([[SessionCache.storeChanged]]), so the next read serves the grown
+    * store.
     *
     * SINGLE-WRITER contract: the sidecar advance is a read-modify-write
     * with no cross-process lock, so concurrent appenders to the SAME
@@ -366,6 +369,7 @@ object IndexStore {
       writeMeta(s, path,
         advanced ++ Map(StoreRowsKey -> storeRowsNow.toString) ++ extraMeta)
     }
+    SessionCache.storeChanged(s, corpusDir, name)
   }
 
   /** Rewrite the store entry into `targetRowsPerFile`-sized parquet files,
@@ -443,8 +447,9 @@ object IndexStore {
     * consumer (e.g. BM25's N) sees the post-purge corpus. Scale: one
     * store scan + an `isin` filter against the (request-sized, broadcast)
     * key list — purge requests are human-scale, never corpus-scale.
-    * Session caches holding pre-purge frames are the caller's to
-    * invalidate (fresh sessions always reload from the store).
+    * This session's caches that read the store drop their entries
+    * ([[SessionCache.storeChanged]]); other sessions reload from the
+    * store at their next fresh load.
     */
   def purgeKeys(s: SparkSession, corpusDir: String, name: String,
       keyCol: String, keys: Seq[Long], countDecrement: Long = -1L,
@@ -501,6 +506,7 @@ object IndexStore {
       throw new java.io.IOException(s"IndexStore.purgeKeys: delete $path failed")
     if (!fs.rename(new Path(staging), p))
       throw new java.io.IOException(s"IndexStore.purgeKeys: rename $staging -> $path failed")
+    SessionCache.storeChanged(s, corpusDir, name)
     removed
   }
 }

@@ -21,7 +21,9 @@ import org.apache.spark.storage.StorageLevel
   * Deliberately NOT used for [[SessionCache]]d index frames — those are
   * built-once/served-many by design (and their `persist` blocks are
   * droppable/recomputable, unlike released checkpoint blocks, which are
-  * gone for good — never release a frame that outlives its query).
+  * gone for good — never release a frame that outlives its query). A
+  * checkpoint-valued cache frees its blocks with [[free]] only when its
+  * value leaves the cache (the [[SessionCache]] release contract).
   */
 object Materialize {
   private val registry =
@@ -39,8 +41,8 @@ object Materialize {
       org.apache.logging.log4j.Level.ERROR)
 
   /** Registry key is the SESSION, not the context: every `newSession()`
-    * (tests, the SqlGateway's per-request sessions) shares one
-    * applicationId, and an applicationId-keyed releaseAll from one
+    * (tests, and any caller that isolates work in its own session) shares
+    * one applicationId, and an applicationId-keyed releaseAll from one
     * session would unpersist checkpoint blocks a concurrently running
     * query in another session still needs — released checkpoint blocks
     * are unrecoverable, so that query would die on missing blocks.

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.annotation.tailrec
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, corpus dir) memoization for built-once/served-many
   * artifacts — the materialized index frames (shingle sets, quality
@@ -11,54 +13,122 @@ import org.apache.spark.sql.SparkSession
   * Lifecycle: entries live for the session (the posture of a production
   * index — built once per corpus, reused by every query); persisted
   * frames spill via their own StorageLevel rather than being evicted.
+  *
+  * The derived-artifact graph: every cache declares, where it is
+  * constructed, what its build reads — the durable [[IndexStore]]
+  * entries (`stores`, by store name) and the other caches (`caches`, by
+  * cache name). A store mutation calls [[SessionCache.storeChanged]],
+  * which drops, for that session and corpus dir only, every cache that
+  * reads the store directly or through other caches.
+  * [[IndexStore.append]] and [[IndexStore.purgeKeys]] fire it after they
+  * commit ([[IndexStore.compact]] changes no row and does not); the model
+  * overwrites made outside a cache build (the IVF drift refit, the PQ
+  * refit) fire it themselves. Store writes made INSIDE a cache build (a
+  * served model's first fit, a stale store's rebuild) do not: the entry
+  * being built already reflects them. Other sessions' entries stay —
+  * cross-session freshness is the store's job (its sidecar staleness
+  * checks). Caches register themselves when constructed and the walk
+  * reads only that registry, so it never loads an operator object; one
+  * that was never loaded holds no entries.
+  *
+  * Fixture immutability: fixture tables ([[Tables.load]]) do not change
+  * within a session, so a cache whose build reads only them declares no
+  * store and never drops — a rebuild would give the identical frame.
+  *
+  * Release contract: each cache names one release function, run on every
+  * value that leaves it — a dropped entry and the build that lost a
+  * first-access race alike. Persisted frames unpersist
+  * ([[SessionCache.frames]]); `localCheckpoint` frames free their
+  * checkpoint blocks ([[Materialize.free]] — `Dataset.unpersist` leaves
+  * those in place); driver-side models release nothing.
   */
-final class SessionCache[V] {
-  private val entries =
-    scala.collection.concurrent.TrieMap.empty[(String, String), V]
+private[graft] final class SessionCache[V](val name: String,
+    val stores: Set[String] = Set(), val caches: Set[String] = Set())(release: V => Unit) {
+  require(!stores.contains(null),
+    s"session cache $name names a store whose val is not yet initialized")
 
-  /** r18 (ADVICE): NOT TrieMap.getOrElseUpdate — that can evaluate
+  private val entries =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), V]
+
+  SessionCache.register(this)
+
+  /** `variant` names an extra slot of `dir`'s entry (e.g. a filtered
+    * referent), dropped together with `dir`'s own.
+    *
+    * r18 (ADVICE): NOT TrieMap.getOrElseUpdate — that can evaluate
     * `build` in two racing threads and silently drop one result, leaking
-    * the losing build's persisted blocks (tangible for the persisted
-    * index frames; the concurrent-serving path hits first access from
-    * many requests). putIfAbsent keeps exactly one winner and the loser's
-    * frames are explicitly unpersisted.
+    * the losing build's blocks. putIfAbsent keeps exactly one winner and
+    * the loser goes to `release`.
     */
-  def getOrElseUpdate(s: SparkSession, dir: String)(build: => V): V = {
-    val k = SessionCache.key(s, dir)
+  def getOrElseUpdate(s: SparkSession, dir: String, variant: String = "")(build: => V): V = {
+    val k = (SessionCache.sessionKey(s), dir, variant)
     entries.get(k) match {
       case Some(v) => v
       case None =>
         val built = build
         entries.putIfAbsent(k, built) match {
-          case Some(winner) => SessionCache.discard(built); winner
+          case Some(winner) => release(built); winner
           case None => built
         }
     }
   }
 
-  /** Drop the entry (returning it for cleanup, e.g. unpersist) — the
-    * invalidation hook for durable-index appends: the next read rebuilds
-    * from the now-larger on-disk store.
-    */
-  def remove(s: SparkSession, dir: String): Option[V] =
-    entries.remove(SessionCache.key(s, dir))
+  private def drop(session: String, dir: String): Unit =
+    entries.keys.filter(k => k._1 == session && k._2 == dir).foreach(entries.remove(_).foreach(release))
+
+  private def dirs(session: String): Set[String] =
+    entries.keys.collect { case (`session`, d, _) => d }.toSet
 }
 
-object SessionCache {
+private[graft] object SessionCache {
+  private val registry =
+    scala.collection.concurrent.TrieMap.empty[String, SessionCache[_]]
+
+  private def register(c: SessionCache[_]): Unit =
+    registry.putIfAbsent(c.name, c).foreach { _ =>
+      throw new IllegalStateException(s"duplicate session cache name ${c.name}")
+    }
+
   /** applicationId PLUS the session's object identity: a restarted
     * session (new SparkSession instance, possibly same appId) must never
     * be handed a frame bound to a stopped one.
     */
-  private def key(s: SparkSession, dir: String): (String, String) =
-    (s.sparkContext.applicationId + "@" + System.identityHashCode(s), dir)
+  private def sessionKey(s: SparkSession): String =
+    s.sparkContext.applicationId + "@" + System.identityHashCode(s)
 
-  /** Release whatever a losing race build may have persisted: DataFrames
-    * unpersist (no-op if never persisted); tuples of frames recurse;
-    * plain model values need nothing.
+  /** Store `store` of `corpusDir` changed: drop this session's entries
+    * for `corpusDir` in every cache that reads it.
     */
-  private def discard(v: Any): Unit = v match {
-    case df: org.apache.spark.sql.Dataset[_] => df.unpersist(false); ()
-    case p: Product => p.productIterator.foreach(discard)
-    case _ => ()
+  def storeChanged(s: SparkSession, corpusDir: String, store: String): Unit = {
+    val k = sessionKey(s)
+    readersOf(store).foreach(_.drop(k, corpusDir))
   }
+
+  /** The registered caches whose builds read `store`, directly or
+    * through other caches.
+    */
+  private def readersOf(store: String): Seq[SessionCache[_]] = {
+    val all = registered.toSeq
+    @tailrec def close(hit: Set[String]): Set[String] = {
+      val grown = hit ++ all.filter(_.caches.exists(hit)).map(_.name)
+      if (grown.size == hit.size) hit else close(grown)
+    }
+    val names = close(all.filter(_.stores(store)).map(_.name).toSet)
+    all.filter(c => names(c.name))
+  }
+
+  def registered: Iterable[SessionCache[_]] = registry.values
+
+  /** The live `(cache name, corpus dir)` entries of session `s`. */
+  def live(s: SparkSession): Set[(String, String)] = {
+    val k = sessionKey(s)
+    registered.flatMap(c => c.dirs(k).map(c.name -> _)).toSet
+  }
+
+  /** Release for persisted frames. */
+  val unpersist: DataFrame => Unit = df => { df.unpersist(); () }
+
+  /** A cache of persisted frames, released with [[unpersist]]. */
+  def frames(name: String, stores: Set[String] = Set(), caches: Set[String] = Set()): SessionCache[DataFrame] =
+    new SessionCache[DataFrame](name, stores, caches)(unpersist)
 }

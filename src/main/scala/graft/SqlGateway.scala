@@ -87,7 +87,7 @@ object SqlGateway {
     * one narrow two-column scan on first use, an InMemoryTableScan on
     * every repeat.
     */
-  private val attrCache = new graft.SessionCache[DataFrame]
+  private val attrCache = graft.SessionCache.frames("gatewayAttrs")
 
   private[graft] def attrFrame(spark: SparkSession, corpusDir: String): DataFrame =
     attrCache.getOrElseUpdate(spark, corpusDir)(

@@ -265,14 +265,16 @@ object Bpe {
   }
 
   private val learnCache =
-    new graft.SessionCache[(Seq[(Long, String, String, Long)], DataFrame)]
+    new graft.SessionCache[(Seq[(Long, String, String, Long)], DataFrame)](
+      "bpeLearned", caches = Set("tfIndex"))(v => graft.Materialize.free(v._2))
 
   /** Learned merges + encoded vocabulary for the corpus at `dir`, built
     * once per session — q138 (the merge sequence) and q140 (the encoding
     * report) share one R-round loop, like the q130/q131 retrieval legs
     * share their rank lists. The kept frame is the round-R checkpoint:
-    * vocabulary-sized, never released (built-once/served-many — the
-    * [[graft.Materialize]] discipline for session-cached frames).
+    * vocabulary-sized, freed only when its build loses a first-access
+    * race (built-once/served-many — the [[graft.Materialize]] discipline
+    * for session-cached frames).
     */
   private[graft] def learned(s: SparkSession, dir: String): (Seq[(Long, String, String, Long)], DataFrame) =
     learnCache.getOrElseUpdate(s, dir)(learnWithFrame(wordCounts(s, dir), Rounds))

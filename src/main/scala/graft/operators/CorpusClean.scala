@@ -116,11 +116,12 @@ object CorpusClean {
     * localCheckpoint (NOT registered ephemeral) severs lineage, so the
     * per-query [[graft.Materialize.releaseAll]] of downstream ephemeral
     * frames can never strand this one; narrow (3 cols/surviving doc).
-    * Invalidated on shingle-index appends via
-    * [[Dedup.invalidateComponents]] (the cleaned set of a grown corpus
-    * is a different frame).
+    * Drops with the shared indexes it reads (the cleaned set of a grown
+    * corpus is a different frame); released with [[graft.Materialize.free]],
+    * since its blocks are checkpoint blocks.
     */
-  private val cleanedCache = new graft.SessionCache[DataFrame]
+  private[graft] val cleanedCache = new graft.SessionCache[DataFrame](
+    "cleaned", caches = Set("qualityIndex", "verifiedPairs", "decontPairs"))(graft.Materialize.free)
 
   /** The composition's un-checkpointed build plan — what [[cleanedFrame]]
     * materializes, and what the plan guards inspect (the cached frame's
@@ -136,10 +137,6 @@ object CorpusClean {
   private[graft] def cleanedFrame(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     cleanedCache.getOrElseUpdate(s, dir)(cleanedBuild(s, dir).localCheckpoint())
-
-  private[operators] def invalidateCleaned(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    cleanedCache.remove(s, dir).foreach(graft.Materialize.free)
 
   /** The full cleaning recipe as a DuckDB CTE chain ending in
     * `cleaned(doc_id, quality_micro, split)` — q64 selects it directly;

@@ -318,7 +318,7 @@ object CorpusOps {
     * built-once/served-many posture as TextAnalysis.shingleIndex /
     * qualityIndex: q97 and q102 both serve off one tokenize+count pass.
     */
-  private val tfIndexCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val tfIndexCache = graft.SessionCache.frames("tfIndex")
 
   /** `(doc_id, term, tf)` rows of any `(doc_id, text, …)` frame — the
     * per-batch increment the streaming tf-store maintainer appends, and
@@ -340,7 +340,7 @@ object CorpusOps {
     * per-(doc, term) function of it, one join + one integer expression
     * away, and the cosine leg reads it three times per run).
     */
-  private val tfidfWeightCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val tfidfWeightCache = graft.SessionCache.frames("tfidfWeight", caches = Set("tfIndex"))
 
   private[graft] def tfidfWeightIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -368,9 +368,9 @@ object CorpusOps {
     * term-keyed joins and a pair×terms hash-aggregate (26.4M intermediate
     * rows for 994k pairs at sf1). n2 rides the same row, so the norm join
     * disappears too. Session-cached like the weight index it derives
-    * from; invalidated with it ([[invalidateTfidfBlocking]]).
+    * from.
     */
-  private val tfidfVectorCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val tfidfVectorCache = graft.SessionCache.frames("tfidfVector", caches = Set("tfidfWeight"))
 
   private[graft] def tfidfVectorIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -386,30 +386,6 @@ object CorpusOps {
           col("n2"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }
-
-  /** Corpus-append invalidation hook (called via
-    * [[Dedup.invalidateComponents]]): the capped postings of a grown
-    * corpus are a different frame (df counts move) — and so are the
-    * tf-idf weights (idf depends on corpus-wide df and n) and the raw
-    * tf index (new docs contribute rows), so all three tiers drop
-    * together. Leaving the tf tiers cached while refreshing the
-    * postings would mix fresh blocking candidates with stale weights.
-    */
-  private[operators] def invalidateTfidfBlocking(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    tfidfWeightCache.remove(s, dir).foreach(_.unpersist())
-    tfidfVectorCache.remove(s, dir).foreach(_.unpersist())
-    tfIndexCache.remove(s, dir).foreach(_.unpersist())
-    // the retrieval tiers DERIVED from the tf index drop with it: the
-    // (df, dl, tot, n) stats and both cached rank legs are corpus-wide
-    // aggregates/functions of the pre-append corpus (the store-served
-    // paths bypass these caches by design — their stats follow the store)
-    bm25StatsCache.remove(s, dir).foreach { case (a, b, c, d) =>
-      Seq(a, b, c, d).foreach(_.unpersist())
-    }
-    bm25LegCache.remove(s, dir).foreach(_.unpersist())
-    vecLegCache.remove(s, dir).foreach(_.unpersist())
-  }
 
   /** q96's chunk projection as a library transform over any
     * (doc_id, text) frame — a PURE per-row expression, so the identical
@@ -615,10 +591,12 @@ object CorpusOps {
     * builds the lexical list, q131's fusion and q134's agreement report
     * serve off it instead of re-running the posting join and corpus scan.
     */
-  private val bm25LegCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-  private val vecLegCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val bm25LegCache = graft.SessionCache.frames("bm25Leg", caches = Set("tfIndex", "bm25Stats"))
+  private val vecLegCache = graft.SessionCache.frames("vecLeg")
   private val bm25StatsCache = new graft.SessionCache[(org.apache.spark.sql.DataFrame,
-    org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+    org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    "bm25Stats", caches = Set("tfIndex"))({ case (a, b, c, d) =>
+      Seq(a, b, c, d).foreach(graft.SessionCache.unpersist) })
 
   /** Session-cached corpus statistics over the shared tf index — the
     * `(df, dl, tot, n)` frames every BM25-family scorer folds into its

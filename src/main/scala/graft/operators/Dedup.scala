@@ -143,10 +143,10 @@ object Dedup {
     * listing, q75's representative selection) need the identical result,
     * which is a pure function of the verified pair set. Small (one row
     * per doc appearing in any pair), deterministic, so caching changes no
-    * result. Invalidated on shingle-index appends (the components of a
-    * grown corpus are a different frame).
+    * result. Drops with the shingle index it derives from (the components
+    * of a grown corpus are a different frame).
     */
-  private val componentsCache = new graft.SessionCache[DataFrame]
+  private val componentsCache = graft.SessionCache.frames("components", caches = Set("verifiedPairs"))
 
   /** Distinct verified near-dup triples (a_doc, b_doc, jac_micro) over the
     * FULL corpus shingle index, one per (session, corpus): the band join +
@@ -154,7 +154,7 @@ object Dedup {
     * this set — q37's scalar output, and the component edges behind
     * q73/q75. Pair-count-sized (tiny), deterministic.
     */
-  private val verifiedPairsCache = new graft.SessionCache[DataFrame]
+  private val verifiedPairsCache = graft.SessionCache.frames("verifiedPairs", caches = Set("shingleIndex"))
 
   private[operators] def verifiedPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
@@ -181,7 +181,7 @@ object Dedup {
     * counts don't depend on other corpus docs), so restricting the
     * corpus-wide set to clean's survivors ≡ recomputing on survivors.
     */
-  private val decontPairsCache = new graft.SessionCache[DataFrame]
+  private val decontPairsCache = graft.SessionCache.frames("decontPairs", caches = Set("shingleIndex"))
 
   private[operators] def decontPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
@@ -193,21 +193,6 @@ object Dedup {
       decontaminate(sh.filter(col("doc_id") % 7 =!= 0), bench, minShared = 5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }
-
-  /** Invalidation hook for shingle-index appends: every frame derived
-    * from the pre-append index is a different frame for the grown corpus.
-    */
-  private[operators] def invalidateComponents(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    componentsCache.remove(s, dir).foreach(_.unpersist())
-    verifiedPairsCache.remove(s, dir).foreach(_.unpersist())
-    decontPairsCache.remove(s, dir).foreach(_.unpersist())
-    // r18: the shared posting frame is a pure function of the corpus's
-    // shingle rows — it drops with every other corpus-derived index
-    postingCache.remove(s, dir).foreach(_.unpersist())
-    CorpusClean.invalidateCleaned(s, dir)
-    CorpusOps.invalidateTfidfBlocking(s, dir)
-  }
 
   /** `comp AS (doc_id, root)` CTEs over [[minhashPairCtes]]'s `ndpairs`:
     * unrolled min-label propagation to a VERIFIED fixpoint, min reachable
@@ -1295,7 +1280,7 @@ object Dedup {
     * counts). Now the corpus pays that shuffle once per session and every
     * consumer reads the cached lists.
     */
-  private val postingCache = new graft.SessionCache[DataFrame]
+  private val postingCache = graft.SessionCache.frames("postings", caches = Set("shingleIndex"))
 
   private[graft] def corpusPostings(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =

@@ -25,7 +25,7 @@ object Fuzzy {
     * materialization each side re-runs the distinct-name aggregate and
     * the deletion-variant explode (measured 4× on the whole query).
     */
-  private val blockingKeys = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val blockingKeys = graft.SessionCache.frames("blockingKeys")
 
   private def blockingKeyFrame(s: org.apache.spark.sql.SparkSession, dir: String) =
     blockingKeys.getOrElseUpdate(s, dir) {
@@ -61,7 +61,7 @@ object Fuzzy {
     * built-once posture as the shingle/SRP indexes; MEMORY_AND_DISK so a
     * corpus that outgrows executor memory spills instead of failing.
     */
-  private val dupFlags = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val dupFlags = graft.SessionCache.frames("dupFlags")
 
   private def dupFlagFrame(s: org.apache.spark.sql.SparkSession, dir: String) =
     dupFlags.getOrElseUpdate(s, dir) {

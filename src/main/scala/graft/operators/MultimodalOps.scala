@@ -230,8 +230,8 @@ object MultimodalOps {
   // three queries read each fingerprint frame. persist (droppable,
   // recomputable), never released — NOT Materialize.ephemeral.
 
-  private val imageFpCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-  private val clipFpCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val imageFpCache = graft.SessionCache.frames("imageFp", stores = Set(MediaFpStoreName))
+  private val clipFpCache = graft.SessionCache.frames("clipFp")
 
   private[graft] def imageFpIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -245,13 +245,6 @@ object MultimodalOps {
     clipFpCache.getOrElseUpdate(s, dir)(
       clipFps(Multimodal.synthesizeClips(Tables.load(s, dir, "documents")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-
-  /** Invalidation hook for the streaming maintainer: after a store
-    * append, the session tier must refill from the grown store.
-    */
-  private[graft] def invalidateImageFpCache(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    imageFpCache.remove(s, dir).foreach(_.unpersist())
 
   // ---- DuckDB derivations of the synthesis functions -------------------
 

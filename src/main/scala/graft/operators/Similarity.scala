@@ -43,11 +43,36 @@ object Similarity {
   private val PqM = 4
   private val PqRerank = 64
 
-  /** The 4 fitted subvector codebooks per (session, corpus[, tag]) — one
-    * training pass like [[ivfModelCache]]; each model is 16 × 16 longs
-    * driver-side and fully deterministic (caching changes no result).
+  /** The name of the SRP bucket-row frame in the durable [[graft.IndexStore]]. */
+  private[graft] val SrpStoreName = "srp_buckets"
+
+  /** The fitted-centroid entry's name in the durable [[graft.IndexStore]]
+    * — shared with the streaming assignment maintainer
+    * ([[graft.streaming.IndexMaintenance.maintainIvfAssignments]]), whose
+    * drift-triggered refit overwrites this entry so the batch q53/q68
+    * paths serve the refreshed centroids.
     */
-  private val pqModelCache = new graft.SessionCache[Seq[Ivf.Model]]
+  private[graft] val IvfModelStoreName = "ivf_model"
+
+  /** The image-modality coarse quantizer's durable-store entry (q155):
+    * a SEPARATE model family from [[IvfModelStoreName]] — the cross-modal
+    * corpus is the image-side table, whose geometry the text-side
+    * centroids don't describe.
+    */
+  private[graft] val XmIvfModelStoreName = "xm_ivf_model"
+
+  /** The 4 fitted subvector codebooks per (session, corpus), one cache per
+    * codebook family tag ("" text-side, "_xm" image-side) — one training
+    * pass like [[ivfModelCache]]; each model is 16 × 16 longs driver-side
+    * and fully deterministic (caching changes no result). Every centroid
+    * family reads the SRP store too: an append or purge there changes
+    * the corpus it was fit on, so the next consumer re-runs
+    * [[Ivf.servedModel]]'s refresh policy.
+    */
+  private val pqModelCaches = Map("" -> "pqModel", "_xm" -> "xmPqModel").map { case (tag, name) =>
+    tag -> new graft.SessionCache[Seq[Ivf.Model]](name,
+      stores = Set(SrpStoreName) ++ (0 until PqM).map(pqModelStoreName(_, tag)))(_ => ())
+  }
 
   /** The q154/q155/q156 image-modality id-domain offset: image vec_ids =
     * text vec_ids + this, so the two modalities' id spaces never collide
@@ -66,7 +91,7 @@ object Similarity {
     * configured, each subvector codebook persists as `pq_model_m` under
     * [[Ivf.servedModel]]'s refresh policy (a new session skips all four
     * fits); without one, fit in-session. `tag` names a SEPARATE codebook
-    * family (store entries `pq_model_<m><tag>`, own cache slot) — the
+    * family (store entries `pq_model_<m><tag>`, own cache) — the
     * cross-modal image-side codebooks (q155) must never mix with the
     * text-side ones even though both live under the same corpus dir.
     */
@@ -102,7 +127,7 @@ object Similarity {
       catch { case e: java.util.concurrent.TimeoutException => pool.shutdownNow(); throw e }
       finally pool.shutdown()
     }
-    pqModelCache.getOrElseUpdate(s, dir + tag)(
+    pqModelCaches(tag).getOrElseUpdate(s, dir)(
       graft.IndexStore.configuredDir(s) match {
         case None =>
           fitAll(m => Ivf.fit(pqSub(eqf, m), k = PqK, dim = PqSubDim))
@@ -160,9 +185,9 @@ object Similarity {
 
   /** Refit the text-side PQ codebook family from `eqf` (one deterministic
     * [[Ivf.fit]] per subvector slice), OVERWRITE the durable entries, and
-    * drop the session cache — the PQ analog of the IVF maintainer's
-    * drift refit. The next q142/q143/q156 in any session serves the
-    * refreshed codebooks.
+    * drop this session's cached family — the PQ analog of the IVF
+    * maintainer's drift refit. The next q142/q143/q156 in any session
+    * serves the refreshed codebooks.
     */
   private[graft] def refitPqModels(s: org.apache.spark.sql.SparkSession,
       dir: String, eqf: org.apache.spark.sql.DataFrame,
@@ -173,18 +198,8 @@ object Similarity {
       Ivf.save(s, graft.IndexStore.storePath(root, dir, pqModelStoreName(m, tag)), mdl)
       mdl
     }
-    pqModelCache.remove(s, dir + tag)
+    (0 until PqM).foreach(m => graft.SessionCache.storeChanged(s, dir, pqModelStoreName(m, tag)))
     models
-  }
-
-  /** Drop the session-cached PQ codebook family (driver-side longs —
-    * nothing to unpersist): the maintainer's refit path calls this so
-    * in-session consumers reload the refreshed store.
-    */
-  private[graft] def invalidatePqModels(s: org.apache.spark.sql.SparkSession,
-      dir: String, tag: String = ""): Unit = {
-    pqModelCache.remove(s, dir + tag)
-    ()
   }
 
   // ---- PQ oracle fragments + Spark legs shared by q142/q143 ------------
@@ -391,14 +406,18 @@ object Similarity {
     * not recomputed per query). `eq` (the 1e4 quantization) rides along
     * for q47's integer prefilter; q40 projects it away.
     */
-  private val srpIndexCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val srpIndexCache = graft.SessionCache.frames("srpIndex", stores = Set(SrpStoreName))
 
   /** Fitted IVF centroids per (session, fixture dir) — q53 and q68 share
     * one k-means fit (the index-build cost), exactly as the SRP bucket
     * rows are shared between q40/q47. The model is k × dim driver-side
-    * longs; caching it changes no result (fit is deterministic).
+    * longs; caching it changes no result (fit is deterministic). The
+    * image-side family ([[xmodalIvfModel]]) has its own cache.
     */
-  private val ivfModelCache = new graft.SessionCache[Ivf.Model]
+  private val ivfModelCache = new graft.SessionCache[Ivf.Model](
+    "ivfModel", stores = Set(SrpStoreName, IvfModelStoreName))(_ => ())
+  private val xmIvfModelCache = new graft.SessionCache[Ivf.Model](
+    "xmIvfModel", stores = Set(SrpStoreName, XmIvfModelStoreName))(_ => ())
 
   /** The exact ground-truth rank lists every recall report prices its
     * approximate leg against, shared per (session, corpus[, variant]) —
@@ -410,12 +429,11 @@ object Similarity {
     * The referent is ground TRUTH, not an approximation artifact: caching
     * it is the same built-once/served-many posture as the IVF/PQ models
     * and [[graft.operators.CorpusOps.bm25Stats]] — nq·k rows persisted,
-    * results unchanged (the exact top-k has a total tiebreak). Keyed off
-    * the fixture dir, which is immutable within a session (the bm25Stats
-    * assumption); the store-append path drops the keys it could stale
-    * ([[appendToSrpIndex]]).
+    * results unchanged (the exact top-k has a total tiebreak). Built from
+    * the fixture tables alone, which are immutable within a session (the
+    * bm25Stats assumption), so no store mutation drops it.
     */
-  private val exactRefCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val exactRefCache = graft.SessionCache.frames("exactRef")
 
   /** Unfiltered exact referent: top-[[AnnTopK]] by decimal dot over the
     * `embeddings` corpus for the fixture query batch (`vec_id <
@@ -435,32 +453,26 @@ object Similarity {
     * transform (`|xmf`, `|xmr`, `|lang=…`) and `build` constructs the
     * exact `(q_id, neighbor_id)` frame on first use.
     */
-  /** r18 (ADVICE): every variant key ever used per dir is recorded here,
-    * so [[invalidateFixtureRefs]] drops by the LIVE key set instead of a
-    * hardcoded list — a future variant cannot silently survive a corpus
-    * append and serve a stale ground-truth referent.
-    */
-  private val exactRefKeys =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
-
   private[graft] def exactRefVariant(s: org.apache.spark.sql.SparkSession,
       dir: String, key: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    exactRefKeys.updateWith(dir) {
-      case Some(ks) => Some(ks + key)
-      case None     => Some(Set(key))
-    }
-    exactRefCache.getOrElseUpdate(s, dir + key)(
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    exactRefCache.getOrElseUpdate(s, dir, key)(
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-  }
 
   /** The q53/q143-geometry probed-cell candidate pairs over the fixture
     * query batch, shared per (session, dir) — q143/q166/q167 build the
     * identical `(q_id, vec_id)` frame off the shared IVF model (cells at
     * rk=1, probes at rk ≤ [[IvfProbes]]); one assignment pass serves all
-    * three.
+    * three. Drops with the text-side IVF model it is cut from.
     */
-  private val cellCandCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val cellCandCache = graft.SessionCache.frames("cellCand", caches = Set("ivfModel"))
+
+  /** The cell count the fixture queries fit with (the DuckDB oracle
+    * unrolls it into static SQL) — also the k the assignment maintainer
+    * bootstraps with by default, so store-served ANN stays comparable to
+    * batch q53.
+    */
+  private[graft] def ivfFixtureCells: Int = IvfCells
 
   /** Durable tier first (the [[graft.IndexStore]] pattern, as for the
     * shingle index): a configured store serves the fitted centroids from
@@ -470,61 +482,24 @@ object Similarity {
     * embeddings enter the SRP store incrementally, but centroids only
     * learn them on a refit); smaller drift warns and serves.
     */
-  /** The fitted-centroid entry's name in the durable [[graft.IndexStore]]
-    * — shared with the streaming assignment maintainer
-    * ([[graft.streaming.IndexMaintenance.maintainIvfAssignments]]), whose
-    * drift-triggered refit overwrites this entry so the batch q53/q68
-    * paths serve the refreshed centroids.
-    */
-  private[graft] val IvfModelStoreName = "ivf_model"
-
-  /** The cell count the fixture queries fit with (the DuckDB oracle
-    * unrolls it into static SQL) — also the k the assignment maintainer
-    * bootstraps with by default, so store-served ANN stays comparable to
-    * batch q53.
-    */
-  private[graft] def ivfFixtureCells: Int = IvfCells
-
   private[graft] def ivfModel(s: org.apache.spark.sql.SparkSession, dir: String,
       eqf: org.apache.spark.sql.DataFrame): Ivf.Model =
-    ivfModelCache.getOrElseUpdate(s, dir)(
-      graft.IndexStore.configuredDir(s) match {
-        case None => Ivf.fit(eqf, IvfCells)
-        case Some(root) =>
-          Ivf.servedModel(s, graft.IndexStore.storePath(root, dir, IvfModelStoreName), eqf, IvfCells)
-      })
-
-  /** The image-modality coarse quantizer's durable-store entry (q155):
-    * a SEPARATE model family from [[IvfModelStoreName]] — the cross-modal
-    * corpus is the image-side table, whose geometry the text-side
-    * centroids don't describe.
-    */
-  private[graft] val XmIvfModelStoreName = "xm_ivf_model"
+    servedIvfModel(ivfModelCache, IvfModelStoreName, s, dir, eqf)
 
   /** Image-side coarse IVF model for the cross-modal compound path
-    * (q155): same fit/serve policy as [[ivfModel]], own cache slot and
-    * store entry. `eqImg` must be the quantized IMAGE-side rows only.
+    * (q155): same fit/serve policy as [[ivfModel]], own cache and store
+    * entry. `eqImg` must be the quantized IMAGE-side rows only.
     */
   private[graft] def xmodalIvfModel(s: org.apache.spark.sql.SparkSession, dir: String,
       eqImg: org.apache.spark.sql.DataFrame): Ivf.Model =
-    ivfModelCache.getOrElseUpdate(s, dir + "_xm")(
-      graft.IndexStore.configuredDir(s) match {
-        case None => Ivf.fit(eqImg, IvfCells)
-        case Some(root) =>
-          Ivf.servedModel(s, graft.IndexStore.storePath(root, dir, XmIvfModelStoreName), eqImg, IvfCells)
-      })
+    servedIvfModel(xmIvfModelCache, XmIvfModelStoreName, s, dir, eqImg)
 
-  /** Drop the session-cached IVF model (k × dim driver-side longs —
-    * nothing to unpersist): the assignment maintainer calls this after a
-    * drift-triggered refit overwrites the stored model, so the next
-    * q53/q68 in the maintainer's session loads the refreshed centroids
-    * instead of serving the cached pre-refit fit.
-    */
-  private[graft] def invalidateIvfModel(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    ivfModelCache.remove(s, dir)
-    ()
-  }
+  private def servedIvfModel(cache: graft.SessionCache[Ivf.Model], store: String,
+      s: org.apache.spark.sql.SparkSession, dir: String, eqf: org.apache.spark.sql.DataFrame): Ivf.Model =
+    cache.getOrElseUpdate(s, dir)(graft.IndexStore.configuredDir(s) match {
+      case None => Ivf.fit(eqf, IvfCells)
+      case Some(root) => Ivf.servedModel(s, graft.IndexStore.storePath(root, dir, store), eqf, IvfCells)
+    })
 
   /** IVF ANN served OFF THE MAINTAINED ASSIGNMENT STORE — q53's exact
     * body (same probes/top-k/DECIMAL rerank) with both legs swapped to
@@ -587,9 +562,6 @@ object Similarity {
           qEmbOpt = Some(qd.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
     }
   }
-
-  /** The name of the SRP bucket-row frame in the durable [[graft.IndexStore]]. */
-  private[graft] val SrpStoreName = "srp_buckets"
 
   /** SRP index rows (vec_id, eq, tbl, bucket) for ANY embeddings frame —
     * the full corpus on a build, just the increment on an append.
@@ -658,8 +630,11 @@ object Similarity {
 
   /** Incremental-index append (the [[TextAnalysis.appendToShingleIndex]]
     * counterpart): plane-project ONLY the new embedding batch into the
-    * durable store and invalidate the session tier — the next q40/q47
-    * serves old∪new bucket rows from disk at O(increment) build cost.
+    * durable store; the append drops the session tier — the SRP frame and
+    * every centroid family fit on the pre-append corpus — so the next
+    * q40/q47 serves old∪new bucket rows from disk at O(increment) build
+    * cost and the next model consumer re-runs [[Ivf.servedModel]]'s
+    * refresh policy against the grown corpus.
     * The increment is bucketed under the BUILD's plane family, read from
     * the store's metadata sidecar — never this batch's own default or
     * derived planes, which for a non-default build would produce bucket
@@ -675,47 +650,6 @@ object Similarity {
         s"appendToSrpIndex: no committed SRP store with metadata for $dir — build before appending"))
     graft.IndexStore.append(s, dir, SrpStoreName,
       srpRows(newEmbeddings, planes), newEmbeddings.count(), extraMeta)
-    srpIndexCache.remove(s, dir).foreach(_.unpersist())
-    // Every session-cached centroid family was fit on the PRE-append
-    // corpus: drop them all so the next consumer re-runs
-    // [[Ivf.servedModel]]'s refresh policy against the grown corpus (a
-    // ≥2× growth refits; below it the store serves with a staleness
-    // warning). Without this, the caches hit before the policy ever runs
-    // and stale centroids serve until a new session. That includes the
-    // PQ codebooks (q142/q143) and the image-side cross-modal family
-    // (q155 — derived from the same table, so it grows when the text
-    // side does). Models are k×dim driver-side longs — nothing to
-    // unpersist.
-    ivfModelCache.remove(s, dir)
-    ivfModelCache.remove(s, dir + "_xm")
-    pqModelCache.remove(s, dir)
-    pqModelCache.remove(s, dir + "_xm")
-    invalidateFixtureRefs(s, dir)
-  }
-
-  /** Drop every session-cached exact referent / candidate frame for
-    * `dir` — the recall-report artifacts are corpus-derived exactly like
-    * the models, so any path that grows or shrinks the corpus
-    * ([[appendToSrpIndex]], the embedding-tier purge) clears them too.
-    */
-  private[graft] def invalidateFixtureRefs(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    // the base referent plus every variant key REGISTERED for this dir
-    // (r18: the live registry replaces the hardcoded variant list)
-    val variantKeys = exactRefKeys.getOrElse(dir, Set.empty).map(dir + _)
-    (variantKeys + dir)
-      .foreach(k => exactRefCache.remove(s, k).foreach(_.unpersist()))
-    cellCandCache.remove(s, dir).foreach(_.unpersist())
-  }
-
-  /** Drop the session-cached SRP bucket frame (the persisted index rows):
-    * the embedding-tier purge calls this so in-session consumers refill
-    * from the now-smaller durable store instead of serving purged rows.
-    */
-  private[graft] def invalidateSrpIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    srpIndexCache.remove(s, dir).foreach(_.unpersist())
-    invalidateFixtureRefs(s, dir)
   }
 
   /** Brute-force cosine top-k of `queries` against corpus `e0` — q39's

@@ -87,7 +87,7 @@ object TextAnalysis {
     * pass. Narrow (6 numeric columns/doc), so memory cost is trivial
     * next to the shingle index.
     */
-  private val qualityIndexCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
+  private val qualityIndexCache = graft.SessionCache.frames("qualityIndex")
 
   private[graft] def qualityIndex(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     qualityIndexCache.getOrElseUpdate(s, dir)(
@@ -325,10 +325,10 @@ object TextAnalysis {
     * temp), spilling rather than failing when it outgrows executor
     * memory.
     */
-  private val shingleIndexCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   /** The name of the shingle-set frame in the durable [[graft.IndexStore]]. */
   private[graft] val ShingleStoreName = "shingle_sets"
+
+  private val shingleIndexCache = graft.SessionCache.frames("shingleIndex", stores = Set(ShingleStoreName))
 
   /** Durable tier first ([[graft.IndexStore]], opt-in via
     * `spark.graft.index.dir`): with a store configured, a session that
@@ -361,31 +361,18 @@ object TextAnalysis {
       buildShingleIndex(s, dir, graft.Tables.load(s, dir, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
-  /** Incremental-index append: shingle ONLY the new doc batch, land it in
-    * the durable store (advancing the sidecar's corpus count so the next
-    * load's staleness check expects the grown corpus), and invalidate the
-    * session tier so the next [[shingleIndex]] read serves old∪new from
-    * disk. The daily-ingest counterpart of q74's new×all probe: the
-    * increment pays O(increment) shingling, never O(corpus).
+  /** Incremental-index append: shingle ONLY the new doc batch and land it
+    * in the durable store (advancing the sidecar's corpus count so the
+    * next load's staleness check expects the grown corpus); the append
+    * drops the session tier, so the next [[shingleIndex]] read serves
+    * old∪new from disk. The daily-ingest counterpart of q74's new×all
+    * probe: the increment pays O(increment) shingling, never O(corpus).
     */
   private[graft] def appendToShingleIndex(s: org.apache.spark.sql.SparkSession,
       dir: String, newDocs: org.apache.spark.sql.DataFrame,
-      extraMeta: Map[String, String] = Map.empty): Unit = {
+      extraMeta: Map[String, String] = Map.empty): Unit =
     graft.IndexStore.append(s, dir, ShingleStoreName, docShingleSets(newDocs),
       newDocs.count(), extraMeta)
-    invalidateShingleIndex(s, dir)
-  }
-
-  /** Drop the session shingle frame (and its derived component caches)
-    * after any durable-store mutation — appends and purges alike must not
-    * leave a pre-mutation frame servable.
-    */
-  private[graft] def invalidateShingleIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    shingleIndexCache.remove(s, dir).foreach(_.unpersist())
-    // downstream derived caches: the mutated corpus has different components
-    Dedup.invalidateComponents(s, dir)
-  }
 
   private[operators] val markerList: Seq[(String, Seq[String])] = langMarkers
 }

@@ -48,10 +48,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    the torn store rebuilds it.
   *
   * Single maintainer per store entry, per [[graft.IndexStore.append]]'s
-  * single-writer contract. Maintainers invalidate their own session's
-  * cache tier; other long-lived sessions pick up the grown store at their
-  * next fresh load (cross-session freshness is the store's job, not the
-  * cache's).
+  * single-writer contract. Every store append and purge drops the
+  * maintainer's own session's cache entries that read the store
+  * ([[graft.SessionCache.storeChanged]]); other long-lived sessions pick
+  * up the grown store at their next fresh load (cross-session freshness
+  * is the store's job, not the cache's).
   *
   * Recovery: a maintainer that hits a torn store fails its streaming
   * query with the tripwire's instructions (the safe direction — it must
@@ -1545,8 +1546,7 @@ object IndexMaintenance {
         org.apache.spark.sql.functions.col("eq"))
     val model = graft.operators.Ivf.fit(eqf, k)
     graft.operators.Ivf.save(s, modelPath, model)
-    // the session model caches key the xm family under dir + "_xm"
-    graft.operators.Similarity.invalidateIvfModel(s, corpusDir + family)
+    graft.SessionCache.storeChanged(s, corpusDir, ivfStoreNames(family)._2)
     // crash-clean reassign swap
     val staging = assignPath + ".refitting"
     val p = new org.apache.hadoop.fs.Path(assignPath)
@@ -1580,9 +1580,10 @@ object IndexMaintenance {
     * place when it fires: re-fit the four subvector codebooks over the
     * STORE's own quantized vectors (the store carries `eq` precisely so
     * refits need no external corpus), overwrite the durable
-    * `pq_model_<m>` entries, drop the session cache, and stamp a fresh
-    * residual baseline (recomputed under the NEW codebooks over the full
-    * store's probe sample) with zeroed increments and trigger provenance.
+    * `pq_model_<m>` entries (dropping this session's cached family), and
+    * stamp a fresh residual baseline (recomputed under the NEW codebooks
+    * over the full store's probe sample) with zeroed increments and
+    * trigger provenance.
     * Unlike the coarse refit, NO store rewrite happens — PQ codes are
     * derived at serve time from the codebooks, so the assignment rows are
     * untouched and the swap is just model entries + one sidecar write
@@ -1648,10 +1649,12 @@ object IndexMaintenance {
     *  - **SRP bucket store**: all 16 tables' bucket rows for the purged
     *    vec_ids; corpus count decremented by the DISTINCT purged vectors
     *    present, so the next tracked load/append agrees with the
-    *    surviving corpus instead of rebuilding; session bucket frame
-    *    invalidated.
-    *  - **media-fp store**: the purged media_ids' fingerprints; session
-    *    fingerprint frame invalidated so q136-store-aware refills.
+    *    surviving corpus instead of rebuilding.
+    *  - **media-fp store**: the purged media_ids' fingerprints.
+    *
+    * Each store's purge drops this session's cache entries that read it
+    * ([[graft.SessionCache.storeChanged]]), so in-session consumers
+    * refill from the purged stores.
     *
     * Returns removed STORE-ROW counts per store name. Idempotent: a
     * replayed purge removes 0 rows and decrements nothing (the clamps
@@ -1739,7 +1742,6 @@ object IndexMaintenance {
         .select(col("vec_id")).distinct().count()
       results += srpName -> graft.IndexStore.purgeKeys(s, corpusDir, srpName,
         "vec_id", ids, countDecrement = present)
-      graft.operators.Similarity.invalidateSrpIndex(s, corpusDir)
     }
 
     val mfpName = graft.operators.MultimodalOps.MediaFpStoreName
@@ -1748,7 +1750,6 @@ object IndexMaintenance {
         .select(col("media_id")).distinct().count()
       results += mfpName -> graft.IndexStore.purgeKeys(s, corpusDir, mfpName,
         "media_id", ids, countDecrement = present)
-      graft.operators.MultimodalOps.invalidateImageFpCache(s, corpusDir)
     }
 
     if (results.isEmpty)
@@ -1946,7 +1947,6 @@ object IndexMaintenance {
       }
       textLeg(TfStoreName, "doc_id", trackDocs = true)
       textLeg(graft.operators.TextAnalysis.ShingleStoreName, "doc_id", trackDocs = true)
-      graft.operators.TextAnalysis.invalidateShingleIndex(s, corpusDir)
       textLeg(AnchorStoreName, "doc_id", trackDocs = true)
       textLeg(ChunkStoreName, "doc_id", trackDocs = false)
 
@@ -2171,7 +2171,6 @@ object IndexMaintenance {
         }
         graft.IndexStore.append(s, corpusDir, ops.MediaFpStoreName, batchFps,
           batchFps.count(), marker)
-        ops.invalidateImageFpCache(s, corpusDir) // session tier refills from the grown store
       } finally graft.Materialize.free(batchFps)
     }
   }
