@@ -8,26 +8,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * has passed since the last flush (Consumer_clickhouse.py's batch list +
   * size/время checks). Structured Streaming triggers control micro-batch
   * cadence, not sink batching — so the count-or-time contract belongs at
-  * the SINK: each micro-batch appends into a staging area, and when a
-  * threshold trips the staging content moves to the real store as ONE
-  * batched insert.
+  * the SINK: a micro-batch that trips neither threshold is staged, and
+  * the micro-batch that trips one flushes everything staged plus itself
+  * to the real store as ONE batched insert.
   *
-  * Delivery semantics are unchanged (at-least-once): staging writes happen
-  * inside the checkpointed `foreachBatch`, so a crash before offset commit
-  * replays the same rows into staging; a crash between flush and staging
-  * cleanup re-flushes the same batch — duplicates, never loss, exactly the
-  * reference's commit-after-insert posture. Like the reference's loop, the
-  * time condition is evaluated when data arrives (and on [[flushNow]] for
-  * graceful shutdown — ST8).
+  * Each micro-batch is computed exactly once: [[add]] persists it and
+  * takes its row count from that one action, so a Kafka-backed frame is
+  * never re-read from the broker. A batch that trips a threshold goes
+  * straight from memory to the flush (unioned with the staged rows, if
+  * any) and is never written to staging; only a batch that trips neither
+  * is written to a fresh staging delta. The flush receives the exact row
+  * count it is handed, so the store can skip counting it again.
+  *
+  * Delivery semantics are unchanged (at-least-once): staging writes and
+  * flushes happen inside the checkpointed `foreachBatch`, so a crash
+  * before offset commit replays the same rows. A flush that throws leaves
+  * its micro-batch unstaged and [[pendingRows]] unchanged, so the replay
+  * adds the batch once more, not twice; a crash between a flush and the
+  * staging cleanup re-flushes the staged rows — duplicates, never loss,
+  * exactly the reference's commit-after-insert posture. Like the
+  * reference's loop, the time condition is evaluated when data arrives
+  * (and on [[flushNow]] for graceful shutdown — ST8).
   *
   * The clock is injected so the time path is testable without waiting.
   */
 final class CountOrTimeBatcher(
     stagingDir: String,
-    batchSize: Long = 90L,
-    maxAgeMs: Long = 300000L,
-    clock: () => Long = () => System.currentTimeMillis())(
-    flush: DataFrame => Unit) {
+    batchSize: Long,
+    maxAgeMs: Long,
+    clock: () => Long,
+    flush: (DataFrame, Long) => Unit) {
+
+  /** A flush that takes the frame alone (the row count is dropped). */
+  def this(
+      stagingDir: String,
+      batchSize: Long = 90L,
+      maxAgeMs: Long = 300000L,
+      clock: () => Long = () => System.currentTimeMillis())(
+      flush: DataFrame => Unit) =
+    this(stagingDir, batchSize, maxAgeMs, clock, (df: DataFrame, _: Long) => flush(df))
 
   // -1 = not yet recovered: after a restart, replayed-but-unflushed rows
   // may still sit in the staging dir, so the counter initializes from the
@@ -74,44 +93,44 @@ final class CountOrTimeBatcher(
         }
     }
 
-  /** foreachBatch hook: stage the micro-batch, then flush if either
-    * threshold (count OR age) has tripped.
-    *
-    * The micro-batch is computed exactly ONCE: it is written to a fresh
-    * staging delta, and the row count comes from reading the written
-    * parquet back (a footer-metadata count) — never from a second action
-    * on the batch itself, which for a Kafka-backed frame would re-read
-    * the broker every trigger.
+  /** foreachBatch hook: flush staged ∪ `batch` if either threshold (count
+    * OR age) has tripped, else stage `batch`. An empty batch writes
+    * nothing, but still flushes what is staged once the age has tripped.
     */
   def add(batch: DataFrame): Unit = synchronized {
     val spark = batch.sparkSession
     recoverPending(spark)
-    val delta = s"$stagingDir/delta-${java.util.UUID.randomUUID().toString.take(12)}"
-    batch.write.mode("errorifexists").parquet(delta)
-    val n = spark.read.parquet(delta).count()
-    if (n == 0) {
-      // Empty micro-batch (idle source, watermark ticks): drop the empty
-      // delta right away — doFlush only cleans staging when pending > 0,
-      // so an idle stream would otherwise accumulate empty delta dirs
-      // without bound.
-      val p = new Path(delta)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    } else pending += n
-    if (pending >= batchSize || clock() - lastFlush >= maxAgeMs) doFlush(spark)
+    val b = batch.persist()
+    try {
+      val n = b.count()
+      if (pending + n >= batchSize || clock() - lastFlush >= maxAgeMs)
+        doFlush(spark, if (n > 0) Some(b) else None, n)
+      else if (n > 0) {
+        b.write.mode("errorifexists")
+          .parquet(s"$stagingDir/delta-${java.util.UUID.randomUUID().toString.take(12)}")
+        pending += n
+      }
+    } finally { b.unpersist(); () }
   }
 
   /** Graceful-shutdown flush of whatever is staged (ST8). */
   def flushNow(spark: SparkSession): Unit = synchronized {
     recoverPending(spark)
-    doFlush(spark)
+    doFlush(spark, None, 0L)
   }
 
-  private def doFlush(spark: SparkSession): Unit = {
-    if (pending > 0) {
-      flush(stagedFrame(spark))
-      val p = new Path(stagingDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
+  /** Flush the staged rows plus `batch` (`n` rows), then clear staging.
+    * State changes only after the flush returns, so a flush that throws
+    * leaves staging and [[pendingRows]] as they were.
+    */
+  private def doFlush(spark: SparkSession, batch: Option[DataFrame], n: Long): Unit = {
+    if (pending + n > 0) {
+      val staged = if (pending > 0) Some(stagedFrame(spark)) else None
+      flush((staged ++ batch).reduce(_ unionByName _), pending + n)
+      if (pending > 0) {
+        val p = new Path(stagingDir)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
       pending = 0
     }
     lastFlush = clock()

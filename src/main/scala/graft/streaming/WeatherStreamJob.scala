@@ -105,24 +105,28 @@ object WeatherStreamJob {
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Multiple sinks over one micro-batch: persist so the source is
+        // Several actions over one micro-batch (writeFact's month count and
+        // its write, the dead-letter write): persist so the source is
         // scanned once, not re-read per action.
-        val b = if (deadLetterPath.isDefined) batch.persist() else batch
+        val b = batch.persist()
         try {
           Warehouse.writeFact(WeatherFlatten.flatten(b), warehousePath)
           deadLetterPath.foreach { p =>
             WeatherFlatten.malformedRaw(b).write.mode("append").text(p)
           }
-        } finally if (deadLetterPath.isDefined) { b.unpersist(); () }
+        } finally { b.unpersist(); () }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
 
-  /** Ingest with the EXACT count-or-time flush contract (ST1): micro-
-    * batches stage into `stagingDir`; the warehouse sees one batched
-    * append per ≥`batchSize`-rows-or-≥`maxAgeMs` window
-    * ([[CountOrTimeBatcher]]). Call `batcher.flushNow` after `query.stop()`
+  /** Ingest with the EXACT count-or-time flush contract (ST1): the
+    * warehouse sees one batched append per ≥`batchSize`-rows-or-≥`maxAgeMs`
+    * window ([[CountOrTimeBatcher]]). A micro-batch that trips neither
+    * threshold is staged in `stagingDir`; the one that trips a threshold
+    * is appended from memory together with whatever is staged, and the
+    * append is told its row count, so `writeFact` skips its month count
+    * when no month can be hot. Call `batcher.flushNow` after `query.stop()`
     * for the graceful-shutdown flush (ST8). The returned pair is
     * (query, batcher).
     */
@@ -131,8 +135,9 @@ object WeatherStreamJob {
                        trigger: Trigger = Trigger.ProcessingTime("1 second"),
                        clock: () => Long = () => System.currentTimeMillis())
       : (StreamingQuery, CountOrTimeBatcher) = {
-    val batcher = new CountOrTimeBatcher(stagingDir, batchSize, maxAgeMs, clock)(
-      Warehouse.writeFact(_, warehousePath))
+    val batcher = new CountOrTimeBatcher(stagingDir, batchSize, maxAgeMs, clock,
+      (fact: DataFrame, rows: Long) =>
+        Warehouse.writeFact(fact, warehousePath, knownRows = Some(rows)))
     val q = WeatherFlatten.parse(raw)
       .writeStream
       .outputMode("append")

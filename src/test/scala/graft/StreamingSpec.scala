@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSpec {
     val batch = spark.range(10).map { i => acc.add(1); i }.toDF("v")
     batcher.add(batch)
     // The old count()-then-write path evaluated every row twice (20); the
-    // write-then-footer-count path evaluates the batch exactly once.
+    // batcher must evaluate the batch exactly once.
     assert(acc.value == 10L, s"micro-batch rows evaluated ${acc.value} times / 10")
     assert(batcher.pendingRows == 10)
   }
@@ -745,5 +745,106 @@ class StreamingSpec extends SparkSpec {
 
     val last = spark.table("city_stats").filter(col("n") === 3).collect()
     assert(last.length == 1 && last.head.getAs[Double]("last_temp") == 14.0)
+  }
+
+  test("weather stream evaluates each micro-batch row once per trigger") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val acc = spark.sparkContext.longAccumulator("stream_row_evals")
+    val input = MemoryStream[String]
+    // writeFact runs two actions on the batch (its month count, then the
+    // write); without the persist each trigger would scan the source twice
+    val raw = input.toDS().map { v => acc.add(1); v }.toDF("value")
+    val q = WeatherStreamJob.start(raw, tmp("graft_wh_once"), tmp("graft_ckpt_once"),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try {
+      input.addData("""{"name":"Moscow","main":{"temp":1.0}}""",
+        """{"name":"Kazan","main":{"temp":2.0}}""", """{broken""")
+      q.processAllAvailable()
+      assert(acc.value == 3L, s"first trigger evaluated ${acc.value} rows / 3")
+      input.addData("""{"name":"Omsk","main":{"temp":3.0}}""",
+        """{"name":"Tomsk","main":{"temp":4.0}}""")
+      q.processAllAvailable()
+      assert(acc.value == 5L, s"second trigger evaluated ${acc.value - 3} rows / 2")
+    } finally q.stop()
+  }
+
+  test("count-or-time batcher: a batch that trips the count alone is flushed, never staged") {
+    import spark.implicits._
+    val staging = tmp("graft_staging_direct")
+    val acc = spark.sparkContext.longAccumulator("direct_batch_evals")
+    def stagedNow = Option(new java.io.File(staging).list()).toSeq.flatten
+    var flushes = Seq.empty[(Long, Long)]
+    var stagedAtFlush = Seq.empty[String]
+    val batcher = new graft.streaming.CountOrTimeBatcher(staging, 90L, Long.MaxValue, () => 0L,
+      (df: org.apache.spark.sql.DataFrame, rows: Long) => {
+        stagedAtFlush ++= stagedNow
+        flushes :+= ((df.count(), rows))
+      })
+    batcher.add(spark.range(100).map { i => acc.add(1); i }.toDF("v"))
+    assert(flushes == Seq((100L, 100L)) && batcher.pendingRows == 0)
+    assert(acc.value == 100L, s"micro-batch rows evaluated ${acc.value} times / 100")
+    assert(stagedAtFlush.isEmpty && stagedNow.isEmpty,
+      s"a flushing batch wrote staging deltas: ${stagedAtFlush.mkString(", ")}")
+  }
+
+  test("count-or-time batcher: 40 staged rows plus a 60-row batch give one 100-row flush") {
+    import spark.implicits._
+    val staging = tmp("graft_staging_union")
+    var flushes = Seq.empty[(Long, Long)]
+    val batcher = new graft.streaming.CountOrTimeBatcher(staging, 90L, Long.MaxValue, () => 0L,
+      (df: org.apache.spark.sql.DataFrame, rows: Long) => flushes :+= ((df.count(), rows)))
+    batcher.add((1 to 40).toDF("v"))
+    assert(flushes.isEmpty && batcher.pendingRows == 40)
+    batcher.add((41 to 100).toDF("v"))
+    assert(flushes == Seq((100L, 100L)) && batcher.pendingRows == 0)
+    val left = Option(new java.io.File(staging).list()).getOrElse(Array.empty[String])
+    assert(left.isEmpty, s"staging kept ${left.mkString(", ")} after the flush")
+  }
+
+  test("count-or-time batcher: a failed flush leaves the batch unstaged, so a replay adds it once") {
+    import spark.implicits._
+    val staging = tmp("graft_staging_failed_flush")
+    var storeUp = false
+    var flushes = Seq.empty[Long]
+    val batcher = new graft.streaming.CountOrTimeBatcher(staging, 90L, Long.MaxValue, () => 0L,
+      (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        if (storeUp) flushes :+= df.count() else throw new RuntimeException("store down"))
+    batcher.add((1 to 40).toDF("v"))
+    val batch = (41 to 100).toDF("v")
+    intercept[RuntimeException](batcher.add(batch))
+    assert(batcher.pendingRows == 40 && flushes.isEmpty)
+    val staged = spark.read.option("recursiveFileLookup", "true").parquet(staging).count()
+    assert(staged == 40L, s"staging holds $staged rows after the failed flush / 40")
+    // the source replays the uncommitted micro-batch
+    storeUp = true
+    batcher.add(batch)
+    assert(flushes == Seq(100L) && batcher.pendingRows == 0)
+  }
+
+  test("count-or-time ingest: staged rows and the batch that trips the count land as one append") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val warehouse = tmp("graft_wh_cot_union")
+    val (q, batcher) = WeatherStreamJob.startCountOrTime(
+      input.toDF(), warehouse, tmp("graft_ckpt_cot_union"), tmp("graft_staging_cot_union"),
+      batchSize = 3L, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try {
+      input.addData("""{"name":"Moscow","main":{"temp":1.0}}""",
+        """{"name":"Kazan","main":{"temp":2.0}}""")
+      q.processAllAvailable()
+      assert(batcher.pendingRows == 2 && new java.io.File(warehouse).list().isEmpty)
+      // the staged parquet rows and the in-memory batch share one flush
+      input.addData("""{"name":"Omsk","main":{"temp":3.0}}""",
+        """{"name":"Tomsk","main":{"temp":4.5}}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(batcher.pendingRows == 0)
+    val back = graft.weather.Warehouse.readFact(spark, warehouse)
+    assert(back.select("city_name").as[String].collect().sorted.toSeq ==
+      Seq("Kazan", "Moscow", "Omsk", "Tomsk"))
+    assert(back.filter(col("city_name") === "Tomsk")
+      .select(col("temperature").cast("string")).as[String].head() == "4.50")
   }
 }
