@@ -124,9 +124,9 @@ object WeatherStreamJob {
     * warehouse sees one batched append per ≥`batchSize`-rows-or-≥`maxAgeMs`
     * window ([[CountOrTimeBatcher]]). A micro-batch that trips neither
     * threshold is staged in `stagingDir`; the one that trips a threshold
-    * is appended from memory together with whatever is staged, and the
-    * append is told its row count, so `writeFact` skips its month count
-    * when no month can be hot. Call `batcher.flushNow` after `query.stop()`
+    * is appended from memory together with whatever is staged. An append
+    * of at most [[Warehouse.HotMonthRows]] rows has no hot month, so it
+    * passes `hotMonthRows = 0` and `writeFact` skips its month count. Call `batcher.flushNow` after `query.stop()`
     * for the graceful-shutdown flush (ST8). The returned pair is
     * (query, batcher).
     */
@@ -137,7 +137,8 @@ object WeatherStreamJob {
       : (StreamingQuery, CountOrTimeBatcher) = {
     val batcher = new CountOrTimeBatcher(stagingDir, batchSize, maxAgeMs, clock,
       (fact: DataFrame, rows: Long) =>
-        Warehouse.writeFact(fact, warehousePath, knownRows = Some(rows)))
+        Warehouse.writeFact(fact, warehousePath, hotMonthRows =
+          if (rows > Warehouse.HotMonthRows) Warehouse.HotMonthRows else 0L))
     val q = WeatherFlatten.parse(raw)
       .writeStream
       .outputMode("append")

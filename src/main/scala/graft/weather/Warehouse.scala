@@ -207,17 +207,15 @@ object Warehouse {
     * skip behavior survives the fan-out (files overlap in date range, not
     * in city set). Cold months keep the exactly-one-file layout. The
     * per-month count is one aggregation job over the batch; pass
-    * `hotMonthRows <= 0` to skip it and pin the legacy single-task layout.
-    * A caller that already knows the batch's row count passes it as
-    * `knownRows`: at or below `hotMonthRows` no month can be hot, so the
-    * count job is skipped and the layout is the same.
+    * `hotMonthRows <= 0` to skip it and pin the legacy single-task layout
+    * (a batch of at most `hotMonthRows` rows has no hot month, so for it
+    * the layout is the same either way).
     */
   def writeFact(fact: DataFrame, path: String, mode: String = "append",
                 hotMonthRows: Long = HotMonthRows,
                 hotBuckets: Int = HotMonthBuckets,
                 format: String = FactFormat,
-                clustering: String = ClusterLinear,
-                knownRows: Option[Long] = None): Unit = {
+                clustering: String = ClusterLinear): Unit = {
     require(clustering == ClusterLinear || clustering == ClusterInterleaved,
       s"unknown clustering '$clustering' — use '$ClusterLinear' or '$ClusterInterleaved'")
     // Refuse a codec conflict BEFORE writing anything: appending ORC
@@ -241,7 +239,7 @@ object Warehouse {
     }
     val withMonth = fact.withColumn(PartitionCol, date_format(col("event_date"), "yyyyMM"))
     val hotMonths: Set[String] =
-      if (hotMonthRows <= 0 || knownRows.exists(_ <= hotMonthRows)) Set.empty
+      if (hotMonthRows <= 0) Set.empty
       else withMonth.groupBy(col(PartitionCol)).agg(count(lit(1)).as("n"))
         .filter(col("n") > hotMonthRows)
         .collect().map(_.getString(0)).toSet // bounded: one row per month
