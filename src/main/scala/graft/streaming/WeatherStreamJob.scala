@@ -126,9 +126,9 @@ object WeatherStreamJob {
     * threshold is staged in `stagingDir`; the one that trips a threshold
     * is appended from memory together with whatever is staged. An append
     * of at most [[Warehouse.HotMonthRows]] rows has no hot month, so it
-    * passes `hotMonthRows = 0` and `writeFact` skips its month count. Call `batcher.flushNow` after `query.stop()`
-    * for the graceful-shutdown flush (ST8). The returned pair is
-    * (query, batcher).
+    * passes `hotMonthRows = 0` and `writeFact` skips its month count.
+    * Call `batcher.flushNow` after `query.stop()` for the
+    * graceful-shutdown flush (ST8). The returned pair is (query, batcher).
     */
   def startCountOrTime(raw: DataFrame, warehousePath: String, checkpointDir: String,
                        stagingDir: String, batchSize: Long = 90L, maxAgeMs: Long = 300000L,
