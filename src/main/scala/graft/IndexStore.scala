@@ -4,8 +4,10 @@ import java.util.Properties
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRelation,
+  PartitioningAwareFileIndex}
 
 /** DURABLE (cross-session) persistence for the built-once/served-many
   * index artifacts ([[SessionCache]] is the within-session tier): the
@@ -87,23 +89,32 @@ object IndexStore {
     * a long-lived appender pays more per call as files accumulate;
     * [[compact]] bounds that.
     */
-  private def actualStoreRows(s: SparkSession, path: String): Long = {
+  private def actualStoreRows(s: SparkSession, path: String): Long =
+    storeRows(s.read.parquet(path))
+
+  /** [[actualStoreRows]] over a store frame already read — the count runs
+    * on the frame's own file listing.
+    */
+  private def storeRows(store: DataFrame): Long = {
     fullStoreScans.incrementAndGet()
-    s.read.parquet(path).count()
+    store.count()
   }
 
   /** The store's data files (parquet parts — `_SUCCESS`, sidecars and
     * hidden files excluded).
     */
-  private def dataFiles(s: SparkSession, path: String): Set[String] = {
+  private def dataStatuses(s: SparkSession, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.filter { st =>
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath.toString).toSet
+    }
   }
+
+  private def dataFiles(s: SparkSession, path: String): Set[String] =
+    dataStatuses(s, path).map(_.getPath.toString).toSet
 
   def configuredDir(s: SparkSession): Option[String] =
     s.conf.getOption(DirConf).map(_.trim).filter(_.nonEmpty)
@@ -158,6 +169,24 @@ object IndexStore {
     */
   final class TornStoreException(msg: String) extends IllegalStateException(msg)
 
+  /** One committed state of a store entry: its resolved path, its full
+    * sidecar (None when absent) and its data files by name, length and
+    * mtime. Every append, purge, compaction and sidecar write changes it,
+    * so a frame built from one identity serves exactly the rows of every
+    * state with an equal identity.
+    */
+  final case class StoreIdentity(path: String, sidecar: Option[Map[String, String]],
+      files: Set[(String, Long, Long)])
+
+  private def fileKey(st: FileStatus): (String, Long, Long) =
+    (st.getPath.getName, st.getLen, st.getModificationTime)
+
+  /** The entry's current identity: one sidecar read and one directory
+    * listing, no Spark job.
+    */
+  def storeIdentity(s: SparkSession, path: String): StoreIdentity =
+    StoreIdentity(path, readMeta(s, path), dataStatuses(s, path).map(fileKey).toSet)
+
   /** Read a committed store entry under SNAPSHOT-ISOLATION discipline:
     * when the sidecar records a row count, the parquet must match it — a
     * mismatch means a maintenance append's data files landed but its
@@ -167,20 +196,53 @@ object IndexStore {
     * the append's own sidecar write, the maintainer's replay or a rebuild
     * heals the store. Staged-swap siblings (`.refitting` /
     * `.purging` / `.compacting`) never affect this read — they are
-    * separate directories until their atomic rename. Cost: one
-    * footer-count pass over the entry's files.
+    * separate directories until their atomic rename.
+    *
+    * The returned frame is the one the count ran on: its file listing is
+    * fixed when the frame is created, so it serves exactly the rows that
+    * were counted, even if an append lands files right after. Cost: one
+    * directory listing, one schema-inference job and one footer-count
+    * pass over the entry's files.
     */
-  def verifiedRead(s: SparkSession, path: String): DataFrame = {
+  def verifiedRead(s: SparkSession, path: String): DataFrame =
+    verifiedSnapshot(s, path)._1
+
+  /** Reader option carrying a [[verifiedSnapshot]] read's unique tag; the
+    * parquet source ignores it.
+    */
+  private val ReadTagOption = "graft.read.tag"
+
+  /** [[verifiedRead]] plus the identity it verified: the sidecar the
+    * count was checked against and the listing the frame serves.
+    */
+  def verifiedSnapshot(s: SparkSession, path: String): (DataFrame, StoreIdentity) = {
     require(committed(s, path), s"no committed index store at $path")
-    readMeta(s, path).flatMap(_.get(StoreRowsKey)).map(_.toLong).foreach { recorded =>
-      val actual = actualStoreRows(s, path)
+    val meta = readMeta(s, path)
+    // Spark's cache matches a plan to persisted data by the store's root
+    // path, not its files, and refreshes it only after its own writes:
+    // without a per-read tag in the relation's options, a frame persisted
+    // from one read would answer a later read of the store made after a
+    // purge or compaction swap or a torn write, in any session — this
+    // read's count included, which would then pass a torn store.
+    val store = s.read.option(ReadTagOption, java.util.UUID.randomUUID().toString)
+      .parquet(path)
+    meta.flatMap(_.get(StoreRowsKey)).map(_.toLong).foreach { recorded =>
+      val actual = storeRows(store)
       if (actual != recorded)
         throw new TornStoreException(
           s"index store at $path is torn: $actual rows vs $recorded recorded — " +
             "a maintenance write landed data without its sidecar; replay the " +
             "maintainer (or rebuild) before serving")
     }
-    s.read.parquet(path)
+    val listed = store.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Some(HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _)) =>
+        index.allFiles().map(fileKey).toSet
+      case other => throw new IllegalStateException(
+        s"index store at $path did not read as a file relation: $other")
+    }
+    (store, StoreIdentity(path, meta, listed))
   }
 
   // ------------------------------------------------------------ sidecar --

@@ -27,9 +27,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * served model's first fit, a stale store's rebuild) do not: the entry
   * being built already reflects them. Other sessions' entries stay —
   * cross-session freshness is the store's job (its sidecar staleness
-  * checks). Caches register themselves when constructed and the walk
-  * reads only that registry, so it never loads an operator object; one
-  * that was never loaded holds no entries.
+  * checks), or, for an entry served straight off a store, a per-read
+  * identity check ([[SessionCache#getFreshOrUpdate]]). Caches register
+  * themselves when constructed and the walk reads only that registry, so
+  * it never loads an operator object; one that was never loaded holds no
+  * entries.
   *
   * Fixture immutability: fixture tables ([[Tables.load]]) do not change
   * within a session, so a cache whose build reads only them declares no
@@ -70,6 +72,21 @@ private[graft] final class SessionCache[V](val name: String,
           case Some(winner) => release(built); winner
           case None => built
         }
+    }
+  }
+
+  /** [[getOrElseUpdate]] for a value that can go stale with no mutation
+    * in this session (another session's append, a compaction): an entry
+    * `fresh` rejects is dropped and released, then rebuilt. A build that
+    * throws caches nothing.
+    */
+  def getFreshOrUpdate(s: SparkSession, dir: String)(fresh: V => Boolean)(build: => V): V = {
+    val k = (SessionCache.sessionKey(s), dir, "")
+    entries.get(k) match {
+      case Some(v) if fresh(v) => v
+      case stale =>
+        stale.foreach(v => if (entries.remove(k, v)) release(v))
+        getOrElseUpdate(s, dir)(build)
     }
   }
 

@@ -437,6 +437,17 @@ object SqlGateway {
     * same discipline as `/ann`: per-request job group, execution
     * deadline, bounded params, broadcast reclaim.
     *
+    * Requests serve a snapshot of the store built once per commit
+    * ([[graft.streaming.IndexMaintenance.tfSnapshot]]): the verified rows
+    * and (df, dl) persisted, tot and N as literals. Its identity is the
+    * resolved store path, the full sidecar and the data-file listing
+    * (name, length, mtime); every request reads the sidecar and lists
+    * the store, and reuses the snapshot while the identity is unchanged.
+    * The first request after any commit — by this gateway's session,
+    * another session, a purge or a compaction — pays the build (a
+    * verified read plus the aggregates) inside its own deadline; a torn
+    * store still answers 503.
+    *
     * Protocol:
     *  - `GET /search?q=<terms>` — the token-bag query (URL-encoded,
     *    whitespace-separated; normalized through the index side's own

@@ -605,9 +605,10 @@ object CorpusOps {
     * two 1-row scalars. Built once per (session, corpus) so q130's cold
     * leg and q163's second scoring round stop re-shuffling the tf index
     * for the same aggregates. The store-served path
-    * ([[graft.streaming.IndexMaintenance.bm25FromStore]]) deliberately
-    * does NOT use this cache — its tf provenance is the durable store,
-    * whose stats must follow every append/purge.
+    * ([[graft.streaming.IndexMaintenance.bm25FromStore]]) keeps its own
+    * statistics in the tf store's serving snapshot
+    * ([[graft.streaming.IndexMaintenance.tfSnapshot]]), rebuilt whenever
+    * the durable store commits an append, purge or compaction.
     */
   private[graft] def bm25Stats(s: org.apache.spark.sql.SparkSession, dir: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -659,17 +660,17 @@ object CorpusOps {
       k: Int,
       statsOpt: Option[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame)] = None): org.apache.spark.sql.DataFrame = {
-    // (df, dl, tot) derive from `tf` by default (the store-served path's
-    // stats must follow its tf provenance); the fixture path passes the
-    // session-cached frames ([[bm25Stats]]) so they compute once
+    // (df, dl, tot) derive from `tf` by default; the fixture path passes
+    // the session-cached frames ([[bm25Stats]]) and the store-served path
+    // its snapshot's, so they compute once
     val (dfF, dl, tot) = statsOpt.getOrElse(tfStats(tf))
     bm25OverBags(tf, nT, rarestBags(tf.filter(col("doc_id") < nq), dfF, qt),
       dl, tot, k, "bm25_micro")
   }
 
   /** (df, dl, tot) aggregates of ANY `(doc_id, term, tf)` frame — the
-    * stats provenance of the store-served scorers, whose statistics must
-    * follow the durable store's rows through every append and purge (the
+    * stats of the store-served scorers, built once per committed tf-store
+    * snapshot ([[graft.streaming.IndexMaintenance.tfSnapshot]]; the
     * fixture path uses the session-cached [[bm25Stats]] instead).
     */
   private[graft] def tfStats(tf: org.apache.spark.sql.DataFrame):

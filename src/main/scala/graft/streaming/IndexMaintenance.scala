@@ -488,32 +488,78 @@ object IndexMaintenance {
     */
   def bm25FromStore(s: SparkSession, corpusDir: String,
       nq: Long, qt: Int, k: Int): DataFrame = {
-    val (tf, nT) = storedTfAndN(s, corpusDir)
-    graft.operators.CorpusOps.bm25TopKOverTf(tf, nT, nq, qt, k)
+    val snap = tfSnapshot(s, corpusDir)
+    graft.operators.CorpusOps.bm25TopKOverTf(snap.tf, snap.n, nq, qt, k,
+      statsOpt = Some((snap.df, snap.dl, snap.tot)))
   }
 
-  /** The committed tf store as serving frames: snapshot-isolated
-    * `(doc_id, term, tf)` rows ([[graft.IndexStore.verifiedRead]] — a
-    * concurrent maintainer's torn append can never serve) plus the
-    * sidecar corpus count N as a 1-row frame (bootstrap-recorded,
-    * advanced by every append, decremented by every purge — BM25's N).
-    * The shared provenance of every store-served lexical leg
-    * ([[bm25FromStore]], [[maxSimFromStore]], [[searchFromStore]]).
+  /** The committed tf store's serving set, as of one snapshot: the
+    * verified `(doc_id, term, tf)` rows ([[graft.IndexStore.verifiedRead]]
+    * — a concurrent maintainer's torn append can never serve), their `df`
+    * and `dl` aggregates (these three persisted), and the tf total `t`
+    * and the sidecar corpus count `n` (BM25's N: bootstrap-recorded,
+    * advanced by every append, decremented by every purge) as 1-row
+    * literal frames. `identity` is the store state it was built from.
     */
-  private[graft] def storedTfAndN(s: SparkSession, corpusDir: String):
-      (DataFrame, DataFrame) = {
+  private[graft] final case class TfSnapshot(identity: graft.IndexStore.StoreIdentity,
+      tf: DataFrame, df: DataFrame, dl: DataFrame, tot: DataFrame, n: DataFrame)
+
+  private val tfSnapshotCache = new graft.SessionCache[TfSnapshot]("tfSnapshot",
+    stores = Set(TfStoreName))(snap =>
+    Seq(snap.tf, snap.df, snap.dl).foreach(graft.SessionCache.unpersist))
+
+  /** The tf store's serving set, built once per committed snapshot — the
+    * shared provenance of every store-served lexical leg
+    * ([[bm25FromStore]], [[maxSimFromStore]], [[searchFromStore]]). Each
+    * call reads the sidecar and lists the store
+    * ([[graft.IndexStore.storeIdentity]]); while that identity equals the
+    * cached snapshot's, the call reuses it and runs no Spark job. Any
+    * commit changes the identity — this session's maintainer or another
+    * session's, a purge's or a compaction's swap, a sidecar-only append
+    * of NULL-text documents that moves only N — and the next call drops
+    * the old snapshot and builds a new one through
+    * [[graft.IndexStore.verifiedSnapshot]], which still refuses a torn
+    * store. This session's appends and purges also drop it at once
+    * ([[graft.SessionCache.storeChanged]]).
+    */
+  private[graft] def tfSnapshot(s: SparkSession, corpusDir: String): TfSnapshot = {
     val path = graft.IndexStore.requireCommitted(s, corpusDir, TfStoreName,
       "tf-store serving")
-    val n = graft.IndexStore.readMeta(s, path)
+    val current = graft.IndexStore.storeIdentity(s, path)
+    tfSnapshotCache.getFreshOrUpdate(s, corpusDir)(_.identity == current)(
+      buildTfSnapshot(s, path))
+  }
+
+  /** One [[TfSnapshot]], materialized: the key is the identity the
+    * verification read, so key and frames describe one snapshot. A build
+    * that throws (a torn store, a cancelled job) unpersists what it
+    * persisted.
+    */
+  private def buildTfSnapshot(s: SparkSession, path: String): TfSnapshot = {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.LongType
+    val (store, identity) = graft.IndexStore.verifiedSnapshot(s, path)
+    val n = identity.sidecar
       .flatMap(_.get(graft.IndexStore.CorpusCountKey)).flatMap(_.toLongOption)
       .getOrElse(throw new IllegalStateException(
         s"tf store at $path has no corpus count in its sidecar — " +
           "re-bootstrap with bootstrapTfStore before serving retrieval"))
-    val tf = graft.IndexStore.verifiedRead(s, path).select("doc_id", "term", "tf")
-    import org.apache.spark.sql.functions.lit
-    val nT = s.range(1).select(
-      lit(n).cast(org.apache.spark.sql.types.LongType).as("n"))
-    (tf, nT)
+    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val tf = store.select("doc_id", "term", "tf").persist(ser)
+    val (dfAgg, dlAgg, totAgg) = graft.operators.CorpusOps.tfStats(tf)
+    val df = dfAgg.persist(ser)
+    val dl = dlAgg.persist(ser)
+    try {
+      val t = totAgg.head().get(0) // also fills tf's blocks
+      df.count()
+      dl.count()
+      def literal(v: Any, name: String) = s.range(1).select(lit(v).cast(LongType).as(name))
+      TfSnapshot(identity, tf, df, dl, literal(t, "t"), literal(n, "n"))
+    } catch {
+      case e: Throwable =>
+        Seq(tf, df, dl).foreach(graft.SessionCache.unpersist)
+        throw e
+    }
   }
 
   /** q160's late-interaction MaxSim served off the durable tf store —
@@ -529,8 +575,8 @@ object IndexMaintenance {
   def maxSimFromStore(s: SparkSession, corpusDir: String,
       nq: Long = graft.operators.CorpusOps.Bm25NumQueries,
       k: Int = graft.operators.CorpusOps.Bm25K): DataFrame = {
-    val (tf, _) = storedTfAndN(s, corpusDir)
-    graft.operators.CorpusOps.maxSimTopK(s, corpusDir, nq, k, tfOpt = Some(tf))
+    graft.operators.CorpusOps.maxSimTopK(s, corpusDir, nq, k,
+      tfOpt = Some(tfSnapshot(s, corpusDir).tf))
   }
 
   /** Interactive lexical retrieval off the maintained tf store — the
@@ -549,11 +595,14 @@ object IndexMaintenance {
     * tf·idf_micro expansion votes, integer 2/1 interpolation);
     * `rerank = Some("maxsim")` reranks the BM25 top-[[graft.operators
     * .CorpusOps.MaxSimCand]] candidates with q160's budgeted-token
-    * MaxSim off the same stored tf evidence. Everything scores with the
-    * store's own (df, dl, tot, N) statistics — which follow every
-    * append and purge — and stays posting-list-bounded: candidate work
-    * is Σ posting lengths over the bag's ≤ qt (+ expansion) terms.
-    * Returns `(q_id, rk, doc_id, score)`.
+    * MaxSim off the same stored tf evidence. Everything reads the
+    * store's [[tfSnapshot]] — the persisted rows and (df, dl) plus the
+    * literal tot and N, built once per committed snapshot, so a request
+    * on an unchanged store re-reads and re-aggregates nothing, and the
+    * first request after any append or purge builds the new one — and
+    * stays posting-list-bounded: candidate work is Σ posting lengths over
+    * the bag's ≤ qt (+ expansion) terms. Returns `(q_id, rk, doc_id,
+    * score)`.
     */
   def searchFromStore(s: SparkSession, corpusDir: String,
       qTerms: Seq[String] = Nil, docId: Option[Long] = None,
@@ -566,8 +615,7 @@ object IndexMaintenance {
       "provide exactly one of qTerms / docId")
     require(rerank.forall(_ == "maxsim"), s"unknown rerank '${rerank.get}' (maxsim)")
     val ops = graft.operators.CorpusOps
-    val (tf, nT) = storedTfAndN(s, corpusDir)
-    val (dfF, dl, tot) = ops.tfStats(tf)
+    val TfSnapshot(_, tf, dfF, dl, tot, nT) = tfSnapshot(s, corpusDir)
     val bags = docId match {
       case Some(id) => ops.rarestBags(tf.filter(col("doc_id") === id), dfF, qt)
       case None =>

@@ -1,7 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.IndexMaintenance
 
 /** The store-served retrieval family behind the `/search` gateway route:
   * BM25, RM3 expansion, and the MaxSim rerank served off the DURABLE tf
@@ -170,5 +178,199 @@ class RetrievalServeSpec extends SparkSpec {
       .collect().map(_.getLong(2)).toSet
     assert(ms.nonEmpty && ms.intersect(victims.toSet).isEmpty,
       "purged docs must not appear in served MaxSim results")
+  }
+
+  // ------------------------------------------------ tf serving snapshot --
+
+  /** The call sites of the Spark jobs `body` runs on this thread (each
+    * job's last stage is named after its call site). A marker job closes
+    * the window: the listener bus delivers in order, so once the marker
+    * arrives every job of `body` has too.
+    */
+  private def jobSites(s: SparkSession)(body: => Unit): Seq[String] = {
+    val sc = s.sparkContext
+    val group = "rsv-" + java.util.UUID.randomUUID()
+    val sites = new ConcurrentLinkedQueue[String]()
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (e.properties.getProperty("spark.job.description") == "marker") marked.countDown()
+          else sites.add(e.stageInfos.maxBy(_.stageId).name)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "rsv")
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+      sites.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def session(root: String): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set(IndexStore.DirConf, root)
+    s
+  }
+
+  /** One tf store shared by the snapshot cases below, which run in
+    * declaration order: bootstrapped with the first 400 of the 500
+    * documents, then appended to, purged and compacted case by case.
+    * `sA` serves; `sB` is a second session on the same store root.
+    * `corpus` is what the store holds — NULL-text documents included.
+    */
+  private object snap {
+    val root = tmp("graft_rsv_snapshot")
+    val sA = session(root)
+    val sB = session(root)
+    val docs = Tables.load(sA, dir, "documents").select("doc_id", "text")
+    var corpus: DataFrame = docs.filter(col("doc_id") < 400L)
+    IndexMaintenance.bootstrapTfStore(sA, dir, corpus)
+    val path = IndexStore.storePath(root, dir, IndexMaintenance.TfStoreName)
+    // doc 3's first three tokens: a bag with postings across the corpus
+    val phrase = docs.filter(col("doc_id") === 3L)
+      .select(concat_ws(" ", slice(functions.TextFunctions.tokens(col("text")), 1, 3)))
+      .collect()(0).getString(0)
+  }
+
+  private def served(s: SparkSession, terms: String = snap.phrase) =
+    IndexMaintenance.searchFromStore(s, dir, qTerms = Seq(terms)).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+
+  /** The bag scorer over batch tf rows of `corpus`, N = its row count. */
+  private def batch(corpus: DataFrame, terms: String = snap.phrase) = {
+    val s = corpus.sparkSession
+    val tf = operators.CorpusOps.tfRows(corpus)
+    val (dfF, dl, tot) = operators.CorpusOps.tfStats(tf)
+    val nT = s.range(1).select(lit(corpus.count()).cast("long").as("n"))
+    import s.implicits._
+    val bag = Seq(terms).toDF("raw")
+      .select(explode(functions.TextFunctions.tokens(col("raw"))).as("term"))
+      .filter(col("term") =!= "").distinct().join(dfF, "term")
+      .select(lit(-1L).as("q_id"), col("term"), lit(1L).as("mw"), col("df"))
+    operators.CorpusOps.bm25OverBags(tf, nT, bag, dl, tot, operators.CorpusOps.Bm25K, "score")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(4))).toSeq
+  }
+
+  private def storeJobs(sites: Seq[String]) = sites.filter(_.contains("at IndexStore.scala"))
+
+  test("verifiedRead counts the frame it returns: one schema-inference job per read") {
+    val (sA, path) = (snap.sA, snap.path)
+    val scans = IndexStore.fullStoreScans.get()
+    val sites = jobSites(sA)(IndexStore.verifiedRead(sA, path))
+    assert(storeJobs(sites).count(_.startsWith("parquet at ")) == 1, sites)
+    assert(IndexStore.fullStoreScans.get() == scans + 1)
+  }
+
+  test("tf snapshot: a second search on an unchanged store runs no store scan and no store job") {
+    val first = served(snap.sA)
+    assert(first.nonEmpty && first == batch(snap.corpus))
+    val scans = IndexStore.fullStoreScans.get()
+    var second = Seq.empty[(Long, Int, Long, Long)]
+    val sites = jobSites(snap.sA) { second = served(snap.sA) }
+    assert(second == first)
+    assert(IndexStore.fullStoreScans.get() == scans, "a cache hit must not count the store")
+    assert(storeJobs(sites).isEmpty, sites)
+  }
+
+  test("tf snapshot: an append through a second session is served by both sessions' next search") {
+    val before = served(snap.sA)
+    val inc = snap.docs.filter(col("doc_id") >= 400L)
+    assert(IndexMaintenance.applyTfBatch(snap.sB, dir, "rsv_snapshot", 0L, inc))
+    snap.corpus = snap.corpus.unionByName(inc)
+    val expect = batch(snap.corpus)
+    assert(expect != before, "the append must move the answer for this check to bite")
+    // sB builds its snapshot while sA still holds the pre-append one
+    assert(served(snap.sB) == expect)
+    assert(served(snap.sA) == expect)
+  }
+
+  test("tf snapshot: an append of NULL-text documents moves only N; the next search equals batch") {
+    val before = served(snap.sA)
+    val sB = snap.sB
+    import sB.implicits._
+    val nulls = Seq((500L, null: String), (501L, null: String)).toDF("doc_id", "text")
+    assert(IndexMaintenance.applyTfBatch(sB, dir, "rsv_snapshot", 1L, nulls))
+    snap.corpus = snap.corpus.unionByName(nulls)
+    val expect = batch(snap.corpus)
+    assert(expect != before, "N must move the scores for this check to bite")
+    assert(served(snap.sA) == expect)
+  }
+
+  test("tf snapshot: after a purge the purged doc neither serves as a query nor appears in results") {
+    val victim = served(snap.sA).head._3
+    IndexStore.purgeKeys(snap.sA, dir, IndexMaintenance.TfStoreName, "doc_id", Seq(victim),
+      countDecrement = 1L)
+    snap.corpus = snap.corpus.filter(col("doc_id") =!= victim)
+    val after = served(snap.sA)
+    assert(after.nonEmpty && !after.exists(_._3 == victim))
+    assert(after == batch(snap.corpus))
+    assert(IndexMaintenance.searchFromStore(snap.sA, dir, docId = Some(victim)).isEmpty,
+      "a purged doc must not serve as a query")
+  }
+
+  test("tf snapshot: a compaction is served from a rebuilt snapshot with the identical answer") {
+    val before = served(snap.sA)
+    IndexStore.compact(snap.sB, dir, IndexMaintenance.TfStoreName, targetRowsPerFile = 2000L)
+    val scans = IndexStore.fullStoreScans.get()
+    assert(served(snap.sA) == before)
+    assert(IndexStore.fullStoreScans.get() == scans + 1, "the compacted store must be re-verified")
+  }
+
+  test("tf snapshot: after an append and a search only the new snapshot's frames stay persisted") {
+    val sA = snap.sA
+    val old = IndexMaintenance.tfSnapshot(sA, dir)
+    def frames(t: IndexMaintenance.TfSnapshot) = Seq(t.tf, t.df, t.dl)
+    assert(frames(old).forall(_.storageLevel.useMemory))
+    val persisted0 = sA.sparkContext.getPersistentRDDs.keySet
+    import sA.implicits._
+    val more = Seq((600L, snap.phrase + " appended")).toDF("doc_id", "text")
+    assert(IndexMaintenance.applyTfBatch(sA, dir, "rsv_snapshot", 2L, more))
+    snap.corpus = snap.corpus.unionByName(more)
+    assert(served(sA) == batch(snap.corpus))
+    val persisted1 = sA.sparkContext.getPersistentRDDs.keySet
+    assert(frames(old).forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
+      "the append must release the old snapshot")
+    assert(frames(IndexMaintenance.tfSnapshot(sA, dir)).forall(_.storageLevel.useMemory))
+    assert((persisted1 -- persisted0).size == 3, persisted1 -- persisted0)
+  }
+
+  test("tf snapshot: a torn store throws TornStoreException, caches nothing and persists nothing") {
+    val sC = session(snap.root)
+    val store = new java.io.File(snap.path)
+    val part = store.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val extra = new java.io.File(store, "part-torn-extra.parquet")
+    java.nio.file.Files.copy(part.toPath, extra.toPath)
+    try {
+      val persisted = sC.sparkContext.getPersistentRDDs.keySet
+      intercept[IndexStore.TornStoreException](served(sC))
+      assert(!SessionCache.live(sC).exists(_._1 == "tfSnapshot"))
+      assert(sC.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
+    } finally extra.delete()
+    assert(served(sC) == batch(snap.corpus), "the healed store must serve again")
+  }
+
+  test("tf snapshot: a build that fails after persisting its frames releases them") {
+    val sD = session(tmp("graft_rsv_snapshot_fail"))
+    IndexMaintenance.bootstrapTfStore(sD, dir,
+      Tables.load(sD, dir, "documents").filter(col("doc_id") < 100L))
+    // garbage over the first column chunk's page header: the footers (and
+    // so the verification count) stay intact, reading the rows fails
+    val store = new java.io.File(IndexStore.storePath(
+      sD.conf.get(IndexStore.DirConf), dir, IndexMaintenance.TfStoreName))
+    val part = store.listFiles().filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+    val f = new java.io.RandomAccessFile(part, "rw")
+    try { f.seek(4); f.write(Array.fill[Byte](64)(-1)) } finally f.close()
+    val persisted = sD.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](served(sD))
+    assert(!e.isInstanceOf[IndexStore.TornStoreException], e)
+    assert(!SessionCache.live(sD).exists(_._1 == "tfSnapshot"))
+    assert(sD.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
   }
 }

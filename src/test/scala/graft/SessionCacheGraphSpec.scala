@@ -28,7 +28,7 @@ class SessionCacheGraphSpec extends SparkSpec {
     "components", "cleaned", "tfIndex", "tfidfWeight", "tfidfVector",
     "bm25Stats", "bm25Leg", "vecLeg", "srpIndex", "ivfModel", "xmIvfModel",
     "pqModel", "xmPqModel", "cellCand", "exactRef", "imageFp", "clipFp",
-    "blockingKeys", "dupFlags", "bpeLearned", "gatewayAttrs")
+    "blockingKeys", "dupFlags", "bpeLearned", "gatewayAttrs", "tfSnapshot")
 
   private val shingleReaders = Set("shingleIndex", "verifiedPairs",
     "decontPairs", "postings", "components", "cleaned")
@@ -39,7 +39,7 @@ class SessionCacheGraphSpec extends SparkSpec {
   private def loadOperators(): Unit = {
     Seq(operators.TextAnalysis, operators.Dedup, operators.CorpusClean,
       operators.CorpusOps, operators.Similarity, operators.MultimodalOps,
-      operators.Fuzzy, operators.Bpe, SqlGateway)
+      operators.Fuzzy, operators.Bpe, SqlGateway, IndexMaintenance)
     ()
   }
 
@@ -56,6 +56,8 @@ class SessionCacheGraphSpec extends SparkSpec {
         case "pqModel" | "xmPqModel" => Seq(model)
         case "bm25Stats" => (frame, frame, frame, frame)
         case "bpeLearned" => (Seq.empty, frame)
+        case "tfSnapshot" => IndexMaintenance.TfSnapshot(
+          IndexStore.StoreIdentity("", None, Set.empty), frame, frame, frame, frame, frame)
         case _ => frame
       }
       c.asInstanceOf[SessionCache[Any]].getOrElseUpdate(s, dir)(value)
@@ -150,8 +152,8 @@ class SessionCacheGraphSpec extends SparkSpec {
     assert(dropped(append(store, idRows(_, "media_id")))(purge(store, "media_id")) == Set("imageFp"))
   }
 
-  test("a tf-store append drops nothing") {
-    assert(dropped(_ => ())(append(IndexMaintenance.TfStoreName, docRows)).isEmpty)
+  test("a tf-store append drops only the tf serving snapshot") {
+    assert(dropped(_ => ())(append(IndexMaintenance.TfStoreName, docRows)) == Set("tfSnapshot"))
   }
 
   test("anchor, chunk, DSIR, LM, BPE and IVF-assignment store changes drop nothing") {
