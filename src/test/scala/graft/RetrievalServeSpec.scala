@@ -18,7 +18,8 @@ import graft.streaming.IndexMaintenance
   * operators over the same corpus — across appends, a crash replay, and
   * takedown purges (a purged doc neither serves as a query nor appears
   * in any result). Each test uses a fresh session + store root, the
-  * IndexStoreSpec discipline.
+  * IndexStoreSpec discipline, except the tf-snapshot cases, which share
+  * one store and run in order ([[snap]]).
   */
 class RetrievalServeSpec extends SparkSpec {
 
@@ -27,10 +28,12 @@ class RetrievalServeSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  private def freshStore(prefix: String): org.apache.spark.sql.SparkSession = {
-    val sA = spark.newSession()
-    sA.conf.set(IndexStore.DirConf, tmp(prefix))
-    sA
+  private def freshStore(prefix: String): SparkSession = session(tmp(prefix))
+
+  private def session(root: String): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set(IndexStore.DirConf, root)
+    s
   }
 
   private def searchKey(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -213,12 +216,6 @@ class RetrievalServeSpec extends SparkSpec {
     }
   }
 
-  private def session(root: String): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set(IndexStore.DirConf, root)
-    s
-  }
-
   /** One tf store shared by the snapshot cases below, which run in
     * declaration order: bootstrapped with the first 400 of the 500
     * documents, then appended to, purged and compacted case by case.
@@ -360,8 +357,8 @@ class RetrievalServeSpec extends SparkSpec {
     val sD = session(tmp("graft_rsv_snapshot_fail"))
     IndexMaintenance.bootstrapTfStore(sD, dir,
       Tables.load(sD, dir, "documents").filter(col("doc_id") < 100L))
-    // garbage over the first column chunk's page header: the footers (and
-    // so the verification count) stay intact, reading the rows fails
+    // garbage over a part file's first bytes: its footer (and so the
+    // verification count) stays intact, reading its rows fails
     val store = new java.io.File(IndexStore.storePath(
       sD.conf.get(IndexStore.DirConf), dir, IndexMaintenance.TfStoreName))
     val part = store.listFiles().filter(_.getName.endsWith(".parquet")).maxBy(_.length)
