@@ -28,10 +28,16 @@ import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRela
   * leaves no marker, so the next session rebuilds instead of loading a
   * torn index. Appends (incremental batches) go through the same
   * committer, so a torn append likewise surfaces as missing files, never
-  * a half-row — and an append that COMMITTED its parquet but lost its
-  * sidecar write is caught by the [[StoreRowsKey]] tripwire (actual store
-  * rows ≠ recorded): the next append refuses and the next tracked load
-  * rebuilds, so an at-least-once replayer can never land silent
+  * a half-row.
+  *
+  * One read, one check. Every read of a store entry is [[read]], whose
+  * per-read tag keeps Spark's cache from answering it with rows another
+  * read persisted, and [[verifiedSnapshot]] is the one place a read's
+  * rows are compared with the sidecar's [[StoreRowsKey]] record. An
+  * append that committed its parquet but lost its sidecar write fails
+  * that comparison ([[TornStoreException]]): appends, compactions,
+  * purges and serving reads refuse, and tracked loads ([[servedFrom]])
+  * rebuild, so an at-least-once replayer can never land silent
   * duplicates.
   *
   * Every committed entry carries a `_graft_meta` sidecar recording the
@@ -80,20 +86,14 @@ object IndexStore {
 
   /** Full-store footer-count scans performed — spec observability for the
     * append-cost contract: ONE full scan per append (the torn-append
-    * tripwire pre-check), never a second for the post-append record.
+    * check), never a second for the post-append record.
     */
   private[graft] val fullStoreScans = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The committed store's actual parquet row count — metadata-cheap per
-    * file (row-group footers, no data scan) but O(files) in the store, so
-    * a long-lived appender pays more per call as files accumulate;
-    * [[compact]] bounds that.
-    */
-  private def actualStoreRows(s: SparkSession, path: String): Long =
-    storeRows(s.read.parquet(path))
-
-  /** [[actualStoreRows]] over a store frame already read — the count runs
-    * on the frame's own file listing.
+  /** A store frame's row count — metadata-cheap per file (row-group
+    * footers, no data scan) but O(files) in the store, so a long-lived
+    * appender pays more per call as files accumulate; [[compact]] bounds
+    * that. The count runs on the frame's own file listing.
     */
   private def storeRows(store: DataFrame): Long = {
     fullStoreScans.incrementAndGet()
@@ -112,9 +112,6 @@ object IndexStore {
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
   }
-
-  private def dataFiles(s: SparkSession, path: String): Set[String] =
-    dataStatuses(s, path).map(_.getPath.toString).toSet
 
   def configuredDir(s: SparkSession): Option[String] =
     s.conf.getOption(DirConf).map(_.trim).filter(_.nonEmpty)
@@ -167,7 +164,12 @@ object IndexStore {
     * sidecar write, a replay or a rebuild heals it), distinct from the
     * caller errors an un-bootstrapped store raises.
     */
-  final class TornStoreException(msg: String) extends IllegalStateException(msg)
+  final class TornStoreException(path: String, actual: Long, recorded: Long)
+      extends IllegalStateException(
+        s"index store at $path is torn: $actual rows vs $recorded recorded — a " +
+          "maintenance write tore (its data landed without its sidecar); replay " +
+          "the maintainer or rebuild the store (any tracked load does) before " +
+          "reading or writing it")
 
   /** One committed state of a store entry: its resolved path, its full
     * sidecar (None when absent) and its data files by name, length and
@@ -187,52 +189,56 @@ object IndexStore {
   def storeIdentity(s: SparkSession, path: String): StoreIdentity =
     StoreIdentity(path, readMeta(s, path), dataStatuses(s, path).map(fileKey).toSet)
 
-  /** Read a committed store entry under SNAPSHOT-ISOLATION discipline:
-    * when the sidecar records a row count, the parquet must match it — a
-    * mismatch means a maintenance append's data files landed but its
-    * sidecar (with the batch marker) did not, so the batch is NOT
-    * committed and serving its rows would be a torn read of an
-    * uncommitted write. Refuses loudly instead ([[TornStoreException]]);
-    * the append's own sidecar write, the maintainer's replay or a rebuild
-    * heals the store. Staged-swap siblings (`.refitting` /
-    * `.purging` / `.compacting`) never affect this read — they are
-    * separate directories until their atomic rename.
-    *
-    * The returned frame is the one the count ran on: its file listing is
-    * fixed when the frame is created, so it serves exactly the rows that
-    * were counted, even if an append lands files right after. Cost: one
-    * directory listing, one schema-inference job and one footer-count
-    * pass over the entry's files.
+  /** Reader option carrying a [[read]]'s unique tag; the parquet source
+    * ignores it.
+    */
+  private val ReadTagOption = "graft.read.tag"
+
+  /** The one way to read a store entry, a staged sibling of one, or some
+    * of its files. Spark's cache matches a plan to persisted data by the
+    * store's root path, not its files, and refreshes it only after its
+    * own writes: without a per-read tag in the relation's options, a
+    * frame persisted from one read (a session cache's, in any session)
+    * would answer a later read made after a purge or compaction swap or a
+    * torn write — a verification count included, which would then pass a
+    * torn store or refuse a healthy one.
+    */
+  def read(s: SparkSession, paths: String*): DataFrame =
+    s.read.option(ReadTagOption, java.util.UUID.randomUUID().toString).parquet(paths: _*)
+
+  /** Read a committed store entry under SNAPSHOT-ISOLATION discipline
+    * ([[verifiedSnapshot]]'s frame).
     */
   def verifiedRead(s: SparkSession, path: String): DataFrame =
     verifiedSnapshot(s, path)._1
 
-  /** Reader option carrying a [[verifiedSnapshot]] read's unique tag; the
-    * parquet source ignores it.
-    */
-  private val ReadTagOption = "graft.read.tag"
-
-  /** [[verifiedRead]] plus the identity it verified: the sidecar the
-    * count was checked against and the listing the frame serves.
+  /** Read a committed store entry ([[read]]) and check it: when the
+    * sidecar records a row count, the read must match it — a mismatch
+    * means a maintenance append's data files landed but its sidecar (with
+    * the batch marker) did not, so the batch is NOT committed and serving
+    * or rewriting its rows would act on an uncommitted write. Refuses
+    * loudly instead ([[TornStoreException]]); the append's own sidecar
+    * write, the maintainer's replay or a rebuild heals the store.
+    * Staged-swap siblings (`.refitting` / `.purging` / `.compacting`)
+    * never affect this read — they are separate directories until their
+    * atomic rename. This is the only place recorded and actual rows are
+    * compared.
+    *
+    * Returns the frame the count ran on and the identity it verified: the
+    * sidecar the count was checked against and the listing the frame
+    * serves. The listing is fixed when the frame is created, so the frame
+    * serves (and a rewrite of it copies) exactly the rows that were
+    * counted, even if an append lands files right after. Cost: one
+    * directory listing, one schema-inference job and one footer-count
+    * pass over the entry's files.
     */
   def verifiedSnapshot(s: SparkSession, path: String): (DataFrame, StoreIdentity) = {
     require(committed(s, path), s"no committed index store at $path")
     val meta = readMeta(s, path)
-    // Spark's cache matches a plan to persisted data by the store's root
-    // path, not its files, and refreshes it only after its own writes:
-    // without a per-read tag in the relation's options, a frame persisted
-    // from one read would answer a later read of the store made after a
-    // purge or compaction swap or a torn write, in any session — this
-    // read's count included, which would then pass a torn store.
-    val store = s.read.option(ReadTagOption, java.util.UUID.randomUUID().toString)
-      .parquet(path)
+    val store = read(s, path)
     meta.flatMap(_.get(StoreRowsKey)).map(_.toLong).foreach { recorded =>
       val actual = storeRows(store)
-      if (actual != recorded)
-        throw new TornStoreException(
-          s"index store at $path is torn: $actual rows vs $recorded recorded — " +
-            "a maintenance write landed data without its sidecar; replay the " +
-            "maintainer (or rebuild) before serving")
+      if (actual != recorded) throw new TornStoreException(path, actual, recorded)
     }
     val listed = store.queryExecution.analyzed.collectFirst {
       case l: LogicalRelation => l.relation
@@ -244,6 +250,12 @@ object IndexStore {
     }
     (store, StoreIdentity(path, meta, listed))
   }
+
+  /** A verified snapshot's row count: the sidecar's record, which the
+    * verification just matched, or a count when it records none.
+    */
+  private def verifiedRows(store: DataFrame, id: StoreIdentity): Long =
+    id.sidecar.flatMap(_.get(StoreRowsKey)).fold(storeRows(store))(_.toLong)
 
   // ------------------------------------------------------------ sidecar --
 
@@ -309,7 +321,10 @@ object IndexStore {
     * the corpus's CURRENT row count — both are recorded in the sidecar at
     * build time and checked at load time, so geometry changes and
     * out-of-band corpus mutation rebuild loudly instead of serving wrong
-    * rows. A store without a sidecar (torn meta write) also rebuilds.
+    * rows. A store without a sidecar (torn meta write) also rebuilds, and
+    * so does a torn store: the load is a [[verifiedSnapshot]], and the
+    * frame returned is the one it counted (or, after a rebuild, the one
+    * the new sidecar's row count was taken from).
     */
   def servedFrom(s: SparkSession, corpusDir: String, name: String,
       params: Map[String, String] = Map.empty, corpusCount: => Long = -1L)(
@@ -323,57 +338,53 @@ object IndexStore {
         // corpus a count is metadata-cheap, but the contract is "any
         // DataFrame", where each evaluation is a full scan.
         lazy val current = corpusCount
-        val fresh =
-          if (!committed(s, path)) false
-          else readMeta(s, path) match {
+        val loaded = if (!committed(s, path)) None else try {
+          val (store, id) = verifiedSnapshot(s, path)
+          val drift = id.sidecar match {
+            // Tolerate a bare store only when the caller tracks nothing
+            // (no params, no count) — otherwise rebuild and self-heal.
             case None =>
-              // Tolerate a bare store only when the caller tracks nothing
-              // (no params, no count) — otherwise rebuild and self-heal.
-              val bare = params.isEmpty && current < 0
-              if (!bare) log.warn(s"index store $path has no metadata sidecar — rebuilding")
-              bare
+              if (params.isEmpty && current < 0) Nil else Seq("no metadata sidecar")
             case Some(meta) =>
-              val paramDrift = params.collect {
-                case (k, v) if !meta.get(k).contains(v) => s"$k: store=${meta.getOrElse(k, "?")} requested=$v"
-              }
-              val countDrift = meta.get(CorpusCountKey).map(_.toLong) match {
+              params.collect {
+                case (k, v) if !meta.get(k).contains(v) =>
+                  s"$k: store=${meta.getOrElse(k, "?")} requested=$v"
+              } ++ (meta.get(CorpusCountKey).map(_.toLong) match {
                 case Some(stored) if current >= 0 && stored != current =>
                   Seq(s"$CorpusCountKey: store=$stored corpus=$current")
-                case _ => Seq.empty
-              }
-              // torn-append tripwire: the store's own rows must match the
-              // sidecar's record (a mismatch = an append committed parquet
-              // but crashed before its sidecar write)
-              val rowsDrift = meta.get(StoreRowsKey).map(_.toLong) match {
-                case Some(recorded) =>
-                  val actual = actualStoreRows(s, path)
-                  if (actual != recorded)
-                    Seq(s"$StoreRowsKey: recorded=$recorded actual=$actual (torn append)")
-                  else Seq.empty
-                case None => Seq.empty // pre-storeRows sidecar
-              }
-              val drift = paramDrift ++ countDrift ++ rowsDrift
-              if (drift.nonEmpty)
-                log.warn(s"index store $path is stale (${drift.mkString("; ")}) — rebuilding")
-              drift.isEmpty
+                case _ => Nil
+              })
           }
-        if (!fresh) {
-          build.write.mode("overwrite").parquet(path)
-          writeMeta(s, path, params ++
-            Map(StoreRowsKey -> actualStoreRows(s, path).toString) ++
-            (if (current >= 0) Map(CorpusCountKey -> current.toString) else Map.empty))
+          if (drift.isEmpty) Some(store)
+          else {
+            log.warn(s"index store $path is stale (${drift.mkString("; ")}) — rebuilding")
+            None
+          }
+        } catch {
+          case e: TornStoreException =>
+            log.warn(s"${e.getMessage} — rebuilding")
+            None
         }
-        s.read.parquet(path)
+        loaded.getOrElse {
+          build.write.mode("overwrite").parquet(path)
+          val store = read(s, path)
+          writeMeta(s, path, params ++
+            Map(StoreRowsKey -> storeRows(store).toString) ++
+            (if (current >= 0) Map(CorpusCountKey -> current.toString) else Map.empty))
+          store
+        }
     }
 
   /** Append an increment (e.g. a new doc batch's shingle sets) to an
     * existing store, advancing the sidecar's corpus count by
     * `incrementCount` (≥ 0) so the next load's staleness check expects
     * the grown corpus. Requires a configured store: an append with
-    * nowhere durable to land is a caller bug, not a silent no-op. This
-    * session's caches that read the store drop their entries
-    * ([[SessionCache.storeChanged]]), so the next read serves the grown
-    * store.
+    * nowhere durable to land is a caller bug, not a silent no-op. A torn
+    * store refuses the append ([[verifiedSnapshot]]): appending again
+    * would double the torn increment SILENTLY (its sidecar advance still
+    * lands on the right corpus total). This session's caches that read
+    * the store drop their entries ([[SessionCache.storeChanged]]), so the
+    * next read serves the grown store.
     *
     * SINGLE-WRITER contract: the sidecar advance is a read-modify-write
     * with no cross-process lock, so concurrent appenders to the SAME
@@ -386,41 +397,27 @@ object IndexStore {
   def append(s: SparkSession, corpusDir: String, name: String, rows: DataFrame,
       incrementCount: Long = -1L, extraMeta: Map[String, String] = Map.empty): Unit = {
     val path = storePath(requireRoot(s, "IndexStore.append"), corpusDir, name)
-    // Torn-append tripwire BEFORE writing: if a previous append committed
-    // parquet but crashed before its sidecar write, the actual rows
-    // disagree with the record — appending again would double that
-    // increment SILENTLY (its sidecar advance still lands on the right
-    // corpus total). Refuse loudly; the caller rebuilds via a tracked
-    // load, which sees the same mismatch.
-    val metaBefore = readMeta(s, path)
-    val recordedRows = metaBefore.flatMap(_.get(StoreRowsKey)).map(_.toLong)
-    recordedRows.foreach { recorded =>
-      val actual = actualStoreRows(s, path)
-      if (actual != recorded)
-        throw new IllegalStateException(
-          s"IndexStore.append: $path has $actual rows but the sidecar records " +
-            s"$recorded — a previous append tore (parquet committed, sidecar " +
-            "lost). Rebuild the store (any tracked load does) before appending.")
-    }
-    val trackMeta = metaBefore.isDefined || extraMeta.nonEmpty
-    val filesBefore = if (trackMeta) dataFiles(s, path) else Set.empty[String]
+    val before = if (committed(s, path)) Some(verifiedSnapshot(s, path)._2) else None
+    val metaBefore = before.flatMap(_.sidecar)
     rows.write.mode("append").parquet(path)
     // `extraMeta` (e.g. a streaming maintainer's applied-batch marker)
     // lands in the SAME sidecar write that advances the count and the
     // store-rows record, so a reader never sees one without the others.
-    if (trackMeta) {
-      // O(increment) post-append record: the pre-check just proved
-      // recorded == actual, so the new total is recorded + the rows in
-      // THIS append's files — a footer count over the increment's files
-      // only, not a second full-store scan (which would make a streaming
-      // maintainer's per-batch cost grow with the day's accumulated
-      // files). A pre-storeRows sidecar pays one full scan to upgrade.
-      val newFiles = (dataFiles(s, path) -- filesBefore).toSeq.sorted
-      val written =
-        if (newFiles.isEmpty) 0L else s.read.parquet(newFiles: _*).count()
-      val storeRowsNow = recordedRows match {
-        case Some(recorded) => recorded + written
-        case None => actualStoreRows(s, path)
+    if (metaBefore.isDefined || extraMeta.nonEmpty) {
+      // O(increment) post-append record: the snapshot just proved
+      // recorded == actual over the files it listed, so the new total is
+      // recorded + the rows in the files this append added — a footer
+      // count over the increment's files only, not a second full-store
+      // scan (which would make a streaming maintainer's per-batch cost
+      // grow with the day's accumulated files). A store that records no
+      // rows pays one full scan to upgrade.
+      val storeRowsNow = metaBefore.flatMap(_.get(StoreRowsKey)) match {
+        case Some(recorded) =>
+          val listed = before.fold(Set.empty[String])(_.files.map(_._1))
+          val added = dataStatuses(s, path).map(_.getPath)
+            .filterNot(p => listed(p.getName)).map(_.toString).sorted
+          recorded.toLong + (if (added.isEmpty) 0L else read(s, added: _*).count())
+        case None => storeRows(read(s, path))
       }
       val meta = metaBefore.getOrElse(Map.empty)
       val advanced = meta.get(CorpusCountKey).map(_.toLong) match {
@@ -434,140 +431,126 @@ object IndexStore {
     SessionCache.storeChanged(s, corpusDir, name)
   }
 
+  /** Publish `rows` as the entry at `path`, crash-clean by staging: they
+    * are fully written and row-verified (`expected`) at the `suffix`
+    * sibling, `meta` is written there, and a delete+rename swap
+    * publishes both. A crash before the swap leaves the live store
+    * untouched (plus an orphaned staging dir, which the next swap
+    * deletes); a crash between delete and rename leaves NO committed
+    * store, which every tracked load reads as "rebuild" — never a
+    * half-written serve. Single-writer contract as for [[append]].
+    */
+  private def swapIn(s: SparkSession, path: String, suffix: String, user: String,
+      rows: DataFrame, expected: Long, meta: Option[Map[String, String]]): Unit = {
+    val p = new Path(path)
+    val staging = new Path(path + suffix)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(staging, true) // a prior crash's orphan
+    rows.write.mode("overwrite").parquet(staging.toString)
+    val staged = read(s, staging.toString).count() // O(few files)
+    if (staged != expected) {
+      fs.delete(staging, true)
+      throw new IllegalStateException(s"$user: staged copy has $staged rows, expected " +
+        s"$expected — aborted, live store untouched.")
+    }
+    meta.foreach(writeMeta(s, staging.toString, _))
+    if (!fs.delete(p, true))
+      throw new java.io.IOException(s"$user: delete $path failed")
+    if (!fs.rename(staging, p))
+      throw new java.io.IOException(s"$user: rename $staging -> $path failed")
+  }
+
+  /** The committed entry `name` for `corpusDir`, verified for a rewrite
+    * by `user` ([[verifiedSnapshot]]): rewriting a torn store would
+    * LAUNDER its duplicates into a clean-looking file set.
+    */
+  private def snapshotFor(s: SparkSession, corpusDir: String, name: String,
+      user: String): (String, DataFrame, StoreIdentity) = {
+    val path = storePath(requireRoot(s, user), corpusDir, name)
+    if (!committed(s, path)) throw new IllegalStateException(
+      s"$user: no committed store at $path")
+    val (store, id) = verifiedSnapshot(s, path)
+    (path, store, id)
+  }
+
   /** Rewrite the store entry into `targetRowsPerFile`-sized parquet files,
     * preserving rows and sidecar verbatim — the maintenance hook that
     * bounds a long-lived appender's file count (every micro-batch append
-    * adds a file set, and both the torn-append tripwire's pre-check and
-    * any footer count are O(files); same posture as the warehouse's
-    * monthly compaction). Crash-clean by staging: the compacted copy is
-    * fully written and row-verified at a `.compacting` sibling before a
-    * delete+rename swap publishes it. A crash before the swap leaves the
-    * live store untouched (plus an orphaned staging dir); a crash between
-    * delete and rename leaves NO committed store, which every tracked
-    * load reads as "rebuild" — never a half-compacted serve. Single-writer
-    * contract as for [[append]].
+    * adds a file set, and both the torn-append check and any footer count
+    * are O(files); same posture as the warehouse's monthly compaction).
+    * The rewrite is of the verified frame, staged and swapped in
+    * crash-clean (a `.compacting` sibling). This session's caches that
+    * read the store drop their entries: no row changed, but a frame not
+    * yet materialized still lists the replaced files.
     */
   def compact(s: SparkSession, corpusDir: String, name: String,
       targetRowsPerFile: Long = 4L << 20, clusterBy: Option[String] = None): Unit = {
     require(targetRowsPerFile > 0, s"bad targetRowsPerFile $targetRowsPerFile")
-    val path = storePath(requireRoot(s, "IndexStore.compact"), corpusDir, name)
-    if (!committed(s, path)) throw new IllegalStateException(
-      s"IndexStore.compact: no committed store at $path")
-    val meta = readMeta(s, path)
-    val actual = actualStoreRows(s, path)
-    // tripwire before touching anything: compacting a torn store would
-    // LAUNDER its duplicates into a clean-looking file set
-    meta.flatMap(_.get(StoreRowsKey)).map(_.toLong).foreach { recorded =>
-      if (actual != recorded)
-        throw new IllegalStateException(
-          s"IndexStore.compact: $path has $actual rows but the sidecar " +
-            s"records $recorded (torn append) — rebuild before compacting.")
-    }
-    val files = math.max(1L, (actual + targetRowsPerFile - 1) / targetRowsPerFile)
-    val staging = path + ".compacting"
-    val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(staging), true) // a prior crash's orphan
+    val user = "IndexStore.compact"
+    val (path, store, id) = snapshotFor(s, corpusDir, name, user)
+    val actual = verifiedRows(store, id)
+    val files = math.max(1L, (actual + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     // clusterBy keeps (or establishes) a sort-clustered layout through
     // the rewrite — range-disjoint files + monotone row groups, so a
     // point lookup on that column prunes to O(1) row groups from the
     // parquet min/max stats instead of scanning the store (the
     // maintained IVF assignment store compacts with clusterBy=vec_id:
     // /ann's doc_id serving path is exactly such a lookup)
-    val base = s.read.parquet(path)
-    (clusterBy match {
-      case Some(c) => base.repartitionByRange(files.toInt,
+    val rows = clusterBy match {
+      case Some(c) => store.repartitionByRange(files,
           org.apache.spark.sql.functions.col(c)).sortWithinPartitions(c)
-      case None => base.repartition(files.toInt)
-    }).write.mode("overwrite").parquet(staging)
-    val compactedRows = s.read.parquet(staging).count() // O(few files)
-    if (compactedRows != actual) {
-      fs.delete(new Path(staging), true)
-      throw new IllegalStateException(
-        s"IndexStore.compact: staged copy has $compactedRows rows, store has " +
-          s"$actual — aborted, live store untouched.")
+      case None => store.repartition(files)
     }
-    meta.foreach(writeMeta(s, staging, _)) // sidecar rides the swap
-    if (!fs.delete(p, true))
-      throw new java.io.IOException(s"IndexStore.compact: delete $path failed")
-    if (!fs.rename(new Path(staging), p))
-      throw new java.io.IOException(s"IndexStore.compact: rename $staging -> $path failed")
+    swapIn(s, path, ".compacting", user, rows, actual, id.sidecar)
+    SessionCache.storeChanged(s, corpusDir, name)
   }
 
   /** Right-to-be-forgotten at the index tier: rewrite the store entry
     * WITHOUT the rows whose `keyCol` is in `keys` — the deletion-request
     * path (GDPR/DMCA takedown) for the durable indexes, completing the
-    * governance story the warehouse's targeted delete starts. Same
-    * crash-clean staging discipline as [[compact]] (fully written and
-    * row-verified at a `.purging` sibling before the delete+rename swap;
-    * a crash before the swap leaves the live store untouched, a crash
-    * between delete and rename leaves no committed store → every tracked
-    * load rebuilds). The sidecar rides the swap with [[StoreRowsKey]]
-    * re-recorded at the surviving count and [[CorpusCountKey]] decremented
-    * by `countDecrement` (the number of DOCUMENTS purged — the caller
-    * knows it; store rows per doc vary by index type), so a store-served
-    * consumer (e.g. BM25's N) sees the post-purge corpus. Scale: one
-    * store scan + an `isin` filter against the (request-sized, broadcast)
-    * key list — purge requests are human-scale, never corpus-scale.
-    * This session's caches that read the store drop their entries
-    * ([[SessionCache.storeChanged]]); other sessions reload from the
-    * store at their next fresh load.
+    * governance story the warehouse's targeted delete starts. The rewrite
+    * is of the verified frame, staged and swapped in crash-clean (a
+    * `.purging` sibling). The sidecar rides the swap with
+    * [[StoreRowsKey]] re-recorded at the surviving count and
+    * [[CorpusCountKey]] decremented by `countDecrement` (the number of
+    * DOCUMENTS purged — the caller knows it; store rows per doc vary by
+    * index type), so a store-served consumer (e.g. BM25's N) sees the
+    * post-purge corpus. Scale: one store scan + an `isin` filter against
+    * the (request-sized, broadcast) key list — purge requests are
+    * human-scale, never corpus-scale. This session's caches that read the
+    * store drop their entries ([[SessionCache.storeChanged]]); other
+    * sessions reload from the store at their next fresh load.
     */
   def purgeKeys(s: SparkSession, corpusDir: String, name: String,
       keyCol: String, keys: Seq[Long], countDecrement: Long = -1L,
       extraMeta: Map[String, String] = Map.empty): Long = {
     require(keys.nonEmpty, "purgeKeys: empty key list")
-    val path = storePath(requireRoot(s, "IndexStore.purgeKeys"), corpusDir, name)
-    if (!committed(s, path)) throw new IllegalStateException(
-      s"IndexStore.purgeKeys: no committed store at $path")
-    val meta = readMeta(s, path)
-    val actual = actualStoreRows(s, path)
-    meta.flatMap(_.get(StoreRowsKey)).map(_.toLong).foreach { recorded =>
-      if (actual != recorded)
-        throw new IllegalStateException(
-          s"IndexStore.purgeKeys: $path has $actual rows but the sidecar " +
-            s"records $recorded (torn append) — rebuild before purging.")
-    }
+    val user = "IndexStore.purgeKeys"
+    val (path, store, id) = snapshotFor(s, corpusDir, name, user)
+    val actual = verifiedRows(store, id)
     import org.apache.spark.sql.functions.col
-    val store = s.read.parquet(path)
-    // NULL keys never match a purge request, but under SQL null semantics
-    // `!isin` ALSO drops them — a null-keyed row must survive the rewrite,
-    // not vanish into a confusing staged-count abort.
     val removed = store.filter(col(keyCol).isin(keys: _*)).count()
-    val staging = path + ".purging"
-    val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(staging), true) // a prior crash's orphan
-    store.filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*))
-      .write.mode("overwrite").parquet(staging)
-    val survivors = s.read.parquet(staging).count()
-    if (survivors != actual - removed) {
-      fs.delete(new Path(staging), true)
-      throw new IllegalStateException(
-        s"IndexStore.purgeKeys: staged copy has $survivors rows, expected " +
-          s"${actual - removed} — aborted, live store untouched.")
-    }
     // A bare store (pre-metadata) gains a minimal sidecar here rather than
     // being republished bare: the purge itself just proved the row count,
-    // so record it — future appends/loads get the torn-append tripwire.
-    val m = meta.getOrElse(Map.empty[String, String])
+    // so record it — future appends/loads get the torn-append check.
+    val m = id.sidecar.getOrElse(Map.empty[String, String])
     val decremented = m.get(CorpusCountKey).map(_.toLong) match {
       case Some(stored) if countDecrement >= 0 =>
         m.updated(CorpusCountKey, math.max(0L, stored - countDecrement).toString)
       case _ => m
     }
-    // the content digest covered the purged docs' text, which is gone —
-    // drop it rather than publish a digest the store no longer matches.
-    // `extraMeta` (e.g. the embedding-tier purge's ledger decrements)
-    // rides the SAME staged sidecar as the row rewrite, so a crash can
-    // never publish purged rows with un-decremented ledgers or vice versa.
-    writeMeta(s, staging,
-      (decremented - CorpusHashKey) ++
-        Map(StoreRowsKey -> survivors.toString) ++ extraMeta)
-    if (!fs.delete(p, true))
-      throw new java.io.IOException(s"IndexStore.purgeKeys: delete $path failed")
-    if (!fs.rename(new Path(staging), p))
-      throw new java.io.IOException(s"IndexStore.purgeKeys: rename $staging -> $path failed")
+    // NULL keys never match a purge request, but under SQL null semantics
+    // `!isin` ALSO drops them — a null-keyed row must survive the rewrite,
+    // not vanish into a confusing staged-count abort. The content digest
+    // covered the purged docs' text, which is gone — drop it rather than
+    // publish a digest the store no longer matches. `extraMeta` (e.g. the
+    // embedding-tier purge's ledger decrements) rides the SAME staged
+    // sidecar as the row rewrite, so a crash can never publish purged
+    // rows with un-decremented ledgers or vice versa.
+    swapIn(s, path, ".purging", user,
+      store.filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*)), actual - removed,
+      Some((decremented - CorpusHashKey) ++
+        Map(StoreRowsKey -> (actual - removed).toString) ++ extraMeta))
     SessionCache.storeChanged(s, corpusDir, name)
     removed
   }

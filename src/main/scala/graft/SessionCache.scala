@@ -20,18 +20,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cache name). A store mutation calls [[SessionCache.storeChanged]],
   * which drops, for that session and corpus dir only, every cache that
   * reads the store directly or through other caches.
-  * [[IndexStore.append]] and [[IndexStore.purgeKeys]] fire it after they
-  * commit ([[IndexStore.compact]] changes no row and does not); the model
-  * overwrites made outside a cache build (the IVF drift refit, the PQ
-  * refit) fire it themselves. Store writes made INSIDE a cache build (a
-  * served model's first fit, a stale store's rebuild) do not: the entry
-  * being built already reflects them. Other sessions' entries stay —
-  * cross-session freshness is the store's job (its sidecar staleness
-  * checks), or, for an entry served straight off a store, a per-read
-  * identity check ([[SessionCache#getFreshOrUpdate]]). Caches register
-  * themselves when constructed and the walk reads only that registry, so
-  * it never loads an operator object; one that was never loaded holds no
-  * entries.
+  * [[IndexStore.append]], [[IndexStore.purgeKeys]] and
+  * [[IndexStore.compact]] fire it after they commit (a compaction changes
+  * no row, but a persisted frame not yet materialized still lists the
+  * files it replaced); the model overwrites made outside a cache build
+  * (the IVF drift refit, the PQ refit) fire it themselves. Store writes
+  * made INSIDE a cache build (a served model's first fit, a stale store's
+  * rebuild) do not: the entry being built already reflects them. Other
+  * sessions' entries stay: a materialized frame serves the state it was
+  * built from, one not yet materialized fails once a purge or compaction
+  * swap has deleted the files it lists. What a store read sees is the
+  * store's job, not the cache's: every store read is tagged
+  * ([[IndexStore.read]]), so no entry's persisted frame can answer
+  * another read, and [[IndexStore.verifiedSnapshot]] checks it against
+  * the sidecar; an entry served straight off a store can also check the
+  * store's identity per read ([[SessionCache#getFreshOrUpdate]]).
+  * Caches register themselves when constructed and the walk reads only
+  * that registry, so it never loads an operator object; one that was
+  * never loaded holds no entries.
   *
   * Fixture immutability: fixture tables ([[Tables.load]]) do not change
   * within a session, so a cache whose build reads only them declares no

@@ -311,7 +311,7 @@ object Fuzzy {
       s"anchor store at $path covers $stored documents, the corpus has " +
         s"$current — serve after the maintainer catches up (or re-bootstrap)")
     profileFromAnchors(normDocs(docs),
-      s.read.parquet(path).select("doc_id", "i", "s"))
+      graft.IndexStore.read(s, path).select("doc_id", "i", "s"))
   }
 
   /** The profile tail shared by the batch and store-served paths: from a

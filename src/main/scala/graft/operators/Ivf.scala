@@ -320,7 +320,7 @@ object Ivf {
   def load(s: SparkSession, path: String): Option[Model] =
     if (!graft.IndexStore.committed(s, path)) None
     else {
-      val df = s.read.parquet(path)
+      val df = graft.IndexStore.read(s, path)
       val hasN = df.schema.fieldNames.contains("n")
       val rows = df.collect() // k rows by construction
       val cents = rows.map(r =>

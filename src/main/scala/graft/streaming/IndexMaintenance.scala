@@ -39,23 +39,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    corpus count, the store-rows record and any family ledger (content
   *    digest, drift sums), so a reader never sees one without the others
   *    and a replayed batch advances nothing.
-  *  - Torn-append tripwire: a crash after the parquet append commits but
-  *    before the sidecar write is caught by [[graft.IndexStore]]'s
-  *    store-rows record — the replayed append sees actual parquet rows ≠
-  *    the sidecar's record and REFUSES (loudly) instead of landing the
-  *    batch twice, a serving read answers
-  *    [[graft.IndexStore.TornStoreException]], and any tracked load of
-  *    the torn store rebuilds it.
+  *  - Torn-append check: a crash after the parquet append commits but
+  *    before the sidecar write is caught by [[graft.IndexStore]]'s one
+  *    read check ([[graft.IndexStore.verifiedSnapshot]]) — the replayed
+  *    append and a serving read both answer
+  *    [[graft.IndexStore.TornStoreException]] instead of landing the
+  *    batch twice or serving it, and any tracked load of the torn store
+  *    rebuilds it.
   *
   * Single maintainer per store entry, per [[graft.IndexStore.append]]'s
-  * single-writer contract. Every store append and purge drops the
-  * maintainer's own session's cache entries that read the store
+  * single-writer contract. Every store append, purge and compaction
+  * drops the maintainer's own session's cache entries that read the store
   * ([[graft.SessionCache.storeChanged]]); other long-lived sessions pick
-  * up the grown store at their next fresh load (cross-session freshness
-  * is the store's job, not the cache's).
+  * up the grown store at their next fresh load (every store read is
+  * tagged, [[graft.IndexStore.read]], so no cached frame answers it).
   *
   * Recovery: a maintainer that hits a torn store fails its streaming
-  * query with the tripwire's instructions (the safe direction — it must
+  * query with the torn-store instructions (the safe direction — it must
   * not append into an inconsistent store). Repair = a tracked batch load
   * (rebuilds from the corpus) or a manual build; the rebuild's fresh
   * sidecar no longer carries this stream's batch marker, so the restarted
@@ -200,7 +200,7 @@ object IndexMaintenance {
         "maintainDecontaminatingIndex")
       val minId = batch.agg(min(col("doc_id"))).head().get(0) // bounded: 1 row
       if (minId != null) {
-        val stored = s.read.parquet(storePath).select("doc_id", "ss")
+        val stored = graft.IndexStore.read(s, storePath).select("doc_id", "ss")
         val batchDss = graft.operators.TextAnalysis.docShingleSets(batch)
           .select("doc_id", "ss")
         graft.operators.Dedup.incrementalPairsDss(s,
@@ -343,7 +343,7 @@ object IndexMaintenance {
       // every chunk occurrence — those keep a cheap distinct so future
       // non-semi-join consumers of this frame stay correct too.
       val fpUnique = meta.get("layout").contains(FpUniqueLayout)
-      val storedFpsRaw = s.read.parquet(path).select("chunk_fp")
+      val storedFpsRaw = graft.IndexStore.read(s, path).select("chunk_fp")
       val storedFps = if (fpUnique) storedFpsRaw else storedFpsRaw.distinct()
       val vsStore = chunks.join(storedFps, Seq("chunk_fp"), "left_semi")
       val w = Window.partitionBy("chunk_fp").orderBy("doc_id", "chunk_id")
@@ -776,7 +776,7 @@ object IndexMaintenance {
     import org.apache.spark.sql.functions._
     // net-zero buckets (all their mass purged via negated increments —
     // [[purgeAll]]) must vanish exactly as in a fresh survivor build
-    val prof = s.read.parquet(path)
+    val prof = graft.IndexStore.read(s, path)
       .groupBy(col("b"))
       .agg(sum(col("c_raw")).cast(org.apache.spark.sql.types.LongType).as("c_raw"),
         sum(col("c_tgt")).cast(org.apache.spark.sql.types.LongType).as("c_tgt"))
@@ -888,11 +888,11 @@ object IndexMaintenance {
     // drop net-zero bigram types: a purge appends NEGATED counts
     // ([[purgeAll]]), so a bigram seen only in purged docs sums to 0 and
     // must vanish exactly as in a fresh build over the surviving corpus
-    val bg = s.read.parquet(lmPath)
+    val bg = graft.IndexStore.read(s, lmPath)
       .groupBy(col("a"), col("b"))
       .agg(sum(col("c")).cast(org.apache.spark.sql.types.LongType).as("c12"))
       .filter(col("c12") > 0)
-    val uni = s.read.parquet(tfPath)
+    val uni = graft.IndexStore.read(s, tfPath)
       .groupBy(col("term")).agg(sum(col("tf")).as("n"))
     graft.operators.CorpusOps.lmModelOverBigrams(bg, uni)
   }
@@ -995,7 +995,7 @@ object IndexMaintenance {
     */
   private def bpeStoreWords(s: SparkSession, corpusDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    s.read.parquet(graft.IndexStore.requireCommitted(s, corpusDir,
+    graft.IndexStore.read(s, graft.IndexStore.requireCommitted(s, corpusDir,
         BpeWordStoreName, "BPE store access"))
       .groupBy(col("term"))
       .agg(sum(col("freq")).cast(org.apache.spark.sql.types.LongType).as("freq"))
@@ -1006,7 +1006,7 @@ object IndexMaintenance {
   private[graft] def storedBpeMerges(s: SparkSession,
       corpusDir: String): Option[Seq[(Long, String, String, Long)]] =
     graft.IndexStore.committedPath(s, corpusDir, BpeModelStoreName).map { path =>
-      s.read.parquet(path)
+      graft.IndexStore.read(s, path)
         .orderBy(org.apache.spark.sql.functions.col("round"))
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -1450,7 +1450,7 @@ object IndexMaintenance {
     // Baseline stats over the COMMITTED rows (idempotent whether
     // servedFrom rebuilt or served fresh — either way the store is the
     // current corpus's assignments under the current model).
-    val (n, sum) = assignStats(s.read.parquet(assignPath))
+    val (n, sum) = assignStats(graft.IndexStore.read(s, assignPath))
     // PQ tier (on by default): fit-or-load the shared text-side codebook
     // family and stamp its residual baseline over the deterministic probe
     // sample, so appends can watch ADC quantization drift from batch one.
@@ -1575,7 +1575,7 @@ object IndexMaintenance {
     val (fitN, incN, rows, k) = (snap.fitN, snap.incN, snap.rows, snap.k)
     log.warn(s"IVF refit for $corpusDir: trigger=$trigger " +
       s"(fitN=$fitN, rows=$rows, incN=$incN, hotCell=${snap.hotCell}/${snap.trackedIncN})")
-    val store0 = s.read.parquet(assignPath)
+    val store0 = graft.IndexStore.read(s, assignPath)
     // the rewrite re-baselines every row for the COARSE ledger
     // (ivf_epoch 0 < the bumped fit epoch) but must NOT touch the PQ
     // attribution — the codebooks were not refit, so each row's pq_epoch
@@ -1602,14 +1602,14 @@ object IndexMaintenance {
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     sortedByVecId(ivfAssignRows(store, model), rows)
       .write.mode("overwrite").parquet(staging)
-    val reassigned = s.read.parquet(staging).count()
+    val reassigned = graft.IndexStore.read(s, staging).count()
     if (reassigned != rows) {
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
       throw new IllegalStateException(
         s"IVF refit: reassigned copy has $reassigned rows, store has $rows — " +
           "aborted, live store untouched.")
     }
-    val (n, sum) = assignStats(s.read.parquet(staging))
+    val (n, sum) = assignStats(graft.IndexStore.read(s, staging))
     graft.IndexStore.writeMeta(s, staging, meta ++ Map(
       graft.IndexStore.StoreRowsKey -> n.toString,
       graft.IndexStore.CorpusCountKey -> n.toString,
@@ -1652,7 +1652,7 @@ object IndexMaintenance {
     }
     log.warn(s"PQ refit for $corpusDir: trigger=residual " +
       s"(fit mean=${snap.fitSum}/${snap.fitN}, appended mean=${snap.incSum}/${snap.incN})")
-    val eqf = s.read.parquet(assignPath).select(
+    val eqf = graft.IndexStore.read(s, assignPath).select(
       org.apache.spark.sql.functions.col("vec_id"),
       org.apache.spark.sql.functions.col("eq"))
     val models = graft.operators.Similarity.refitPqModels(s, corpusDir, eqf, tag = family)
@@ -1723,7 +1723,7 @@ object IndexMaintenance {
       val assignPath = graft.IndexStore.committedPath(s, corpusDir, storeName)
         .getOrElse(return)
       val meta = graft.IndexStore.readMeta(s, assignPath).getOrElse(Map.empty)
-      val purgedAll = s.read.parquet(assignPath).filter(col("vec_id").isin(famIds: _*))
+      val purgedAll = graft.IndexStore.read(s, assignPath).filter(col("vec_id").isin(famIds: _*))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       try {
         // EXACT attribution (round-15 advice): only rows whose epoch tag
@@ -1786,7 +1786,7 @@ object IndexMaintenance {
 
     val srpName = graft.operators.Similarity.SrpStoreName
     graft.IndexStore.committedPath(s, corpusDir, srpName).foreach { srpPath =>
-      val present = s.read.parquet(srpPath).filter(col("vec_id").isin(ids: _*))
+      val present = graft.IndexStore.read(s, srpPath).filter(col("vec_id").isin(ids: _*))
         .select(col("vec_id")).distinct().count()
       results += srpName -> graft.IndexStore.purgeKeys(s, corpusDir, srpName,
         "vec_id", ids, countDecrement = present)
@@ -1794,7 +1794,7 @@ object IndexMaintenance {
 
     val mfpName = graft.operators.MultimodalOps.MediaFpStoreName
     graft.IndexStore.committedPath(s, corpusDir, mfpName).foreach { mfpPath =>
-      val present = s.read.parquet(mfpPath).filter(col("media_id").isin(ids: _*))
+      val present = graft.IndexStore.read(s, mfpPath).filter(col("media_id").isin(ids: _*))
         .select(col("media_id")).distinct().count()
       results += mfpName -> graft.IndexStore.purgeKeys(s, corpusDir, mfpName,
         "media_id", ids, countDecrement = present)
@@ -1902,7 +1902,7 @@ object IndexMaintenance {
     // ids a previous COMPLETED purge already absorbed (request-bounded)
     val tombstoned: Set[Long] =
       if (!graft.IndexStore.committed(s, path(PurgeTombstoneStoreName))) Set.empty
-      else s.read.parquet(path(PurgeTombstoneStoreName))
+      else graft.IndexStore.read(s, path(PurgeTombstoneStoreName))
         .filter(col("doc_id").isin(ids: _*))
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val fresh = ids.filterNot(tombstoned)
@@ -1922,7 +1922,7 @@ object IndexMaintenance {
       val unknown = fresh.filterNot(decIds)
       val tfCommitted = graft.IndexStore.committed(s, path(TfStoreName))
       val unknownIngested = unknown.nonEmpty && tfCommitted &&
-        !s.read.parquet(path(TfStoreName))
+        !graft.IndexStore.read(s, path(TfStoreName))
           .filter(col("doc_id").isin(unknown: _*)).isEmpty
 
       // --- additive model tier: exact negated-increment decrement, or
@@ -1979,7 +1979,7 @@ object IndexMaintenance {
           else {
             val unknownPresent =
               if (unknown.isEmpty) 0L
-              else s.read.parquet(path(name))
+              else graft.IndexStore.read(s, path(name))
                 .filter(col(keyCol).isin(unknown: _*))
                 .select(col(keyCol)).distinct().count()
             nDec + unknownPresent
@@ -2027,7 +2027,7 @@ object IndexMaintenance {
     import org.apache.spark.sql.functions.col
     graft.IndexStore.committedPath(s, corpusDir, IvfAssignStoreName) match {
       case Some(path) =>
-        s.read.parquet(path).select(col("vec_id"), col("cid"), col("idot"))
+        graft.IndexStore.read(s, path).select(col("vec_id"), col("cid"), col("idot"))
       case None =>
         val e = graft.Tables.load(s, corpusDir, "embeddings")
         val eqf = graft.operators.Ivf.quantize(e)
@@ -2051,7 +2051,7 @@ object IndexMaintenance {
     import org.apache.spark.sql.functions.col
     graft.IndexStore.committedPath(s, corpusDir, AnchorStoreName) match {
       case Some(path) =>
-        s.read.parquet(path).select(col("doc_id"), col("i"), col("s"))
+        graft.IndexStore.read(s, path).select(col("doc_id"), col("i"), col("s"))
       case None =>
         graft.operators.Fuzzy.anchorRows(
           graft.Tables.load(s, corpusDir, "documents"))
@@ -2212,7 +2212,7 @@ object IndexMaintenance {
       try {
         val minId = batchFps.agg(min(col("media_id"))).head().get(0) // bounded: 1 row
         if (minId != null) {
-          val stored = s.read.parquet(storePath).select("media_id", "fp")
+          val stored = graft.IndexStore.read(s, storePath).select("media_id", "fp")
           ops.bandedHammingNewPairs(stored, batchFps,
               ops.ImgBandDefs, ops.ImgHammingMax)
             .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
