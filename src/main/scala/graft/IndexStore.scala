@@ -438,22 +438,26 @@ object IndexStore {
     * untouched (plus an orphaned staging dir, which the next swap
     * deletes); a crash between delete and rename leaves NO committed
     * store, which every tracked load reads as "rebuild" — never a
-    * half-written serve. Single-writer contract as for [[append]].
+    * half-written serve. `staged` is the one read of the staged copy:
+    * its row count and any sidecar keys derived from its rows, added to
+    * `meta` (the IVF refit's fit baseline). Single-writer contract as
+    * for [[append]].
     */
-  private def swapIn(s: SparkSession, path: String, suffix: String, user: String,
-      rows: DataFrame, expected: Long, meta: Option[Map[String, String]]): Unit = {
+  private[graft] def swapIn(s: SparkSession, path: String, suffix: String, user: String,
+      rows: DataFrame, expected: Long, meta: Option[Map[String, String]],
+      staged: DataFrame => (Long, Map[String, String]) = f => (f.count(), Map.empty)): Unit = {
     val p = new Path(path)
     val staging = new Path(path + suffix)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(staging, true) // a prior crash's orphan
     rows.write.mode("overwrite").parquet(staging.toString)
-    val staged = read(s, staging.toString).count() // O(few files)
-    if (staged != expected) {
+    val (stagedRows, derived) = staged(read(s, staging.toString)) // O(few files)
+    if (stagedRows != expected) {
       fs.delete(staging, true)
-      throw new IllegalStateException(s"$user: staged copy has $staged rows, expected " +
+      throw new IllegalStateException(s"$user: staged copy has $stagedRows rows, expected " +
         s"$expected — aborted, live store untouched.")
     }
-    meta.foreach(writeMeta(s, staging.toString, _))
+    meta.foreach(m => writeMeta(s, staging.toString, m ++ derived))
     if (!fs.delete(p, true))
       throw new java.io.IOException(s"$user: delete $path failed")
     if (!fs.rename(staging, p))

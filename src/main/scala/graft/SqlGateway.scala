@@ -438,15 +438,26 @@ object SqlGateway {
     * deadline, bounded params, broadcast reclaim.
     *
     * Requests serve a snapshot of the store built once per commit
-    * ([[graft.streaming.IndexMaintenance.tfSnapshot]]): the verified rows
-    * and (df, dl) persisted, tot and N as literals. Its identity is the
-    * resolved store path, the full sidecar and the data-file listing
-    * (name, length, mtime); every request reads the sidecar and lists
-    * the store, and reuses the snapshot while the identity is unchanged.
-    * The first request after any commit — by this gateway's session,
-    * another session, a purge or a compaction — pays the build (a
-    * verified read plus the aggregates) inside its own deadline; a torn
-    * store still answers 503.
+    * ([[graft.streaming.IndexMaintenance.tfSnapshot]]): everything that
+    * depends only on the commit — the verified postings `(doc_id, term,
+    * tf, dl)`, hash-partitioned by doc_id, and `df` persisted, tot and N
+    * held as values. Its identity is the resolved store path, the full
+    * sidecar and the data-file listing (name, length, mtime); every
+    * request reads the sidecar and lists the store, and reuses the
+    * snapshot while the identity is unchanged. The first request after
+    * any commit — by this gateway's session, another session, a purge or
+    * a compaction — pays the build (a verified read plus the aggregates)
+    * inside its own deadline; a torn store still answers 503.
+    *
+    * A warm request does only its own query's work: it resolves its bag
+    * on the driver (`q=`: tokens folded from a local row, `df` from one
+    * filtered collect; `doc_id=`: two bounded collects) and scores it in
+    * one plan with no join, broadcast or shuffle, whose top k come back
+    * as a local frame. A warm plain `q=` search runs 3 Spark jobs — bag,
+    * score, and the JSON render of the ≤ k local rows — and a `doc_id=`
+    * search 4 (a `q=` search ran 9 while the bag was a frame joined and
+    * broadcast per request); the first two carry the request's
+    * description with `: bag` and `: score` appended.
     *
     * Protocol:
     *  - `GET /search?q=<terms>` — the token-bag query (URL-encoded,

@@ -669,9 +669,9 @@ object CorpusOps {
   }
 
   /** (df, dl, tot) aggregates of ANY `(doc_id, term, tf)` frame — the
-    * stats of the store-served scorers, built once per committed tf-store
-    * snapshot ([[graft.streaming.IndexMaintenance.tfSnapshot]]; the
-    * fixture path uses the session-cached [[bm25Stats]] instead).
+    * default stats of [[bm25TopKOverTf]] (the fixture path uses the
+    * session-cached [[bm25Stats]], the store-served path its
+    * [[graft.streaming.IndexMaintenance.tfSnapshot]]).
     */
   private[graft] def tfStats(tf: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -707,13 +707,13 @@ object CorpusOps {
       " + (CAST(18 AS DECIMAL(38,0)) * dl * n)) AS BIGINT)"
 
   /** BM25 scoring over an EXPLICIT weighted query bag `(q_id, term, mw,
-    * df)` — the seam under [[bm25TopKOverTf]] (mw = 1), q163's RM3 stage
-    * 2 (mw = 2 original / 1 expansion), and the `/search` serving path
-    * (a user-supplied token bag with q_id = −1, outside every doc-id
-    * domain, so the self-pair guard can never suppress a real hit).
-    * Identical rational-cleared integer arithmetic and salted top-k as
-    * q130; candidates are always the union of the bag terms' posting
-    * lists — the inverted-index cost bound at any corpus size.
+    * df)` — the batch multi-query seam under [[bm25TopKOverTf]] (mw = 1)
+    * and q163's RM3 stage 2 (mw = 2 original / 1 expansion), and the
+    * reference the `/search` scorer ([[bm25OverBag]], one bag resolved on
+    * the driver) is checked against. Identical rational-cleared integer
+    * arithmetic and salted top-k as q130; candidates are always the union
+    * of the bag terms' posting lists — the inverted-index cost bound at
+    * any corpus size.
     */
   private[graft] def bm25OverBags(tf: org.apache.spark.sql.DataFrame,
       nT: org.apache.spark.sql.DataFrame, bags: org.apache.spark.sql.DataFrame,
@@ -738,6 +738,54 @@ object CorpusOps {
       .orderBy(col("q_id"), col("rk"))
   }
 
+  /** One query-bag term resolved on the driver: its multiplier `mw` and
+    * its corpus document frequency `df`.
+    */
+  private[graft] final case class BagTerm(term: String, mw: Long, df: Long)
+
+  /** [[bm25OverBags]] for ONE bag already resolved on the driver — the
+    * `/search` serving scorer. `postings` are `(doc_id, term, tf, dl)`
+    * rows; N (`n`) and the tf total (`tot`) are literals, and each term's
+    * `mw` and `df` come from a map literal, so the plan joins nothing and
+    * broadcasts nothing: the postings are filtered to the bag's terms
+    * (the self-pair guard drops `qId`), micro-scored with the same
+    * cleared-rational arithmetic, summed per doc, and cut by
+    * `ORDER BY score DESC, doc_id ASC LIMIT k`. Ranks 1..k follow that
+    * order, which is [[TopK.perKeyTopK]]'s rank under this total order,
+    * so the rows equal `bm25OverBags` over the same bag. Returns a LOCAL
+    * frame `(q_id, rk, doc_id, n_terms, <scoreName>)`; an empty bag
+    * returns it empty without running a job.
+    */
+  private[graft] def bm25OverBag(postings: org.apache.spark.sql.DataFrame,
+      n: Long, tot: Long, qId: Long, bag: Seq[BagTerm], k: Int,
+      scoreName: String): org.apache.spark.sql.DataFrame = {
+    val top =
+      if (bag.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else {
+        val mw = typedLit(bag.map(b => b.term -> b.mw).toMap)
+        val df = typedLit(bag.map(b => b.term -> b.df).toMap)
+        postings
+          .filter(col("term").isInCollection(bag.map(_.term)) && col("doc_id") =!= qId)
+          .select(col("doc_id"), col("tf"), col("dl"), element_at(mw, col("term")).as("mw"),
+            element_at(df, col("term")).as("df"), lit(n).as("n"), lit(tot).as("t"))
+          .withColumn("s_micro", expr(Bm25MicroExpr))
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_terms"),
+            sum(col("s_micro") * col("mw")).cast(LongType).as(scoreName))
+          .orderBy(col(scoreName).desc, col("doc_id").asc)
+          .limit(k)
+          .collect()
+      }
+    val rows = top.toSeq.zipWithIndex.map { case (r, i) =>
+      org.apache.spark.sql.Row(qId, i + 1, r.getLong(0), r.getLong(1), r.get(2))
+    }
+    val schema = StructType(Seq(StructField("q_id", LongType, nullable = false),
+      StructField("rk", IntegerType, nullable = false), StructField("doc_id", LongType),
+      StructField("n_terms", LongType, nullable = false), StructField(scoreName, LongType)))
+    import scala.jdk.CollectionConverters._
+    postings.sparkSession.createDataFrame(rows.asJava, schema)
+  }
+
   /** RM3 pseudo-relevance-feedback expansion of a weighted bag — q163's
     * stages 1½–2 input as a library transform: `feedback` is the
     * caller's stage-1 top docs per query; expansion votes are
@@ -747,10 +795,11 @@ object CorpusOps {
     * excluded, top-`prfTerms` survive (weight DESC, term ASC). Returns
     * the EXPANDED bag — original terms mw = 2, expansion terms mw = 1
     * (λ = 2/3) — ready for [[bm25OverBags]]. Every frame here is
-    * query-batch-sized.
+    * query-batch-sized. `n` is BM25's N as a column: a scalar subquery
+    * over the 1-row stats frame in batch, a literal when serving.
     */
   private[graft] def rm3ExpandBag(tf: org.apache.spark.sql.DataFrame,
-      nT: org.apache.spark.sql.DataFrame, dfF: org.apache.spark.sql.DataFrame,
+      n: org.apache.spark.sql.Column, dfF: org.apache.spark.sql.DataFrame,
       bags: org.apache.spark.sql.DataFrame,
       feedback: org.apache.spark.sql.DataFrame,
       prfTerms: Int): org.apache.spark.sql.DataFrame = {
@@ -765,7 +814,7 @@ object CorpusOps {
       .join(broadcast(bags.select(col("q_id"), col("term"))),
         Seq("q_id", "term"), "left_anti")
       .join(dfF, "term")
-      .crossJoin(broadcast(nT))
+      .withColumn("n", n)
       .withColumn("v", col("tf").cast(LongType) * expr("(1000000 * n) div df"))
       .groupBy(col("q_id"), col("term"))
       .agg(sum(col("v")).cast(LongType).as("w"))
@@ -1113,7 +1162,7 @@ object CorpusOps {
       // expansion vote + RM3 interpolation (orig mw 2, expansion mw 1),
       // then the shared bag scorer — the same seam `/search?expand=rm3`
       // serves off the maintained tf store
-      val expanded = rm3ExpandBag(tf, nT, dfF, qbags, fb, PrfTerms)
+      val expanded = rm3ExpandBag(tf, nT.select(col("n")).scalar(), dfF, qbags, fb, PrfTerms)
       bm25OverBags(tf, nT, expanded, dl, tot, Bm25K, "prf_micro")
     },
 

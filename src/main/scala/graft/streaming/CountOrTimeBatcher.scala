@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * to the real store as ONE batched insert.
   *
   * Each micro-batch is computed exactly once: [[add]] persists it and
-  * takes its row count from that one action, so a Kafka-backed frame is
+  * takes its row count from that one job, so a Kafka-backed frame is
   * never re-read from the broker. A batch that trips a threshold goes
   * straight from memory to the flush (unioned with the staged rows, if
   * any) and is never written to staging; only a batch that trips neither
@@ -31,6 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (and on [[flushNow]] for graceful shutdown — ST8).
   *
   * The clock is injected so the time path is testable without waiting.
+  * Each step's jobs are described `count`, `stage` or `flush`
+  * ([[graft.JobStep]]), after the stream's own batch description.
   */
 final class CountOrTimeBatcher(
     stagingDir: String,
@@ -102,12 +104,14 @@ final class CountOrTimeBatcher(
     recoverPending(spark)
     val b = batch.persist()
     try {
-      val n = b.count()
+      // one job: the rows of a fresh plan over the persisted batch are
+      // counted where they are cached (Dataset.count() adds a shuffle stage)
+      val n = graft.JobStep(spark, "count")(b.select("*").queryExecution.toRdd.count())
       if (pending + n >= batchSize || clock() - lastFlush >= maxAgeMs)
         doFlush(spark, if (n > 0) Some(b) else None, n)
       else if (n > 0) {
-        b.write.mode("errorifexists")
-          .parquet(s"$stagingDir/delta-${java.util.UUID.randomUUID().toString.take(12)}")
+        graft.JobStep(spark, "stage")(b.write.mode("errorifexists")
+          .parquet(s"$stagingDir/delta-${java.util.UUID.randomUUID().toString.take(12)}"))
         pending += n
       }
     } finally { b.unpersist(); () }
@@ -125,8 +129,10 @@ final class CountOrTimeBatcher(
     */
   private def doFlush(spark: SparkSession, batch: Option[DataFrame], n: Long): Unit = {
     if (pending + n > 0) {
-      val staged = if (pending > 0) Some(stagedFrame(spark)) else None
-      flush((staged ++ batch).reduce(_ unionByName _), pending + n)
+      graft.JobStep(spark, "flush") {
+        val staged = if (pending > 0) Some(stagedFrame(spark)) else None
+        flush((staged ++ batch).reduce(_ unionByName _), pending + n)
+      }
       if (pending > 0) {
         val p = new Path(stagingDir)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -488,25 +488,34 @@ object IndexMaintenance {
     */
   def bm25FromStore(s: SparkSession, corpusDir: String,
       nq: Long, qt: Int, k: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
     val snap = tfSnapshot(s, corpusDir)
-    graft.operators.CorpusOps.bm25TopKOverTf(snap.tf, snap.n, nq, qt, k,
-      statsOpt = Some((snap.df, snap.dl, snap.tot)))
+    def literal(v: Long, name: String) = s.range(1).select(lit(v).as(name))
+    graft.operators.CorpusOps.bm25TopKOverTf(snap.tf, literal(snap.n, "n"), nq, qt, k,
+      statsOpt = Some((snap.df, snap.postings.select(col("doc_id"), col("dl")).distinct(),
+        literal(snap.tot, "t"))))
   }
 
-  /** The committed tf store's serving set, as of one snapshot: the
-    * verified `(doc_id, term, tf)` rows ([[graft.IndexStore.verifiedRead]]
-    * — a concurrent maintainer's torn append can never serve), their `df`
-    * and `dl` aggregates (these three persisted), and the tf total `t`
-    * and the sidecar corpus count `n` (BM25's N: bootstrap-recorded,
-    * advanced by every append, decremented by every purge) as 1-row
-    * literal frames. `identity` is the store state it was built from.
+  /** The committed tf store's serving set, as of one snapshot: all that
+    * depends only on the commit. Persisted: the verified postings
+    * `(doc_id, term, tf, dl)` ([[graft.IndexStore.verifiedSnapshot]] — a
+    * concurrent maintainer's torn append can never serve), each row
+    * carrying its doc's length `dl` and the rows hash-partitioned by
+    * `doc_id`, so a per-doc sum over them needs no shuffle; and `df` per
+    * term. Held as values: the tf total `tot` and the sidecar corpus
+    * count `n` (BM25's N: bootstrap-recorded, advanced by every append,
+    * decremented by every purge). `identity` is the store state it was
+    * built from.
     */
   private[graft] final case class TfSnapshot(identity: graft.IndexStore.StoreIdentity,
-      tf: DataFrame, df: DataFrame, dl: DataFrame, tot: DataFrame, n: DataFrame)
+      postings: DataFrame, df: DataFrame, tot: Long, n: Long) {
+    /** The `(doc_id, term, tf)` rows: a projection of the persisted postings. */
+    def tf: DataFrame = postings.select("doc_id", "term", "tf")
+  }
 
   private val tfSnapshotCache = new graft.SessionCache[TfSnapshot]("tfSnapshot",
     stores = Set(TfStoreName))(snap =>
-    Seq(snap.tf, snap.df, snap.dl).foreach(graft.SessionCache.unpersist))
+    Seq(snap.postings, snap.df).foreach(graft.SessionCache.unpersist))
 
   /** The tf store's serving set, built once per committed snapshot — the
     * shared provenance of every store-served lexical leg
@@ -536,7 +545,8 @@ object IndexMaintenance {
     * persisted.
     */
   private def buildTfSnapshot(s: SparkSession, path: String): TfSnapshot = {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
     import org.apache.spark.sql.types.LongType
     val (store, identity) = graft.IndexStore.verifiedSnapshot(s, path)
     val n = identity.sidecar
@@ -545,19 +555,18 @@ object IndexMaintenance {
         s"tf store at $path has no corpus count in its sidecar — " +
           "re-bootstrap with bootstrapTfStore before serving retrieval"))
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val tf = store.select("doc_id", "term", "tf").persist(ser)
-    val (dfAgg, dlAgg, totAgg) = graft.operators.CorpusOps.tfStats(tf)
-    val df = dfAgg.persist(ser)
-    val dl = dlAgg.persist(ser)
+    // the window's exchange leaves the rows hash-partitioned by doc_id
+    val postings = store.select("doc_id", "term", "tf")
+      .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))).cast(LongType))
+      .persist(ser)
+    val df = postings.groupBy(col("term")).agg(count(lit(1)).as("df")).persist(ser)
     try {
-      val t = totAgg.head().get(0) // also fills tf's blocks
+      val t = postings.agg(sum(col("tf")).cast(LongType)).head() // also fills the postings' blocks
       df.count()
-      dl.count()
-      def literal(v: Any, name: String) = s.range(1).select(lit(v).cast(LongType).as(name))
-      TfSnapshot(identity, tf, df, dl, literal(t, "t"), literal(n, "n"))
+      TfSnapshot(identity, postings, df, if (t.isNullAt(0)) 0L else t.getLong(0), n)
     } catch {
       case e: Throwable =>
-        Seq(tf, df, dl).foreach(graft.SessionCache.unpersist)
+        Seq(postings, df).foreach(graft.SessionCache.unpersist)
         throw e
     }
   }
@@ -595,14 +604,23 @@ object IndexMaintenance {
     * tf·idf_micro expansion votes, integer 2/1 interpolation);
     * `rerank = Some("maxsim")` reranks the BM25 top-[[graft.operators
     * .CorpusOps.MaxSimCand]] candidates with q160's budgeted-token
-    * MaxSim off the same stored tf evidence. Everything reads the
-    * store's [[tfSnapshot]] — the persisted rows and (df, dl) plus the
-    * literal tot and N, built once per committed snapshot, so a request
-    * on an unchanged store re-reads and re-aggregates nothing, and the
-    * first request after any append or purge builds the new one — and
-    * stays posting-list-bounded: candidate work is Σ posting lengths over
-    * the bag's ≤ qt (+ expansion) terms. Returns `(q_id, rk, doc_id,
-    * score)`.
+    * MaxSim off the same stored tf evidence.
+    *
+    * Everything reads the store's [[tfSnapshot]], built once per
+    * committed snapshot; a request does only the work of its own query.
+    * It resolves its bag on the driver as `(term, mw, df)` rows: the
+    * `qTerms` tokens come from a one-row local frame (folded by the
+    * optimizer: no job) and their `df` from one filtered collect of the
+    * snapshot's `df`; a `docId` bag is the doc's stored terms (one
+    * bounded collect) and their rarest `qt` by (df ASC, term ASC) (one
+    * more). A term the stored corpus has never seen has no `df` and
+    * drops; an empty bag scores nothing. Every BM25 stage then scores its
+    * bag in one bounded plan ([[graft.operators.CorpusOps.bm25OverBag]]:
+    * N and tot as literals, no join, no broadcast, no shuffle of the bag),
+    * and returns its top k as a local frame. A warm plain `qTerms`
+    * request runs 2 Spark jobs here, described `<caller>: bag` and
+    * `<caller>: score` ([[graft.JobStep]]). Returns
+    * `(q_id, rk, doc_id, score)`.
     */
   def searchFromStore(s: SparkSession, corpusDir: String,
       qTerms: Seq[String] = Nil, docId: Option[Long] = None,
@@ -615,34 +633,39 @@ object IndexMaintenance {
       "provide exactly one of qTerms / docId")
     require(rerank.forall(_ == "maxsim"), s"unknown rerank '${rerank.get}' (maxsim)")
     val ops = graft.operators.CorpusOps
-    val TfSnapshot(_, tf, dfF, dl, tot, nT) = tfSnapshot(s, corpusDir)
-    val bags = docId match {
-      case Some(id) => ops.rarestBags(tf.filter(col("doc_id") === id), dfF, qt)
+    val snap = tfSnapshot(s, corpusDir)
+    val qId = docId.getOrElse(-1L)
+    import s.implicits._
+    def resolved(f: DataFrame) = f.select(col("term"), col("mw"), col("df")).collect()
+      .map(r => ops.BagTerm(r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    def dfOf(terms: Seq[String]) =
+      snap.df.filter(col("term").isInCollection(terms)).withColumn("mw", lit(1L))
+    val bag = graft.JobStep(s, "bag")(docId match {
+      case Some(id) =>
+        val terms = snap.postings.filter(col("doc_id") === id).select("term").as[String].collect()
+        if (terms.isEmpty) Nil
+        else resolved(dfOf(terms).orderBy(col("df").asc, col("term").asc).limit(qt))
       case None =>
-        import s.implicits._
-        qTerms.toDF("raw")
-          .select(explode(graft.functions.TextFunctions.tokens(col("raw"))).as("term"))
-          .filter(col("term") =!= "")
-          .distinct()
-          // a term the stored corpus has never seen has no posting list
-          // (and no df) — it cannot contribute score, so it drops here
-          .join(dfF, "term")
-          .select(lit(-1L).as("q_id"), col("term"), lit(1L).as("mw"), col("df"))
-    }
-    val scoredBags =
-      if (!expand) bags
+        val terms = qTerms.toDF("raw").select(graft.functions.TextFunctions.tokens(col("raw")))
+          .as[Seq[String]].collect().flatten.filter(_.nonEmpty).distinct
+        if (terms.isEmpty) Nil else resolved(dfOf(terms.toSeq))
+    })
+    def frame(b: Seq[ops.BagTerm]) =
+      b.map(t => (qId, t.term, t.mw, t.df)).toDF("q_id", "term", "mw", "df")
+    def score(b: Seq[ops.BagTerm], depth: Int, name: String) = graft.JobStep(s, "score")(
+      ops.bm25OverBag(snap.postings, snap.n, snap.tot, qId, b, depth, name))
+    val scoredBag =
+      if (!expand || bag.isEmpty) bag
       else {
-        val fb = ops.bm25OverBags(tf, nT, bags, dl, tot, ops.PrfDocs, "fb_micro")
-          .select(col("q_id"), col("doc_id"))
-        ops.rm3ExpandBag(tf, nT, dfF, bags, fb, ops.PrfTerms)
+        val fb = score(bag, ops.PrfDocs, "fb_micro").select(col("q_id"), col("doc_id"))
+        graft.JobStep(s, "expand")(resolved(
+          ops.rm3ExpandBag(snap.tf, lit(snap.n), snap.df, frame(bag), fb, ops.PrfTerms)))
       }
     if (rerank.contains("maxsim")) {
-      val cand = ops.bm25OverBags(tf, nT, scoredBags, dl, tot, ops.MaxSimCand, "score")
-        .select(col("q_id"), col("doc_id"))
-      ops.maxSimRerank(tf, dfF, scoredBags.select(col("q_id"), col("term")), cand, k)
+      val cand = score(scoredBag, ops.MaxSimCand, "score").select(col("q_id"), col("doc_id"))
+      ops.maxSimRerank(snap.tf, snap.df, frame(scoredBag).select(col("q_id"), col("term")), cand, k)
     } else
-      ops.bm25OverBags(tf, nT, scoredBags, dl, tot, k, "score")
-        .select(col("q_id"), col("rk"), col("doc_id"), col("score"))
+      score(scoredBag, k, "score").select(col("q_id"), col("rk"), col("doc_id"), col("score"))
   }
 
   // ------------------------------------------- substring anchor store --
@@ -1552,8 +1575,9 @@ object IndexMaintenance {
     * needs no external corpus), overwrite the durable model entry,
     * re-assign everything, and publish crash-cleanly — the reassigned
     * copy is fully written and row-verified at a `.refitting` sibling
-    * before the delete+rename swap ([[graft.IndexStore.compact]]'s
-    * discipline; a crash never publishes a half-reassigned store). The
+    * before the delete+rename swap ([[graft.IndexStore.swapIn]], as
+    * compaction and purges publish; a crash never publishes a
+    * half-reassigned store). The
     * fresh sidecar carries the new fit baseline, zeroed Inc sums, and the
     * surviving batch markers.
     */
@@ -1595,33 +1619,22 @@ object IndexMaintenance {
     val model = graft.operators.Ivf.fit(eqf, k)
     graft.operators.Ivf.save(s, modelPath, model)
     graft.SessionCache.storeChanged(s, corpusDir, ivfStoreNames(family)._2)
-    // crash-clean reassign swap
-    val staging = assignPath + ".refitting"
-    val p = new org.apache.hadoop.fs.Path(assignPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    sortedByVecId(ivfAssignRows(store, model), rows)
-      .write.mode("overwrite").parquet(staging)
-    val reassigned = graft.IndexStore.read(s, staging).count()
-    if (reassigned != rows) {
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      throw new IllegalStateException(
-        s"IVF refit: reassigned copy has $reassigned rows, store has $rows — " +
-          "aborted, live store untouched.")
-    }
-    val (n, sum) = assignStats(graft.IndexStore.read(s, staging))
-    graft.IndexStore.writeMeta(s, staging, meta ++ Map(
-      graft.IndexStore.StoreRowsKey -> n.toString,
-      graft.IndexStore.CorpusCountKey -> n.toString,
-      IvfFitIdotSumKey -> sum.toString, IvfFitNKey -> n.toString,
-      IvfIncIdotSumKey -> "0", IvfIncNKey -> "0",
-      IvfIncCellCountsKey -> "", IvfLastRefitTriggerKey -> trigger,
-      IvfFitEpochKey -> (meta.get(IvfFitEpochKey).flatMap(_.toIntOption)
-        .getOrElse(1) + 1).toString))
-    if (!fs.delete(p, true))
-      throw new java.io.IOException(s"IVF refit: delete $assignPath failed")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), p))
-      throw new java.io.IOException(s"IVF refit: rename $staging -> $assignPath failed")
+    // crash-clean reassign swap; Σidot comes from the same staged read
+    // that verifies the row count
+    graft.IndexStore.swapIn(s, assignPath, ".refitting", "IVF refit",
+      sortedByVecId(ivfAssignRows(store, model), rows), rows,
+      Some(meta ++ Map(
+        graft.IndexStore.StoreRowsKey -> rows.toString,
+        graft.IndexStore.CorpusCountKey -> rows.toString,
+        IvfFitNKey -> rows.toString,
+        IvfIncIdotSumKey -> "0", IvfIncNKey -> "0",
+        IvfIncCellCountsKey -> "", IvfLastRefitTriggerKey -> trigger,
+        IvfFitEpochKey -> (meta.get(IvfFitEpochKey).flatMap(_.toIntOption)
+          .getOrElse(1) + 1).toString)),
+      staged = { f =>
+        val (n, sum) = assignStats(f)
+        (n, Map(IvfFitIdotSumKey -> sum.toString))
+      })
   }
 
   /** Evaluate the PQ residual trigger and refit the codebook family in

@@ -205,7 +205,8 @@ object Warehouse {
     * the month, each writing one file. Hashing on city_name keeps every
     * city's rows clustered in one sorted file, so the row-group min/max
     * skip behavior survives the fan-out (files overlap in date range, not
-    * in city set). Cold months keep the exactly-one-file layout. The
+    * in city set). Cold months keep the exactly-one-file layout; only a
+    * write with a hot month pins the exchange's task count. The
     * per-month count is one aggregation job over the batch; pass
     * `hotMonthRows <= 0` to skip it and pin the legacy single-task layout
     * (a batch of at most `hotMonthRows` rows has no hot month, so for it
@@ -243,17 +244,20 @@ object Warehouse {
       else withMonth.groupBy(col(PartitionCol)).agg(count(lit(1)).as("n"))
         .filter(col("n") > hotMonthRows)
         .collect().map(_.getString(0)).toSet // bounded: one row per month
-    val writeBucket =
-      if (hotMonths.isEmpty) lit(0)
-      else when(col(PartitionCol).isInCollection(hotMonths),
-        pmod(hash(col("city_name")), lit(hotBuckets))).otherwise(lit(0))
-    // Explicit partition count: an advisory repartition(cols) is fair game
-    // for AQE coalescing, which would re-merge the hot month's buckets
-    // into one task (the bucket column is dropped before the write, so
-    // separate FILES require separate TASKS). A user-specified count pins
-    // the exchange.
-    val shuffleN = math.max(
-      withMonth.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, hotBuckets)
+    // A hot month needs an explicit partition count: an advisory
+    // repartition(cols) is fair game for AQE coalescing, which would
+    // re-merge its buckets into one task (the bucket column is dropped
+    // before the write, so separate FILES require separate TASKS). A cold
+    // write leaves the count to AQE: coalescing merges whole months,
+    // never splits one, so each month is still one task and one file,
+    // and a small flush runs a few tasks instead of a pinned fan-out.
+    def clustered(df: DataFrame) =
+      if (hotMonths.isEmpty) df.repartition(col(PartitionCol))
+      else df
+        .withColumn("__write_bucket", when(col(PartitionCol).isInCollection(hotMonths),
+          pmod(hash(col("city_name")), lit(hotBuckets))).otherwise(lit(0)))
+        .repartition(math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt, hotBuckets),
+          col(PartitionCol), col("__write_bucket"))
     // The sort MUST lead with the partition column: FileFormatWriter
     // requires output ordered by the partition dirs and would otherwise
     // inject its own UNSTABLE sort on event_month alone, scrambling the
@@ -267,9 +271,7 @@ object Warehouse {
           col("event_time")))
       } else (withMonth, SortCols.map(col))
     withMicrosTimestamps(spark) {
-      ranked
-        .withColumn("__write_bucket", writeBucket)
-        .repartition(shuffleN, col(PartitionCol), col("__write_bucket"))
+      clustered(ranked)
         .sortWithinPartitions(col(PartitionCol) +: clusterKeys: _*)
         // drops the helper columns AND restores the input's column order
         // (the rank join fronts city_name; a projection after the sort

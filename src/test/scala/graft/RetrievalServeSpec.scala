@@ -190,16 +190,20 @@ class RetrievalServeSpec extends SparkSpec {
     * the window: the listener bus delivers in order, so once the marker
     * arrives every job of `body` has too.
     */
-  private def jobSites(s: SparkSession)(body: => Unit): Seq[String] = {
+  private def jobSites(s: SparkSession)(body: => Unit): Seq[String] = jobs(s)(body).map(_._1)
+
+  /** [[jobSites]] with each job's description (`spark.job.description`). */
+  private def jobs(s: SparkSession)(body: => Unit): Seq[(String, String)] = {
     val sc = s.sparkContext
     val group = "rsv-" + java.util.UUID.randomUUID()
-    val sites = new ConcurrentLinkedQueue[String]()
+    val sites = new ConcurrentLinkedQueue[(String, String)]()
     val marked = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
           if (e.properties.getProperty("spark.job.description") == "marker") marked.countDown()
-          else sites.add(e.stageInfos.maxBy(_.stageId).name)
+          else sites.add((e.stageInfos.maxBy(_.stageId).name,
+            e.properties.getProperty("spark.job.description")))
         }
     }
     sc.addSparkListener(listener)
@@ -276,6 +280,63 @@ class RetrievalServeSpec extends SparkSpec {
     assert(storeJobs(sites).isEmpty, sites)
   }
 
+  test("tf snapshot: a warm term-bag search runs at most 4 jobs, named bag and score, none on the store") {
+    val first = served(snap.sA)
+    var again = Seq.empty[(Long, Int, Long, Long)]
+    val js = jobs(snap.sA) { again = served(snap.sA) }
+    assert(again == first && first.nonEmpty)
+    assert(js.size <= 4, js)
+    assert(storeJobs(js.map(_._1)).isEmpty, js)
+    // the caller's description stays the prefix of each step's jobs
+    val steps = js.map(_._2.stripPrefix("rsv: "))
+    assert(steps.contains("bag") && steps.contains("score"), js)
+    assert(snap.sA.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("tf snapshot: more-like-this equals batch rarestBags + bm25OverBags, ties in df included") {
+    val sA = snap.sA
+    val qt = 4
+    val tf = operators.CorpusOps.tfRows(snap.corpus)
+    val (dfF, dl, tot) = operators.CorpusOps.tfStats(tf)
+    val nT = sA.range(1).select(lit(snap.corpus.count()).cast("long").as("n"))
+    // docs whose qt-th and (qt+1)-th rarest terms share a df: the bag's
+    // cut is decided by the term ASC tie-break
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
+      .orderBy(col("df").asc, col("term").asc)
+    val ranked = tf.join(dfF, "term").withColumn("r", row_number().over(w))
+    val tied = ranked.filter(col("r") === qt).select(col("doc_id"), col("df"))
+      .join(ranked.filter(col("r") === qt + 1).select(col("doc_id"), col("df")),
+        Seq("doc_id", "df"))
+      .orderBy("doc_id").limit(3).collect().map(_.getLong(0)).toSeq
+    assert(tied.nonEmpty, "the corpus must hold a doc with a df tie at the bag's cut")
+    for (id <- 3L +: tied) {
+      val got = IndexMaintenance.searchFromStore(sA, dir, docId = Some(id), qt = qt)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+      val bag = operators.CorpusOps.rarestBags(tf.filter(col("doc_id") === id), dfF, qt)
+      val want = operators.CorpusOps.bm25OverBags(tf, nT, bag, dl, tot,
+          operators.CorpusOps.Bm25K, "score")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(4))).toSeq
+      assert(got.nonEmpty && got == want, s"doc $id")
+    }
+  }
+
+  test("tf snapshot: a bag of repeated, mixed-case tokens equals the batch bag scorer") {
+    val words = snap.phrase.split(" ")
+    val noisy = (words.map(_.toUpperCase) ++ words ++ words.take(1).map(_.capitalize))
+      .mkString("  ")
+    val got = served(snap.sA, noisy)
+    assert(got.nonEmpty && got == batch(snap.corpus, noisy))
+    assert(got == served(snap.sA), "case and repeats must not change the bag")
+  }
+
+  test("tf snapshot: an all-unknown bag answers 0 rows and runs no scoring job") {
+    served(snap.sA)
+    var got = Seq.empty[(Long, Int, Long, Long)]
+    val js = jobs(snap.sA) { got = served(snap.sA, "zzz_never_a_token QQQ_nor_this") }
+    assert(got.isEmpty)
+    assert(!js.exists(_._2.endsWith("score")), js)
+  }
+
   test("tf snapshot: an append through a second session is served by both sessions' next search") {
     val before = served(snap.sA)
     val inc = snap.docs.filter(col("doc_id") >= 400L)
@@ -323,7 +384,7 @@ class RetrievalServeSpec extends SparkSpec {
   test("tf snapshot: after an append and a search only the new snapshot's frames stay persisted") {
     val sA = snap.sA
     val old = IndexMaintenance.tfSnapshot(sA, dir)
-    def frames(t: IndexMaintenance.TfSnapshot) = Seq(t.tf, t.df, t.dl)
+    def frames(t: IndexMaintenance.TfSnapshot) = Seq(t.postings, t.df)
     assert(frames(old).forall(_.storageLevel.useMemory))
     val persisted0 = sA.sparkContext.getPersistentRDDs.keySet
     import sA.implicits._
@@ -335,7 +396,7 @@ class RetrievalServeSpec extends SparkSpec {
     assert(frames(old).forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
       "the append must release the old snapshot")
     assert(frames(IndexMaintenance.tfSnapshot(sA, dir)).forall(_.storageLevel.useMemory))
-    assert((persisted1 -- persisted0).size == 3, persisted1 -- persisted0)
+    assert((persisted1 -- persisted0).size == 2, persisted1 -- persisted0)
   }
 
   test("tf snapshot: a torn store throws TornStoreException, caches nothing and persists nothing") {

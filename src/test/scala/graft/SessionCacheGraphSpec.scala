@@ -57,7 +57,7 @@ class SessionCacheGraphSpec extends SparkSpec {
         case "bm25Stats" => (frame, frame, frame, frame)
         case "bpeLearned" => (Seq.empty, frame)
         case "tfSnapshot" => IndexMaintenance.TfSnapshot(
-          IndexStore.StoreIdentity("", None, Set.empty), frame, frame, frame, frame, frame)
+          IndexStore.StoreIdentity("", None, Set.empty), frame, frame, 0L, 0L)
         case _ => frame
       }
       c.asInstanceOf[SessionCache[Any]].getOrElseUpdate(s, dir)(value)

@@ -497,4 +497,50 @@ class WarehouseSpec extends SparkSpec {
     assert(layout(skipDir).size == 2 && layout(skipDir).values.forall(_.size == 1),
       "expected one file in each of the two months")
   }
+
+  test("count-or-time batcher: one count job per micro-batch, each step's jobs named after the caller's") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_wh_batcher").toFile.getAbsolutePath
+    val dir = s"$root/warehouse"
+    def rows(d: String, n: Int) = (1 to n).map { i =>
+      (java.sql.Date.valueOf(d), s"City$i", java.sql.Timestamp.valueOf(s"$d 01:00:00"), i.toDouble)
+    }.toDF("event_date", "city_name", "event_time", "temperature")
+    val batcher = new streaming.CountOrTimeBatcher(s"$root/staging", batchSize = 5L,
+      maxAgeMs = Long.MaxValue, clock = () => 0L)(Warehouse.writeFact(_, dir))
+    val sc = spark.sparkContext
+    val group = "wh-" + java.util.UUID.randomUUID()
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          val d = e.properties.getProperty("spark.job.description")
+          if (d == "marker") marked.countDown() else descs.add(d)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "batch 7")
+      batcher.add(rows("2024-01-15", 3)) // 3 < 5: staged
+      batcher.add(rows("2024-02-10", 3)) // 6 >= 5: staged + this batch flush
+      assert(sc.getLocalProperty("spark.job.description") == "batch 7",
+        "the caller's description must be restored")
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val steps = descs.asScala.toSeq
+    assert(steps.count(_ == "batch 7: count") == 2, steps)
+    assert(steps.contains("batch 7: stage") && steps.contains("batch 7: flush"), steps)
+    assert(steps.forall(Set("batch 7: count", "batch 7: stage", "batch 7: flush")), steps)
+    // a cold flush still writes one file per month
+    def files(month: String) = new java.io.File(s"$dir/event_month=$month")
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files("202401") == 1 && files("202402") == 1)
+    assert(Warehouse.readFact(spark, dir).count() == 6 && batcher.pendingRows == 0)
+  }
 }
