@@ -7,8 +7,9 @@ import java.util.concurrent.{ExecutorService, Executors, ScheduledExecutorServic
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Interactive ad-hoc SQL endpoint — the analog of the reference's
   * ClickHouse HTTP `/play` surface (reference README.md:140: the read path
@@ -440,8 +441,8 @@ object SqlGateway {
     * Requests serve a snapshot of the store built once per commit
     * ([[graft.streaming.IndexMaintenance.tfSnapshot]]): everything that
     * depends only on the commit — the verified postings `(doc_id, term,
-    * tf, dl)`, hash-partitioned by doc_id, and `df` persisted, tot and N
-    * held as values. Its identity is the resolved store path, the full
+    * tf, df, dl)`, hash-partitioned by doc_id, and `df` persisted, tot
+    * and N held as values. Its identity is the resolved store path, the full
     * sidecar and the data-file listing (name, length, mtime); every
     * request reads the sidecar and lists the store, and reuses the
     * snapshot while the identity is unchanged. The first request after
@@ -449,15 +450,15 @@ object SqlGateway {
     * a compaction — pays the build (a verified read plus the aggregates)
     * inside its own deadline; a torn store still answers 503.
     *
-    * A warm request does only its own query's work: it resolves its bag
-    * on the driver (`q=`: tokens folded from a local row, `df` from one
-    * filtered collect; `doc_id=`: two bounded collects) and scores it in
-    * one plan with no join, broadcast or shuffle, whose top k come back
-    * as a local frame. A warm plain `q=` search runs 3 Spark jobs — bag,
-    * score, and the JSON render of the ≤ k local rows — and a `doc_id=`
-    * search 4 (a `q=` search ran 9 while the bag was a frame joined and
-    * broadcast per request); the first two carry the request's
-    * description with `: bag` and `: score` appended.
+    * A warm request does only its own query's work: it holds its bag on
+    * the driver (`q=`: the tokens folded from a local row, no job;
+    * `doc_id=`: one bounded collect, `: bag`) and scores it in one plan
+    * with no join, broadcast or shuffle (`: score`), `df` and `dl` read
+    * off the postings; the top k come back as a local frame, which
+    * [[render]] encodes on the driver. A warm plain `q=` search runs 1
+    * Spark job and a `doc_id=` search 2 (a `q=` search ran 9 while the
+    * bag was a frame joined and broadcast per request, then 3 while the
+    * bag's `df` and the JSON render each ran a job).
     *
     * Protocol:
     *  - `GET /search?q=<terms>` — the token-bag query (URL-encoded,
@@ -586,12 +587,27 @@ object SqlGateway {
 
   /** Materialize ≤ cap rows (cap+1 is the truncation probe — the extra row
     * never reaches the payload). `limit` keeps the whole thing one bounded
-    * `CollectLimit` action regardless of the submitted SQL.
+    * `CollectLimit` action regardless of the submitted SQL. A frame whose
+    * limited plan optimizes to a `LocalRelation` (a `/search` answer, an
+    * inline `VALUES` table) already holds its rows on the driver: JSON
+    * encodes them there with `toJSON`'s own encoder, byte for byte, and
+    * runs no job; every other plan runs `toJSON`'s one job. Only a plan
+    * whose leaves are all local can fold to one, so no other plan is
+    * optimized twice. TSV collects, which runs no job on a local plan
+    * either.
     */
   private def render(df: DataFrame, format: String, cap: Int): (String, Int, Boolean) = {
     format match {
       case "JSONEachRow" =>
-        val lines = df.limit(cap + 1).toJSON.collect()
+        val limited = df.limit(cap + 1)
+        val qe = limited.queryExecution
+        val local = if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+          else Some(qe.optimizedPlan).collect { case l: LocalRelation => l }
+        val lines = local match {
+          case Some(l) => GraftColumnBridge.jsonLines(limited.schema, l.data,
+            limited.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+          case None => limited.toJSON.collect().toSeq
+        }
         val truncated = lines.length > cap
         val kept = if (truncated) lines.take(cap) else lines
         (kept.mkString("", "\n", if (kept.nonEmpty) "\n" else ""), kept.length, truncated)

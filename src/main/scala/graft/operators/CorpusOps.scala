@@ -709,7 +709,7 @@ object CorpusOps {
   /** BM25 scoring over an EXPLICIT weighted query bag `(q_id, term, mw,
     * df)` — the batch multi-query seam under [[bm25TopKOverTf]] (mw = 1)
     * and q163's RM3 stage 2 (mw = 2 original / 1 expansion), and the
-    * reference the `/search` scorer ([[bm25OverBag]], one bag resolved on
+    * reference the `/search` scorer ([[bm25OverBag]], one bag held on
     * the driver) is checked against. Identical rational-cleared integer
     * arithmetic and salted top-k as q130; candidates are always the union
     * of the bag terms' posting lists — the inverted-index cost bound at
@@ -738,23 +738,23 @@ object CorpusOps {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  /** One query-bag term resolved on the driver: its multiplier `mw` and
-    * its corpus document frequency `df`.
-    */
-  private[graft] final case class BagTerm(term: String, mw: Long, df: Long)
+  /** One query-bag term held on the driver, with its multiplier `mw`. */
+  private[graft] final case class BagTerm(term: String, mw: Long)
 
-  /** [[bm25OverBags]] for ONE bag already resolved on the driver — the
-    * `/search` serving scorer. `postings` are `(doc_id, term, tf, dl)`
-    * rows; N (`n`) and the tf total (`tot`) are literals, and each term's
-    * `mw` and `df` come from a map literal, so the plan joins nothing and
-    * broadcasts nothing: the postings are filtered to the bag's terms
-    * (the self-pair guard drops `qId`), micro-scored with the same
-    * cleared-rational arithmetic, summed per doc, and cut by
-    * `ORDER BY score DESC, doc_id ASC LIMIT k`. Ranks 1..k follow that
-    * order, which is [[TopK.perKeyTopK]]'s rank under this total order,
-    * so the rows equal `bm25OverBags` over the same bag. Returns a LOCAL
-    * frame `(q_id, rk, doc_id, n_terms, <scoreName>)`; an empty bag
-    * returns it empty without running a job.
+  /** [[bm25OverBags]] for ONE bag held on the driver — the `/search`
+    * serving scorer. `postings` are `(doc_id, term, tf, df, dl)` rows;
+    * N (`n`) and the tf total (`tot`) are literals, and each term's `mw`
+    * comes from a map literal, so the plan joins nothing and broadcasts
+    * nothing: the postings are filtered to the bag's terms (the self-pair
+    * guard drops `qId`), micro-scored with the same cleared-rational
+    * arithmetic, summed per doc, and cut by
+    * `ORDER BY score DESC, doc_id ASC LIMIT k`. A bag term with no
+    * postings matches no row and so contributes nothing, as in
+    * `bm25OverBags`, whose bag joins `df`. Ranks 1..k follow that order,
+    * which is [[TopK.perKeyTopK]]'s rank under this total order, so the
+    * rows equal `bm25OverBags` over the same bag. Returns a LOCAL frame
+    * `(q_id, rk, doc_id, n_terms, <scoreName>)`; an empty bag returns it
+    * empty without running a job.
     */
   private[graft] def bm25OverBag(postings: org.apache.spark.sql.DataFrame,
       n: Long, tot: Long, qId: Long, bag: Seq[BagTerm], k: Int,
@@ -763,11 +763,10 @@ object CorpusOps {
       if (bag.isEmpty) Array.empty[org.apache.spark.sql.Row]
       else {
         val mw = typedLit(bag.map(b => b.term -> b.mw).toMap)
-        val df = typedLit(bag.map(b => b.term -> b.df).toMap)
         postings
           .filter(col("term").isInCollection(bag.map(_.term)) && col("doc_id") =!= qId)
-          .select(col("doc_id"), col("tf"), col("dl"), element_at(mw, col("term")).as("mw"),
-            element_at(df, col("term")).as("df"), lit(n).as("n"), lit(tot).as("t"))
+          .select(col("doc_id"), col("tf"), col("dl"), col("df"),
+            element_at(mw, col("term")).as("mw"), lit(n).as("n"), lit(tot).as("t"))
           .withColumn("s_micro", expr(Bm25MicroExpr))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_terms"),
@@ -794,7 +793,9 @@ object CorpusOps {
     * posting-list cost bound and carry no signal), original-bag terms
     * excluded, top-`prfTerms` survive (weight DESC, term ASC). Returns
     * the EXPANDED bag — original terms mw = 2, expansion terms mw = 1
-    * (λ = 2/3) — ready for [[bm25OverBags]]. Every frame here is
+    * (λ = 2/3) — ready for [[bm25OverBags]]; `bags` need only
+    * `(q_id, term)`, each term's `df` is joined here, and a bag term
+    * absent from `dfF` drops. Every frame here is
     * query-batch-sized. `n` is BM25's N as a column: a scalar subquery
     * over the 1-row stats frame in batch, a literal when serving.
     */
@@ -822,10 +823,10 @@ object CorpusOps {
     val exTerms = ex0.withColumn("erk", row_number().over(wex))
       .filter(col("erk") <= prfTerms)
       .select(col("q_id"), col("term"))
-    bags.select(col("q_id"), col("term"), lit(2L).as("mw"), col("df"))
-      .unionByName(exTerms
-        .join(dfF, "term")
-        .select(col("q_id"), col("term"), lit(1L).as("mw"), col("df")))
+    bags.select(col("q_id"), col("term"), lit(2L).as("mw"))
+      .unionByName(exTerms.withColumn("mw", lit(1L)))
+      .join(dfF, "term")
+      .select(col("q_id"), col("term"), col("mw"), col("df"))
   }
 
   /** Shared DuckDB CTE block for the VECTOR leg (q131/q134): cosine ranks
@@ -1048,7 +1049,8 @@ object CorpusOps {
 
   /** q160's budgeted-token MaxSim as a SERVING rerank over EXPLICIT
     * candidates — the `/search?rerank=maxsim` engine: query tokens are
-    * the bag's terms (already pruned to ≤ qt by the caller), doc tokens
+    * the bag's terms that `dfF` holds (already pruned to ≤ qt by the
+    * caller; a term the corpus has never seen takes no token), doc tokens
     * are each candidate doc's rarest-[[MaxSimTokens]] budget from the
     * SAME tf provenance (window per doc over the candidate docs only —
     * identical budgets to the corpus-wide ranking, since the rank is
@@ -1072,7 +1074,8 @@ object CorpusOps {
       .union(qBags.select(col("term"))).distinct()
       .select(col("term"), maxSimTokenVec(col("term")).as("tv"))
     val dtok = dtokT.join(tv, "term").select(col("doc_id"), col("tv").as("dv"))
-    val qtok = qBags.join(tv, "term")
+    // a query term absent from dfF has no postings: it takes no token
+    val qtok = qBags.join(tv, "term").join(dfF, "term")
       .select(col("q_id"), col("term").as("qterm"), col("tv").as("qv"))
     val best = cand
       .join(broadcast(qtok), "q_id") // request-sized: one bag per query

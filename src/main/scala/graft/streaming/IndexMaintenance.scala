@@ -498,12 +498,15 @@ object IndexMaintenance {
 
   /** The committed tf store's serving set, as of one snapshot: all that
     * depends only on the commit. Persisted: the verified postings
-    * `(doc_id, term, tf, dl)` ([[graft.IndexStore.verifiedSnapshot]] — a
-    * concurrent maintainer's torn append can never serve), each row
-    * carrying its doc's length `dl` and the rows hash-partitioned by
-    * `doc_id`, so a per-doc sum over them needs no shuffle; and `df` per
-    * term. Held as values: the tf total `tot` and the sidecar corpus
-    * count `n` (BM25's N: bootstrap-recorded, advanced by every append,
+    * `(doc_id, term, tf, df, dl)` ([[graft.IndexStore.verifiedSnapshot]] —
+    * a concurrent maintainer's torn append can never serve), each row
+    * carrying its term's document frequency `df` and its doc's length
+    * `dl`, the rows hash-partitioned by `doc_id`, so a per-doc sum over
+    * them needs no shuffle; and `df` per term as its own frame, for the
+    * stages that join it ([[graft.operators.CorpusOps.rm3ExpandBag]],
+    * [[graft.operators.CorpusOps.maxSimRerank]], [[bm25FromStore]]).
+    * Held as values: the tf total `tot` and the sidecar corpus count `n`
+    * (BM25's N: bootstrap-recorded, advanced by every append,
     * decremented by every purge). `identity` is the store state it was
     * built from.
     */
@@ -555,8 +558,10 @@ object IndexMaintenance {
         s"tf store at $path has no corpus count in its sidecar — " +
           "re-bootstrap with bootstrapTfStore before serving retrieval"))
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    // the window's exchange leaves the rows hash-partitioned by doc_id
+    // df per term, then dl per doc: the last window's exchange leaves the
+    // rows hash-partitioned by doc_id
     val postings = store.select("doc_id", "term", "tf")
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))).cast(LongType))
       .persist(ser)
     val df = postings.groupBy(col("term")).agg(count(lit(1)).as("df")).persist(ser)
@@ -608,19 +613,23 @@ object IndexMaintenance {
     *
     * Everything reads the store's [[tfSnapshot]], built once per
     * committed snapshot; a request does only the work of its own query.
-    * It resolves its bag on the driver as `(term, mw, df)` rows: the
-    * `qTerms` tokens come from a one-row local frame (folded by the
-    * optimizer: no job) and their `df` from one filtered collect of the
-    * snapshot's `df`; a `docId` bag is the doc's stored terms (one
-    * bounded collect) and their rarest `qt` by (df ASC, term ASC) (one
-    * more). A term the stored corpus has never seen has no `df` and
-    * drops; an empty bag scores nothing. Every BM25 stage then scores its
-    * bag in one bounded plan ([[graft.operators.CorpusOps.bm25OverBag]]:
-    * N and tot as literals, no join, no broadcast, no shuffle of the bag),
-    * and returns its top k as a local frame. A warm plain `qTerms`
-    * request runs 2 Spark jobs here, described `<caller>: bag` and
-    * `<caller>: score` ([[graft.JobStep]]). Returns
-    * `(q_id, rk, doc_id, score)`.
+    * Its bag is a list of terms with multipliers `mw`, held on the
+    * driver. A `qTerms` bag is the distinct normalized tokens with
+    * `mw = 1`, folded from a one-row local frame by the optimizer (no
+    * job); a term the stored corpus has never seen has no postings and
+    * so matches nothing. A `docId` bag is the doc's rarest `qt` stored
+    * terms by (df ASC, term ASC): one bounded collect of its postings,
+    * which carry `df`. An empty bag scores nothing. Every BM25 stage
+    * then scores its bag in one bounded plan ([[graft.operators
+    * .CorpusOps.bm25OverBag]]: `df` and `dl` from the postings, N and
+    * tot as literals, no join, no broadcast, no shuffle of the bag) and
+    * returns its top k as a local frame. A warm plain `qTerms` request
+    * runs 1 Spark job here, described `<caller>: score`
+    * ([[graft.JobStep]]); a plain `docId` request runs 2, `<caller>: bag`
+    * and `<caller>: score`. The `expand` and `rerank` stages join the
+    * bag with the snapshot's `df`, which drops a term the stored corpus
+    * has never seen, so an unknown token cannot vote in RM3 or take a
+    * MaxSim token vector. Returns `(q_id, rk, doc_id, score)`.
     */
   def searchFromStore(s: SparkSession, corpusDir: String,
       qTerms: Seq[String] = Nil, docId: Option[Long] = None,
@@ -636,34 +645,30 @@ object IndexMaintenance {
     val snap = tfSnapshot(s, corpusDir)
     val qId = docId.getOrElse(-1L)
     import s.implicits._
-    def resolved(f: DataFrame) = f.select(col("term"), col("mw"), col("df")).collect()
-      .map(r => ops.BagTerm(r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    def dfOf(terms: Seq[String]) =
-      snap.df.filter(col("term").isInCollection(terms)).withColumn("mw", lit(1L))
     val bag = graft.JobStep(s, "bag")(docId match {
       case Some(id) =>
-        val terms = snap.postings.filter(col("doc_id") === id).select("term").as[String].collect()
-        if (terms.isEmpty) Nil
-        else resolved(dfOf(terms).orderBy(col("df").asc, col("term").asc).limit(qt))
+        snap.postings.filter(col("doc_id") === id)
+          .orderBy(col("df").asc, col("term").asc).limit(qt)
+          .select("term").as[String].collect().toSeq
       case None =>
-        val terms = qTerms.toDF("raw").select(graft.functions.TextFunctions.tokens(col("raw")))
-          .as[Seq[String]].collect().flatten.filter(_.nonEmpty).distinct
-        if (terms.isEmpty) Nil else resolved(dfOf(terms.toSeq))
-    })
-    def frame(b: Seq[ops.BagTerm]) =
-      b.map(t => (qId, t.term, t.mw, t.df)).toDF("q_id", "term", "mw", "df")
+        qTerms.toDF("raw").select(graft.functions.TextFunctions.tokens(col("raw")))
+          .as[Seq[String]].collect().toSeq.flatten.filter(_.nonEmpty).distinct
+    }).map(ops.BagTerm(_, 1L))
+    def frame(b: Seq[ops.BagTerm]) = b.map(t => (qId, t.term)).toDF("q_id", "term")
     def score(b: Seq[ops.BagTerm], depth: Int, name: String) = graft.JobStep(s, "score")(
       ops.bm25OverBag(snap.postings, snap.n, snap.tot, qId, b, depth, name))
     val scoredBag =
       if (!expand || bag.isEmpty) bag
       else {
         val fb = score(bag, ops.PrfDocs, "fb_micro").select(col("q_id"), col("doc_id"))
-        graft.JobStep(s, "expand")(resolved(
-          ops.rm3ExpandBag(snap.tf, lit(snap.n), snap.df, frame(bag), fb, ops.PrfTerms)))
+        graft.JobStep(s, "expand")(
+          ops.rm3ExpandBag(snap.tf, lit(snap.n), snap.df, frame(bag), fb, ops.PrfTerms)
+            .select(col("term"), col("mw")).collect()
+            .map(r => ops.BagTerm(r.getString(0), r.getLong(1))).toSeq)
       }
     if (rerank.contains("maxsim")) {
       val cand = score(scoredBag, ops.MaxSimCand, "score").select(col("q_id"), col("doc_id"))
-      ops.maxSimRerank(snap.tf, snap.df, frame(scoredBag).select(col("q_id"), col("term")), cand, k)
+      ops.maxSimRerank(snap.tf, snap.df, frame(scoredBag), cand, k)
     } else
       score(scoredBag, k, "score").select(col("q_id"), col("rk"), col("doc_id"), col("score"))
   }

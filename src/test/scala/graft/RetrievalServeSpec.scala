@@ -146,6 +146,25 @@ class RetrievalServeSpec extends SparkSpec {
       "served rerank=maxsim must equal the library two-stage computation")
   }
 
+  test("searchFromStore: an unknown token moves neither rerank=maxsim nor expand=rm3") {
+    val sA = freshStore("graft_rsv_unknown")
+    val docs = Tables.load(sA, dir, "documents")
+    streaming.IndexMaintenance.bootstrapTfStore(sA, dir, docs)
+    val phrase = docs.filter(col("doc_id") === 3L)
+      .select(concat_ws(" ", slice(functions.TextFunctions.tokens(col("text")), 1, 3)))
+      .collect()(0).getString(0)
+    def rows(q: String, expand: Boolean, rerank: Option[String]) =
+      streaming.IndexMaintenance.searchFromStore(sA, dir, qTerms = Seq(q),
+          expand = expand, rerank = rerank)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+    for ((expand, rerank) <- Seq((false, Some("maxsim")), (true, None))) {
+      val plain = rows(phrase, expand, rerank)
+      assert(plain.nonEmpty, s"expand=$expand rerank=$rerank")
+      assert(rows(phrase + " zzz_never_a_token", expand, rerank) == plain,
+        s"an unknown token must not move expand=$expand rerank=$rerank")
+    }
+  }
+
   test("takedown: a purged doc neither serves as a query nor appears in any retrieval result") {
     val sA = freshStore("graft_rsv_purge")
     val docs = Tables.load(sA, dir, "documents")
@@ -280,17 +299,43 @@ class RetrievalServeSpec extends SparkSpec {
     assert(storeJobs(sites).isEmpty, sites)
   }
 
-  test("tf snapshot: a warm term-bag search runs at most 4 jobs, named bag and score, none on the store") {
+  test("tf snapshot: a warm term-bag search runs exactly 1 job, named score, none on the store") {
     val first = served(snap.sA)
     var again = Seq.empty[(Long, Int, Long, Long)]
     val js = jobs(snap.sA) { again = served(snap.sA) }
     assert(again == first && first.nonEmpty)
-    assert(js.size <= 4, js)
+    // the caller's description stays the prefix of the step's job
+    assert(js.map(_._2) == Seq("rsv: score"), js)
     assert(storeJobs(js.map(_._1)).isEmpty, js)
-    // the caller's description stays the prefix of each step's jobs
-    val steps = js.map(_._2.stripPrefix("rsv: "))
-    assert(steps.contains("bag") && steps.contains("score"), js)
     assert(snap.sA.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("tf snapshot: a warm more-like-this search runs at most 2 jobs, named bag and score") {
+    def mlt() = IndexMaintenance.searchFromStore(snap.sA, dir, docId = Some(3L)).collect().toSeq
+    val first = mlt()
+    var again = Seq.empty[org.apache.spark.sql.Row]
+    val js = jobs(snap.sA) { again = mlt() }
+    assert(again == first && first.nonEmpty)
+    assert(js.size <= 2, js)
+    assert(js.map(_._2).toSet == Set("rsv: bag", "rsv: score"), js)
+    assert(storeJobs(js.map(_._1)).isEmpty, js)
+  }
+
+  test("tf snapshot: the postings carry each term's df, and a per-doc sum plans no exchange") {
+    val t = IndexMaintenance.tfSnapshot(snap.sA, dir)
+    assert(t.postings.columns.toSeq == Seq("doc_id", "term", "tf", "df", "dl"))
+    val pairs = t.postings.select("term", "df").distinct()
+    val df = t.df.select("term", "df")
+    assert(pairs.count() == df.count() && pairs.exceptAll(df).isEmpty,
+      "the postings' (term, df) pairs must equal the snapshot's df")
+    // the plan above the cached scan, with the exchanges planning added
+    val perDoc = t.postings.groupBy("doc_id").agg(sum("tf")).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(perDoc.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.isEmpty, perDoc)
   }
 
   test("tf snapshot: more-like-this equals batch rarestBags + bm25OverBags, ties in df included") {
@@ -329,12 +374,13 @@ class RetrievalServeSpec extends SparkSpec {
     assert(got == served(snap.sA), "case and repeats must not change the bag")
   }
 
-  test("tf snapshot: an all-unknown bag answers 0 rows and runs no scoring job") {
+  test("tf snapshot: an all-unknown bag answers 0 rows and runs at most one job") {
     served(snap.sA)
     var got = Seq.empty[(Long, Int, Long, Long)]
     val js = jobs(snap.sA) { got = served(snap.sA, "zzz_never_a_token QQQ_nor_this") }
     assert(got.isEmpty)
-    assert(!js.exists(_._2.endsWith("score")), js)
+    // the bag is not resolved against df: its score job matches no postings
+    assert(js.size <= 1, js)
   }
 
   test("tf snapshot: an append through a second session is served by both sessions' next search") {

@@ -278,6 +278,61 @@ class SqlGatewaySpec extends SparkSpec {
     } finally spark.conf.unset(IndexStore.DirConf)
   }
 
+  /** The gateway's Spark jobs that `body` starts, with their group ids. A
+    * marker job closes the window: the listener bus delivers in order.
+    */
+  private def gatewayJobs(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = "sgw-marker-" + java.util.UUID.randomUUID()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach {
+          case `marker` => marked.countDown()
+          case g if g.startsWith("graft-gateway-") => seen.add(g)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "the marker job never arrived")
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a literal SELECT renders on the driver: toJSON's bytes, no Spark job") {
+    val q = "SELECT * FROM VALUES (CAST(NULL AS STRING), CAST(-12.30 AS DECIMAL(9,2)), " +
+      "CAST(0.1 AS DOUBLE), 1e300D, DATE'2024-02-29', TIMESTAMP'2024-02-29 12:34:56.789', " +
+      "array(1, NULL, 3), map('k', 1.5D, 'é', NULL), named_struct('a', 1, 'b', array('x')), " +
+      "'say \"hi\"\\n naïve — 東京 😀', CAST(NULL AS INT)) " +
+      "AS t(n, dec, dbl, big, d, ts, arr, m, st, s, ni)"
+    val expect = spark.sql(q).toJSON.collect().mkString("", "\n", "\n")
+    assert(expect.contains("\\n") && expect.contains("東京") && expect.contains("\\\""), expect)
+    withGateway { (_, port) =>
+      var r: HttpResponse[String] = null
+      val jobs = gatewayJobs { r = post(port, q) }
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body().getBytes(UTF_8).sameElements(expect.getBytes(UTF_8)),
+        s"got ${r.body()} expected $expect")
+      assert(jobs.isEmpty, jobs)
+      // a plan that reads a table still renders through toJSON's job
+      val scan = gatewayJobs {
+        assert(post(port, "SELECT n_nationkey FROM nation ORDER BY n_nationkey LIMIT 3")
+          .body() == "{\"n_nationkey\":0}\n{\"n_nationkey\":1}\n{\"n_nationkey\":2}\n")
+      }
+      assert(scan.nonEmpty)
+    }
+  }
+
   test("errors: bad SQL and unknown format → 400 with a message; empty → 400") {
     withGateway { (_, port) =>
       val parse = post(port, "SELEKT 1")
@@ -536,6 +591,9 @@ class SqlGatewaySpec extends SparkSpec {
         assert(rq.statusCode() == 200, rq.body())
         assert(rq.body().trim.split("\n").forall(_.contains("\"q_id\":-1")), rq.body())
         assert(docIds(rq.body()).nonEmpty)
+        val expectQ = streaming.IndexMaintenance.searchFromStore(spark, dir,
+          qTerms = Seq(phrase), k = 5).toJSON.collect().toSeq
+        assert(rq.body().split("\n").toSeq == expectQ, rq.body())
         // knobs answer 200 with rows: expand=rm3, rerank=maxsim, both
         val rx = get(port, "/search?doc_id=3&k=5&expand=rm3")
         assert(rx.statusCode() == 200 && docIds(rx.body()).nonEmpty, rx.body())
