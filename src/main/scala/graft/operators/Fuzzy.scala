@@ -289,29 +289,22 @@ object Fuzzy {
     * `docs` must be the corpus the store was maintained over — the
     * sidecar's corpus count is checked against it (a lagging or
     * out-of-band-mutated corpus refuses loudly instead of profiling a
-    * half-indexed corpus), and the anchor width K is a sidecar geometry
-    * param for the same reason. Spec-pinned row-equal to batch
-    * [[substringDedup]] (IndexStoreSpec).
+    * half-indexed corpus). The store's serve prelude
+    * ([[graft.streaming.IndexMaintenance.servedAnchors]]) proves the
+    * anchor width K against the sidecar and refuses a torn store.
+    * Spec-pinned row-equal to batch [[substringDedup]] (IndexStoreSpec).
     */
   private[graft] def substringDedupFromStore(s: org.apache.spark.sql.SparkSession,
       corpusDir: String, docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val name = graft.streaming.IndexMaintenance.AnchorStoreName
-    val path = graft.IndexStore.requireCommitted(s, corpusDir, name,
-      "substringDedupFromStore")
-    val meta = graft.IndexStore.readMeta(s, path).getOrElse(throw
-      new IllegalStateException(s"anchor store at $path has no metadata sidecar — re-bootstrap"))
-    require(meta.get("k").contains(SubstringK.toString),
-      s"anchor store at $path was built with K=${meta.getOrElse("k", "?")}, " +
-        s"this build profiles K=$SubstringK — incomparable grams, re-bootstrap")
+    val (anchors, meta) = graft.streaming.IndexMaintenance.servedAnchors(s, corpusDir)
     val stored = meta.get(graft.IndexStore.CorpusCountKey).flatMap(_.toLongOption)
       .getOrElse(throw new IllegalStateException(
-        s"anchor store at $path has no corpus count — re-bootstrap"))
+        s"the anchor store for $corpusDir has no corpus count — re-bootstrap"))
     val current = docs.count()
     require(stored == current,
-      s"anchor store at $path covers $stored documents, the corpus has " +
+      s"the anchor store for $corpusDir covers $stored documents, the corpus has " +
         s"$current — serve after the maintainer catches up (or re-bootstrap)")
-    profileFromAnchors(normDocs(docs),
-      graft.IndexStore.read(s, path).select("doc_id", "i", "s"))
+    profileFromAnchors(normDocs(docs), anchors.select("doc_id", "i", "s"))
   }
 
   /** The profile tail shared by the batch and store-served paths: from a

@@ -27,9 +27,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    store root is configured). An append never creates the sidecar, so
   *    an append-created store would carry no corpus count, parameters or
   *    fit baseline, and serving would fail after the streamed documents
-  *    were gone. Two families keep their own precondition: the shingle
+  *    were gone. Two stores have no bootstrap precondition: the shingle
   *    store is created by append, and SRP appends refuse a store with no
   *    sidecar (the increment must bucket under the BUILD's plane family).
+  *  - Declared rules: a document store's geometry and additivity are
+  *    data on its [[DocStore]], and every append, serve and purge guard
+  *    derives from that one declaration (a geometry drift is an
+  *    `IllegalStateException` naming "geometry drift"). Only BPE keeps a
+  *    hand-written precondition: its committed model store.
   *  - Replay guard: foreachBatch is at-least-once — a restart replays the
   *    last uncommitted micro-batch — so a batch id ≤ the stream's marker
   *    in the store's sidecar is skipped ([[applyOnce]]); every batch
@@ -42,10 +47,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - Torn-append check: a crash after the parquet append commits but
   *    before the sidecar write is caught by [[graft.IndexStore]]'s one
   *    read check ([[graft.IndexStore.verifiedSnapshot]]) — the replayed
-  *    append and a serving read both answer
+  *    append and a store-served read (the tf snapshot, a document store's
+  *    serve prelude [[servedStore]], the IVF assignments) answer
   *    [[graft.IndexStore.TornStoreException]] instead of landing the
   *    batch twice or serving it, and any tracked load of the torn store
-  *    rebuilds it.
+  *    rebuilds it. The per-batch probes of the shingle, chunk and
+  *    media-fp stores read plainly; their append refuses the torn store.
   *
   * Single maintainer per store entry, per [[graft.IndexStore.append]]'s
   * single-writer contract. Every store append, purge and compaction
@@ -380,20 +387,53 @@ object IndexMaintenance {
 
   // ------------------------------------------- additive document stores --
 
+  /** The row shape of an additive store: `keys` name a row, `values` are
+    * counts, and the store's answer is the per-key sum over every row
+    * appended (bootstrap, batches, and a purge's negated rows).
+    */
+  private final case class Additive(keys: Seq[String], values: Seq[String]) {
+    /** The served rows: values summed per key as `Long`, and a key whose
+      * first value nets to ≤ 0 dropped — all its mass was purged, so it
+      * vanishes exactly as in a fresh build over the surviving corpus.
+      */
+    def summed(store: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.{col, sum}
+      val sums = values.map(v => sum(col(v)).cast(org.apache.spark.sql.types.LongType).as(v))
+      store.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+        .filter(col(values.head) > 0)
+    }
+
+    /** A purge's decrement: `rows` with every value negated. */
+    def negated(rows: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.col
+      rows.select(keys.map(col) ++
+        values.map(v => (-col(v)).cast(org.apache.spark.sql.types.LongType).as(v)): _*)
+    }
+  }
+
   /** One store maintained from a `(doc_id, text, …)` stream by plain
-    * appends — tf, anchor, LM bigrams, DSIR profiles, BPE words. Bootstrap
-    * ([[bootstrapDocStore]]) and apply ([[applyDocStore]]) are written
-    * once; what differs per family is data here:
+    * appends — tf, anchor, LM bigrams, DSIR profiles, BPE words. The
+    * declaration is the store's rules; bootstrap ([[bootstrapDocStore]]),
+    * append ([[applyDocStore]]), serve ([[servedStore]]) and
+    * [[purgeAll]]'s model leg derive every guard from it:
     *
     * @param user      the maintainer a refusal names
     * @param rows      a document frame's store rows (bootstrap and append)
-    * @param params    sidecar geometry recorded at bootstrap
+    * @param params    the store's geometry: recorded in the sidecar at
+    *                  bootstrap, and proven against it on every append,
+    *                  serve and purge ([[requireGeometry]] — a drift is an
+    *                  `IllegalStateException`). Empty = no geometry.
+    * @param additive  the store's rows sum per key. Its serving read is
+    *                  [[Additive.summed]] and a purge appends
+    *                  [[Additive.negated]] rows; a purge that cannot be
+    *                  exact marks it [[ModelStaleKey]], which serving
+    *                  refuses and only a bootstrap clears. None = rows are
+    *                  doc-keyed and a purge deletes them.
     * @param digest    the sidecar carries the corpus content digest
     *                  ([[graft.IndexStore.CorpusHashKey]]), stamped at
     *                  bootstrap and XOR-advanced per batch
-    * @param clearsPurgeStale a bootstrap drops [[ModelStaleKey]] (the
-    *                  additive model stores a purge can trip)
-    * @param check     the geometry precondition every append re-checks
+    * @param check     a further precondition every append re-checks
+    *                  (BPE: its committed model store)
     * @param incMeta   family ledger entries advanced in the marker's
     *                  sidecar write, from (session, corpusDir, the batch's
     *                  store rows, the current sidecar)
@@ -401,18 +441,36 @@ object IndexMaintenance {
   private final case class DocStore(name: String, user: String,
       rows: DataFrame => DataFrame,
       params: Map[String, String] = Map.empty,
+      additive: Option[Additive] = None,
       digest: Boolean = true,
-      clearsPurgeStale: Boolean = true,
       check: (SparkSession, String) => Unit = (_, _) => (),
       incMeta: (SparkSession, String, DataFrame, Map[String, String]) => Map[String, String] =
         (_, _, _, _) => Map.empty)
+
+  /** Refuse `st` at `path` unless its sidecar records `st.params`. A
+    * store whose geometry differs — or cannot be proven: no sidecar —
+    * holds rows hashed or bucketed under other constants, which an
+    * append or a serve would silently mix with the current ones.
+    */
+  private def requireGeometry(st: DocStore, path: String,
+      sidecar: Option[Map[String, String]]): Unit = {
+    val meta = sidecar.getOrElse(Map.empty)
+    val drift = st.params.collect {
+      case (k, v) if !meta.get(k).contains(v) => s"$k: store=${meta.getOrElse(k, "?")} current=$v"
+    }
+    if (drift.nonEmpty) throw new IllegalStateException(
+      s"${st.name} store at $path: geometry drift (${drift.mkString("; ")}) — it " +
+        "was built under other constants; re-bootstrap it instead of mixing them")
+  }
 
   /** Bootstrap `st` from an existing corpus frame (possibly empty).
     * corpusCount tracks DOCUMENT rows, not store rows: a doc can yield
     * zero rows (NULL text, shorter than an anchor) and still counts. The
     * digest stamp is sound whether servedFrom rebuilt (store = exactly
     * these docs) or served fresh (the count tripwire just proved the
-    * store covers the corpus the digest was computed over).
+    * store covers the corpus the digest was computed over). An additive
+    * store's bootstrap covers the surviving corpus exactly, so it drops
+    * [[ModelStaleKey]].
     */
   private def bootstrapDocStore(s: SparkSession, corpusDir: String,
       st: DocStore, docs: DataFrame): Unit = {
@@ -423,7 +481,7 @@ object IndexMaintenance {
       path <- graft.IndexStore.committedPath(s, corpusDir, st.name)
       meta <- graft.IndexStore.readMeta(s, path)
       digested = if (st.digest) meta + (graft.IndexStore.CorpusHashKey -> dig.toString) else meta
-      stamped = if (st.clearsPurgeStale) digested - ModelStaleKey else digested
+      stamped = if (st.additive.isDefined) digested - ModelStaleKey else digested
       if stamped != meta
     } graft.IndexStore.writeMeta(s, path, stamped)
   }
@@ -436,14 +494,38 @@ object IndexMaintenance {
       stream: String, batchId: Long, docs: DataFrame): Boolean =
     applyOnce(s, corpusDir, st.name, stream, batchId) { marker =>
       val path = graft.IndexStore.requireCommitted(s, corpusDir, st.name, st.user)
-      st.check(s, corpusDir)
       val meta = graft.IndexStore.readMeta(s, path)
+      requireGeometry(st, path, meta)
+      st.check(s, corpusDir)
       val (n, dig) = if (st.digest) countAndDigest(docs) else (docs.count(), 0L)
       val rows = st.rows(docs)
       graft.IndexStore.append(s, corpusDir, st.name, rows, incrementCount = n,
         extraMeta = marker ++ st.incMeta(s, corpusDir, rows, meta.getOrElse(Map.empty)) ++
           (if (st.digest) advancedDigest(meta, dig) else Map.empty))
     }
+
+  /** The serve prelude of a store-served read of `st`, for `user`: one
+    * verified snapshot of the committed store ([[graft.IndexStore
+    * .verifiedSnapshot]] — a torn store answers
+    * [[graft.IndexStore.TornStoreException]]), its geometry proven and,
+    * for an additive store, its purge-staleness checked against the
+    * sidecar that snapshot verified. Returns the served rows — the
+    * snapshot's, or for an additive store their [[Additive.summed]] —
+    * and that sidecar.
+    */
+  private def servedStore(s: SparkSession, corpusDir: String, st: DocStore,
+      user: String): (DataFrame, Map[String, String]) = {
+    val path = graft.IndexStore.requireCommitted(s, corpusDir, st.name, user)
+    val (store, id) = graft.IndexStore.verifiedSnapshot(s, path)
+    requireGeometry(st, path, id.sidecar)
+    val meta = id.sidecar.getOrElse(Map.empty)
+    if (st.additive.isDefined && meta.contains(ModelStaleKey))
+      throw new IllegalStateException(
+        s"${st.name} for $corpusDir is stale from a document purge whose ids' " +
+          "content was unavailable — the additive counts still carry the " +
+          "purged docs' mass. Re-bootstrap it over the surviving corpus before serving")
+    (st.additive.fold(store)(_.summed(store)), meta)
+  }
 
   /** The durable `(doc_id, term, tf)` store behind [[maintainTfIndex]] —
     * the retrieval-side counterpart of the shingle store: the BM25 leg
@@ -455,7 +537,7 @@ object IndexMaintenance {
   private[graft] val TfStoreName = "tf_index"
 
   private val TfStore = DocStore(TfStoreName, "maintainTfIndex",
-    graft.operators.CorpusOps.tfRows, clearsPurgeStale = false)
+    graft.operators.CorpusOps.tfRows)
 
   /** Bootstrap the tf store from an existing corpus frame (possibly empty). */
   private[graft] def bootstrapTfStore(s: SparkSession, corpusDir: String,
@@ -688,20 +770,9 @@ object IndexMaintenance {
     * different K are incomparable grams, so a constant change across
     * builds must trip the store instead of silently mixing widths.
     */
-  private def anchorParams: Map[String, String] =
-    Map("k" -> graft.operators.Fuzzy.SubstringK.toString, "hash" -> "md5-60")
-
-  private def requireAnchorK(s: SparkSession, corpusDir: String): Unit = {
-    val storedK = graft.IndexStore.storedMeta(s, corpusDir, AnchorStoreName)
-      .flatMap(_.get("k"))
-    require(storedK.contains(graft.operators.Fuzzy.SubstringK.toString),
-      s"anchor store for $corpusDir was built with K=${storedK.getOrElse("?")}, " +
-        s"this build hashes K=${graft.operators.Fuzzy.SubstringK} — refuse to mix")
-  }
-
   private val AnchorStore = DocStore(AnchorStoreName, "maintainAnchorIndex",
-    graft.operators.Fuzzy.anchorRows(_), anchorParams, clearsPurgeStale = false,
-    check = requireAnchorK)
+    graft.operators.Fuzzy.anchorRows(_),
+    Map("k" -> graft.operators.Fuzzy.SubstringK.toString, "hash" -> "md5-60"))
 
   /** Bootstrap the anchor store from an existing corpus frame (possibly
     * empty); the serve-side staleness check compares its corpus count
@@ -716,6 +787,14 @@ object IndexMaintenance {
   private[graft] def applyAnchorBatch(s: SparkSession, corpusDir: String,
       stream: String, batchId: Long, docs: DataFrame): Boolean =
     applyDocStore(s, corpusDir, AnchorStore, stream, batchId, docs)
+
+  /** The anchor store's serve prelude ([[servedStore]]) for
+    * [[graft.operators.Fuzzy.substringDedupFromStore]]: its verified
+    * `(doc_id, i, s)` rows and sidecar.
+    */
+  private[graft] def servedAnchors(s: SparkSession,
+      corpusDir: String): (DataFrame, Map[String, String]) =
+    servedStore(s, corpusDir, AnchorStore, "substringDedupFromStore")
 
   /** Attach an anchor-index maintainer to a `(doc_id, text, …)` stream:
     * each micro-batch's positional K-gram anchors land in the durable
@@ -732,42 +811,18 @@ object IndexMaintenance {
 
   private[graft] val DsirStoreName = "dsir_profiles"
 
-  private def dsirParams: Map[String, String] = Map(
-    "buckets" -> graft.operators.CorpusOps.DsirBuckets.toString,
-    "targetLang" -> graft.operators.CorpusOps.DsirTargetLang)
-
-  /** The geometry tripwire for every DSIR-store access, not just the
-    * bootstrap: an append hashes its increment with the CURRENT
-    * DsirBuckets/DsirTargetLang constants and serving sums whatever the
-    * parquet holds, so a constant change across versions would silently
-    * mix bucket spaces / target languages in one store unless the sidecar
-    * is checked at every touch point. Fails loudly on drift (and on a
-    * bare/torn sidecar — a store whose geometry can't be proven is not a
-    * store to mix increments into).
-    */
-  private def requireDsirGeometry(s: SparkSession, corpusDir: String): Unit = {
-    val meta = graft.IndexStore.storedMeta(s, corpusDir, DsirStoreName)
-      .getOrElse(throw new IllegalStateException(
-        "DSIR store has no readable metadata sidecar — re-bootstrap with " +
-          "bootstrapDsirStore before appending to or serving from it"))
-    val drift = dsirParams.collect {
-      case (k, v) if !meta.get(k).contains(v) =>
-        s"$k: store=${meta.getOrElse(k, "?")} current=$v"
-    }
-    if (drift.nonEmpty) throw new IllegalStateException(
-      s"DSIR store geometry drift (${drift.mkString("; ")}) — the store was " +
-        "built under different DsirBuckets/DsirTargetLang constants; rebuild " +
-        "with bootstrapDsirStore instead of mixing feature spaces")
-  }
-
   /** One row per touched hash bucket with raw/target token counts — an
     * increment is ≤ [[graft.operators.CorpusOps.DsirBuckets]] rows no
     * matter the batch size, and profiles are additive (serving sums per
-    * bucket).
+    * bucket). The DsirBuckets/DsirTargetLang constants are its geometry:
+    * a change across versions would mix bucket spaces / target languages
+    * in one store.
     */
   private val DsirStore = DocStore(DsirStoreName, "maintainDsirProfiles",
-    graft.operators.CorpusOps.dsirProfileRows(_), dsirParams, digest = false,
-    check = requireDsirGeometry)
+    graft.operators.CorpusOps.dsirProfileRows(_),
+    Map("buckets" -> graft.operators.CorpusOps.DsirBuckets.toString,
+      "targetLang" -> graft.operators.CorpusOps.DsirTargetLang),
+    additive = Some(Additive(Seq("b"), Seq("c_raw", "c_tgt"))), digest = false)
 
   /** Bootstrap the durable DSIR profile store from an existing
     * `(doc_id, text, lang, …)` corpus (possibly empty).
@@ -796,21 +851,9 @@ object IndexMaintenance {
     * DECIMAL(38,0) division per bucket. Spec-pinned equal to the batch
     * weight table over the same corpus.
     */
-  def dsirWeightsFromStore(s: SparkSession, corpusDir: String): DataFrame = {
-    val path = graft.IndexStore.requireCommitted(s, corpusDir, DsirStoreName,
-      "dsirWeightsFromStore")
-    requireDsirGeometry(s, corpusDir)
-    requireNotPurgeStale(s, corpusDir, DsirStoreName, "bootstrapDsirStore")
-    import org.apache.spark.sql.functions._
-    // net-zero buckets (all their mass purged via negated increments —
-    // [[purgeAll]]) must vanish exactly as in a fresh survivor build
-    val prof = graft.IndexStore.read(s, path)
-      .groupBy(col("b"))
-      .agg(sum(col("c_raw")).cast(org.apache.spark.sql.types.LongType).as("c_raw"),
-        sum(col("c_tgt")).cast(org.apache.spark.sql.types.LongType).as("c_tgt"))
-      .filter(col("c_raw") > 0)
-    graft.operators.CorpusOps.dsirWeights(prof)
-  }
+  def dsirWeightsFromStore(s: SparkSession, corpusDir: String): DataFrame =
+    graft.operators.CorpusOps.dsirWeights(
+      servedStore(s, corpusDir, DsirStore, "dsirWeightsFromStore")._1)
 
   /** q144's length-normalized importance shortlist of `docs`, scored
     * against the STORED profiles — the serving path of continuous data
@@ -839,7 +882,8 @@ object IndexMaintenance {
       .agg(sum(col("c")).cast(org.apache.spark.sql.types.LongType).as("c"))
   }
 
-  private val LmStore = DocStore(LmStoreName, "maintainLmBigrams", lmRows(_))
+  private val LmStore = DocStore(LmStoreName, "maintainLmBigrams", lmRows(_),
+    additive = Some(Additive(Seq("a", "b"), Seq("c"))))
 
   /** Bootstrap the durable bigram-count store from an existing corpus. */
   private[graft] def bootstrapLmStore(s: SparkSession, corpusDir: String,
@@ -866,21 +910,16 @@ object IndexMaintenance {
     * batch q146 model over the same corpus.
     */
   def lmModelFromStore(s: SparkSession, corpusDir: String): DataFrame = {
-    val lmPath = graft.IndexStore.requireCommitted(s, corpusDir, LmStoreName,
-      "lmModelFromStore")
-    val tfPath = graft.IndexStore.requireCommitted(s, corpusDir, TfStoreName,
-      "lmModelFromStore")
-    requireNotPurgeStale(s, corpusDir, LmStoreName, "bootstrapLmStore")
+    val (bigrams, lmMeta) = servedStore(s, corpusDir, LmStore, "lmModelFromStore")
+    val (tf, tfMeta) = servedStore(s, corpusDir, TfStore, "lmModelFromStore")
     // The model mixes two stores — bigram numerators from lm_bigrams,
     // unigram smoothing denominators from tf_index — which is only sound
     // when both cover the SAME corpus snapshot. If only one maintainer is
     // attached, or one lags a batch, the smoothed probabilities would be
     // computed from mismatched snapshots with no symptom; compare the
-    // sidecars' corpus counts and refuse to serve on disagreement.
-    val lmMeta = graft.IndexStore.readMeta(s, lmPath)
-    val tfMeta = graft.IndexStore.readMeta(s, tfPath)
-    val lmN = lmMeta.flatMap(_.get(graft.IndexStore.CorpusCountKey))
-    val tfN = tfMeta.flatMap(_.get(graft.IndexStore.CorpusCountKey))
+    // verified sidecars' corpus counts and refuse to serve on disagreement.
+    val lmN = lmMeta.get(graft.IndexStore.CorpusCountKey)
+    val tfN = tfMeta.get(graft.IndexStore.CorpusCountKey)
     if (lmN.isEmpty || tfN.isEmpty || lmN != tfN)
       throw new IllegalStateException(
         s"lm_bigrams and tf_index cover different corpus snapshots " +
@@ -897,8 +936,8 @@ object IndexMaintenance {
     // it (pre-digest store, or post-purge: purgeKeys drops the key) falls
     // back to count-only with a warning — the digest re-appears at the
     // next re-bootstrap.
-    val lmH = lmMeta.flatMap(_.get(graft.IndexStore.CorpusHashKey))
-    val tfH = tfMeta.flatMap(_.get(graft.IndexStore.CorpusHashKey))
+    val lmH = lmMeta.get(graft.IndexStore.CorpusHashKey)
+    val tfH = tfMeta.get(graft.IndexStore.CorpusHashKey)
     (lmH, tfH) match {
       case (Some(a), Some(b)) if a != b =>
         throw new IllegalStateException(
@@ -913,16 +952,8 @@ object IndexMaintenance {
           "count equality alone; re-bootstrap to restore the digest tripwire")
     }
     import org.apache.spark.sql.functions._
-    // drop net-zero bigram types: a purge appends NEGATED counts
-    // ([[purgeAll]]), so a bigram seen only in purged docs sums to 0 and
-    // must vanish exactly as in a fresh build over the surviving corpus
-    val bg = graft.IndexStore.read(s, lmPath)
-      .groupBy(col("a"), col("b"))
-      .agg(sum(col("c")).cast(org.apache.spark.sql.types.LongType).as("c12"))
-      .filter(col("c12") > 0)
-    val uni = graft.IndexStore.read(s, tfPath)
-      .groupBy(col("term")).agg(sum(col("tf")).as("n"))
-    graft.operators.CorpusOps.lmModelOverBigrams(bg, uni)
+    graft.operators.CorpusOps.lmModelOverBigrams(bigrams.withColumnRenamed("c", "c12"),
+      tf.groupBy(col("term")).agg(sum(col("tf")).as("n")))
   }
 
   /** q146's per-doc LM quality report for `docs`, scored against the
@@ -1003,50 +1034,38 @@ object IndexMaintenance {
     * sidecar write.
     */
   private val BpeWordStore = DocStore(BpeWordStoreName, "maintainBpeModel",
-    bpeWordRows(_),
+    bpeWordRows(_), additive = Some(Additive(Seq("term"), Seq("freq"))),
     check = (s, corpusDir) => {
       graft.IndexStore.requireCommitted(s, corpusDir, BpeModelStoreName, "maintainBpeModel")
       ()
     },
     incMeta = (s, corpusDir, words, meta) => {
-      val merges = storedBpeMerges(s, corpusDir).getOrElse(throw
-        new IllegalStateException(s"torn BPE model store for $corpusDir — re-bootstrap"))
       val (sy, ch) = graft.operators.Bpe.compressionStats(
-        graft.operators.Bpe.applyMerges(words, merges))
+        graft.operators.Bpe.applyMerges(words, storedBpeMerges(s, corpusDir, "maintainBpeModel")))
       def adv(key: String, d: BigInt) =
         key -> (meta.get(key).map(BigInt(_)).getOrElse(BigInt(0)) + d).toString
       Map(adv(BpeIncSymsKey, sy), adv(BpeIncCharsKey, ch))
     })
 
-  /** The summed (purge-aware: net-zero terms vanish) word-frequency frame
-    * off the durable store.
+  /** The stored merge sequence (bounded: ≤ Rounds rows), read verified
+    * from the committed model store that `user` needs.
     */
-  private def bpeStoreWords(s: SparkSession, corpusDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.IndexStore.read(s, graft.IndexStore.requireCommitted(s, corpusDir,
-        BpeWordStoreName, "BPE store access"))
-      .groupBy(col("term"))
-      .agg(sum(col("freq")).cast(org.apache.spark.sql.types.LongType).as("freq"))
-      .filter(col("freq") > 0)
-  }
-
-  /** The stored merge sequence (bounded: ≤ Rounds rows). */
-  private[graft] def storedBpeMerges(s: SparkSession,
-      corpusDir: String): Option[Seq[(Long, String, String, Long)]] =
-    graft.IndexStore.committedPath(s, corpusDir, BpeModelStoreName).map { path =>
-      graft.IndexStore.read(s, path)
-        .orderBy(org.apache.spark.sql.functions.col("round"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-    }
+  private def storedBpeMerges(s: SparkSession, corpusDir: String,
+      user: String): Seq[(Long, String, String, Long)] =
+    graft.IndexStore.verifiedRead(s,
+        graft.IndexStore.requireCommitted(s, corpusDir, BpeModelStoreName, user))
+      .orderBy(org.apache.spark.sql.functions.col("round"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .toSeq
 
   /** Learn the merge sequence over the word store's summed counts,
     * overwrite the model entry, and return the fresh compression baseline
     * (zeroed increments) for the word store's sidecar.
     */
   private def fitBpeMerges(s: SparkSession, corpusDir: String): Map[String, String] = {
-    val words = bpeStoreWords(s, corpusDir)
+    val words = BpeWordStore.additive.get.summed(graft.IndexStore.verifiedRead(s,
+      graft.IndexStore.requireCommitted(s, corpusDir, BpeWordStoreName, "BPE model fit")))
     val merges = graft.operators.Bpe.learn(words)
     val path = graft.IndexStore.storePath(
       graft.IndexStore.requireRoot(s, "BPE model write"), corpusDir, BpeModelStoreName)
@@ -1127,10 +1146,9 @@ object IndexMaintenance {
     * (round, left_sym, right_sym, pair_count).
     */
   def bpeMergesFromStore(s: SparkSession, corpusDir: String): DataFrame = {
-    requireNotPurgeStale(s, corpusDir, BpeWordStoreName, "bootstrapBpeStore")
+    servedStore(s, corpusDir, BpeWordStore, "bpeMergesFromStore")
     import s.implicits._
-    storedBpeMerges(s, corpusDir).getOrElse(throw new IllegalStateException(
-      s"no committed BPE model store for $corpusDir — bootstrapBpeStore first"))
+    storedBpeMerges(s, corpusDir, "bpeMergesFromStore")
       .toDF("round", "left_sym", "right_sym", "pair_count")
   }
 
@@ -1138,11 +1156,8 @@ object IndexMaintenance {
     * word store encoded under the stored merges — `(term, syms, freq)`.
     */
   def bpeEncodedFromStore(s: SparkSession, corpusDir: String): DataFrame = {
-    requireNotPurgeStale(s, corpusDir, BpeWordStoreName, "bootstrapBpeStore")
-    val merges = storedBpeMerges(s, corpusDir).getOrElse(throw
-      new IllegalStateException(
-        s"no committed BPE model store for $corpusDir — bootstrapBpeStore first"))
-    graft.operators.Bpe.applyMerges(bpeStoreWords(s, corpusDir), merges)
+    val words = servedStore(s, corpusDir, BpeWordStore, "bpeEncodedFromStore")._1
+    graft.operators.Bpe.applyMerges(words, storedBpeMerges(s, corpusDir, "bpeEncodedFromStore"))
   }
 
   // ------------------------------------------ IVF assignment store ------
@@ -1161,12 +1176,19 @@ object IndexMaintenance {
     */
   private[graft] val IvfAssignStoreName = "ivf_assign"
 
-  /** The maintained IVF/PQ index families: "" = the text-side family,
-    * "_xm" = the cross-modal image-side one (ids in the 2^40-offset
-    * domain). Every per-family maintenance surface (ledger views,
-    * unified purge) iterates this list so a new family extends them all.
+  /** The maintained IVF/PQ index families, each with the offset of its
+    * id domain: "" is the text-side family (`ivf_assign` + `ivf_model` +
+    * `pq_model_<m>`); "_xm" the cross-modal image-side one
+    * (`ivf_assign_xm` + `xm_ivf_model` + `pq_model_<m>_xm` — q155's
+    * serving artifacts), whose ids are the documents' plus
+    * [[graft.operators.Similarity.XmOffset]]. One maintenance stack,
+    * parameterized, so the image-side index follows ITS corpus exactly as
+    * the text-side one does; every per-family surface (ledger views,
+    * store names, the takedown purge) iterates this one declaration, so a
+    * new family extends them all.
     */
-  private[graft] val IndexFamilies: Seq[String] = Seq("", "_xm")
+  private[graft] val IndexFamilies: scala.collection.immutable.ListMap[String, Long] =
+    scala.collection.immutable.ListMap("" -> 0L, "_xm" -> graft.operators.Similarity.XmOffset)
 
   /** Sidecar keys of the drift statistic. Fit* = assignment-quality
     * baseline recorded when the current model was fit (Σ idot and row
@@ -1360,18 +1382,51 @@ object IndexMaintenance {
   private def encodeCellCounts(m: Map[Int, Long]): String =
     m.toSeq.sortBy(_._1).map { case (c, n) => s"$c:$n" }.mkString(",")
 
-  /** Merge a batch's per-cell appended counts into the tracked map. The
-    * batch side is a k-bounded collect (one row per non-empty cell).
+  /** The Inc ledgers after adding (`sign` = 1, an append) or removing
+    * (−1, a purge) the assignment rows `asg` of `family`, from the
+    * sidecar `meta`: the rows the coarse ledger counted, and the five
+    * Inc-ledger entries ([[IvfIncNKey]], [[IvfIncIdotSumKey]],
+    * [[IvfIncCellCountsKey]], [[PqIncResNKey]], [[PqIncResSumKey]]). A row counts toward a ledger iff its epoch
+    * tag (`ivf_epoch` / `pq_epoch`) is the current fit epoch
+    * ([[IvfFitEpochKey]]) — purged fit-corpus rows were never counted and
+    * remove nothing; a store without epoch columns counts every row. The
+    * sums clamp at zero and a cell whose count falls to ≤ 0 drops. The
+    * PQ entries move only when the store carries a residual baseline AND
+    * the family's codebooks are committed, re-scored under the current
+    * codebooks. An append's rows all carry the current epochs and only
+    * grow the sums, so there the filter and the clamps change nothing.
+    * Jobs: one for the sums, one k-bounded collect of the cell counts,
+    * and the PQ residual pass.
     */
-  private def advancedCellCounts(meta: Map[String, String],
-      asg: DataFrame): String = {
-    import org.apache.spark.sql.functions._
-    val batch = asg.groupBy(col("cid")).agg(count(lit(1)).as("n"))
+  private def incLedger(s: SparkSession, corpusDir: String, family: String,
+      meta: Map[String, String], asg: DataFrame, sign: Int): (Long, Map[String, String]) = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    def current(epochCol: String, epochKey: String) =
+      if (!asg.columns.contains(epochCol)) asg
+      else asg.filter(col(epochCol) === meta.get(epochKey).flatMap(_.toIntOption).getOrElse(1))
+    def long(key: String) = meta.get(key).flatMap(_.toLongOption).getOrElse(0L)
+    def big(key: String) = meta.get(key).map(BigInt(_)).getOrElse(BigInt(0))
+    val ivf = current("ivf_epoch", IvfFitEpochKey)
+    val (n, sum) = assignStats(ivf)
+    val cells = ivf.groupBy(col("cid")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val prev = parseCellCounts(meta.getOrElse(IvfIncCellCountsKey, ""))
-    encodeCellCounts(prev ++ batch.map { case (c, n) =>
-      c -> (prev.getOrElse(c, 0L) + n)
-    })
+    val prevCells = parseCellCounts(meta.getOrElse(IvfIncCellCountsKey, ""))
+    val newCells = (prevCells.keySet ++ cells.keySet)
+      .map(c => c -> (prevCells.getOrElse(c, 0L) + sign * cells.getOrElse(c, 0L)))
+      .filter(_._2 > 0).toMap
+    val pq = for {
+      mod <- meta.get(PqResModKey).flatMap(_.toIntOption)
+      models <- storedPqModels(s, corpusDir, family)
+    } yield {
+      val (rn, rsum) = graft.operators.Similarity.pqResidualStats(models,
+        current("pq_epoch", PqFitEpochKey).select(col("vec_id"), col("eq"))
+          .filter(graft.operators.Similarity.pqResSampleFilter(mod)))
+      Map(PqIncResNKey -> math.max(0L, long(PqIncResNKey) + sign * rn).toString,
+        PqIncResSumKey -> (big(PqIncResSumKey) + rsum * sign).max(BigInt(0)).toString)
+    }
+    (n, Map(IvfIncNKey -> math.max(0L, long(IvfIncNKey) + sign * n).toString,
+      IvfIncIdotSumKey -> (big(IvfIncIdotSumKey) + sum * sign).max(BigInt(0)).toString,
+      IvfIncCellCountsKey -> encodeCellCounts(newCells)) ++ pq.getOrElse(Map.empty))
   }
 
   /** `(vec_id, embedding, eq, cid, idot)` rows of `e` under model `m`:
@@ -1430,18 +1485,9 @@ object IndexMaintenance {
     (r.getLong(0), BigInt(r.getDecimal(1).toBigInteger))
   }
 
-  /** The maintained model FAMILIES: "" is the text-side family
-    * (`ivf_assign` + `ivf_model` + `pq_model_<m>`); "_xm" the cross-modal
-    * image-side one (`ivf_assign_xm` + `xm_ivf_model` + `pq_model_<m>_xm`
-    * — q155's serving artifacts). One maintenance stack, parameterized,
-    * so the image-side index follows ITS corpus exactly as the text-side
-    * one does (round-14 gap #4: the xm family only refreshed wholesale).
-    */
-  private[graft] val Families = Set("", "_xm")
-
   /** `(assignment store, model store)` names of index family `family`. */
   private def ivfStoreNames(family: String): (String, String) = {
-    require(Families(family), s"unknown index family '$family'")
+    require(IndexFamilies.contains(family), s"unknown index family '$family'")
     (IvfAssignStoreName + family,
       if (family.isEmpty) graft.operators.Similarity.IvfModelStoreName
       else graft.operators.Similarity.XmIvfModelStoreName)
@@ -1541,33 +1587,9 @@ object IndexMaintenance {
           .withColumn("pq_epoch", org.apache.spark.sql.functions.lit(pqEpoch)), model)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       try {
-        val (bn, bsum) = assignStats(asg)
-        val incN = meta0.get(IvfIncNKey).map(_.toLong).getOrElse(0L) + bn
-        val incSum = meta0.get(IvfIncIdotSumKey).map(BigInt(_)).getOrElse(BigInt(0)) + bsum
-        // PQ residual advance — only when the store carries a baseline
-        // (pqResMod) AND the codebook family is committed
-        val pqInc: Map[String, String] =
-          meta0.get(PqResModKey).flatMap(_.toIntOption) match {
-            case Some(mod) => storedPqModels(s, corpusDir, family) match {
-              case Some(models) =>
-                val sampled = asg
-                  .select(org.apache.spark.sql.functions.col("vec_id"),
-                    org.apache.spark.sql.functions.col("eq"))
-                  .filter(graft.operators.Similarity.pqResSampleFilter(mod))
-                val (rn, rsum) = graft.operators.Similarity.pqResidualStats(models, sampled)
-                Map(
-                  PqIncResNKey -> (meta0.get(PqIncResNKey).map(_.toLong).getOrElse(0L) + rn).toString,
-                  PqIncResSumKey -> (meta0.get(PqIncResSumKey).map(BigInt(_)).getOrElse(BigInt(0)) + rsum).toString)
-              case None => Map.empty
-            }
-            case None => Map.empty
-          }
-        graft.IndexStore.append(s, corpusDir, assignName,
-          sortedByVecId(asg, bn),
-          incrementCount = bn,
-          extraMeta = marker ++ Map(
-            IvfIncIdotSumKey -> incSum.toString, IvfIncNKey -> incN.toString,
-            IvfIncCellCountsKey -> advancedCellCounts(meta0, asg)) ++ pqInc)
+        val (bn, inc) = incLedger(s, corpusDir, family, meta0, asg, 1)
+        graft.IndexStore.append(s, corpusDir, assignName, sortedByVecId(asg, bn),
+          incrementCount = bn, extraMeta = marker ++ inc)
       } finally asg.unpersist()
       maybeRefitIvf(s, corpusDir, family)
       maybeRefitPq(s, corpusDir, family)
@@ -1741,82 +1763,31 @@ object IndexMaintenance {
       val assignPath = graft.IndexStore.committedPath(s, corpusDir, storeName)
         .getOrElse(return)
       val meta = graft.IndexStore.readMeta(s, assignPath).getOrElse(Map.empty)
-      val purgedAll = graft.IndexStore.read(s, assignPath).filter(col("vec_id").isin(famIds: _*))
+      val purged = graft.IndexStore.read(s, assignPath).filter(col("vec_id").isin(famIds: _*))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       try {
-        // EXACT attribution (round-15 advice): only rows whose epoch tag
-        // matches the sidecar's current fit epoch are still counted in an
-        // Inc ledger — purged FIT-corpus rows (epoch 0, or pre-refit
-        // epochs) decrement nothing, so repeated purges of fit rows can
-        // no longer understate appended mass and defer the refit
-        // triggers. Stores written before the epoch columns fall back to
-        // the old conservative all-present decrement.
-        val ivfEpoch = meta.get(IvfFitEpochKey).flatMap(_.toIntOption).getOrElse(1)
-        val pqEpoch = meta.get(PqFitEpochKey).flatMap(_.toIntOption).getOrElse(1)
-        val hasEpochs = purgedAll.columns.contains("ivf_epoch")
-        val purged =
-          if (hasEpochs) purgedAll.filter(col("ivf_epoch") === ivfEpoch)
-          else purgedAll
-        val pnAll = purgedAll.count()
-        val (pn, psum) = assignStats(purged)
-        val decMeta: Map[String, String] =
-          if (pnAll == 0) Map.empty
-          else {
-            val incN = meta.get(IvfIncNKey).flatMap(_.toLongOption).getOrElse(0L)
-            val incSum = meta.get(IvfIncIdotSumKey).map(BigInt(_)).getOrElse(BigInt(0))
-            val purgedCells = purged.groupBy(col("cid")).agg(count(lit(1)).as("n"))
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-            val newCells = parseCellCounts(meta.getOrElse(IvfIncCellCountsKey, ""))
-              .flatMap { case (c, n) =>
-                val d = n - purgedCells.getOrElse(c, 0L)
-                if (d > 0) Some(c -> d) else None
-              }
-            val pqDec: Map[String, String] =
-              meta.get(PqResModKey).flatMap(_.toIntOption) match {
-                case Some(mod) => storedPqModels(s, corpusDir, family) match {
-                  case Some(models) =>
-                    val pqPurged =
-                      if (hasEpochs) purgedAll.filter(col("pq_epoch") === pqEpoch)
-                      else purgedAll
-                    val (rn, rsum) = graft.operators.Similarity.pqResidualStats(models,
-                      pqPurged.select(col("vec_id"), col("eq"))
-                        .filter(graft.operators.Similarity.pqResSampleFilter(mod)))
-                    val pin = meta.get(PqIncResNKey).flatMap(_.toLongOption).getOrElse(0L)
-                    val pis = meta.get(PqIncResSumKey).map(BigInt(_)).getOrElse(BigInt(0))
-                    Map(PqIncResNKey -> math.max(0L, pin - rn).toString,
-                      PqIncResSumKey -> (pis - rsum).max(BigInt(0)).toString)
-                  case None => Map.empty
-                }
-                case None => Map.empty
-              }
-            Map(IvfIncNKey -> math.max(0L, incN - pn).toString,
-              IvfIncIdotSumKey -> (incSum - psum).max(BigInt(0)).toString,
-              IvfIncCellCountsKey -> encodeCellCounts(newCells)) ++ pqDec
-          }
+        // no purged rows, no ledger keys written: a replayed purge leaves
+        // the sidecar as it was
+        val n = purged.count()
+        val decMeta = if (n == 0) Map.empty[String, String]
+          else incLedger(s, corpusDir, family, meta, purged, -1)._2
         results += storeName -> graft.IndexStore.purgeKeys(s, corpusDir,
-          storeName, "vec_id", famIds, countDecrement = pnAll, extraMeta = decMeta)
-      } finally purgedAll.unpersist()
+          storeName, "vec_id", famIds, countDecrement = n, extraMeta = decMeta)
+      } finally purged.unpersist()
     }
-    purgeIvfFamily("", ids)
-    // the image-side family lives in the OFFSET id domain: the same
-    // takedown purges the documents' paired image vectors there
-    purgeIvfFamily("_xm", ids.map(_ + graft.operators.Similarity.XmOffset))
+    for ((family, offset) <- IndexFamilies) purgeIvfFamily(family, ids.map(_ + offset))
 
-    val srpName = graft.operators.Similarity.SrpStoreName
-    graft.IndexStore.committedPath(s, corpusDir, srpName).foreach { srpPath =>
-      val present = graft.IndexStore.read(s, srpPath).filter(col("vec_id").isin(ids: _*))
-        .select(col("vec_id")).distinct().count()
-      results += srpName -> graft.IndexStore.purgeKeys(s, corpusDir, srpName,
-        "vec_id", ids, countDecrement = present)
-    }
-
-    val mfpName = graft.operators.MultimodalOps.MediaFpStoreName
-    graft.IndexStore.committedPath(s, corpusDir, mfpName).foreach { mfpPath =>
-      val present = graft.IndexStore.read(s, mfpPath).filter(col("media_id").isin(ids: _*))
-        .select(col("media_id")).distinct().count()
-      results += mfpName -> graft.IndexStore.purgeKeys(s, corpusDir, mfpName,
-        "media_id", ids, countDecrement = present)
-    }
+    // SRP bucket rows and media fingerprints: the corpus count drops by
+    // the distinct purged keys present
+    def purgePresent(name: String, keyCol: String): Unit =
+      graft.IndexStore.committedPath(s, corpusDir, name).foreach { path =>
+        val present = graft.IndexStore.read(s, path).filter(col(keyCol).isin(ids: _*))
+          .select(col(keyCol)).distinct().count()
+        results += name -> graft.IndexStore.purgeKeys(s, corpusDir, name,
+          keyCol, ids, countDecrement = present)
+      }
+    purgePresent(graft.operators.Similarity.SrpStoreName, "vec_id")
+    purgePresent(graft.operators.MultimodalOps.MediaFpStoreName, "media_id")
 
     if (results.isEmpty)
       IndexMaintenance.log.warn(s"purgeEmbeddingTier: no committed " +
@@ -1850,20 +1821,8 @@ object IndexMaintenance {
     */
   private[graft] val LastPurgeReqKey = "lastPurgeReq"
 
-  /** Refuse to serve an additive model store whose counts a purge left
-    * inexact ([[ModelStaleKey]]). The trip is one-way by design: only a
-    * re-bootstrap over the surviving corpus ([[bootstrapDocStore]])
-    * restores exactness.
-    */
-  private def requireNotPurgeStale(s: SparkSession, corpusDir: String,
-      name: String, rebootstrap: String): Unit =
-    if (graft.IndexStore.storedMeta(s, corpusDir, name)
-        .exists(_.contains(ModelStaleKey)))
-      throw new IllegalStateException(
-        s"$name for $corpusDir is stale from a document purge whose ids' " +
-          "content was unavailable — the additive counts still carry the " +
-          s"purged docs' mass. Re-bootstrap over the surviving corpus " +
-          s"($rebootstrap) before serving")
+  /** Every [[DocStore]]; [[purgeAll]] decrements the additive ones. */
+  private val DocStores = Seq(TfStore, AnchorStore, LmStore, DsirStore, BpeWordStore)
 
   private def purgeReqDigest(corpusDir: String, ids: Seq[Long]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -1945,43 +1904,33 @@ object IndexMaintenance {
 
       // --- additive model tier: exact negated-increment decrement, or
       //     the staleness trip when exactness is impossible ---
-      def modelLeg(name: String, negRows: => DataFrame): Unit = {
+      def modelLeg(st: DocStore): Unit = {
+        val name = st.name
         if (!graft.IndexStore.committed(s, path(name))) return
-        val meta = graft.IndexStore.readMeta(s, path(name)).getOrElse(Map.empty)
-        if (meta.get(LastPurgeReqKey).contains(req)) { results += name -> 0L; return }
+        val meta = graft.IndexStore.readMeta(s, path(name))
+        val m = meta.getOrElse(Map.empty)
+        if (m.get(LastPurgeReqKey).contains(req)) { results += name -> 0L; return }
         if (unknownIngested) {
           graft.IndexStore.writeMeta(s, path(name),
-            meta + (ModelStaleKey -> "purge") + (LastPurgeReqKey -> req))
+            m + (ModelStaleKey -> "purge") + (LastPurgeReqKey -> req))
           results += name -> 0L
           return
         }
         if (nDec == 0) { results += name -> 0L; return }
-        val decCount = meta.get(graft.IndexStore.CorpusCountKey)
+        requireGeometry(st, path(name), meta)
+        val decCount = m.get(graft.IndexStore.CorpusCountKey)
           .flatMap(_.toLongOption)
           .map(c => Map(graft.IndexStore.CorpusCountKey ->
             math.max(0L, c - nDec).toString)).getOrElse(Map.empty)
-        val decDigest = meta.get(graft.IndexStore.CorpusHashKey)
+        val decDigest = m.get(graft.IndexStore.CorpusHashKey)
           .flatMap(_.toLongOption)
           .map(h => Map(graft.IndexStore.CorpusHashKey -> (h ^ digDec).toString))
           .getOrElse(Map.empty)
-        graft.IndexStore.append(s, corpusDir, name, negRows,
+        graft.IndexStore.append(s, corpusDir, name, st.additive.get.negated(st.rows(decDocs)),
           extraMeta = decCount ++ decDigest ++ Map(LastPurgeReqKey -> req))
         results += name -> nDec
       }
-      modelLeg(LmStoreName,
-        graft.operators.CorpusOps.bigramBags(decDocs)
-          .groupBy(col("a"), col("b"))
-          .agg((-sum(col("c"))).cast(org.apache.spark.sql.types.LongType).as("c")))
-      modelLeg(DsirStoreName, {
-        requireDsirGeometry(s, corpusDir)
-        graft.operators.CorpusOps.dsirProfileRows(decDocs)
-          .select(col("b"), (-col("c_raw")).cast(org.apache.spark.sql.types.LongType).as("c_raw"),
-            (-col("c_tgt")).cast(org.apache.spark.sql.types.LongType).as("c_tgt"))
-      })
-      modelLeg(BpeWordStoreName,
-        graft.operators.CorpusOps.tfRows(decDocs)
-          .groupBy(col("term"))
-          .agg((-sum(col("tf"))).cast(org.apache.spark.sql.types.LongType).as("freq")))
+      DocStores.filter(_.additive.isDefined).foreach(modelLeg)
 
       // --- doc-keyed text tier: staged-rewrite row purges. The document
       //     count decrements by the known purged docs plus the witnessed
@@ -2105,7 +2054,7 @@ object IndexMaintenance {
     // image-side (_xm) store's growth/drift/skew ledger is maintained by
     // the same triggers and must be just as queryable.
     val rows = for {
-      family <- IndexFamilies
+      family <- IndexFamilies.keys.toSeq
       meta <- graft.IndexStore.storedMeta(s, corpusDir, IvfAssignStoreName + family).toSeq
       sn <- driftSnapshot(meta).toSeq
     } yield org.apache.spark.sql.Row(family, sn.fitN, sn.incN, sn.rows, sn.k,
@@ -2143,7 +2092,7 @@ object IndexMaintenance {
     // text-side one ("a ledger the trigger can never disagree with" has
     // to hold for every family the trigger runs on).
     val rows = for {
-      family <- IndexFamilies
+      family <- IndexFamilies.keys.toSeq
       meta <- graft.IndexStore.storedMeta(s, corpusDir, IvfAssignStoreName + family).toSeq
       sn <- pqDriftSnapshot(meta).toSeq
     } yield org.apache.spark.sql.Row(family, sn.fitN, sn.incN, sn.mod,

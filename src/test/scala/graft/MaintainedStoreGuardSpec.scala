@@ -11,8 +11,10 @@ import graft.streaming.IndexMaintenance
   * batch-apply entry point that has a bootstrap precondition: an
   * un-bootstrapped store refuses before writing anything, a session with
   * no store root refuses, and a batch id at or below the recorded marker
-  * is skipped. A handful of rows per case; no bootstrap builds — the
-  * replay case stands up a committed store holding only a marker.
+  * is skipped. Every store that declares geometry refuses a sidecar
+  * recording other geometry on both its append and its serve. A handful
+  * of rows per case; no bootstrap builds — the replay and geometry cases
+  * stand up a committed store holding only a sidecar.
   */
 class MaintainedStoreGuardSpec extends SparkSpec {
 
@@ -109,4 +111,36 @@ class MaintainedStoreGuardSpec extends SparkSpec {
       assert(files(out).isEmpty, s"batch output gained ${files(out)}")
     }
   }
+
+  /** A store that declares geometry: a sidecar recording other geometry,
+    * its batch apply, and its serve.
+    */
+  private final case class Geometry(name: String, store: String, other: Map[String, String],
+      apply: (SparkSession, Long) => Boolean, serve: SparkSession => Any)
+
+  private val geometries = Seq(
+    Geometry("anchor", IndexMaintenance.AnchorStoreName,
+      Map("k" -> (operators.Fuzzy.SubstringK - 1).toString, "hash" -> "md5-60"),
+      (s, id) => IndexMaintenance.applyAnchorBatch(s, corpus, stream, id, docs(s)),
+      s => operators.Fuzzy.substringDedupFromStore(s, corpus, docs(s))),
+    Geometry("DSIR", IndexMaintenance.DsirStoreName,
+      Map("buckets" -> (operators.CorpusOps.DsirBuckets * 2).toString,
+        "targetLang" -> operators.CorpusOps.DsirTargetLang),
+      (s, id) => IndexMaintenance.applyDsirBatch(s, corpus, stream, id, docs(s)),
+      s => IndexMaintenance.dsirWeightsFromStore(s, corpus)))
+
+  for (g <- geometries)
+    test(s"${g.name}: a sidecar recording other geometry refuses the batch before writing and the serve, with geometry drift") {
+      val root = tempDir("root")
+      val s = session(Some(root))
+      val path = IndexStore.storePath(root.getAbsolutePath, corpus, g.store)
+      s.range(0).write.parquet(path)
+      IndexStore.writeMeta(s, path, g.other)
+      val before = files(root)
+      for (refusal <- Seq(() => g.apply(s, 0L), () => g.serve(s))) {
+        val e = intercept[IllegalStateException](refusal())
+        assert(e.getMessage.contains("geometry drift"), e.getMessage)
+      }
+      assert(files(root) == before, "a refused batch must not touch the store")
+    }
 }

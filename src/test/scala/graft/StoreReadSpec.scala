@@ -15,8 +15,9 @@ import graft.operators.TextAnalysis
   * of a store to any persisted frame of it by root path, so a check that
   * counted a plain read would see `sA`'s rows instead of the files: it
   * would pass a store torn outside Spark and refuse a healthy one after a
-  * rename swap. The store cases share one store ([[shingles]]) and run in
-  * declaration order: torn, refused, rebuilt, purged, appended to. The
+  * rename swap. The shingle cases share one store ([[shingles]]) and run
+  * in declaration order: torn, refused, rebuilt, purged, appended to. A
+  * store-served model read of a torn additive store refuses too. The
   * last case is the source rule: no main source reads parquet outside
   * the files that own the store, fixture and staging reads.
   */
@@ -104,6 +105,22 @@ class StoreReadSpec extends SparkSpec {
     assert(id.sidecar.flatMap(_.get(IndexStore.StoreRowsKey)).contains("209"), id.sidecar)
     assert(store.filter(col("doc_id") === 7L).isEmpty)
     assert(store.select("doc_id").distinct().count() == 209L)
+  }
+
+  test("a part file landed outside Spark in the LM store: lmModelFromStore refuses as torn") {
+    val root = tmp("graft_store_read_lm")
+    val corpus = "/store/read/lm/corpus"
+    val s = session(root)
+    val corpusDocs = docs(s, 0L, 40L)
+    streaming.IndexMaintenance.bootstrapLmStore(s, corpus, corpusDocs)
+    streaming.IndexMaintenance.bootstrapTfStore(s, corpus, corpusDocs)
+    assert(streaming.IndexMaintenance.lmModelFromStore(s, corpus).count() > 0)
+    val store = new File(IndexStore.storePath(root, corpus, streaming.IndexMaintenance.LmStoreName))
+    val part = store.listFiles().filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+    Files.copy(part.toPath, new File(store, "part-torn-extra.parquet").toPath)
+    assertTorn(intercept[IndexStore.TornStoreException] {
+      streaming.IndexMaintenance.lmModelFromStore(s, corpus)
+    })
   }
 
   /** A reader chain (`.read` or `.readStream`, then any calls) that ends
