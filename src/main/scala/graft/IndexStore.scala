@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRela
   PartitioningAwareFileIndex}
 
 /** DURABLE (cross-session) persistence for the built-once/served-many
-  * index artifacts ([[SessionCache]] is the within-session tier): the
+  * index artifacts (session caches are the within-session tier): the
   * shingle sets, SRP bucket rows, and IVF centroids live as parquet under
   * a warehouse-style root, so a NEW session — tomorrow's incremental dedup
   * job — loads yesterday's index instead of re-tokenizing/re-projecting
@@ -37,8 +37,8 @@ import org.apache.spark.sql.execution.datasources.{LogicalRelation, HadoopFsRela
   * append that committed its parquet but lost its sidecar write fails
   * that comparison ([[TornStoreException]]): appends, compactions,
   * purges and serving reads refuse, and tracked loads ([[servedFrom]])
-  * rebuild, so an at-least-once replayer can never land silent
-  * duplicates.
+  * rebuild (a reload of a live value refuses too), so an at-least-once
+  * replayer can never land silent duplicates.
   *
   * Every committed entry carries a `_graft_meta` sidecar recording the
   * BUILD's parameters (e.g. the SRP plane family) and the cumulative
@@ -240,16 +240,53 @@ object IndexStore {
       val actual = storeRows(store)
       if (actual != recorded) throw new TornStoreException(path, actual, recorded)
     }
-    val listed = store.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation => l.relation
-    } match {
+    (store, serves(StoreIdentity(path, meta, listing(store, path))))
+  }
+
+  /** The data files a [[read]] of `path` serves, fixed when it was created. */
+  private def listing(store: DataFrame, path: String): Set[(String, Long, Long)] =
+    store.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
       case Some(HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _)) =>
         index.allFiles().map(fileKey).toSet
       case other => throw new IllegalStateException(
         s"index store at $path did not read as a file relation: $other")
     }
-    (store, StoreIdentity(path, meta, listed))
+
+  /** One [[tracked]] scope: whether it is a reload, and the first store
+    * state it served at each path.
+    */
+  private final class Scope(val reload: Boolean,
+      val served: scala.collection.mutable.Map[String, StoreIdentity])
+
+  private val scopes = ThreadLocal.withInitial[List[Scope]](() => Nil)
+
+  /** Run `body` in a tracked scope and return its value with the store
+    * states it served: every [[verifiedSnapshot]], every [[servedFrom]]
+    * write and every [[saved]] model, in this scope or a nested one,
+    * records the identity it serves; a path served in several states
+    * keeps the first, never a state newer than any part of the value. A
+    * `reload` scope replaces a value a commit made stale: the tracked
+    * loads made directly in it serve the committed store or throw, and
+    * never write it.
+    */
+  private[graft] def tracked[T](reload: Boolean)(body: => T): (T, Map[String, StoreIdentity]) = {
+    val scope = new Scope(reload, scala.collection.mutable.Map.empty)
+    val outer = scopes.get
+    scopes.set(scope :: outer)
+    (try body finally scopes.set(outer), scope.served.toMap)
   }
+
+  private def serves(id: StoreIdentity): StoreIdentity = {
+    scopes.get.foreach(_.served.getOrElseUpdate(id.path, id))
+    id
+  }
+
+  /** The caller just wrote the model at `path` and serves what it wrote:
+    * the enclosing tracked scopes record its identity (one sidecar read
+    * and one listing; nothing outside a scope).
+    */
+  private[graft] def saved(s: SparkSession, path: String): Unit =
+    if (scopes.get.nonEmpty) serves(storeIdentity(s, path))
 
   /** A verified snapshot's row count: the sidecar's record, which the
     * verification just matched, or a count when it records none.
@@ -325,6 +362,13 @@ object IndexStore {
     * so does a torn store: the load is a [[verifiedSnapshot]], and the
     * frame returned is the one it counted (or, after a rebuild, the one
     * the new sidecar's row count was taken from).
+    *
+    * In a reload ([[tracked]]) — a commit changed a store a live value
+    * was built from — the load never writes: a torn store (an append
+    * between its data and its sidecar), a missing one (a swap between
+    * its delete and rename) and a geometry mismatch throw, and the
+    * corpus count is not compared, since the commit's writer advanced it
+    * (a streaming maintainer appends without growing the corpus table).
     */
   def servedFrom(s: SparkSession, corpusDir: String, name: String,
       params: Map[String, String] = Map.empty, corpusCount: => Long = -1L)(
@@ -338,39 +382,43 @@ object IndexStore {
         // corpus a count is metadata-cheap, but the contract is "any
         // DataFrame", where each evaluation is a full scan.
         lazy val current = corpusCount
-        val loaded = if (!committed(s, path)) None else try {
+        val reload = scopes.get.headOption.exists(_.reload)
+        val loaded = if (!reload && !committed(s, path)) None else try {
           val (store, id) = verifiedSnapshot(s, path)
           val drift = id.sidecar match {
             // Tolerate a bare store only when the caller tracks nothing
             // (no params, no count) — otherwise rebuild and self-heal.
             case None =>
-              if (params.isEmpty && current < 0) Nil else Seq("no metadata sidecar")
+              if (params.isEmpty && (reload || current < 0)) Nil else Seq("no metadata sidecar")
             case Some(meta) =>
               params.collect {
                 case (k, v) if !meta.get(k).contains(v) =>
                   s"$k: store=${meta.getOrElse(k, "?")} requested=$v"
               } ++ (meta.get(CorpusCountKey).map(_.toLong) match {
-                case Some(stored) if current >= 0 && stored != current =>
+                case Some(stored) if !reload && current >= 0 && stored != current =>
                   Seq(s"$CorpusCountKey: store=$stored corpus=$current")
                 case _ => Nil
               })
           }
           if (drift.isEmpty) Some(store)
+          else if (reload) throw new IllegalStateException(s"index store $path changed " +
+            s"under a live reader (${drift.mkString("; ")}) — a reload does not rebuild it")
           else {
             log.warn(s"index store $path is stale (${drift.mkString("; ")}) — rebuilding")
             None
           }
         } catch {
-          case e: TornStoreException =>
+          case e: TornStoreException if !reload =>
             log.warn(s"${e.getMessage} — rebuilding")
             None
         }
         loaded.getOrElse {
           build.write.mode("overwrite").parquet(path)
           val store = read(s, path)
-          writeMeta(s, path, params ++
-            Map(StoreRowsKey -> storeRows(store).toString) ++
-            (if (current >= 0) Map(CorpusCountKey -> current.toString) else Map.empty))
+          val meta = params ++ Map(StoreRowsKey -> storeRows(store).toString) ++
+            (if (current >= 0) Map(CorpusCountKey -> current.toString) else Map.empty)
+          writeMeta(s, path, meta)
+          serves(StoreIdentity(path, Some(meta), listing(store, path)))
           store
         }
     }
@@ -382,9 +430,9 @@ object IndexStore {
     * nowhere durable to land is a caller bug, not a silent no-op. A torn
     * store refuses the append ([[verifiedSnapshot]]): appending again
     * would double the torn increment SILENTLY (its sidecar advance still
-    * lands on the right corpus total). This session's caches that read
-    * the store drop their entries ([[SessionCache.storeChanged]]), so the
-    * next read serves the grown store.
+    * lands on the right corpus total). The append changes the store's
+    * [[StoreIdentity]], so a session cache that reads the store, in any
+    * session, rebuilds at its next get and serves the grown store.
     *
     * SINGLE-WRITER contract: the sidecar advance is a read-modify-write
     * with no cross-process lock, so concurrent appenders to the SAME
@@ -428,7 +476,6 @@ object IndexStore {
       writeMeta(s, path,
         advanced ++ Map(StoreRowsKey -> storeRowsNow.toString) ++ extraMeta)
     }
-    SessionCache.storeChanged(s, corpusDir, name)
   }
 
   /** Publish `rows` as the entry at `path`, crash-clean by staging: they
@@ -483,9 +530,10 @@ object IndexStore {
     * adds a file set, and both the torn-append check and any footer count
     * are O(files); same posture as the warehouse's monthly compaction).
     * The rewrite is of the verified frame, staged and swapped in
-    * crash-clean (a `.compacting` sibling). This session's caches that
-    * read the store drop their entries: no row changed, but a frame not
-    * yet materialized still lists the replaced files.
+    * crash-clean (a `.compacting` sibling). No row changes, but the
+    * [[StoreIdentity]] does, so a session cache that reads the store
+    * rebuilds at its next get instead of serving a frame that lists the
+    * replaced files.
     */
   def compact(s: SparkSession, corpusDir: String, name: String,
       targetRowsPerFile: Long = 4L << 20, clusterBy: Option[String] = None): Unit = {
@@ -506,7 +554,6 @@ object IndexStore {
       case None => store.repartition(files)
     }
     swapIn(s, path, ".compacting", user, rows, actual, id.sidecar)
-    SessionCache.storeChanged(s, corpusDir, name)
   }
 
   /** Right-to-be-forgotten at the index tier: rewrite the store entry
@@ -521,9 +568,9 @@ object IndexStore {
     * index type), so a store-served consumer (e.g. BM25's N) sees the
     * post-purge corpus. Scale: one store scan + an `isin` filter against
     * the (request-sized, broadcast) key list — purge requests are
-    * human-scale, never corpus-scale. This session's caches that read the
-    * store drop their entries ([[SessionCache.storeChanged]]); other
-    * sessions reload from the store at their next fresh load.
+    * human-scale, never corpus-scale. The swap changes the
+    * [[StoreIdentity]], so a session cache that reads the store, in any
+    * session, rebuilds from the purged store at its next get.
     */
   def purgeKeys(s: SparkSession, corpusDir: String, name: String,
       keyCol: String, keys: Seq[Long], countDecrement: Long = -1L,
@@ -555,7 +602,6 @@ object IndexStore {
       store.filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*)), actual - removed,
       Some((decremented - CorpusHashKey) ++
         Map(StoreRowsKey -> (actual - removed).toString) ++ extraMeta))
-    SessionCache.storeChanged(s, corpusDir, name)
     removed
   }
 }

@@ -1,14 +1,13 @@
 package graft
 
-import scala.annotation.tailrec
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, corpus dir) memoization for built-once/served-many
   * artifacts — the materialized index frames (shingle sets, quality
   * features, SRP bucket rows) and fitted models (IVF centroids) that
   * every consumer query serves from instead of recomputing. One
-  * implementation so the key recipe lives in exactly one place.
+  * implementation so the key recipe and the freshness rule live in
+  * exactly one place.
   *
   * Lifecycle: entries live for the session (the posture of a production
   * index — built once per corpus, reused by every query); persisted
@@ -16,94 +15,93 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The derived-artifact graph: every cache declares, where it is
   * constructed, what its build reads — the durable [[IndexStore]]
-  * entries (`stores`, by store name) and the other caches (`caches`, by
-  * cache name). A store mutation calls [[SessionCache.storeChanged]],
-  * which drops, for that session and corpus dir only, every cache that
-  * reads the store directly or through other caches.
-  * [[IndexStore.append]], [[IndexStore.purgeKeys]] and
-  * [[IndexStore.compact]] fire it after they commit (a compaction changes
-  * no row, but a persisted frame not yet materialized still lists the
-  * files it replaced); the model overwrites made outside a cache build
-  * (the IVF drift refit, the PQ refit) fire it themselves. Store writes
-  * made INSIDE a cache build (a served model's first fit, a stale store's
-  * rebuild) do not: the entry being built already reflects them. Other
-  * sessions' entries stay: a materialized frame serves the state it was
-  * built from, one not yet materialized fails once a purge or compaction
-  * swap has deleted the files it lists. What a store read sees is the
-  * store's job, not the cache's: every store read is tagged
-  * ([[IndexStore.read]]), so no entry's persisted frame can answer
-  * another read, and [[IndexStore.verifiedSnapshot]] checks it against
-  * the sidecar; an entry served straight off a store can also check the
-  * store's identity per read ([[SessionCache#getFreshOrUpdate]]).
-  * Caches register themselves when constructed and the walk reads only
-  * that registry, so it never loads an operator object; one that was
-  * never loaded holds no entries.
+  * entries (`stores`, by store name) and the other caches (`upstream`,
+  * by reference). The references resolve on the first get, when every
+  * operator object is initialized whatever order they loaded in, and
+  * resolving them loads every object the build reads, so the set of
+  * stores an entry depends on is complete before its first build.
   *
-  * Fixture immutability: fixture tables ([[Tables.load]]) do not change
-  * within a session, so a cache whose build reads only them declares no
-  * store and never drops — a rebuild would give the identical frame.
+  * Freshness, one rule: an entry records the [[IndexStore.StoreIdentity]]
+  * of every store its build reads, directly or through upstream caches.
+  * Every get compares those with the stores' current identities (one
+  * sidecar read and one listing per store, no Spark job); on any
+  * difference it rebuilds the entry and releases the old value. So every
+  * commit — an append, purge, compaction or model overwrite, in any
+  * session — is seen at the next get, and a persisted frame never
+  * outlives the files it lists. The identities are taken just before the
+  * build, except that a store state the build itself served — a verified
+  * read's, a tracked load's own write, a fitted model's save
+  * ([[IndexStore.tracked]]) — replaces the one taken before: an entry
+  * never records a state newer than its value, and a build that writes
+  * its own store is not stale at once. The rebuild of a stale entry is a
+  * reload: its tracked loads serve the committed store or throw, and
+  * never write it. The stale entry stays, unserved, until a rebuild
+  * succeeds, so a reload that throws (a torn store mid-append) is a
+  * reload again on the next get. Without a configured index root, or for
+  * a cache that reads no store, a get does no filesystem work: fixture
+  * tables ([[Tables.load]]) do not change within a session, so a rebuild
+  * would give the identical frame.
   *
   * Release contract: each cache names one release function, run on every
-  * value that leaves it — a dropped entry and the build that lost a
+  * value that leaves it — a stale entry and the build that lost a
   * first-access race alike. Persisted frames unpersist
   * ([[SessionCache.frames]]); `localCheckpoint` frames free their
   * checkpoint blocks ([[Materialize.free]] — `Dataset.unpersist` leaves
   * those in place); driver-side models release nothing.
   */
 private[graft] final class SessionCache[V](val name: String,
-    val stores: Set[String] = Set(), val caches: Set[String] = Set())(release: V => Unit) {
+    stores: Set[String] = Set(), upstream: => Seq[SessionCache[_]] = Nil)(release: V => Unit) {
   require(!stores.contains(null),
     s"session cache $name names a store whose val is not yet initialized")
 
+  /** The caches the build reads, resolved on the first get. */
+  lazy val upstreamCaches: Seq[SessionCache[_]] = upstream.ensuring(!_.contains(null),
+    s"session cache $name names an upstream cache that is not yet initialized")
+
+  /** Every store the build reads, directly or through upstream caches. */
+  private lazy val storesRead: Set[String] = stores ++ upstreamCaches.flatMap(_.storesRead)
+
   private val entries =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), V]
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), SessionCache.Entry[V]]
 
   SessionCache.register(this)
 
   /** `variant` names an extra slot of `dir`'s entry (e.g. a filtered
-    * referent), dropped together with `dir`'s own.
+    * referent), checked like `dir`'s own. A build that throws caches
+    * nothing and leaves a stale entry in place.
     *
     * r18 (ADVICE): NOT TrieMap.getOrElseUpdate — that can evaluate
     * `build` in two racing threads and silently drop one result, leaking
-    * the losing build's blocks. putIfAbsent keeps exactly one winner and
-    * the loser goes to `release`.
+    * the losing build's blocks. putIfAbsent (replace, over a stale entry)
+    * keeps exactly one winner and the loser goes to `release`.
     */
   def getOrElseUpdate(s: SparkSession, dir: String, variant: String = "")(build: => V): V = {
     val k = (SessionCache.sessionKey(s), dir, variant)
+    val read = identities(s, dir)
     entries.get(k) match {
-      case Some(v) => v
-      case None =>
-        val built = build
-        entries.putIfAbsent(k, built) match {
-          case Some(winner) => release(built); winner
-          case None => built
-        }
-    }
-  }
-
-  /** [[getOrElseUpdate]] for a value that can go stale with no mutation
-    * in this session (another session's append, a compaction): an entry
-    * `fresh` rejects is dropped and released, then rebuilt. A build that
-    * throws caches nothing.
-    */
-  def getFreshOrUpdate(s: SparkSession, dir: String)(fresh: V => Boolean)(build: => V): V = {
-    val k = (SessionCache.sessionKey(s), dir, "")
-    entries.get(k) match {
-      case Some(v) if fresh(v) => v
+      case Some(e) if e.read == read => e.value
       case stale =>
-        stale.foreach(v => if (entries.remove(k, v)) release(v))
-        getOrElseUpdate(s, dir)(build)
+        val (value, served) = IndexStore.tracked(reload = stale.isDefined)(build)
+        val built = new SessionCache.Entry(value, read.map(id => served.getOrElse(id.path, id)))
+        val won = stale.fold(entries.putIfAbsent(k, built).isEmpty)(entries.replace(k, _, built))
+        (if (won) stale.map(_.value) else Some(value)).foreach(release)
+        if (won) value else entries(k).value
     }
   }
 
-  private def drop(session: String, dir: String): Unit =
-    entries.keys.filter(k => k._1 == session && k._2 == dir).foreach(entries.remove(_).foreach(release))
+  /** The current identities of the stores the build reads for `dir`. */
+  private def identities(s: SparkSession, dir: String): Set[IndexStore.StoreIdentity] =
+    IndexStore.configuredDir(s).fold(Set.empty[IndexStore.StoreIdentity])(root =>
+      storesRead.map(n => IndexStore.storeIdentity(s, IndexStore.storePath(root, dir, n))))
 
   private def dirs(session: String): Set[String] =
     entries.keys.collect { case (`session`, d, _) => d }.toSet
 }
 
 private[graft] object SessionCache {
+  /** A cached value and the identities of the store states it was built from. */
+  private final class Entry[V](val value: V, val read: Set[IndexStore.StoreIdentity])
+
   private val registry =
     scala.collection.concurrent.TrieMap.empty[String, SessionCache[_]]
 
@@ -119,30 +117,11 @@ private[graft] object SessionCache {
   private def sessionKey(s: SparkSession): String =
     s.sparkContext.applicationId + "@" + System.identityHashCode(s)
 
-  /** Store `store` of `corpusDir` changed: drop this session's entries
-    * for `corpusDir` in every cache that reads it.
-    */
-  def storeChanged(s: SparkSession, corpusDir: String, store: String): Unit = {
-    val k = sessionKey(s)
-    readersOf(store).foreach(_.drop(k, corpusDir))
-  }
-
-  /** The registered caches whose builds read `store`, directly or
-    * through other caches.
-    */
-  private def readersOf(store: String): Seq[SessionCache[_]] = {
-    val all = registered.toSeq
-    @tailrec def close(hit: Set[String]): Set[String] = {
-      val grown = hit ++ all.filter(_.caches.exists(hit)).map(_.name)
-      if (grown.size == hit.size) hit else close(grown)
-    }
-    val names = close(all.filter(_.stores(store)).map(_.name).toSet)
-    all.filter(c => names(c.name))
-  }
-
   def registered: Iterable[SessionCache[_]] = registry.values
 
-  /** The live `(cache name, corpus dir)` entries of session `s`. */
+  /** The live `(cache name, corpus dir)` entries of session `s`, stale
+    * ones included until a get rebuilds them.
+    */
   def live(s: SparkSession): Set[(String, String)] = {
     val k = sessionKey(s)
     registered.flatMap(c => c.dirs(k).map(c.name -> _)).toSet
@@ -152,6 +131,7 @@ private[graft] object SessionCache {
   val unpersist: DataFrame => Unit = df => { df.unpersist(); () }
 
   /** A cache of persisted frames, released with [[unpersist]]. */
-  def frames(name: String, stores: Set[String] = Set(), caches: Set[String] = Set()): SessionCache[DataFrame] =
-    new SessionCache[DataFrame](name, stores, caches)(unpersist)
+  def frames(name: String, stores: Set[String] = Set(),
+      upstream: => Seq[SessionCache[_]] = Nil): SessionCache[DataFrame] =
+    new SessionCache[DataFrame](name, stores, upstream)(unpersist)
 }

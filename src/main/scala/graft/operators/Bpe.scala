@@ -266,7 +266,7 @@ object Bpe {
 
   private val learnCache =
     new graft.SessionCache[(Seq[(Long, String, String, Long)], DataFrame)](
-      "bpeLearned", caches = Set("tfIndex"))(v => graft.Materialize.free(v._2))
+      "bpeLearned", upstream = Seq(CorpusOps.tfIndexCache))(v => graft.Materialize.free(v._2))
 
   /** Learned merges + encoded vocabulary for the corpus at `dir`, built
     * once per session — q138 (the merge sequence) and q140 (the encoding

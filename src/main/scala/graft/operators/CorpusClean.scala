@@ -116,12 +116,13 @@ object CorpusClean {
     * localCheckpoint (NOT registered ephemeral) severs lineage, so the
     * per-query [[graft.Materialize.releaseAll]] of downstream ephemeral
     * frames can never strand this one; narrow (3 cols/surviving doc).
-    * Drops with the shared indexes it reads (the cleaned set of a grown
+    * Rebuilds with the shared indexes it reads (the cleaned set of a grown
     * corpus is a different frame); released with [[graft.Materialize.free]],
     * since its blocks are checkpoint blocks.
     */
-  private[graft] val cleanedCache = new graft.SessionCache[DataFrame](
-    "cleaned", caches = Set("qualityIndex", "verifiedPairs", "decontPairs"))(graft.Materialize.free)
+  private[graft] val cleanedCache = new graft.SessionCache[DataFrame]("cleaned",
+    upstream = Seq(TextAnalysis.qualityIndexCache, Dedup.verifiedPairsCache,
+      Dedup.decontPairsCache))(graft.Materialize.free)
 
   /** The composition's un-checkpointed build plan — what [[cleanedFrame]]
     * materializes, and what the plan guards inspect (the cached frame's

@@ -318,7 +318,7 @@ object CorpusOps {
     * built-once/served-many posture as TextAnalysis.shingleIndex /
     * qualityIndex: q97 and q102 both serve off one tokenize+count pass.
     */
-  private val tfIndexCache = graft.SessionCache.frames("tfIndex")
+  private[operators] val tfIndexCache = graft.SessionCache.frames("tfIndex")
 
   /** `(doc_id, term, tf)` rows of any `(doc_id, text, …)` frame — the
     * per-batch increment the streaming tf-store maintainer appends, and
@@ -340,7 +340,7 @@ object CorpusOps {
     * per-(doc, term) function of it, one join + one integer expression
     * away, and the cosine leg reads it three times per run).
     */
-  private val tfidfWeightCache = graft.SessionCache.frames("tfidfWeight", caches = Set("tfIndex"))
+  private val tfidfWeightCache = graft.SessionCache.frames("tfidfWeight", upstream = Seq(tfIndexCache))
 
   private[graft] def tfidfWeightIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -370,7 +370,7 @@ object CorpusOps {
     * disappears too. Session-cached like the weight index it derives
     * from.
     */
-  private val tfidfVectorCache = graft.SessionCache.frames("tfidfVector", caches = Set("tfidfWeight"))
+  private val tfidfVectorCache = graft.SessionCache.frames("tfidfVector", upstream = Seq(tfidfWeightCache))
 
   private[graft] def tfidfVectorIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -591,11 +591,11 @@ object CorpusOps {
     * builds the lexical list, q131's fusion and q134's agreement report
     * serve off it instead of re-running the posting join and corpus scan.
     */
-  private val bm25LegCache = graft.SessionCache.frames("bm25Leg", caches = Set("tfIndex", "bm25Stats"))
+  private val bm25LegCache = graft.SessionCache.frames("bm25Leg", upstream = Seq(tfIndexCache, bm25StatsCache))
   private val vecLegCache = graft.SessionCache.frames("vecLeg")
   private val bm25StatsCache = new graft.SessionCache[(org.apache.spark.sql.DataFrame,
     org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-    "bm25Stats", caches = Set("tfIndex"))({ case (a, b, c, d) =>
+    "bm25Stats", upstream = Seq(tfIndexCache))({ case (a, b, c, d) =>
       Seq(a, b, c, d).foreach(graft.SessionCache.unpersist) })
 
   /** Session-cached corpus statistics over the shared tf index — the

@@ -143,10 +143,10 @@ object Dedup {
     * listing, q75's representative selection) need the identical result,
     * which is a pure function of the verified pair set. Small (one row
     * per doc appearing in any pair), deterministic, so caching changes no
-    * result. Drops with the shingle index it derives from (the components
-    * of a grown corpus are a different frame).
+    * result. Rebuilds with the shingle index it derives from (the
+    * components of a grown corpus are a different frame).
     */
-  private val componentsCache = graft.SessionCache.frames("components", caches = Set("verifiedPairs"))
+  private val componentsCache = graft.SessionCache.frames("components", upstream = Seq(verifiedPairsCache))
 
   /** Distinct verified near-dup triples (a_doc, b_doc, jac_micro) over the
     * FULL corpus shingle index, one per (session, corpus): the band join +
@@ -154,7 +154,8 @@ object Dedup {
     * this set — q37's scalar output, and the component edges behind
     * q73/q75. Pair-count-sized (tiny), deterministic.
     */
-  private val verifiedPairsCache = graft.SessionCache.frames("verifiedPairs", caches = Set("shingleIndex"))
+  private[operators] val verifiedPairsCache =
+    graft.SessionCache.frames("verifiedPairs", upstream = Seq(TextAnalysis.shingleIndexCache))
 
   private[operators] def verifiedPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
@@ -181,7 +182,8 @@ object Dedup {
     * counts don't depend on other corpus docs), so restricting the
     * corpus-wide set to clean's survivors ≡ recomputing on survivors.
     */
-  private val decontPairsCache = graft.SessionCache.frames("decontPairs", caches = Set("shingleIndex"))
+  private[operators] val decontPairsCache =
+    graft.SessionCache.frames("decontPairs", upstream = Seq(TextAnalysis.shingleIndexCache))
 
   private[operators] def decontPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
@@ -1280,7 +1282,7 @@ object Dedup {
     * counts). Now the corpus pays that shuffle once per session and every
     * consumer reads the cached lists.
     */
-  private val postingCache = graft.SessionCache.frames("postings", caches = Set("shingleIndex"))
+  private val postingCache = graft.SessionCache.frames("postings", upstream = Seq(TextAnalysis.shingleIndexCache))
 
   private[graft] def corpusPostings(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =

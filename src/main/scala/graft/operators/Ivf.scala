@@ -310,6 +310,7 @@ object Ivf {
     m.cents.map { case (cid, cq) => (cid, cq.toSeq, m.iters, m.converged, m.n) }
       .toDF("cid", "cq", "iters", "converged", "n")
       .coalesce(1).write.mode("overwrite").parquet(path)
+    graft.IndexStore.saved(s, path)
   }
 
   /** Load a committed model from the store; None when absent/torn (caller

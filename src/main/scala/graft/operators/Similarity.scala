@@ -184,22 +184,20 @@ object Similarity {
   }
 
   /** Refit the text-side PQ codebook family from `eqf` (one deterministic
-    * [[Ivf.fit]] per subvector slice), OVERWRITE the durable entries, and
-    * drop this session's cached family — the PQ analog of the IVF
-    * maintainer's drift refit. The next q142/q143/q156 in any session
-    * serves the refreshed codebooks.
+    * [[Ivf.fit]] per subvector slice) and OVERWRITE the durable entries —
+    * the PQ analog of the IVF maintainer's drift refit. The overwrite
+    * changes the entries' identities, so the next q142/q143/q156 in any
+    * session serves the refreshed codebooks.
     */
   private[graft] def refitPqModels(s: org.apache.spark.sql.SparkSession,
       dir: String, eqf: org.apache.spark.sql.DataFrame,
       tag: String = ""): Seq[Ivf.Model] = {
     val root = graft.IndexStore.requireRoot(s, "refitPqModels")
-    val models = (0 until PqM).map { m =>
+    (0 until PqM).map { m =>
       val mdl = Ivf.fit(pqSub(eqf, m), k = PqK, dim = PqSubDim)
       Ivf.save(s, graft.IndexStore.storePath(root, dir, pqModelStoreName(m, tag)), mdl)
       mdl
     }
-    (0 until PqM).foreach(m => graft.SessionCache.storeChanged(s, dir, pqModelStoreName(m, tag)))
-    models
   }
 
   // ---- PQ oracle fragments + Spark legs shared by q142/q143 ------------
@@ -431,7 +429,7 @@ object Similarity {
     * and [[graft.operators.CorpusOps.bm25Stats]] — nq·k rows persisted,
     * results unchanged (the exact top-k has a total tiebreak). Built from
     * the fixture tables alone, which are immutable within a session (the
-    * bm25Stats assumption), so no store mutation drops it.
+    * bm25Stats assumption), so no store mutation rebuilds it.
     */
   private val exactRefCache = graft.SessionCache.frames("exactRef")
 
@@ -463,9 +461,9 @@ object Similarity {
     * query batch, shared per (session, dir) — q143/q166/q167 build the
     * identical `(q_id, vec_id)` frame off the shared IVF model (cells at
     * rk=1, probes at rk ≤ [[IvfProbes]]); one assignment pass serves all
-    * three. Drops with the text-side IVF model it is cut from.
+    * three. Rebuilds with the text-side IVF model it is cut from.
     */
-  private val cellCandCache = graft.SessionCache.frames("cellCand", caches = Set("ivfModel"))
+  private val cellCandCache = graft.SessionCache.frames("cellCand", upstream = Seq(ivfModelCache))
 
   /** The cell count the fixture queries fit with (the DuckDB oracle
     * unrolls it into static SQL) — also the k the assignment maintainer
@@ -623,18 +621,19 @@ object Similarity {
       srpParams(pp), n)(srpRows(embeddings, pp))
   }
 
-  private def srpIndex(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+  private[graft] def srpIndex(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     srpIndexCache.getOrElseUpdate(s, dir)(
       buildSrpIndex(s, dir, Tables.load(s, dir, "embeddings"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   /** Incremental-index append (the [[TextAnalysis.appendToShingleIndex]]
     * counterpart): plane-project ONLY the new embedding batch into the
-    * durable store; the append drops the session tier — the SRP frame and
-    * every centroid family fit on the pre-append corpus — so the next
-    * q40/q47 serves old∪new bucket rows from disk at O(increment) build
-    * cost and the next model consumer re-runs [[Ivf.servedModel]]'s
-    * refresh policy against the grown corpus.
+    * durable store; the append changes the store's identity, so the
+    * session tier rebuilds — the SRP frame and every centroid family fit
+    * on the pre-append corpus — and the next q40/q47 serves old∪new
+    * bucket rows from disk at O(increment) build cost and the next model
+    * consumer re-runs [[Ivf.servedModel]]'s refresh policy against the
+    * grown corpus.
     * The increment is bucketed under the BUILD's plane family, read from
     * the store's metadata sidecar — never this batch's own default or
     * derived planes, which for a non-default build would produce bucket

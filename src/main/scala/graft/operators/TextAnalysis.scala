@@ -87,7 +87,7 @@ object TextAnalysis {
     * pass. Narrow (6 numeric columns/doc), so memory cost is trivial
     * next to the shingle index.
     */
-  private val qualityIndexCache = graft.SessionCache.frames("qualityIndex")
+  private[operators] val qualityIndexCache = graft.SessionCache.frames("qualityIndex")
 
   private[graft] def qualityIndex(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     qualityIndexCache.getOrElseUpdate(s, dir)(
@@ -328,7 +328,8 @@ object TextAnalysis {
   /** The name of the shingle-set frame in the durable [[graft.IndexStore]]. */
   private[graft] val ShingleStoreName = "shingle_sets"
 
-  private val shingleIndexCache = graft.SessionCache.frames("shingleIndex", stores = Set(ShingleStoreName))
+  private[operators] val shingleIndexCache =
+    graft.SessionCache.frames("shingleIndex", stores = Set(ShingleStoreName))
 
   /** Durable tier first ([[graft.IndexStore]], opt-in via
     * `spark.graft.index.dir`): with a store configured, a session that
@@ -364,8 +365,8 @@ object TextAnalysis {
   /** Incremental-index append: shingle ONLY the new doc batch and land it
     * in the durable store (advancing the sidecar's corpus count so the
     * next load's staleness check expects the grown corpus); the append
-    * drops the session tier, so the next [[shingleIndex]] read serves
-    * old∪new from disk. The daily-ingest counterpart of q74's new×all
+    * changes the store's identity, so the next [[shingleIndex]] read in
+    * any session serves old∪new from disk. The daily-ingest counterpart of q74's new×all
     * probe: the increment pays O(increment) shingling, never O(corpus).
     */
   private[graft] def appendToShingleIndex(s: org.apache.spark.sql.SparkSession,

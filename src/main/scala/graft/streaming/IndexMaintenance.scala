@@ -55,10 +55,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    media-fp stores read plainly; their append refuses the torn store.
   *
   * Single maintainer per store entry, per [[graft.IndexStore.append]]'s
-  * single-writer contract. Every store append, purge and compaction
-  * drops the maintainer's own session's cache entries that read the store
-  * ([[graft.SessionCache.storeChanged]]); other long-lived sessions pick
-  * up the grown store at their next fresh load (every store read is
+  * single-writer contract. Every store append, purge, compaction and
+  * model overwrite changes the store's identity, so every session cache
+  * that reads the store — in the maintainer's session or any other
+  * long-lived one — rebuilds from the grown store at its next get
+  * ([[graft.SessionCache]]'s one freshness rule; every store read is
   * tagged, [[graft.IndexStore.read]], so no cached frame answers it).
   *
   * Recovery: a maintainer that hits a torn store fails its streaming
@@ -589,11 +590,9 @@ object IndexMaintenance {
     * [[graft.operators.CorpusOps.maxSimRerank]], [[bm25FromStore]]).
     * Held as values: the tf total `tot` and the sidecar corpus count `n`
     * (BM25's N: bootstrap-recorded, advanced by every append,
-    * decremented by every purge). `identity` is the store state it was
-    * built from.
+    * decremented by every purge).
     */
-  private[graft] final case class TfSnapshot(identity: graft.IndexStore.StoreIdentity,
-      postings: DataFrame, df: DataFrame, tot: Long, n: Long) {
+  private[graft] final case class TfSnapshot(postings: DataFrame, df: DataFrame, tot: Long, n: Long) {
     /** The `(doc_id, term, tf)` rows: a projection of the persisted postings. */
     def tf: DataFrame = postings.select("doc_id", "term", "tf")
   }
@@ -605,29 +604,25 @@ object IndexMaintenance {
   /** The tf store's serving set, built once per committed snapshot — the
     * shared provenance of every store-served lexical leg
     * ([[bm25FromStore]], [[maxSimFromStore]], [[searchFromStore]]). Each
-    * call reads the sidecar and lists the store
-    * ([[graft.IndexStore.storeIdentity]]); while that identity equals the
-    * cached snapshot's, the call reuses it and runs no Spark job. Any
-    * commit changes the identity — this session's maintainer or another
-    * session's, a purge's or a compaction's swap, a sidecar-only append
-    * of NULL-text documents that moves only N — and the next call drops
-    * the old snapshot and builds a new one through
+    * call reads the sidecar and lists the store (the session cache's
+    * identity check); while the identity is unchanged, the call reuses
+    * the snapshot and runs no Spark job. Any commit changes the identity
+    * — this session's maintainer or another session's, a purge's or a
+    * compaction's swap, a sidecar-only append of NULL-text documents that
+    * moves only N — and the next call builds a new snapshot through
     * [[graft.IndexStore.verifiedSnapshot]], which still refuses a torn
-    * store. This session's appends and purges also drop it at once
-    * ([[graft.SessionCache.storeChanged]]).
+    * store, then releases the old one.
     */
   private[graft] def tfSnapshot(s: SparkSession, corpusDir: String): TfSnapshot = {
     val path = graft.IndexStore.requireCommitted(s, corpusDir, TfStoreName,
       "tf-store serving")
-    val current = graft.IndexStore.storeIdentity(s, path)
-    tfSnapshotCache.getFreshOrUpdate(s, corpusDir)(_.identity == current)(
-      buildTfSnapshot(s, path))
+    tfSnapshotCache.getOrElseUpdate(s, corpusDir)(buildTfSnapshot(s, path))
   }
 
-  /** One [[TfSnapshot]], materialized: the key is the identity the
-    * verification read, so key and frames describe one snapshot. A build
-    * that throws (a torn store, a cancelled job) unpersists what it
-    * persisted.
+  /** One [[TfSnapshot]], materialized. Its cache entry records the
+    * identity the verification read ([[graft.IndexStore.tracked]]), so
+    * entry and frames describe one snapshot. A build that throws (a torn
+    * store, a cancelled job) unpersists what it persisted.
     */
   private def buildTfSnapshot(s: SparkSession, path: String): TfSnapshot = {
     import org.apache.spark.sql.expressions.Window
@@ -650,7 +645,7 @@ object IndexMaintenance {
     try {
       val t = postings.agg(sum(col("tf")).cast(LongType)).head() // also fills the postings' blocks
       df.count()
-      TfSnapshot(identity, postings, df, if (t.isNullAt(0)) 0L else t.getLong(0), n)
+      TfSnapshot(postings, df, if (t.isNullAt(0)) 0L else t.getLong(0), n)
     } catch {
       case e: Throwable =>
         Seq(postings, df).foreach(graft.SessionCache.unpersist)
@@ -1645,7 +1640,6 @@ object IndexMaintenance {
         org.apache.spark.sql.functions.col("eq"))
     val model = graft.operators.Ivf.fit(eqf, k)
     graft.operators.Ivf.save(s, modelPath, model)
-    graft.SessionCache.storeChanged(s, corpusDir, ivfStoreNames(family)._2)
     // crash-clean reassign swap; Σidot comes from the same staged read
     // that verifies the row count
     graft.IndexStore.swapIn(s, assignPath, ".refitting", "IVF refit",
@@ -1740,9 +1734,9 @@ object IndexMaintenance {
     *    surviving corpus instead of rebuilding.
     *  - **media-fp store**: the purged media_ids' fingerprints.
     *
-    * Each store's purge drops this session's cache entries that read it
-    * ([[graft.SessionCache.storeChanged]]), so in-session consumers
-    * refill from the purged stores.
+    * Each store's purge changes its identity, so every session cache
+    * that reads it, in any session, refills from the purged store at its
+    * next get.
     *
     * Returns removed STORE-ROW counts per store name. Idempotent: a
     * replayed purge removes 0 rows and decrements nothing (the clamps

@@ -12,11 +12,12 @@ import graft.operators.{Ivf, Similarity, TextAnalysis}
 import graft.streaming.IndexMaintenance
 
 /** The derived-artifact graph ([[SessionCache]]): which cache entries a
-  * store change drops. Each row populates every operator cache with a
-  * one-row frame (or an empty model) under two corpus dirs in one
-  * session and under the first dir in a second session, changes one
-  * store, and checks that exactly the declared readers of that store
-  * dropped — for that session and dir only.
+  * store write makes stale. Each row populates every operator cache with
+  * a one-row frame (or an empty model) under two corpus dirs in one
+  * session and under the first dir in a second session on the same store
+  * root, writes one store, and re-gets every entry with a build that
+  * records its name: exactly the declared readers of that store rebuild,
+  * under that dir only, in both sessions.
   */
 class SessionCacheGraphSpec extends SparkSpec {
 
@@ -46,22 +47,29 @@ class SessionCacheGraphSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  private def populate(s: SparkSession, dir: String): Unit = {
+  /** Get every operator cache's entry for (`s`, `dir`) with a one-row
+    * value; returns the names whose build ran.
+    */
+  private def getAll(s: SparkSession, dir: String): Set[String] = {
     loadOperators()
     val frame = s.range(1).toDF("id")
     val model = Ivf.Model(IndexedSeq.empty, iters = 0, converged = true)
+    val built = Set.newBuilder[String]
     SessionCache.registered.filter(c => operatorCaches(c.name)).foreach { c =>
-      val value: Any = c.name match {
-        case "ivfModel" | "xmIvfModel" => model
-        case "pqModel" | "xmPqModel" => Seq(model)
-        case "bm25Stats" => (frame, frame, frame, frame)
-        case "bpeLearned" => (Seq.empty, frame)
-        case "tfSnapshot" => IndexMaintenance.TfSnapshot(
-          IndexStore.StoreIdentity("", None, Set.empty), frame, frame, 0L, 0L)
-        case _ => frame
+      def value: Any = {
+        built += c.name
+        c.name match {
+          case "ivfModel" | "xmIvfModel" => model
+          case "pqModel" | "xmPqModel" => Seq(model)
+          case "bm25Stats" => (frame, frame, frame, frame)
+          case "bpeLearned" => (Seq.empty, frame)
+          case "tfSnapshot" => IndexMaintenance.TfSnapshot(frame, frame, 0L, 0L)
+          case _ => frame
+        }
       }
       c.asInstanceOf[SessionCache[Any]].getOrElseUpdate(s, dir)(value)
     }
+    built.result()
   }
 
   private def live(s: SparkSession, dir: String): Set[String] =
@@ -75,22 +83,29 @@ class SessionCacheGraphSpec extends SparkSpec {
   private def idRows(s: SparkSession, key: String): DataFrame =
     s.range(1, 3).toDF(key)
 
-  /** Run `change` against populated caches; return what it dropped under
-    * (session, dirA), after checking dirB and the second session kept all.
+  /** Run `change` against populated caches; return what rebuilds on the
+    * next get under (session, dirA), after checking that nothing under
+    * dirB rebuilds, that a second session on the same store root rebuilds
+    * the same set, and that a rebuilt entry is fresh again.
     */
   private def dropped(prepare: SparkSession => Unit)(change: SparkSession => Unit): Set[String] = {
-    val s = spark.newSession()
-    s.conf.set(IndexStore.DirConf, tmp("graft_cache_graph"))
-    val other = spark.newSession()
+    val root = tmp("graft_cache_graph")
+    val Seq(s, other) = Seq.fill(2) {
+      val x = spark.newSession()
+      x.conf.set(IndexStore.DirConf, root)
+      x
+    }
     prepare(s)
-    populate(s, dirA)
-    populate(s, dirB)
-    populate(other, dirA)
+    assert(getAll(s, dirA) == operatorCaches)
+    getAll(s, dirB)
+    getAll(other, dirA)
     assert(live(s, dirA) == operatorCaches)
     change(s)
-    assert(live(s, dirB) == operatorCaches, "entries under a second dir must survive")
-    assert(live(other, dirA) == operatorCaches, "another session's entries must survive")
-    operatorCaches -- live(s, dirA)
+    assert(getAll(s, dirB).isEmpty, "entries under a second dir must stay fresh")
+    val rebuilt = getAll(s, dirA)
+    assert(getAll(other, dirA) == rebuilt, "another session must rebuild the same set")
+    assert(getAll(s, dirA).isEmpty, "a rebuilt entry must be fresh")
+    rebuilt
   }
 
   private def append(store: String, rows: SparkSession => DataFrame)(s: SparkSession): Unit =
@@ -101,13 +116,19 @@ class SessionCacheGraphSpec extends SparkSpec {
     ()
   }
 
+  /** A sidecar write: the smallest real change to a store's identity. */
+  private def touch(store: String)(s: SparkSession): Unit =
+    IndexStore.writeMeta(s, IndexStore.storePath(s.conf.get(IndexStore.DirConf), dirA, store),
+      Map("touched" -> "1"))
+
   test("every operator cache is registered once and its declared upstream caches exist") {
     loadOperators()
     val names = SessionCache.registered.map(_.name).toSeq
     assert(operatorCaches.subsetOf(names.toSet), operatorCaches -- names)
     assert(names.distinct.size == names.size)
     SessionCache.registered.foreach { c =>
-      assert(c.caches.subsetOf(names.toSet), s"${c.name} reads unknown caches ${c.caches -- names}")
+      assert(c.upstreamCaches.forall(u => SessionCache.registered.exists(_ eq u)),
+        s"${c.name} reads an unregistered cache")
     }
   }
 
@@ -131,19 +152,19 @@ class SessionCacheGraphSpec extends SparkSpec {
   }
 
   test("a text-family IVF model overwrite drops that model and the cell candidates cut from it") {
-    assert(dropped(_ => ())(SessionCache.storeChanged(_, dirA, Similarity.IvfModelStoreName)) ==
+    assert(dropped(_ => ())(touch(Similarity.IvfModelStoreName)) ==
       Set("ivfModel", "cellCand"))
   }
 
   test("an image-side IVF model overwrite drops only the image-side model") {
-    assert(dropped(_ => ())(SessionCache.storeChanged(_, dirA, Similarity.XmIvfModelStoreName)) ==
+    assert(dropped(_ => ())(touch(Similarity.XmIvfModelStoreName)) ==
       Set("xmIvfModel"))
   }
 
   test("a PQ codebook overwrite drops only that family's codebooks") {
     for ((tag, cache) <- Seq("" -> "pqModel", "_xm" -> "xmPqModel"); m <- 0 until Similarity.pqSubvectors)
-      assert(dropped(_ => ())(SessionCache.storeChanged(_, dirA,
-        Similarity.pqModelStoreName(m, tag))) == Set(cache), s"pq_model_$m$tag")
+      assert(dropped(_ => ())(touch(Similarity.pqModelStoreName(m, tag))) == Set(cache),
+        s"pq_model_$m$tag")
   }
 
   test("media-fingerprint append and purge drop the image fingerprint frame") {
@@ -162,7 +183,7 @@ class SessionCacheGraphSpec extends SparkSpec {
       IndexMaintenance.BpeWordStoreName, IndexMaintenance.BpeModelStoreName,
       IndexMaintenance.IvfAssignStoreName, IndexMaintenance.IvfAssignStoreName + "_xm")
     for (store <- stores)
-      assert(dropped(_ => ())(SessionCache.storeChanged(_, dirA, store)).isEmpty, store)
+      assert(dropped(_ => ())(touch(store)).isEmpty, store)
   }
 
   test("a build that loses a first-access race frees its checkpoint blocks; the winner's stay") {

@@ -19,7 +19,8 @@ import graft.operators.TextAnalysis
   * in declaration order: torn, refused, rebuilt, purged, appended to. A
   * store-served model read of a torn additive store refuses too. The
   * last case is the source rule: no main source reads parquet outside
-  * the files that own the store, fixture and staging reads.
+  * the files that own the store, fixture and staging reads, and no code
+  * line of the store tier names the session caches.
   */
 class StoreReadSpec extends SparkSpec {
 
@@ -174,5 +175,10 @@ class StoreReadSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "read store entries through IndexStore.read, fixtures through Tables.load:\n" +
         offenders.mkString("\n"))
+
+    // the store tier does not know the session caches: they check the
+    // identities of the stores they read
+    val storeTier = byName("IndexStore.scala").map(code).mkString("\n")
+    assert(!storeTier.contains("SessionCache"), "IndexStore.scala names SessionCache")
   }
 }
