@@ -334,33 +334,6 @@ object SqlGateway {
       }
       val body = new String(bodyBytes, UTF_8).trim
       import org.apache.spark.sql.functions.col
-      val qFrame: DataFrame =
-        if (body.nonEmpty) {
-          if (!body.startsWith("[") || !body.endsWith("]"))
-            throw new BadRequest("inline query must be a JSON array of numbers")
-          val vec = body.stripPrefix("[").stripSuffix("]").split(",").map { t =>
-            // toDoubleOption parses "NaN"/"Infinity" — reject non-finite
-            // elements as a 400 instead of letting them flow into
-            // quantize/dot where they'd poison every score silently
-            t.trim.toDoubleOption.filter(_.isFinite)
-              .getOrElse(throw new BadRequest(s"bad vector element '${t.trim.take(40)}'"))
-          }
-          if (vec.length != graft.operators.Ivf.Dim)
-            throw new BadRequest(s"query vector has ${vec.length} dims; index dim is ${graft.operators.Ivf.Dim}")
-          import spark.implicits._
-          // the inline query's synthetic id sits OUTSIDE every corpus id
-          // domain so the self-pair guard can never suppress a real hit
-          Seq((-1L, vec.toSeq)).toDF("vec_id", "embedding")
-        } else params.get("doc_id").flatMap(_.toLongOption) match {
-          case Some(id) =>
-            val path = IndexStore.committedPath(spark, corpusDir,
-              streaming.IndexMaintenance.IvfAssignStoreName + family).getOrElse(throw new BadRequest(
-              s"no maintained index store for family '$family' — bootstrap it first " +
-                s"(under ${IndexStore.DirConf})"))
-            IndexStore.verifiedRead(spark, path).filter(col("vec_id") === id)
-              .select(col("vec_id"), col("embedding"))
-          case None => throw new BadRequest("provide doc_id=<id> or an inline JSON vector body")
-        }
       // optional attribute constraint (q157's predicate leg at the
       // serving tier): lang=<v> restricts neighbors to documents of that
       // language — the allowed-id frame semi-joins the stored cells
@@ -384,6 +357,35 @@ object SqlGateway {
         sc.cancelJobGroup(group)
       }: Runnable, timeoutSec.toLong, TimeUnit.SECONDS)
       try {
+        // inside the group: a doc_id= lookup reads the store, and its jobs
+        // carry the request's description and answer to its deadline
+        val qFrame: DataFrame =
+          if (body.nonEmpty) {
+            if (!body.startsWith("[") || !body.endsWith("]"))
+              throw new BadRequest("inline query must be a JSON array of numbers")
+            val vec = body.stripPrefix("[").stripSuffix("]").split(",").map { t =>
+              // toDoubleOption parses "NaN"/"Infinity" — reject non-finite
+              // elements as a 400 instead of letting them flow into
+              // quantize/dot where they'd poison every score silently
+              t.trim.toDoubleOption.filter(_.isFinite)
+                .getOrElse(throw new BadRequest(s"bad vector element '${t.trim.take(40)}'"))
+            }
+            if (vec.length != graft.operators.Ivf.Dim)
+              throw new BadRequest(s"query vector has ${vec.length} dims; index dim is ${graft.operators.Ivf.Dim}")
+            import spark.implicits._
+            // the inline query's synthetic id sits OUTSIDE every corpus id
+            // domain so the self-pair guard can never suppress a real hit
+            Seq((-1L, vec.toSeq)).toDF("vec_id", "embedding")
+          } else params.get("doc_id").flatMap(_.toLongOption) match {
+            case Some(id) =>
+              val path = IndexStore.committedPath(spark, corpusDir,
+                streaming.IndexMaintenance.IvfAssignStoreName + family).getOrElse(throw new BadRequest(
+                s"no maintained index store for family '$family' — bootstrap it first " +
+                  s"(under ${IndexStore.DirConf})"))
+              IndexStore.verifiedRead(spark, path).filter(col("vec_id") === id)
+                .select(col("vec_id"), col("embedding"))
+            case None => throw new BadRequest("provide doc_id=<id> or an inline JSON vector body")
+          }
         val df = prefilter match {
           case "binary" =>
             graft.operators.Similarity.binaryAnnFromStore(spark, corpusDir,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** ST1 made exact: the reference consumer buffers decoded rows and flushes
   * to the store once ≥ `batchSize` rows have accumulated OR ≥ `maxAgeMs`
@@ -28,11 +29,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * staging cleanup re-flushes the staged rows — duplicates, never loss,
   * exactly the reference's commit-after-insert posture. Like the
   * reference's loop, the time condition is evaluated when data arrives
-  * (and on [[flushNow]] for graceful shutdown — ST8).
+  * (and on [[flushNow]] for graceful shutdown — ST8): a stateless stream
+  * runs no empty micro-batch, and under `startCountOrTime`'s default
+  * trigger a micro-batch starts as soon as input lands, so [[add]] sees
+  * a row when it arrives, not on the next tick of a clock.
   *
   * The clock is injected so the time path is testable without waiting.
   * Each step's jobs are described `count`, `stage` or `flush`
-  * ([[graft.JobStep]]), after the stream's own batch description.
+  * ([[graft.JobStep]]), after the stream's own batch description. On a
+  * one-file micro-batch a staging batch runs two jobs (`count`, `stage`)
+  * and a flushing one two (`count`, `flush`): `startCountOrTime`'s flush
+  * skips the store's month count, and a one-partition input writes
+  * without an exchange (`Warehouse.writeFact`).
   */
 final class CountOrTimeBatcher(
     stagingDir: String,
@@ -60,10 +68,17 @@ final class CountOrTimeBatcher(
   /** Number of rows staged and not yet flushed (0 until first recovery). */
   def pendingRows: Long = synchronized(math.max(pending, 0L))
 
+  // Schema of the rows staged since the last flush: with it a flush reads
+  // the deltas without parquet's schema-inference job. Unknown after a
+  // restart, when recovery infers it.
+  private var stagedSchema: Option[StructType] = None
+
   private def stagedFrame(spark: SparkSession): DataFrame =
     // recursiveFileLookup: deltas live in per-batch subdirectories, which
     // must NOT be inferred as a partition column of the flushed frame.
-    spark.read.option("recursiveFileLookup", "true").parquet(stagingDir)
+    // A null schema (none known) leaves the reader to infer one.
+    spark.read.option("recursiveFileLookup", "true")
+      .schema(stagedSchema.orNull).parquet(stagingDir)
 
   /** True iff staging holds at least one COMMITTED parquet data file. A
     * crash mid-delta-write leaves only junk (`_temporary` trees, empty
@@ -112,6 +127,7 @@ final class CountOrTimeBatcher(
       else if (n > 0) {
         graft.JobStep(spark, "stage")(b.write.mode("errorifexists")
           .parquet(s"$stagingDir/delta-${java.util.UUID.randomUUID().toString.take(12)}"))
+        if (stagedSchema.isEmpty) stagedSchema = Some(b.schema)
         pending += n
       }
     } finally { b.unpersist(); () }
@@ -138,6 +154,7 @@ final class CountOrTimeBatcher(
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
       pending = 0
+      stagedSchema = None
     }
     lastFlush = clock()
   }

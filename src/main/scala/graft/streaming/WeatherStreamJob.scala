@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.functions.expressions.FixedInstant
 import graft.weather.{Warehouse, WeatherFlatten}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The consumer path as a Structured Streaming job (SURVEY.md §3.2):
@@ -14,9 +16,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    checkpoint WAL records offsets only after foreachBatch returns, which
   *    is the same at-least-once guarantee; replays rewrite the same batch.
   *  - The count-or-time flush (≥90 rows OR ≥300 s) has no native Spark
-  *    trigger; `Trigger.ProcessingTime` + `maxOffsetsPerTrigger` bounds
-  *    both dimensions (row contents are identical — the hybrid trigger is
-  *    operational, not semantic; SURVEY.md §7.4 risk 3).
+  *    trigger, so it lives at the sink: [[startCountOrTime]]'s
+  *    [[CountOrTimeBatcher]] flushes exactly on either threshold, and the
+  *    trigger only sets when micro-batches run (SURVEY.md §7.4 risk 3).
   *  - Graceful shutdown: `query.stop()` finishes the in-flight batch; the
   *    checkpoint resumes from the last committed offsets.
   *
@@ -93,6 +95,16 @@ object WeatherStreamJob {
       .option("checkpointLocation", checkpointDir)
       .start()
 
+  /** A micro-batch's fact rows, stamped with the time of this call as
+    * their ingest time. The instant is a [[FixedInstant]], not
+    * `current_timestamp()`'s literal, so every batch's flatten projection
+    * is the same generated code and compiles once per JVM, not once per
+    * batch.
+    */
+  private def flattenNow(parsed: DataFrame): DataFrame =
+    WeatherFlatten.flatten(parsed, GraftColumnBridge.column(
+      FixedInstant(DateTimeUtils.instantToMicros(java.time.Instant.now()))))
+
   /** Ingest query: raw value stream → flatten → month-partitioned warehouse
     * append per micro-batch, offsets checkpointed after each batch commits.
     * With `deadLetterPath` set, malformed payloads are quarantined as raw
@@ -110,7 +122,7 @@ object WeatherStreamJob {
         // scanned once, not re-read per action.
         val b = batch.persist()
         try {
-          Warehouse.writeFact(WeatherFlatten.flatten(b), warehousePath)
+          Warehouse.writeFact(flattenNow(b), warehousePath)
           deadLetterPath.foreach { p =>
             WeatherFlatten.malformedRaw(b).write.mode("append").text(p)
           }
@@ -129,10 +141,21 @@ object WeatherStreamJob {
     * passes `hotMonthRows = 0` and `writeFact` skips its month count.
     * Call `batcher.flushNow` after `query.stop()` for the
     * graceful-shutdown flush (ST8). The returned pair is (query, batcher).
+    *
+    * The default trigger is Spark's own, `ProcessingTime(0)`: the next
+    * micro-batch starts as soon as the previous one ends and input is
+    * there, and an idle stream asks its source for new offsets once per
+    * polling delay (`spark.sql.streaming.pollingDelay`, 10 ms). That is
+    * the reference consumer's `poll(1.0)`, which returns as soon as a
+    * message arrives (SURVEY.md S3, ST1), so a row waits for no clock before
+    * the batcher sees it. The idle cost is one `latestOffset` per polling
+    * delay: a directory listing on the file source, a broker offset
+    * request on Kafka. A fixed interval trades that for up to one
+    * interval of added latency.
     */
   def startCountOrTime(raw: DataFrame, warehousePath: String, checkpointDir: String,
                        stagingDir: String, batchSize: Long = 90L, maxAgeMs: Long = 300000L,
-                       trigger: Trigger = Trigger.ProcessingTime("1 second"),
+                       trigger: Trigger = Trigger.ProcessingTime(0L),
                        clock: () => Long = () => System.currentTimeMillis())
       : (StreamingQuery, CountOrTimeBatcher) = {
     val batcher = new CountOrTimeBatcher(stagingDir, batchSize, maxAgeMs, clock,
@@ -142,9 +165,7 @@ object WeatherStreamJob {
     val q = WeatherFlatten.parse(raw)
       .writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batcher.add(WeatherFlatten.flatten(batch))
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => batcher.add(flattenNow(batch)) }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()

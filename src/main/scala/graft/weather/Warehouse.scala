@@ -191,11 +191,36 @@ object Warehouse {
     */
   val FactFormat = "parquet"
 
+  /** True when planning alone shows that `df` is one partition: its plan
+    * reports a single partition, or it has no exchange, no subquery and
+    * no adaptive stage (nor does a cached plan it scans), so building its
+    * RDD starts no job and the RDD has one partition. Anything else counts
+    * as many partitions.
+    */
+  private[graft] def onePartition(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def runsJobs(p: SparkPlan): Boolean = p.exists {
+      case _: Exchange | _: AdaptiveSparkPlanExec => true
+      case s: InMemoryTableScanExec => runsJobs(s.relation.cachedPlan)
+      case s => s.subqueries.nonEmpty
+    }
+    val plan = df.queryExecution.executedPlan
+    plan.outputPartitioning.numPartitions == 1 ||
+      (!runsJobs(plan) && plan.execute().getNumPartitions == 1)
+  }
+
   /** Append fact rows, month-partitioned and sorted within partitions.
     *
     * `repartition(PartitionCol)` co-locates each month before the write so
     * one task owns one month (no small-file explosion: without it every
-    * input partition would emit a file into every month directory).
+    * input partition would emit a file into every month directory). An
+    * input that is already one partition ([[onePartition]], e.g. a
+    * micro-batch of one file) skips that exchange: its one task sorts by
+    * month first and so also writes one file per month, in one Spark job
+    * instead of a shuffle job and a write job.
     *
     * Hot-month handling: one-task-per-month is itself a skew hazard when a
     * batch is dominated by a single month (the common case: a steady
@@ -229,7 +254,8 @@ object Warehouse {
     // so a failed first write cannot leave an empty directory pinned to a
     // format it never received.
     val spark = fact.sparkSession
-    val recorded = readFormatSidecar(spark, path)
+    val sidecar = readSidecarLines(spark, path)
+    val recorded = sidecar.flatMap(_.headOption).filter(_.nonEmpty)
       .orElse(inferredDataFormat(spark, path))
     recorded.foreach { rec =>
       if (rec != format) throw new IllegalStateException(
@@ -241,9 +267,10 @@ object Warehouse {
     val withMonth = fact.withColumn(PartitionCol, date_format(col("event_date"), "yyyyMM"))
     val hotMonths: Set[String] =
       if (hotMonthRows <= 0) Set.empty
-      else withMonth.groupBy(col(PartitionCol)).agg(count(lit(1)).as("n"))
-        .filter(col("n") > hotMonthRows)
-        .collect().map(_.getString(0)).toSet // bounded: one row per month
+      else graft.JobStep(spark, "months")(
+        withMonth.groupBy(col(PartitionCol)).agg(count(lit(1)).as("n"))
+          .filter(col("n") > hotMonthRows)
+          .collect().map(_.getString(0)).toSet) // bounded: one row per month
     // A hot month needs an explicit partition count: an advisory
     // repartition(cols) is fair game for AQE coalescing, which would
     // re-merge its buckets into one task (the bucket column is dropped
@@ -251,13 +278,15 @@ object Warehouse {
     // write leaves the count to AQE: coalescing merges whole months,
     // never splits one, so each month is still one task and one file,
     // and a small flush runs a few tasks instead of a pinned fan-out.
+    // A one-partition input needs no exchange at all.
     def clustered(df: DataFrame) =
-      if (hotMonths.isEmpty) df.repartition(col(PartitionCol))
-      else df
+      if (hotMonths.nonEmpty) df
         .withColumn("__write_bucket", when(col(PartitionCol).isInCollection(hotMonths),
           pmod(hash(col("city_name")), lit(hotBuckets))).otherwise(lit(0)))
         .repartition(math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt, hotBuckets),
           col(PartitionCol), col("__write_bucket"))
+      else if (onePartition(fact)) df
+      else df.repartition(col(PartitionCol))
     // The sort MUST lead with the partition column: FileFormatWriter
     // requires output ordered by the partition dirs and would otherwise
     // inject its own UNSTABLE sort on event_month alone, scrambling the
@@ -284,8 +313,11 @@ object Warehouse {
         .save(path)
     }
     // Stamp (or refresh) the codec+clustering sidecar only now that data
-    // in that codec actually exists under the path.
-    writeFormatSidecar(spark, path, format, clustering)
+    // in that codec actually exists under the path. An append whose
+    // codec and layout the sidecar already records leaves it as it is (an
+    // overwrite may have deleted it with the old data).
+    if (!mode.equalsIgnoreCase("append") || !sidecar.contains(Seq(format, clustering)))
+      writeFormatSidecar(spark, path, format, clustering)
   }
 
   /** Sidecar naming months doomed by an in-flight [[deleteRows]] — same

@@ -209,9 +209,14 @@ class SqlGatewaySpec extends SparkSpec {
       val gw = SqlGateway.start(spark, corpusDir = dir)
       try {
         val port = gw.port
-        // stored-id query: rows match the library serving path exactly
-        val r = get(port, "/ann?doc_id=3&k=3")
+        // stored-id query: rows match the library serving path exactly,
+        // and every job it runs, the stored vector's lookup included,
+        // carries the request's group (its deadline and description)
+        var r: HttpResponse[String] = null
+        val groups = jobsDuring { r = get(port, "/ann?doc_id=3&k=3") }.map(_.group)
         assert(r.statusCode() == 200, r.body())
+        assert(groups.nonEmpty && groups.distinct.size == 1 &&
+          groups.head.startsWith("graft-gateway-ann-"), groups)
         val lines = r.body().trim.split("\n")
         assert(lines.length == 3 && lines.forall(_.contains("\"q_id\":3")), r.body())
         val expect = operators.Similarity.ivfAnnFromStore(spark, dir, topK = 3,
@@ -278,36 +283,9 @@ class SqlGatewaySpec extends SparkSpec {
     } finally spark.conf.unset(IndexStore.DirConf)
   }
 
-  /** The gateway's Spark jobs that `body` starts, with their group ids. A
-    * marker job closes the window: the listener bus delivers in order.
-    */
-  private def gatewayJobs(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val marker = "sgw-marker-" + java.util.UUID.randomUUID()
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach {
-          case `marker` => marked.countDown()
-          case g if g.startsWith("graft-gateway-") => seen.add(g)
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(marker, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "the marker job never arrived")
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** The group ids of the gateway's Spark jobs that `body` starts. */
+  private def gatewayJobs(body: => Unit): Seq[String] =
+    jobsDuring(body).map(_.group).filter(_.startsWith("graft-gateway-"))
 
   test("a literal SELECT renders on the driver: toJSON's bytes, no Spark job") {
     val q = "SELECT * FROM VALUES (CAST(NULL AS STRING), CAST(-12.30 AS DECIMAL(9,2)), " +

@@ -847,4 +847,35 @@ class StreamingSpec extends SparkSpec {
     assert(back.filter(col("city_name") === "Tomsk")
       .select(col("temperature").cast("string")).as[String].head() == "4.50")
   }
+
+  test("count-or-time ingest: a flushing one-file micro-batch runs count and flush, a staging one count and stage, with no shuffle") {
+    val input = tmp("graft_cot_jobs_in")
+    val warehouse = tmp("graft_wh_cot_jobs")
+    var n = 0
+    def put(cities: String*): Unit = {
+      n += 1
+      val tmpFile = java.nio.file.Paths.get(input, s".f$n.tmp")
+      Files.write(tmpFile, cities.map(c => s"""{"name":"$c","main":{"temp":1.0}}""")
+        .mkString("\n").getBytes("UTF-8"))
+      Files.move(tmpFile, java.nio.file.Paths.get(input, s"f$n.json"))
+    }
+    val raw = spark.readStream.option("maxFilesPerTrigger", "1").text(input)
+    // the default trigger: a micro-batch starts once input lands
+    val (q, batcher) = WeatherStreamJob.startCountOrTime(raw, warehouse,
+      tmp("graft_ckpt_cot_jobs"), tmp("graft_staging_cot_jobs"), batchSize = 3L)
+    def batchJobs(body: => Unit) = {
+      val jobs = jobsDuring(body).filter(_.group == q.runId.toString)
+      (jobs.map(_.desc.split(": ").drop(1).mkString(": ")), jobs.exists(_.shuffles))
+    }
+    try {
+      val flushing = batchJobs { put("Moscow", "Kazan", "Omsk"); q.processAllAvailable() }
+      assert(flushing == ((Seq("count", "flush"), false)), flushing)
+      assert(batcher.pendingRows == 0 && graft.weather.Warehouse.readFact(spark, warehouse).count() == 3)
+      val staging = batchJobs { put("Tomsk"); q.processAllAvailable() }
+      assert(staging == ((Seq("count", "stage"), false)), staging)
+      assert(batcher.pendingRows == 1)
+    } finally q.stop()
+    batcher.flushNow(spark)
+    assert(graft.weather.Warehouse.readFact(spark, warehouse).count() == 4)
+  }
 }

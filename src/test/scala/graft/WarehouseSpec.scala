@@ -498,6 +498,58 @@ class WarehouseSpec extends SparkSpec {
       "expected one file in each of the two months")
   }
 
+  test("writeFact: a one-partition frame writes without an exchange, in the layout a many-partition frame gets") {
+    import spark.implicits._
+    // two months, distinct sort keys, so each file's row order is fixed
+    val fact = (1 to 60).map { i =>
+      val d = if (i % 3 == 0) "2024-02-10" else "2024-01-15"
+      (java.sql.Date.valueOf(d), "City%02d".format(i % 7),
+        java.sql.Timestamp.valueOf(s"$d %02d:%02d:00".format(i % 24, i)), i.toDouble)
+    }.toDF("event_date", "city_name", "event_time", "temperature")
+    // one file read back is one partition, and only planning says so
+    val src = Files.createTempDirectory("graft_wh_one_src").toFile.getAbsolutePath + "/f"
+    fact.coalesce(1).write.parquet(src)
+    val one = spark.read.parquet(src)
+    val many = fact.repartition(3)
+    assert(Warehouse.onePartition(one) && !Warehouse.onePartition(many))
+    val oneDir = Files.createTempDirectory("graft_wh_one").toFile.getAbsolutePath
+    val manyDir = Files.createTempDirectory("graft_wh_many").toFile.getAbsolutePath
+    val oneJobs = jobsDuring(Warehouse.writeFact(one, oneDir, hotMonthRows = 0L))
+    val manyJobs = jobsDuring(Warehouse.writeFact(many, manyDir, hotMonthRows = 0L))
+    assert(oneJobs.size == 1 && !oneJobs.exists(_.shuffles), oneJobs)
+    assert(manyJobs.exists(_.shuffles), s"the many-partition write planned no exchange: $manyJobs")
+    def layout(dir: String) = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("event_month=")).map { m =>
+        m.getName -> m.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+          spark.read.parquet(f.getAbsolutePath).collect().map(_.toSeq).toSeq
+        }.toSeq
+      }.toMap
+    assert(layout(oneDir).size == 2 && layout(oneDir).values.forall(_.size == 1),
+      "expected one file in each of the two months")
+    assert(layout(oneDir) == layout(manyDir))
+    assert(layout(oneDir).values.map(_.head.size).sum == 60)
+  }
+
+  test("format sidecar: an append it already describes leaves it alone; an overwrite restamps it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wh_fmt_keep").toFile.getAbsolutePath
+    val fact = Seq((java.sql.Date.valueOf("2024-01-15"), "Kazan",
+      java.sql.Timestamp.valueOf("2024-01-15 01:00:00"), 1.0))
+      .toDF("event_date", "city_name", "event_time", "temperature")
+    val sidecar = java.nio.file.Paths.get(dir, Warehouse.FormatSidecar)
+    Warehouse.writeFact(fact, dir)
+    // same record, different bytes: a rewrite would show
+    Files.write(sidecar, "parquet\nlinear\n".getBytes("UTF-8"))
+    Files.delete(java.nio.file.Paths.get(dir, s".${Warehouse.FormatSidecar}.crc"))
+    Warehouse.writeFact(fact, dir)
+    assert(new String(Files.readAllBytes(sidecar), "UTF-8") == "parquet\nlinear\n")
+    Warehouse.writeFact(fact, dir, clustering = Warehouse.ClusterInterleaved)
+    assert(Warehouse.readClusteringSidecar(spark, dir).contains(Warehouse.ClusterInterleaved))
+    Warehouse.writeFact(fact, dir, mode = "overwrite", clustering = Warehouse.ClusterInterleaved)
+    assert(Warehouse.readFormatSidecar(spark, dir).contains("parquet"))
+    assert(Warehouse.readFact(spark, dir).count() == 1)
+  }
+
   test("count-or-time batcher: one count job per micro-batch, each step's jobs named after the caller's") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
@@ -536,7 +588,14 @@ class WarehouseSpec extends SparkSpec {
     val steps = descs.asScala.toSeq
     assert(steps.count(_ == "batch 7: count") == 2, steps)
     assert(steps.contains("batch 7: stage") && steps.contains("batch 7: flush"), steps)
-    assert(steps.forall(Set("batch 7: count", "batch 7: stage", "batch 7: flush")), steps)
+    // the frame-only flush pays writeFact's month count, under its own
+    // step; the staged rows are read with their known schema (no
+    // inference job), so the flush's own jobs are the write's exchange
+    // and the write
+    assert(steps.contains("batch 7: flush: months"), steps)
+    assert(steps.count(_ == "batch 7: flush") == 2, steps)
+    assert(steps.forall(Set("batch 7: count", "batch 7: stage", "batch 7: flush",
+      "batch 7: flush: months")), steps)
     // a cold flush still writes one file per month
     def files(month: String) = new java.io.File(s"$dir/event_month=$month")
       .listFiles().count(_.getName.endsWith(".parquet"))
