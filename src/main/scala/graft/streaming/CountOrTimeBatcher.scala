@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** ST1 made exact: the reference consumer buffers decoded rows and flushes
   * to the store once ≥ `batchSize` rows have accumulated OR ≥ `maxAgeMs`
@@ -68,17 +67,10 @@ final class CountOrTimeBatcher(
   /** Number of rows staged and not yet flushed (0 until first recovery). */
   def pendingRows: Long = synchronized(math.max(pending, 0L))
 
-  // Schema of the rows staged since the last flush: with it a flush reads
-  // the deltas without parquet's schema-inference job. Unknown after a
-  // restart, when recovery infers it.
-  private var stagedSchema: Option[StructType] = None
-
   private def stagedFrame(spark: SparkSession): DataFrame =
     // recursiveFileLookup: deltas live in per-batch subdirectories, which
     // must NOT be inferred as a partition column of the flushed frame.
-    // A null schema (none known) leaves the reader to infer one.
-    spark.read.option("recursiveFileLookup", "true")
-      .schema(stagedSchema.orNull).parquet(stagingDir)
+    spark.read.option("recursiveFileLookup", "true").parquet(stagingDir)
 
   /** True iff staging holds at least one COMMITTED parquet data file. A
     * crash mid-delta-write leaves only junk (`_temporary` trees, empty
@@ -127,7 +119,6 @@ final class CountOrTimeBatcher(
       else if (n > 0) {
         graft.JobStep(spark, "stage")(b.write.mode("errorifexists")
           .parquet(s"$stagingDir/delta-${java.util.UUID.randomUUID().toString.take(12)}"))
-        if (stagedSchema.isEmpty) stagedSchema = Some(b.schema)
         pending += n
       }
     } finally { b.unpersist(); () }
@@ -154,7 +145,6 @@ final class CountOrTimeBatcher(
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
       pending = 0
-      stagedSchema = None
     }
     lastFlush = clock()
   }
