@@ -703,7 +703,9 @@ object IndexMaintenance {
     * returns its top k as a local frame. A warm plain `qTerms` request
     * runs 1 Spark job here, described `<caller>: score`
     * ([[graft.JobStep]]); a plain `docId` request runs 2, `<caller>: bag`
-    * and `<caller>: score`. The `expand` and `rerank` stages join the
+    * and `<caller>: score`. The `expand` stage's jobs are described
+    * `<caller>: expand`, and the `rerank` stage's `<caller>: rerank`; the
+    * rerank returns its top k as a local frame too. Those stages join the
     * bag with the snapshot's `df`, which drops a term the stored corpus
     * has never seen, so an unknown token cannot vote in RM3 or take a
     * MaxSim token vector. Returns `(q_id, rk, doc_id, score)`.
@@ -745,7 +747,9 @@ object IndexMaintenance {
       }
     if (rerank.contains("maxsim")) {
       val cand = score(scoredBag, ops.MaxSimCand, "score").select(col("q_id"), col("doc_id"))
-      ops.maxSimRerank(snap.tf, snap.df, frame(scoredBag), cand, k)
+      val reranked = ops.maxSimRerank(snap.tf, snap.df, frame(scoredBag), cand, k)
+      import scala.jdk.CollectionConverters._
+      s.createDataFrame(graft.JobStep(s, "rerank")(reranked.collect()).toSeq.asJava, reranked.schema)
     } else
       score(scoredBag, k, "score").select(col("q_id"), col("rk"), col("doc_id"), col("score"))
   }

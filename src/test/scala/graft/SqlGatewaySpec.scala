@@ -575,8 +575,13 @@ class SqlGatewaySpec extends SparkSpec {
         // knobs answer 200 with rows: expand=rm3, rerank=maxsim, both
         val rx = get(port, "/search?doc_id=3&k=5&expand=rm3")
         assert(rx.statusCode() == 200 && docIds(rx.body()).nonEmpty, rx.body())
-        val rr = get(port, "/search?doc_id=3&k=5&rerank=maxsim")
+        // every job of a rerank request runs in the request's group under
+        // a step name (bag, score, rerank)
+        var rr: HttpResponse[String] = null
+        val rrJobs = jobsDuring { rr = get(port, "/search?doc_id=3&k=5&rerank=maxsim") }
         assert(rr.statusCode() == 200 && docIds(rr.body()).nonEmpty, rr.body())
+        assert(rrJobs.nonEmpty && rrJobs.forall(j => j.group.startsWith("graft-gateway-search-") &&
+          Seq(": bag", ": score", ": rerank").exists(j.desc.endsWith)), rrJobs)
         val rxr = get(port, "/search?doc_id=3&k=5&expand=rm3&rerank=maxsim")
         assert(rxr.statusCode() == 200 && docIds(rxr.body()).nonEmpty, rxr.body())
         // fuse=rrf: hybrid rows carry both leg ranks and the fused rank
